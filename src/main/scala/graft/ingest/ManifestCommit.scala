@@ -1549,34 +1549,46 @@ object ManifestCommit {
         "the clone lifetime you need)"))
   }
 
-  /** Spark schema of a DV file, from ONE driver-side footer read,
-    * cached forever: DV dirs are IMMUTABLE (every delete writes a new
-    * `_dv_<uuid>` and repoints the manifest), yet every read of a DV'd
-    * table re-ran a schema-inference JOB per distinct DV — pure
-    * scheduler latency on the hottest read path (r19). Caching the full
-    * STRUCT (not just names) also lets the DV-union scan read with an
-    * explicit schema, skipping the union's own inference job. The
-    * fallback spark.read covers exotic filesystems where the direct
-    * footer read fails. */
-  private val dvSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-  private[ingest] def dvSchemaOf(spark: SparkSession,
-      absDir: String): org.apache.spark.sql.types.StructType =
-    dvSchemaCache.computeIfAbsent(absDir, _ =>
+  /** Spark schema and leaf parquet paths of a DV dir, from ONE
+    * driver-side listing and footer read, cached forever: DV dirs are
+    * IMMUTABLE (every delete writes a new `_dv_<uuid>` and repoints the
+    * manifest), yet every read of a DV'd table re-ran a schema-inference
+    * JOB per distinct DV — pure scheduler latency on the hottest read
+    * path (r19). Caching the full STRUCT (not just names) also lets the
+    * DV-union scan read with an explicit schema, skipping the union's
+    * own inference job. Reads go through the LEAF files ([[readDvs]]):
+    * Spark's hidden-path filter matches the `_dv_` dir names themselves,
+    * so a dir-path read logged "All paths were ignored" on every DV scan.
+    * The fallback (dir path, spark.read schema) covers exotic
+    * filesystems where the direct listing or footer read fails. */
+  private val dvCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (org.apache.spark.sql.types.StructType, Seq[String])]()
+  private def dvFooterOf(spark: SparkSession, absDir: String)
+      : (org.apache.spark.sql.types.StructType, Seq[String]) =
+    dvCache.computeIfAbsent(absDir, _ =>
       scala.util.Try {
         val f = fs(spark, absDir)
-        val file = f.listStatus(new Path(absDir)).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).minBy(_.getName)
+        val files = f.listStatus(new Path(absDir)).map(_.getPath)
+          .filter(p => p.getName.endsWith(".parquet") &&
+            !p.getName.startsWith("_") && !p.getName.startsWith("."))
+          .sortBy(_.getName).toSeq
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          file, spark.sparkContext.hadoopConfiguration)
+          files.head, spark.sparkContext.hadoopConfiguration)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try new org.apache.spark.sql.execution.datasources.parquet
+        try (new org.apache.spark.sql.execution.datasources.parquet
           .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(r.getFileMetaData.getSchema)
+          .convert(r.getFileMetaData.getSchema), files.map(_.toString))
         finally r.close()
-      }.getOrElse(spark.read.parquet(absDir).schema))
+      }.getOrElse((spark.read.parquet(absDir).schema, Seq(absDir))))
   private def dvColumnsOf(spark: SparkSession, absDir: String): Seq[String] =
-    dvSchemaOf(spark, absDir).fieldNames.toSeq
+    dvFooterOf(spark, absDir)._1.fieldNames.toSeq
+
+  /** The rows of the DV dirs `absDirs` (one key-column set), read
+    * through their cached leaf files with the first one's schema. */
+  private[ingest] def readDvs(spark: SparkSession,
+      absDirs: Seq[String]): DataFrame =
+    spark.read.schema(dvFooterOf(spark, absDirs.head)._1)
+      .parquet(absDirs.flatMap(dvFooterOf(spark, _)._2): _*)
 
   private def readDirsOfImpl(spark: SparkSession, root: String, m: Manifest,
       dirs: Seq[String],
@@ -1702,8 +1714,7 @@ object ManifestCommit {
         val dvPaths = groupDirs.map(d => dirAbs(root, m.dvs(d))).distinct
         // explicit schema from the cached footer read — the union scan
         // itself must not pay an inference job over every dv file (r19)
-        val dvUnion = spark.read.schema(dvSchemaOf(spark, dvPaths.head))
-          .parquet(dvPaths: _*)
+        val dvUnion = readDvs(spark, dvPaths)
           .withColumn("__dv_name", dirIdCol)
           .join(broadcast(lookup), "__dv_name")
           .select((keyCols.map(col) :+ col("__dv_dir")): _*)

@@ -496,9 +496,8 @@ object MergeInto {
         else {
           val dvDf = m.dvs.get(d) match {
             case Some(old) =>
-              val abs = ManifestCommit.dirAbs(root, old)
-              spark.read.schema(ManifestCommit.dvSchemaOf(spark, abs))
-                .parquet(abs)
+              ManifestCommit.readDvs(spark,
+                Seq(ManifestCommit.dirAbs(root, old)))
                 .unionByName(present).distinct()
             case None => present
           }
@@ -799,10 +798,8 @@ object MergeInto {
           val dvDf: DataFrame = m.dvs.get(d) match {
             case None => newPos
             case Some(old) =>
-              val oldAbs = ManifestCommit.dirAbs(root, old)
-              val oldDf = spark.read
-                .schema(ManifestCommit.dvSchemaOf(spark, oldAbs))
-                .parquet(oldAbs)
+              val oldDf = ManifestCommit.readDvs(spark,
+                Seq(ManifestCommit.dirAbs(root, old)))
               if (oldDf.columns.toSet == posCols.toSet)
                 oldDf.unionByName(newPos).distinct()
               else {

@@ -264,18 +264,6 @@ object Optimize {
       pinned = inScope.toSet)
   }
 
-  /** MINOR compaction: fold only the live dirs smaller than
-    * `smallBytes` (plus any dir carrying a deletion vector — folding it
-    * materializes the DV away) into ONE new dir; large clean dirs
-    * survive byte-identical. This is the LSM-ish maintenance op that
-    * bounds dir count under streaming appends WITHOUT the O(table)
-    * rewrite a full OPTIMIZE pays: each micro-batch append adds a small
-    * delta dir, and the steady-state cost of keeping the dir count flat
-    * is O(recent small dirs), run on whatever cadence the append rate
-    * demands. Stats for the new dir are recomputed on the union of the
-    * folded dirs' stat columns; kept dirs keep stats, DVs (none — dv'd
-    * dirs are always folded), and byte identity. No-op (and no commit)
-    * when fewer than two dirs qualify. */
   /** Rebuild the per-dir bloom side files after a rewrite, sized to the
     * dir's actual distinct count. No-op for empty `cols`. */
   private def rebuildBlooms(spark: SparkSession, dir: String,
@@ -528,7 +516,30 @@ object Optimize {
     }
   }
 
-  /** `collapse` = Some((keys, version)) additionally collapses the
+  /** MINOR compaction (SQL `OPTIMIZE`; `OPTIMIZE … WHERE` reaches it
+    * through [[compactWhere]]'s `scope`). The fold CANDIDATES are the
+    * in-scope live dirs smaller than `smallBytes` plus any dir carrying
+    * a deletion vector (folding it materializes the DV away); large
+    * clean dirs survive byte-identical. This is the LSM-ish maintenance
+    * op that bounds dir count under streaming appends WITHOUT the
+    * O(table) rewrite a full OPTIMIZE pays.
+    *
+    * An unsliced table folds its candidates into ONE new dir when at
+    * least two qualify or one carries a DV. A table with a RECORDED
+    * SLICE chooses per slice value ([[sliceFold]], the ClickHouse rule:
+    * merge parts within a partition, and only where it holds several):
+    * a clean slice-TIGHT candidate that is its value's only candidate is
+    * already compact and survives byte-identical; DV'd dirs, LOOSE dirs
+    * and the tight dirs they overlap or share a value with fold, one new
+    * dir per value. A CDC batch's OPTIMIZE therefore costs O(touched
+    * slices), not O(table), and so does the change-feed diff after it.
+    * The fold records every slice component's stats, so its output is
+    * tight and one per value: repeated OPTIMIZE converges and commits
+    * nothing once the table is compact. Stats for new dirs are
+    * recomputed on the union of the folded dirs' stat columns; kept
+    * dirs keep stats and byte identity.
+    *
+    * `collapse` = Some((keys, version)) additionally collapses the
     * folded rows LATEST-PER-KEY within each slice group (the Replacing
     * semantics [[compactMonths]] applies per month) — the generic fold
     * carries the option natively, so any sliced layout gets the
@@ -573,27 +584,16 @@ object Optimize {
         finally pool.shutdown()
       })
     }
-    val (fold, keep) = m.dirs.partition { d =>
-      inScope(d) && (m.dvs.contains(d) || small.getOrElse(d, false))
+    val candidates = m.dirs.filter(d =>
+      inScope(d) && (m.dvs.contains(d) || small.getOrElse(d, false)))
+    val fold = m.slice match {
+      case Some(s) => sliceFold(m, s, candidates)
+      case None =>
+        if (candidates.size >= 2 || candidates.exists(m.dvs.contains))
+          candidates
+        else Nil
     }
-    if (fold.size < 2 && fold.forall(!m.dvs.contains(_))) {
-      // ONE clean small dir is normally nothing worth folding — EXCEPT
-      // under a recorded slice when its stats cannot prove it
-      // slice-TIGHT (every slice component's recorded stat a per-dir
-      // constant): then the rewrite IS the layout migration — e.g. a
-      // month-granular dir left behind by a partition evolution to
-      // days folds into day-tight dirs. A dir proven tight skips, so
-      // repeated OPTIMIZE converges instead of rewriting forever (the
-      // sliced fold below always records the component stats, so at
-      // worst one extra rewrite proves tightness).
-      val migrate = m.slice.exists { s =>
-        fold.size == 1 &&
-          !ManifestCommit.sliceComponents(s).forall(c =>
-            m.stats.getOrElse(fold.head, Nil)
-              .find(_.col == c).exists(cs => cs.min == cs.max))
-      }
-      if (!migrate) return m
-    }
+    if (fold.isEmpty) return m
     val folded = ManifestCommit.readDirsOf(spark, root, m, fold)
     // baseStatCol: an all-null column's only recorded entry is its
     // __nn_ counter — inheritance must re-request the COLUMN, not let
@@ -620,6 +620,56 @@ object Optimize {
       collapse = collapse,
       bloomCols = bloomCols, bloomFpp = bloomFpp,
       op = "compact_minor")
+  }
+
+  /** The fold set among a sliced table's compaction `candidates`. A dir
+    * is slice-TIGHT when every component of `slice` is a per-dir
+    * constant by its recorded stats (min == max and no null rows, or no
+    * bound and a zero non-null counter: an all-null component); that
+    * tuple is its slice value. Folding: DV'd dirs; LOOSE dirs (not
+    * tight, or missing a component's stats — a merge rewrite spanning
+    * several months, a month dir left by a partition evolution to days);
+    * tight dirs that share their value with another candidate; and
+    * tight dirs whose value a folding loose dir's component ranges can
+    * hold (no stat = any value), so one fold leaves at most one dir per
+    * value. */
+  private[ingest] def sliceFold(m: ManifestCommit.Manifest, slice: String,
+      candidates: Seq[String]): Seq[String] = {
+    val comps = ManifestCommit.sliceComponents(slice)
+    def stat(d: String, c: String) =
+      m.stats.getOrElse(d, Nil).find(_.col.equalsIgnoreCase(c))
+    def count(d: String, c: String) =
+      stat(d, c).map(cs => new java.math.BigDecimal(cs.min))
+    // Some(true) when the counters show rows with a null `c`, None when
+    // the dir records no counters
+    def hasNull(d: String, c: String): Option[Boolean] = for {
+      nn <- count(d, ManifestCommit.nnStat(c))
+      rows <- count(d, ManifestCommit.RowCountStat)
+    } yield nn.compareTo(rows) != 0
+    // per component: Some(Some(v)) constant v, Some(None) all-null
+    def valueOf(d: String): Option[Seq[Option[String]]] = {
+      val vs = comps.map(c => stat(d, c) match {
+        case Some(cs) => Option.when(
+          cs.min == cs.max && !hasNull(d, c).contains(true))(Some(cs.min))
+        case None => Option.when(count(d, ManifestCommit.nnStat(c))
+          .exists(_.signum == 0))(Option.empty[String])
+      })
+      if (vs.forall(_.isDefined)) Some(vs.flatten) else None
+    }
+    val value = candidates.map(d => d -> valueOf(d)).toMap
+    val loose = candidates.filter(value(_).isEmpty)
+    val parts = candidates.flatMap(value(_))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    def holds(l: String)(v: Seq[Option[String]]): Boolean =
+      comps.zip(v).forall {
+        case (c, Some(x)) => stat(l, c).forall(_.overlaps(Some(x), Some(x)))
+        case (c, None) => !hasNull(l, c).contains(false)
+      }
+    candidates.filter(d => value(d) match {
+      case None => true
+      case Some(v) =>
+        m.dvs.contains(d) || parts(v) > 1 || loose.exists(holds(_)(v))
+    })
   }
 
   /** The ClickHouse PER-PARTITION background merge, manifest-native (the

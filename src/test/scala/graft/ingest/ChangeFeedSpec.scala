@@ -148,6 +148,53 @@ class ChangeFeedSpec extends SparkSpec {
     assert(stateOf(rep) === stateOf(src), "replayed apply moved the replica")
   }
 
+  test("a consume across a merge and an OPTIMIZE on a month-sliced table " +
+      "reads only the changed months' dirs; the applied replica equals " +
+      "the source") {
+    val src = Files.createTempDirectory("graft_cfspec_").toString + "/sl"
+    val rep = Files.createTempDirectory("graft_cfspec_").toString + "/rep"
+    val cursor = src + "_cursor"
+    val slice = "date_format(ts, 'yyyyMM')"
+    // 12 months of 2020, 20 ids each, ids increasing with the month
+    val df = spark.range(0, 240).select(col("id"),
+      add_months(to_date(lit("2020-01-10")), (col("id") / 20).cast("int"))
+        .cast("timestamp").as("ts"),
+      (col("id") * 2).as("v"))
+    val dirs = ManifestCommit.writeSliced(spark, src, df, expr(slice),
+      Seq("ts", "id", slice, ManifestCommit.RowCountStat))
+    ManifestCommit.commitReplace(spark, src, dirs.map(_._1),
+      pruneDisplaced = false, stats = dirs.toMap,
+      schema = Some(org.apache.spark.sql.types.StructType(
+        df.schema.fields.map(_.copy(nullable = true)))),
+      slice = Some(slice))
+    val c1 = ChangeFeed.consume(spark, src, cursor, Seq("id")).get
+    val d0 = ManifestCommit.newDataDir(rep)
+    c1.changes.drop(ChangeFeed.ChangeType).write.parquet(d0)
+    ManifestCommit.commitReplace(spark, rep, Seq(d0), pruneDisplaced = false)
+    ChangeFeed.advanceCursor(spark, cursor, c1.toGen)
+    // one merge updates November and December (one loose dir spanning
+    // both), a delete puts a DV on September, then OPTIMIZE
+    MergeInto.merge(spark, src, df.filter(col("id") >= 200 && col("id") % 3 === 0)
+      .withColumn("v", col("v") + 1), Seq("id"))
+    MergeInto.deleteWhere(spark, src, spark.range(160, 163).toDF("id"))
+    Optimize.compactSmall(spark, src, smallBytes = 128L << 20)
+    val c2 = ChangeFeed.consume(spark, src, cursor, Seq("id")).get
+    val from = ManifestCommit.readManifestAt(spark, src, c2.fromGen.get).get
+    val to = ManifestCommit.readManifest(spark, src).get
+    def monthOf(d: String): Option[String] = Seq(from, to)
+      .flatMap(_.stats.get(d)).flatten.find(_.col == slice).map(_.min)
+    val read = c2.changes.inputFiles.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent.getName)
+      .filter(_.startsWith("data_")).toSet
+    assert(read.flatMap(monthOf) === Set("202009", "202011", "202012"),
+      s"the feed read dirs of unchanged months: $read")
+    assert(read.size === 6 && to.dirs.size === 12)
+    ChangeFeed.applyTo(spark, rep, c2.changes, Seq("id"))
+    def stateOf(root: String) = ManifestCommit.read(spark, root)
+      .select("id", "ts", "v").orderBy("id").collect().toSeq
+    assert(stateOf(rep) === stateOf(src), "replica diverged from source")
+  }
+
   test("replication across a REPLACE WHERE commit: one consume/apply, replica converges") {
     val src = mkTable() // ids 0..99, v = id*2
     val rep = Files.createTempDirectory("graft_cfspec_").toString + "/rep"

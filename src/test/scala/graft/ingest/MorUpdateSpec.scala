@@ -40,8 +40,8 @@ class MorUpdateSpec extends SparkSpec {
     assert(m1.dirs.size === m0.dirs.size + 1)
     assert(m1.dvs.size === 1)
     // the DV is position-based
-    val dvCols = spark.read.parquet(
-      ManifestCommit.dirAbs(root, m1.dvs.values.head)).columns.toSet
+    val dvCols = ManifestCommit.readDvs(spark,
+      Seq(ManifestCommit.dirAbs(root, m1.dvs.values.head))).columns.toSet
     assert(dvCols === Set(ManifestCommit.PosFileCol, ManifestCommit.PosIdxCol))
     // values: exactly one row changed
     val rows = ManifestCommit.read(spark, root)

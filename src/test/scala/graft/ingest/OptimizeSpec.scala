@@ -920,4 +920,168 @@ class OptimizeSpec extends SparkSpec {
     Optimize.zorderWhere(spark, root, col("x") > 999, Seq("x", "y"))
     assert(ManifestCommit.readManifest(spark, root).get.gen === g)
   }
+
+  // ---- per-slice OPTIMIZE: fold only the slices that need it
+
+  private val MonthSlice = "date_format(ts, 'yyyyMM')"
+
+  /** `perMonth` rows per month for months [from, until) of 2020 on,
+    * ids increasing with the month (the auto-increment key shape). */
+  private def monthRows(from: Int, until: Int, perMonth: Int = 20,
+      idBase: Long = 0L) =
+    spark.range(from.toLong * perMonth, until.toLong * perMonth)
+      .select((col("id") + idBase).as("id"),
+        add_months(to_date(lit("2020-01-10")),
+          (col("id") / perMonth).cast("int")).cast("timestamp").as("ts"),
+        concat(lit("v"), col("id")).as("payload"))
+
+  /** A month-sliced table at `root`, one dir per month, each carrying
+    * the slice component's stats when `componentStats` (the shape SQL
+    * writes and every fold leaves) — without, the build-time shape of a
+    * table sliced before component stats were recorded. */
+  private def monthTable(root: String, months: Int,
+      componentStats: Boolean = true, nullMonth: Boolean = false): Unit = {
+    val df = monthRows(0, months).unionByName(monthRows(0, 1)
+      .select(lit(-1L).as("id"), lit(null).cast("timestamp").as("ts"),
+        lit("null month").as("payload")).filter(lit(nullMonth)))
+    val dirs = ManifestCommit.writeSliced(spark, root, df, expr(MonthSlice),
+      Seq("ts", "id") ++ (if (componentStats) Seq(MonthSlice) else Nil) :+
+        ManifestCommit.RowCountStat)
+    ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
+      pruneDisplaced = false, stats = dirs.toMap,
+      schema = Some(StructType(df.schema.fields.map(_.copy(nullable = true)))),
+      slice = Some(MonthSlice))
+  }
+
+  /** Append month `month`'s rows again as one more tight dir of it. */
+  private def appendMonth(root: String, month: Int, idBase: Long): Unit = {
+    val Seq((d, stats)) = ManifestCommit.writeSliced(spark, root,
+      monthRows(month, month + 1, perMonth = 5, idBase = idBase),
+      expr(MonthSlice), Seq("ts", "id", MonthSlice, ManifestCommit.RowCountStat))
+    ManifestCommit.commitAppend(spark, root, d, stats = stats)
+  }
+
+  private def monthOf(m: ManifestCommit.Manifest, d: String): String = {
+    val cs = m.stats(d).find(_.col == MonthSlice).get
+    assert(cs.min === cs.max, s"$d is not month-tight: $cs")
+    cs.min
+  }
+
+  private def sorted(root: String): Seq[String] =
+    ManifestCommit.read(spark, root).collect().map(_.toString).sorted.toSeq
+
+  private def withTable[T](root: String)(f: String => T): T = {
+    val name = s"opt_slice_${java.util.UUID.randomUUID().toString.replace("-", "").take(8)}"
+    graft.sql.GraftSql.register(name, root)
+    try f(name) finally graft.sql.GraftSql.unregister(name)
+  }
+
+  test("OPTIMIZE on a month-sliced table that is tight and one dir per " +
+      "month commits nothing; a table without component stats migrates " +
+      "once, then converges") {
+    val base = Files.createTempDirectory("optimize_spec_").toString
+    // a NULL month lands in a dir of its own, tight by its counters
+    monthTable(base + "/tight", 6, nullMonth = true)
+    monthTable(base + "/bare", 6, componentStats = false, nullMonth = true)
+    withTable(base + "/tight") { t =>
+      val g = ManifestCommit.readManifest(spark, base + "/tight").get
+      spark.sql(s"OPTIMIZE graft.$t")
+      spark.sql(s"OPTIMIZE graft.$t")
+      assert(ManifestCommit.readManifest(spark, base + "/tight").get === g)
+    }
+    withTable(base + "/bare") { t =>
+      val want = sorted(base + "/bare")
+      val g0 = ManifestCommit.readManifest(spark, base + "/bare").get.gen
+      spark.sql(s"OPTIMIZE graft.$t")
+      val m1 = ManifestCommit.readManifest(spark, base + "/bare").get
+      assert(m1.gen === g0 + 1)
+      assert(m1.dirs.size === 7)
+      assert(m1.dirs.filter(m1.stats(_).exists(_.col == MonthSlice))
+        .map(monthOf(m1, _)).sorted === (1 to 6).map(i => f"2020$i%02d"))
+      spark.sql(s"OPTIMIZE graft.$t")
+      assert(ManifestCommit.readManifest(spark, base + "/bare").get.gen ===
+        m1.gen, "a second OPTIMIZE of a compact table made a generation")
+      assert(sorted(base + "/bare") === want)
+    }
+  }
+
+  test("OPTIMIZE folds exactly the dirs a month needs — its two parts, a " +
+      "DV'd dir and a loose merge-written dir — every other dir survives") {
+    val root = Files.createTempDirectory("optimize_spec_").toString + "/f"
+    monthTable(root, 6)
+    val m0 = ManifestCommit.readManifest(spark, root).get
+    val byMonth = m0.dirs.map(d => monthOf(m0, d) -> d).toMap
+    appendMonth(root, 1, idBase = 1000L) // February: a second part
+    MergeInto.deleteWhere(spark, root, spark.range(60, 62).toDF("id")) // April
+    // one merge over May and June keys rewrites both months into ONE
+    // dir whose component stats span 202005..202006
+    MergeInto.merge(spark, root, monthRows(4, 6).filter(col("id") % 7 === 0)
+      .withColumn("payload", lit("upd")), Seq("id"))
+    val before = ManifestCommit.readManifest(spark, root).get
+    val loose = before.dirs.filter { d =>
+      val cs = before.stats(d).find(_.col == MonthSlice).get
+      cs.min != cs.max
+    }
+    assert(loose.size === 1 && before.dvs.size === 1)
+    val want = sorted(root)
+    withTable(root)(t => spark.sql(s"OPTIMIZE graft.$t"))
+    val after = ManifestCommit.readManifest(spark, root).get
+    val folded = before.dirs.toSet -- after.dirs
+    assert(folded === (before.dirs.filter(d =>
+      d == loose.head ||
+        Set("202002", "202004").contains(monthOf(before, d))).toSet),
+      s"folded $folded")
+    assert(folded.size === 4)
+    assert(after.dirs.toSet.intersect(before.dirs.toSet) ===
+      Set(byMonth("202001"), byMonth("202003")))
+    assert(after.dirs.map(monthOf(after, _)).sorted ===
+      (1 to 6).map(i => f"2020$i%02d"))
+    assert(after.dvs.isEmpty)
+    assert(sorted(root) === want)
+  }
+
+  test("OPTIMIZE cost follows the touched months, not the table: the " +
+      "folded-dir count is the same at N and 8N months") {
+    def foldedAt(months: Int): Int = {
+      val root = Files.createTempDirectory("optimize_spec_").toString + "/n"
+      monthTable(root, months)
+      // the same touches either way: a second part of the newest month,
+      // a deletion vector on the month before it
+      appendMonth(root, months - 1, idBase = 100000L)
+      val prev = (months - 2).toLong * 20
+      MergeInto.deleteWhere(spark, root, spark.range(prev, prev + 1).toDF("id"))
+      val before = ManifestCommit.readManifest(spark, root).get
+      val want = sorted(root)
+      Optimize.compactSmall(spark, root, smallBytes = 128L << 20)
+      val after = ManifestCommit.readManifest(spark, root).get
+      assert(after.dirs.size === months)
+      assert(sorted(root) === want)
+      (before.dirs.toSet -- after.dirs).size
+    }
+    val (n, n8) = (foldedAt(3), foldedAt(24))
+    assert(n === 3 && n8 === n, s"folded $n dirs at 3 months, $n8 at 24")
+  }
+
+  test("OPTIMIZE … WHERE applies the per-slice rule inside its scope") {
+    val root = Files.createTempDirectory("optimize_spec_").toString + "/w"
+    monthTable(root, 4)
+    appendMonth(root, 0, idBase = 1000L) // January: two parts
+    appendMonth(root, 2, idBase = 2000L) // March: two parts, out of scope
+    val before = ManifestCommit.readManifest(spark, root).get
+    val want = sorted(root)
+    withTable(root) { t =>
+      val where = "ts < timestamp'2020-03-01 00:00:00'"
+      spark.sql(s"OPTIMIZE graft.$t WHERE $where")
+      val after = ManifestCommit.readManifest(spark, root).get
+      // only January's two parts fold; February (tight, alone, in
+      // scope) and both March parts (out of scope) survive
+      assert((before.dirs.toSet -- after.dirs) ===
+        before.dirs.filter(monthOf(before, _) == "202001").toSet)
+      assert(after.dirs.count(monthOf(after, _) == "202001") === 1)
+      assert(after.dirs.count(monthOf(after, _) == "202003") === 2)
+      assert(sorted(root) === want)
+      spark.sql(s"OPTIMIZE graft.$t WHERE $where")
+      assert(ManifestCommit.readManifest(spark, root).get.gen === after.gen)
+    }
+  }
 }
