@@ -1170,27 +1170,23 @@ object ManifestCommit {
       // so it matches the leaf's unescaped values for every type
       // (java-side String.valueOf would render e.g. Timestamp with a
       // trailing ".0" and silently degrade every leaf to the sequential
-      // fallback); the TYPED values ride as min(col), constant per
-      // group. A leaf whose rendering still defies the match falls back
-      // to its own per-dir pass with a warning (correctness over speed,
-      // never silence).
-      import org.apache.spark.sql.functions.{count, lit, max, min}
+      // fallback); the TYPED values ride as the partition column's own
+      // min/max, constant per group, through the shared [[statAggs]] /
+      // [[renderStats]] pair (the grouped pass commits no null
+      // counters, as converted tables always have). A leaf whose
+      // rendering still defies the match falls back to its own per-dir
+      // pass with a warning (correctness over speed, never silence).
       val pre = spark.read.parquet(root)
-      val aggs = partColPath.map(c => min(pre(c))) ++
-        statColNames.flatMap(c => Seq(min(pre(c)), max(pre(c)))) :+
-        count(lit(1))
+      val cols = (statColNames ++ partColPath).distinct :+ RowCountStat
+      val real = cols.filterNot(isPseudoStat)
+      val aggs = statAggs(pre, real)
       val keyCols = partColPath.map(c => pre(c).cast("string"))
-      val grouped = pre.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
-      // row layout: [keys*nK, min(part)*nK, (mn,mx)*, count]
       val groupedRows: Map[Seq[String], org.apache.spark.sql.Row] =
-        grouped.collect().toSeq.map { r =>
-          val key: Seq[String] = (0 until nK).map(i =>
-            if (r.isNullAt(i)) null else r.getString(i))
-          key -> r
-        }.toMap
-      val partTypes = partColPath.map(c =>
-        schema(schema.fieldIndex(c)).dataType)
-      def leafValues(n: String): Seq[String] = unescapeSuffixValues(n)
+        pre.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*)
+          .collect().toSeq.map { r =>
+            (0 until nK).map(i => if (r.isNullAt(i)) null else r.getString(i)) -> r
+          }.toMap
+      val dts = statTypes(pre, real)
       try {
         val pairs = hiveLeaves.map(n =>
           s"$root/$n" -> s"${dirOf(n)}/$n")
@@ -1208,28 +1204,16 @@ object ManifestCommit {
         val bytesOf: Map[String, ColStats] = concurrently(hiveLeaves)(n =>
           n -> dirBytesStat(spark, dirOf(n))).toMap
         val stats = hiveLeaves.map { n =>
-          val cs = groupedRows.get(leafValues(n)).map { r =>
-            statColNames.zipWithIndex.flatMap { case (c, i) =>
-              colStatsOf(c, r.schema(2 * nK + 2 * i).dataType,
-                r.get(2 * nK + 2 * i), r.get(2 * nK + 1 + 2 * i))
-            } ++ partColPath.zipWithIndex.flatMap { case (pc, i) =>
-              colStatsOf(pc, partTypes(i), r.get(nK + i), r.get(nK + i))
-            } ++
-              Seq(ColStats(RowCountStat, "num",
-                r.getLong(2 * nK + 2 * statColNames.size).toString,
-                r.getLong(2 * nK + 2 * statColNames.size).toString))
+          val cs = groupedRows.get(unescapeSuffixValues(n)).map { r =>
+            renderStats(cols, dts, i => r.get(nK + i), bytesOf(n))
+              .filterNot(_.col.startsWith(NullCountPrefix))
           }.getOrElse {
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"convert: leaf $n missed the grouped stats key (value " +
                 s"rendering) — metering it with its own per-dir pass")
-            dirStats(spark, dirOf(n),
-              (statColNames ++ partColPath :+ RowCountStat).distinct)
+            dirStats(spark, dirOf(n), cols)
           }
-          // the per-dir fallback already metered bytes via dirStats —
-          // don't double-append
-          val withBytes =
-            if (cs.exists(_.col == BytesStat)) cs else cs :+ bytesOf(n)
-          dirOf(n) -> (withBytes :+ ColStats(PartStat, "str", n, n))
+          dirOf(n) -> (cs :+ ColStats(PartStat, "str", n, n))
         }.toMap
         val slice =
           if (nK == 1) partColPath.head else compositeSlice(partColPath)
@@ -1483,16 +1467,6 @@ object ManifestCommit {
   private def readDirs(spark: SparkSession, root: String, m: Manifest): DataFrame =
     readDirsOf(spark, root, m, m.dirs)
 
-  /** Read a SUBSET of a manifest's dirs under that manifest's metadata
-    * (schema + deletion vectors). `schemaOverride` forces a specific
-    * read schema (ChangeFeed reads BOTH generations in toGen's schema).
-    * Public for change-feed/maintenance composition. */
-  /** `colmapOverride`: the COLUMN MAPPING matching `schemaOverride`'s
-    * logical names, when that schema comes from a DIFFERENT generation
-    * than `m` (ChangeFeed reads the FROM generation's dirs in the TO
-    * generation's schema — physical names are stable across renames, so
-    * the TO mapping resolves them for any generation's dirs; using the
-    * FROM generation's own mapping would null-fill a renamed column). */
   /** Reserved POSITION-identity columns (round 19 — the Delta
     * position-deletion-vector idea expressed through the existing
     * key-DV anti-join): a DV file whose columns are exactly these
@@ -1504,6 +1478,17 @@ object ManifestCommit {
   val PosFileCol = "__pos_file"
   val PosIdxCol = "__pos_idx"
 
+  /** Read a SUBSET of a manifest's dirs under that manifest's metadata
+    * (schema + deletion vectors). `schemaOverride` forces a specific
+    * read schema (ChangeFeed reads BOTH generations in toGen's schema).
+    * Public for change-feed/maintenance composition.
+    *
+    * `colmapOverride`: the COLUMN MAPPING matching `schemaOverride`'s
+    * logical names, when that schema comes from a DIFFERENT generation
+    * than `m` (ChangeFeed reads the FROM generation's dirs in the TO
+    * generation's schema — physical names are stable across renames, so
+    * the TO mapping resolves them for any generation's dirs; using the
+    * FROM generation's own mapping would null-fill a renamed column). */
   def readDirsOf(spark: SparkSession, root: String, m: Manifest,
       dirs: Seq[String],
       schemaOverride: Option[org.apache.spark.sql.types.StructType] = None,
@@ -1580,7 +1565,7 @@ object ManifestCommit {
           .convert(r.getFileMetaData.getSchema), files.map(_.toString))
         finally r.close()
       }.getOrElse((spark.read.parquet(absDir).schema, Seq(absDir))))
-  private def dvColumnsOf(spark: SparkSession, absDir: String): Seq[String] =
+  private[ingest] def dvColumnsOf(spark: SparkSession, absDir: String): Seq[String] =
     dvFooterOf(spark, absDir)._1.fieldNames.toSeq
 
   /** The rows of the DV dirs `absDirs` (one key-column set), read
@@ -1589,6 +1574,33 @@ object ManifestCommit {
       absDirs: Seq[String]): DataFrame =
     spark.read.schema(dvFooterOf(spark, absDirs.head)._1)
       .parquet(absDirs.flatMap(dvFooterOf(spark, _)._2): _*)
+
+  /** The DV rows of DV'd `dirs` (one DV column set), each attributed to
+    * its owning data dir's BASENAME in `__dir`: ONE scan over the DV
+    * files (never one scan node per DV — the plan stays flat in DV
+    * count), the owning dir recovered from each row's `_dv_*` path
+    * segment through a tiny broadcast lookup (a DV file several dirs
+    * reference fans out to one row per dir, which is exactly the per-dir
+    * delete set). Basename-keyed like [[dirIdCol]]: a clone's external
+    * entries are absolute strings, and UUID dir/DV names make basenames
+    * unique across roots. */
+  private[ingest] def dvRowsOf(spark: SparkSession, root: String,
+      m: Manifest, dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val lookup = spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(
+        dirs.map(d => org.apache.spark.sql.Row(
+          new Path(dirAbs(root, m.dvs(d))).getName,
+          new Path(dirAbs(root, d)).getName)): _*)),
+      StructType(Seq(StructField("__dv_name", StringType, false),
+        StructField("__dir", StringType, false))))
+    // explicit schema from the cached footer read — the scan itself
+    // must not pay an inference job over every DV file (r19)
+    readDvs(spark, dirs.map(d => dirAbs(root, m.dvs(d))).distinct)
+      .withColumn("__dv_name", dirIdCol)
+      .join(org.apache.spark.sql.functions.broadcast(lookup), "__dv_name")
+      .drop("__dv_name")
+  }
 
   private def readDirsOfImpl(spark: SparkSession, root: String, m: Manifest,
       dirs: Seq[String],
@@ -1690,34 +1702,8 @@ object ManifestCommit {
     }
     val dvdDfs = dvd.groupBy(d => (dvSchema(m.dvs(d)), partColsOf(d)))
       .toSeq.sortBy(_._2.head).map { case ((keyCols, _), groupDirs) =>
-        // ONE scan over the group's dv files (not one scan node per dv —
-        // the plan must stay flat in dv count); each dv row's owning DIR
-        // comes back from its file path's `_dv_*` segment through a tiny
-        // broadcast lookup (a dv file referenced by several dirs fans out
-        // to one row per dir, which is exactly the per-dir delete set).
-        // The lookup is keyed on path BASENAMES — [[dirIdCol]]'s data/dv
-        // segment is a basename, and a clone's external entries
-        // are absolute strings; UUID dir/dv names make basenames unique
-        // across roots, so the join stays exact for cloned references.
-        val lookupRows = groupDirs.map(d =>
-          org.apache.spark.sql.Row(
-            new Path(dirAbs(root, m.dvs(d))).getName,
-            new Path(dirAbs(root, d)).getName))
-        val lookup = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            java.util.Arrays.asList(lookupRows: _*)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("__dv_name",
-              org.apache.spark.sql.types.StringType, false),
-            org.apache.spark.sql.types.StructField("__dv_dir",
-              org.apache.spark.sql.types.StringType, false))))
-        val dvPaths = groupDirs.map(d => dirAbs(root, m.dvs(d))).distinct
-        // explicit schema from the cached footer read — the union scan
-        // itself must not pay an inference job over every dv file (r19)
-        val dvUnion = readDvs(spark, dvPaths)
-          .withColumn("__dv_name", dirIdCol)
-          .join(broadcast(lookup), "__dv_name")
-          .select((keyCols.map(col) :+ col("__dv_dir")): _*)
+        val dvUnion = dvRowsOf(spark, root, m, groupDirs)
+          .select((keyCols.map(col) :+ col("__dir").as("__dv_dir")): _*)
         // a POSITION dv (file, row-index identity) needs the scan to
         // materialize the position columns it anti-joins on
         val posDv = keyCols.exists(posCols.contains)
@@ -2456,12 +2442,10 @@ object ManifestCommit {
     else java.time.LocalDateTime.parse(t).format(TsFormat)
   }
 
-  /** Commit-time stats for `dir`: one min/max aggregate per column over
-    * the just-written parquet (numeric columns compare as numbers,
-    * everything else — dates/timestamps in the fixed canonical rendering
-    * above — as strings). Columns that come back all-null (including the
-    * empty-dir case) are omitted: no stats = never pruned, the safe
-    * default. */
+  /** Commit-time stats for `dir`: [[dirStatsBatch]]'s one-dir case (one
+    * ungrouped aggregate pass over the just-written parquet). Columns
+    * that come back all-null (including the empty-dir case) carry no
+    * min/max: no stats = never pruned, the safe default. */
   def dirStats(spark: SparkSession, dir: String,
       cols: Seq[String],
       colmap: Map[String, String] = Map.empty,
@@ -2470,57 +2454,8 @@ object ManifestCommit {
       // manifest): skips parquet schema INFERENCE — a distributed
       // footer-read job per call on the default path (r19). None keeps
       // the inferring read for callers without one.
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Seq[ColStats] = {
-    import org.apache.spark.sql.functions.{count, lit, max, min}
-    if (cols.isEmpty) return Nil
-    // [[RowCountStat]] is a PSEUDO-column (no data column backs it):
-    // served by a count(*) folded into the same aggregate pass, so a
-    // rewrite whose statCols inherit `__rows` from the prior manifest
-    // keeps the manifest-only COUNT(*) alive instead of crashing on a
-    // nonexistent column
-    val real = cols.filterNot(isPseudoStat)
-    val wantRows = cols.contains(RowCountStat)
-    // a PSEUDO-ONLY request (statCols inherited from a dir whose only
-    // recorded stat is __bytes — e.g. MERGE into a table with no
-    // established stat columns meters bytes) must not crash the empty
-    // aggregate below; serve the requested pseudo stats directly.
-    // Pruning stays per-column (a missing column stat keeps the dir),
-    // so a bytes-only entry never wrongly prunes.
-    if (real.isEmpty && !wantRows)
-      return if (cols.contains(BytesStat)) Seq(dirBytesStat(spark, dir))
-             else Nil
-    // under a column mapping, the just-written dir carries PHYSICAL
-    // names while `cols` are logical — project back before aggregating
-    // so stat keys stay logical (the name skipping resolves by)
-    val df0 = schema match {
-      case Some(s) => spark.read.schema(s).parquet(dir)
-      case None => spark.read.parquet(dir)
-    }
-    val df = colmap.foldLeft(df0) { case (d, (log, phys)) =>
-      if (log != phys) d.withColumnRenamed(phys, log) else d
-    }
-    // min/max + NON-NULL count per column, one aggregate pass (the
-    // count is what IS NULL skipping, metadata COUNT(c) and predicate
-    // DML's no-nulls witness read — see [[NullCountPrefix]])
-    val aggs = real.flatMap(c => Seq(min(statCol(df, c)),
-      max(statCol(df, c)), count(statCol(df, c)))) ++
-      (if (wantRows) Seq(count(lit(1))) else Nil)
-    val aggDf = df.agg(aggs.head, aggs.tail: _*)
-    val row = aggDf.collect()(0)
-    val base = real.zipWithIndex.flatMap { case (c, i) =>
-      val nn = row.getLong(3 * i + 2)
-      colStatsOf(c, aggDf.schema(3 * i).dataType, row.get(3 * i), row.get(3 * i + 1))
-        .toSeq :+ ColStats(nnStat(c), "num", nn.toString, nn.toString)
-    } ++ (if (wantRows) {
-      val n = row.getLong(3 * real.size)
-      Seq(ColStats(RowCountStat, "num", n.toString, n.toString))
-    } else Nil)
-    // exact on-disk bytes ride every metered dir (one driver-side
-    // content walk, no data I/O) — see [[BytesStat]]. Only ALONGSIDE
-    // other stats: an empty/all-null dir keeps the "no stats = never
-    // pruned" shape intact.
-    if (base.isEmpty) base else base :+ dirBytesStat(spark, dir)
-  }
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Seq[ColStats] =
+    dirStatsBatch(spark, Seq(dir), cols, colmap, schema)(dir)
 
   /** A stat "column" may be a plain column name OR a slice-component
     * EXPRESSION text (`pmod(hash(domain), 4)` — [[sliceExprStatCols]]):
@@ -2530,12 +2465,55 @@ object ManifestCommit {
     if (df.columns.contains(c)) df(c)
     else org.apache.spark.sql.functions.expr(c)
 
-  /** One ColStats from already-aggregated min/max values (the `observe`
-    * path: writers meter stats on the write pass itself instead of
-    * re-reading the new dir). None when either bound is null (all-null
-    * column / empty dir) — no stats = never pruned, the safe default.
-    * Value rendering is IDENTICAL to [[dirStats]]' (same renderer), so
-    * observe-computed and re-read stats are interchangeable. */
+  /** The ONE stats aggregate every producer meters with: min, max and
+    * NON-NULL count per real stat column (the count is what IS NULL
+    * skipping, metadata COUNT(c) and predicate DML's no-nulls witness
+    * read — see [[NullCountPrefix]]), then the row count that serves
+    * [[RowCountStat]] (a PSEUDO-column no data column backs). `written`
+    * restricts every aggregate to the rows that land in the dir (MERGE
+    * meters its output, not the deleted rows it also passes through).
+    * [[renderStats]] reads a row laid out this way. */
+  private def statAggs(df: DataFrame, real: Seq[String],
+      written: Option[org.apache.spark.sql.Column] = None)
+      : Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{count, lit, max, min, when}
+    def w(c: org.apache.spark.sql.Column) = written.fold(c)(when(_, c))
+    real.flatMap { c =>
+      val v = w(statCol(df, c))
+      Seq(min(v), max(v), count(v))
+    } :+ count(w(lit(1)))
+  }
+
+  /** Stat value types, resolved analysis-only (no job). */
+  private def statTypes(df: DataFrame, real: Seq[String])
+      : Seq[org.apache.spark.sql.types.DataType] =
+    real.map(c => df.select(statCol(df, c)).schema.head.dataType)
+
+  /** The ONE stats renderer: the ColStats of one [[statAggs]] row (value
+    * `i` of the layout at `v(i)`) for the request `cols`. Exact on-disk
+    * bytes ride every metered dir (one driver-side content walk, no data
+    * I/O — see [[BytesStat]]) only ALONGSIDE other stats, so an
+    * empty/all-null dir keeps the "no stats = never pruned" shape; a
+    * PSEUDO-ONLY request (statCols inherited from a dir whose only
+    * recorded stat is __bytes) serves the byte meter alone. */
+  private def renderStats(cols: Seq[String],
+      dts: Seq[org.apache.spark.sql.types.DataType], v: Int => Any,
+      bytes: => ColStats): Seq[ColStats] = {
+    def num(c: String, n: Any) = ColStats(c, "num", n.toString, n.toString)
+    val real = cols.filterNot(isPseudoStat)
+    val base = real.indices.flatMap { i =>
+      colStatsOf(real(i), dts(i), v(3 * i), v(3 * i + 1)).toSeq :+
+        num(nnStat(real(i)), v(3 * i + 2))
+    } ++ (if (cols.contains(RowCountStat)) Seq(num(RowCountStat, v(3 * real.size)))
+          else Nil)
+    if (base.nonEmpty || cols.contains(BytesStat)) base :+ bytes else Nil
+  }
+
+  /** One ColStats from aggregated min/max values, rendered canonically
+    * (numeric columns compare as numbers, everything else — dates and
+    * timestamps in the fixed rendering above — as strings). None when
+    * either bound is null (all-null column / empty dir) — no stats =
+    * never pruned, the safe default. */
   private[ingest] def colStatsOf(name: String,
       dt: org.apache.spark.sql.types.DataType,
       mn: Any, mx: Any): Option[ColStats] =
@@ -2548,71 +2526,54 @@ object ManifestCommit {
       Some(ColStats(name, kind, renderStatValue(mn), renderStatValue(mx)))
     }
 
-  /** Write `df` as one immutable data dir per distinct value of `slice`
-    * in a SINGLE write job (hive-style staging layout, then each
-    * partition dir promoted to a `data_*` dir), with per-dir stats on
-    * `statCols` computed in ONE grouped aggregate pass — the setup that
-    * writes N key-range dirs costs 2 jobs instead of 2N. `slice` must be
-    * deterministic and non-null. [[RowCountStat]] in `statCols` is
-    * served by a count in the same pass. Returns (absolute dir, stats)
-    * pairs ready for `commitReplace`. The promotion is a local/HDFS
-    * rename; an object-store deployment writes final dirs directly via
-    * its committer — the manifest protocol above is unchanged. */
   /** Write `df` to `dir` (physical-named under the table's column
     * mapping) with the per-dir stats metered ON the write pass itself
-    * via `observe` — the r19 single-dir counterpart of writeSliced's
-    * grouped pass. The previous shape (write, then [[dirStats]]
-    * read-back) scanned the just-written bytes a SECOND time; at 100 TB
-    * an INSERT paid double I/O, and locally it paid ~3 extra
-    * scheduler-latency jobs. Stats are observed on the LOGICAL frame so
-    * keys come out logical with no colmap back-rename; rendering rides
-    * [[colStatsOf]], which observe-computed and re-read stats already
-    * share. `cols` may include [[RowCountStat]]; [[BytesStat]] rides
-    * along via the driver content walk exactly as in dirStats. */
+    * via `observe` — no read-back of the bytes just written (at 100 TB
+    * an INSERT would pay double I/O, and locally ~3 extra
+    * scheduler-latency jobs). Stats are observed on the LOGICAL frame,
+    * so keys come out logical with no colmap back-rename. `cols` may
+    * include [[RowCountStat]] and [[BytesStat]]. */
   def writeDirWithStats(spark: SparkSession, root: String, df: DataFrame,
-      dir: String, cols: Seq[String]): Seq[ColStats] = {
-    import org.apache.spark.sql.functions.{count, lit, max, min}
+      dir: String, cols: Seq[String]): Seq[ColStats] =
+    writeDirWithStats(spark, root, df, dir, cols, None, Nil)._1
+
+  /** The full observe-on-write producer: only the rows `written` keeps
+    * land in `dir` and are metered; every row of `df` feeds `counters`
+    * (aggregate columns, returned by alias), all on the one write pass.
+    * Engine helper columns (`__graft_` prefix) never land in `dir`. */
+  private[ingest] def writeDirWithStats(spark: SparkSession, root: String,
+      df: DataFrame, dir: String, cols: Seq[String],
+      written: Option[org.apache.spark.sql.Column],
+      counters: Seq[org.apache.spark.sql.Column])
+      : (Seq[ColStats], Map[String, Any]) = {
     val real = cols.filterNot(isPseudoStat)
-    val wantRows = cols.contains(RowCountStat)
-    if (real.isEmpty && !wantRows) {
-      toPhysicalNames(spark, root, df).write.parquet(dir)
-      return if (cols.contains(BytesStat)) Seq(dirBytesStat(spark, dir)) else Nil
-    }
+    val aggs = statAggs(df, real, written).zipWithIndex
+      .map { case (a, i) => a.as(s"__stat$i") } ++ counters
     val obs = org.apache.spark.sql.Observation()
-    val aggs = real.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(statCol(df, c)).as(s"mn_$i"),
-        max(statCol(df, c)).as(s"mx_$i"),
-        count(statCol(df, c)).as(s"nn_$i"))
-    } :+ count(lit(1)).as("rows")
-    // stat value types, resolved analysis-only (no job)
-    val dts = real.map(c => df.select(statCol(df, c)).schema.head.dataType)
-    toPhysicalNames(spark, root, df.observe(obs, aggs.head, aggs.tail: _*))
+    val observed = df.observe(obs, aggs.head, aggs.tail: _*)
+    val out = written.fold(observed)(observed.filter)
+    toPhysicalNames(spark, root,
+      out.drop(df.columns.filter(_.startsWith("__graft_")).toSeq: _*))
       .write.parquet(dir)
     val row = obs.get
-    val base = real.zipWithIndex.flatMap { case (c, i) =>
-      val nn = row(s"nn_$i").asInstanceOf[Long]
-      colStatsOf(c, dts(i), row(s"mn_$i"), row(s"mx_$i"))
-        .toSeq :+ ColStats(nnStat(c), "num", nn.toString, nn.toString)
-    } ++ (if (wantRows) {
-      val n = row("rows").asInstanceOf[Long]
-      Seq(ColStats(RowCountStat, "num", n.toString, n.toString))
-    } else Nil)
-    if (base.isEmpty) base else base :+ dirBytesStat(spark, dir)
+    (renderStats(cols, statTypes(df, real), i => row(s"__stat$i"),
+      dirBytesStat(spark, dir)), row)
   }
 
-  /** Per-dir stats for MANY dirs in ONE grouped aggregate pass, keyed
-    * on the owning dir's basename via `input_file_name()` — the r19
-    * batch for rewrite loops that previously ran [[dirStats]] per dir
-    * (zorder promotion, REPLACE-WHERE survivors): N dirs cost one scan
-    * + one exchange instead of N schema-inference jobs + N aggregates,
-    * a pure driver-latency wall at high dir counts. Callers must pass
-    * dirs written by the SAME writer (one schema) — the single parquet
-    * read resolves one schema for all of them. Rendering and row shape
-    * are IDENTICAL to [[dirStats]] (same [[colStatsOf]] renderer, same
-    * nn counter / __rows / __bytes discipline); a dir missing from the
-    * grouped result (empty dir, or a basename-extraction surprise)
-    * falls back to its own dirStats pass — correctness of the stats
-    * contract over speed, the writeSliced discipline. */
+  /** Per-dir stats for MANY dirs in ONE aggregate pass — the ONE
+    * read-back producer. Several dirs group on the owning dir's basename
+    * via `input_file_name()` (rewrite loops: zorder promotion,
+    * REPLACE-WHERE survivors, sliced writes): N dirs cost one scan + one
+    * exchange instead of N schema-inference jobs + N aggregates, a pure
+    * driver-latency wall at high dir counts. One dir is an ungrouped
+    * aggregate ([[dirStats]]). Callers must pass dirs written by the
+    * SAME writer (one schema) — the single parquet read resolves one
+    * schema for all of them. Under a column mapping the dirs carry
+    * PHYSICAL names while `cols` are logical — the frame is projected
+    * back before aggregating so stat keys stay logical. A dir missing
+    * from the grouped result (empty dir, or a basename-extraction
+    * surprise) falls back to its own one-dir pass — correctness of the
+    * stats contract over speed. */
   def dirStatsBatch(spark: SparkSession, dirs: Seq[String],
       cols: Seq[String],
       colmap: Map[String, String] = Map.empty,
@@ -2621,17 +2582,13 @@ object ManifestCommit {
       // (one task per file) before the aggregate — pure scheduler
       // latency the caller usually already paid to write those bytes.
       schema: Option[org.apache.spark.sql.types.StructType] = None): Map[String, Seq[ColStats]] = {
-    import org.apache.spark.sql.functions.{count, element_at, input_file_name, lit, max, min, split}
+    import org.apache.spark.sql.functions.{element_at, input_file_name, split}
     if (dirs.isEmpty) return Map.empty
-    if (dirs.size == 1 || cols.isEmpty)
-      return dirs.map(d => d -> dirStats(spark, d, cols, colmap, schema)).toMap
     val real = cols.filterNot(isPseudoStat)
-    val wantRows = cols.contains(RowCountStat)
-    if (real.isEmpty && !wantRows)
-      return dirs.map(d => d -> dirStats(spark, d, cols, colmap, schema)).toMap
-    // basenames are globally unique (newDataDir embeds a UUID) — the
-    // group key needs no root-path normalization
-    val byName = dirs.map(d => new org.apache.hadoop.fs.Path(d).getName -> d).toMap
+    // a pseudo-only request reads no data
+    if (real.isEmpty && !cols.contains(RowCountStat))
+      return dirs.map(d => d -> renderStats(cols, Nil, _ => null,
+        dirBytesStat(spark, d))).toMap
     val df0 = schema match {
       case Some(s) => spark.read.schema(s).parquet(dirs: _*)
       case None => spark.read.parquet(dirs: _*)
@@ -2639,26 +2596,21 @@ object ManifestCommit {
     val df = colmap.foldLeft(df0) { case (d, (log, phys)) =>
       if (log != phys) d.withColumnRenamed(phys, log) else d
     }
-    val aggs = real.flatMap(c => Seq(min(statCol(df, c)),
-      max(statCol(df, c)), count(statCol(df, c)))) :+ count(lit(1))
-    val rows = df
+    val aggs = statAggs(df, real)
+    val dts = statTypes(df, real)
+    def render(d: String, r: org.apache.spark.sql.Row, at: Int) =
+      d -> renderStats(cols, dts, i => r.get(at + i), dirBytesStat(spark, d))
+    if (dirs.size == 1)
+      return Map(render(dirs.head, df.agg(aggs.head, aggs.tail: _*).collect()(0), 0))
+    // basenames are globally unique (newDataDir embeds a UUID) — the
+    // group key needs no root-path normalization
+    val byName = dirs.map(d => new org.apache.hadoop.fs.Path(d).getName -> d).toMap
+    val grouped = df
       .groupBy(element_at(split(input_file_name(), "/"), -2).as("__dir"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val grouped = rows.flatMap { r =>
-      byName.get(r.getString(0)).map { d =>
-        val base = real.zipWithIndex.flatMap { case (c, i) =>
-          val nn = r.getLong(3 * i + 3)
-          colStatsOf(c, r.schema(3 * i + 1).dataType,
-            r.get(3 * i + 1), r.get(3 * i + 2))
-            .toSeq :+ ColStats(nnStat(c), "num", nn.toString, nn.toString)
-        } ++ (if (wantRows) {
-          val n = r.getLong(3 * real.size + 1)
-          Seq(ColStats(RowCountStat, "num", n.toString, n.toString))
-        } else Nil)
-        d -> (if (base.isEmpty) base else base :+ dirBytesStat(spark, d))
-      }
-    }.toMap
+      .flatMap(r => byName.get(r.getString(0)).map(render(_, r, 1)))
+      .toMap
     grouped ++ dirs.filterNot(grouped.contains).map { d =>
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"dirStatsBatch: dir $d missed the grouped key — metering it " +
@@ -2798,10 +2750,20 @@ object ManifestCommit {
     }
   }
 
+  /** Write `df` as one immutable data dir per distinct value of `slice`
+    * in a SINGLE write job (hive-style staging layout, then each
+    * partition dir promoted to a `data_*` dir), with per-dir stats on
+    * `statCols` read back in ONE grouped pass over the promoted dirs
+    * ([[dirStatsBatch]]) — the setup that writes N key-range dirs costs
+    * the same few jobs as one dir, not a pass per dir. `slice` must be
+    * deterministic (a null value lands in its own dir). Returns
+    * (absolute dir, stats) pairs ready for `commitReplace`. The
+    * promotion is a local/HDFS rename; an object-store deployment
+    * writes final dirs directly via its committer — the manifest
+    * protocol above is unchanged. */
   def writeSliced(spark: SparkSession, root: String, df: DataFrame,
       slice: org.apache.spark.sql.Column,
       statCols: Seq[String]): Seq[(String, Seq[ColStats])] = {
-    import org.apache.spark.sql.functions.{count, lit, max, min}
     val staging =
       s"$root/._sliced_staging_${java.util.UUID.randomUUID().toString.take(8)}"
     // the slice value is computed over LOGICAL names, the files land
@@ -2857,11 +2819,9 @@ object ManifestCommit {
     // its own unescape rules and a warned per-dir fallback. The
     // read-back scans only the just-written bytes and keys on dir
     // BASENAMES — rendering-proof by construction.
-    val statsOf =
-      if (statCols.isEmpty) Map.empty[String, Seq[ColStats]]
-      else dirStatsBatch(spark, newDirs, statCols, colmap = dirColmap,
-        schema = Some(stagedSchema))
-    newDirs.map(d => d -> statsOf.getOrElse(d, Nil))
+    val statsOf = dirStatsBatch(spark, newDirs, statCols, colmap = dirColmap,
+      schema = Some(stagedSchema))
+    newDirs.map(d => d -> statsOf(d))
   }
 
   /** Hive's directory name for a null partition value. */

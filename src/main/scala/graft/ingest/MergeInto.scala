@@ -267,85 +267,45 @@ object MergeInto {
       .when(src("__del"), lit("delete"))
       .otherwise(lit("update"))
 
-    // preserve kept dirs' stats; the SAME cols for the new dir are
-    // metered by observe on the write pass itself — no post-write
+    // preserve kept dirs' stats; the SAME cols (and the byte meter) for
+    // the new dir are metered on the write pass itself — no post-write
     // dirStats re-read of the dir we just produced
-    val statCols = m.stats.values.flatten.map(s => ManifestCommit.baseStatCol(s.col)).toSeq.distinct match {
-      case Nil => keys
-      case cs => cs
-    }
-    val realStatCols = statCols.filterNot(ManifestCommit.PseudoStats)
-    val wantRows = statCols.contains(ManifestCommit.RowCountStat)
+    val statCols = ((m.stats.values.flatten.map(s => ManifestCommit.baseStatCol(s.col))
+      .toSeq match {
+        case Nil => keys
+        case cs => cs
+      }) :+ ManifestCommit.BytesStat).distinct
 
-    // observe BEFORE the filter so deleted/skipped rows are still metered
-    // on the same single pass that writes the output; stat min/max are
-    // conditional on the row being WRITTEN (a deleted row's values must
-    // not widen the new dir's pruning range)
-    val written =
-      col("__action") =!= "delete" && col("__action") =!= "skip"
-    val obs = Observation()
-    // a stat "column" may be a slice-component EXPRESSION text (bucket
-    // components of a composite slice) — re-parse those with expr()
-    def statCol(c: String, cols: Seq[String]) =
-      if (cols.contains(c)) col(c) else org.apache.spark.sql.functions.expr(c)
-    val statAggs = realStatCols.flatMap(c => Seq(
-      min(when(written, statCol(c, outCols))).as(s"__mn_$c"),
-      max(when(written, statCol(c, outCols))).as(s"__mx_$c"),
-      // non-null counter, same pass — observe-computed stats stay
-      // interchangeable with a dirStats re-read (MergeIntoSpec pins it)
-      count(when(written, statCol(c, outCols))).as(s"__nn_$c")))
+    // the action counters ride the write pass too, observed BEFORE the
+    // written-row filter so deleted/skipped rows are still counted; stat
+    // min/max only see WRITTEN rows (a deleted row's values must not
+    // widen the new dir's pruning range)
     val out = joined
       .select((outCols.map(c => when(action === "keep", tgt(c)).otherwise(src(c)).as(c)) :+
-        action.as("__action")): _*)
-      .observe(obs,
-        sum(when(col("__action") === "update", 1L).otherwise(0L)).as("updated"),
-        (Seq(
-          sum(when(col("__action") === "delete", 1L).otherwise(0L)).as("deleted"),
-          sum(when(col("__action") === "insert", 1L).otherwise(0L)).as("inserted"),
-          sum(when(col("__action") === "keep", 1L).otherwise(0L)).as("survivors")) ++
-          statAggs): _*)
-      .filter(written)
-      .drop("__action")
-
+        action.as("__graft_action")): _*)
+    val act = col("__graft_action")
+    def n(a: String) = sum(when(act === a, 1L).otherwise(0L)).as(a)
     val newDir = ManifestCommit.newDataDir(root)
     // logical->physical rename under a column mapping (no-op otherwise);
-    // stats were observed on the logical frame above, so keys stay logical
-    ManifestCommit.toPhysicalNames(spark, root, out).write.parquet(newDir)
-
-    val metrics = obs.get
+    // stats are observed on the logical frame, so keys stay logical
+    val (newStats, metrics) = ManifestCommit.writeDirWithStats(spark, root,
+      out, newDir, statCols,
+      written = Some(act =!= "delete" && act =!= "skip"),
+      counters = Seq(n("update"), n("delete"), n("insert"), n("keep")))
     def metric(name: String): Long = metrics.get(name) match {
       case Some(v: java.lang.Long) => v.longValue()
       case Some(v) if v != null => v.toString.toLong
       case _ => 0L
     }
     val (upd, del, ins, keep) =
-      (metric("updated"), metric("deleted"), metric("inserted"), metric("survivors"))
-
-    val newStats =
-      if (upd + ins + keep == 0L) Nil
-      else realStatCols.flatMap { c =>
-        val dt =
-          if (out.columns.contains(c)) out.schema(c).dataType
-          else out.select(org.apache.spark.sql.functions.expr(c))
-            .schema.head.dataType
-        ManifestCommit.colStatsOf(c, dt,
-          metrics.get(s"__mn_$c").orNull, metrics.get(s"__mx_$c").orNull)
-          .toSeq :+ ColStats(ManifestCommit.nnStat(c), "num",
-            metrics.get(s"__nn_$c").map(_.toString).getOrElse("0"),
-            metrics.get(s"__nn_$c").map(_.toString).getOrElse("0"))
-      } ++ (if (wantRows)
-        Seq(ColStats(ManifestCommit.RowCountStat, "num",
-          (upd + ins + keep).toString, (upd + ins + keep).toString))
-      else Nil) ++
-        // exact on-disk bytes for the rewritten dir ([[BytesStat]])
-        Seq(ManifestCommit.dirBytesStat(spark, newDir))
+      (metric("update"), metric("delete"), metric("insert"), metric("keep"))
     val newName = new org.apache.hadoop.fs.Path(newDir).getName
     // every merge records the (possibly evolved) union schema: readers of
     // this generation plan with it explicitly, so cold dirs that predate
     // an evolved column null-fill without any footer sweep. Nullability
     // is forced — a cold dir has no values for an evolved column.
     val unionSchema = org.apache.spark.sql.types.StructType(
-      out.schema.fields.map(_.copy(nullable = true)))
+      out.drop("__graft_action").schema.fields.map(_.copy(nullable = true)))
     // rebasing commit: touched dirs are both the read set (pinned — a
     // concurrent rewrite of one means this output is stale) and the
     // displaced set; kept dirs' stats and DVs (including concurrent
@@ -476,113 +436,39 @@ object MergeInto {
           stats.find(_.col == pruneCol).exists(cs =>
             !cs.overlaps(Some(kr.min), Some(kr.max)))))
 
-      // keys actually present among a dir's LIVE rows (existing DV
-      // applied first, so re-deleting an already-deleted key is a no-op)
-      def buildDv(d: String): (String, String, Long, Long) = {
-        val liveDir = ManifestCommit.readDirsOf(spark, root, m, Seq(d))
-        val matched = liveDir.join(broadcast(distinctKeys), keyCols, "left_semi")
-        // matched ROWS (not distinct keys) feed the dv-dead counter:
-        // under key duplication within a dir one dv key kills several
-        // rows, and the counter must track rows for live = rows − dead.
-        // Both counts ride ONE aggregate (semi-joined rows always carry
-        // fully non-null keys — null-unsafe equality — so countDistinct
-        // equals present.count).
-        val cnt = matched.agg(count(lit(1)),
-          countDistinct(keyCols.head, keyCols.tail: _*)).collect()(0)
-        val matchedRows = cnt.getLong(0)
-        val newlyDeleted = cnt.getLong(1)
-        val present = matched.select(keyCols.map(col): _*).distinct()
-        if (newlyDeleted == 0L) (d, "", 0L, 0L)
-        else {
-          val dvDf = m.dvs.get(d) match {
-            case Some(old) =>
-              ManifestCommit.readDvs(spark,
-                Seq(ManifestCommit.dirAbs(root, old)))
-                .unionByName(present).distinct()
-            case None => present
-          }
-          val dvName = s"_dv_${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}"
-          dvDf.coalesce(1).write.parquet(s"$root/$dvName")
-          (d, dvName, newlyDeleted, matchedRows)
-        }
-      }
-      // BATCHED DV build for touched dirs WITHOUT an existing DV — the
-      // common case (r19): ONE semi-join over every such dir with
-      // per-dir attribution (__dir), one grouped count, one partitioned
-      // write staging all new DV key sets, then a rename per hit dir.
-      // The old shape ran semi-join + aggregate + write PER DIR: on a
-      // month-sliced table whose delete keys prune on a DIFFERENT
-      // column every dir is "touched", and ~4 scheduler round-trips per
-      // no-op dir dominated the DELETE wall clock (q179: 320 of its 345
-      // jobs). Dirs already carrying a DV go per-dir (the old-key union
-      // is per-dir work, and such dirs are few between compactions).
-      def buildDvBatch(ds: Seq[String]): Seq[(String, String, Long, Long)] = {
-        val nameOf = ds.map(d => new org.apache.hadoop.fs.Path(
-          ManifestCommit.dirAbs(root, d)).getName -> d).toMap
-        val live = ManifestCommit.readDirsOf(spark, root, m, ds, keepDir = true)
-        val matched = live.join(broadcast(distinctKeys), keyCols, "left_semi")
-          .select((col("__dir") +: keyCols.map(col)): _*)
-        val cnts = matched.groupBy("__dir")
+      // keys actually present among each touched dir's LIVE rows
+      // (existing DV applied first, so re-deleting an already-deleted key
+      // is a no-op), attributed by __dir in ONE semi-join over every
+      // touched dir. Matched ROWS (not distinct keys) feed the dv-dead
+      // counter: under key duplication within a dir one dv key kills
+      // several rows, and the counter must track rows for live = rows −
+      // dead. Both counts ride ONE grouped aggregate (semi-joined rows
+      // always carry fully non-null keys — null-unsafe equality).
+      val byBase = touched.map(d => new org.apache.hadoop.fs.Path(
+        ManifestCommit.dirAbs(root, d)).getName -> d).toMap
+      lazy val matched = ManifestCommit.readDirsOf(spark, root, m, touched,
+        keepDir = true)
+        .join(broadcast(distinctKeys), keyCols, "left_semi")
+        .select((col("__dir") +: keyCols.map(col)): _*)
+      val cnts: Map[String, (Long, Long)] =
+        if (touched.isEmpty) Map.empty
+        else matched.groupBy("__dir")
           .agg(count(lit(1)), countDistinct(keyCols.head, keyCols.tail: _*))
-          .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val dvOf: Map[String, String] =
-          if (cnts.isEmpty) Map.empty
-          else {
-            val staging = s"$root/._dv_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-            // one file per DV: each dir's key set lands in one task
-            matched.distinct().repartition(col("__dir"))
-              .write.partitionBy("__dir").parquet(staging)
-            val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            val promoted = cnts.keys.map { n =>
-              val dvName = s"_dv_${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}"
-              val from = new org.apache.hadoop.fs.Path(staging, s"__dir=$n")
-              require(f.rename(from, new org.apache.hadoop.fs.Path(root, dvName)),
-                s"deleteWhere: could not promote DV for $n")
-              n -> dvName
-            }.toMap
-            f.delete(new org.apache.hadoop.fs.Path(staging), true)
-            promoted
-          }
-        ds.map { d =>
-          val n = new org.apache.hadoop.fs.Path(
-            ManifestCommit.dirAbs(root, d)).getName
-          cnts.get(n) match {
-            case Some((rows, keys)) => (nameOf(n), dvOf(n), keys, rows)
-            case None => (d, "", 0L, 0L)
-          }
-        }
-      }
-      val results: Seq[(String, String, Long, Long)] = if (touched.isEmpty) Nil else {
-        val (dvdTouched, plainTouched) = touched.partition(m.dvs.contains)
-        val plainResults =
-          if (plainTouched.size <= 1) plainTouched.map(buildDv)
-          else buildDvBatch(plainTouched)
-        // per-dir DV-union builds are INDEPENDENT small jobs — submit
-        // them from concurrent threads so their scheduling gaps overlap
-        val dvdResults: Seq[(String, String, Long, Long)] =
-          if (dvdTouched.size <= 1) dvdTouched.map(buildDv)
-          else {
-            import scala.concurrent.{Await, ExecutionContext, Future}
-            import scala.concurrent.duration.Duration
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(dvdTouched.size, 8))
-            implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-            try Await.result(Future.sequence(
-              dvdTouched.map(d => Future(buildDv(d)))), Duration.Inf)
-            finally pool.shutdown()
-          }
-        plainResults ++ dvdResults
-      }
-      val totalDeleted = results.map(_._3).sum
-      val newDvs = results.collect { case (d, dv, n, _) if n > 0L => d -> dv }.toMap
+          .collect().flatMap(r => byBase.get(r.getString(0))
+            .map(_ -> (r.getLong(1), r.getLong(2)))).toMap
+      val hitDvd = touched.filter(d => cnts.contains(d) && m.dvs.contains(d))
+      val newDvs = stageDvs(spark, root, matched,
+        if (hitDvd.isEmpty) None
+        else Some(ManifestCommit.dvRowsOf(spark, root, m, hitDvd)),
+        cnts.keys.toSeq)
+      val totalDeleted = cnts.values.map(_._2).sum
       // exact dead-row counters ride the same commit so COUNT(*) stays
       // manifest-only through merge-on-read deletes: new dead = prior
       // dead + rows newly killed. A dir whose prior dv PREDATES the
       // counter (dv present, no counter) is left unstamped — a partial
       // counter would make tableRowCount WRONG instead of unavailable
       val statUpdates: Map[String, Seq[ColStats]] =
-        results.collect { case (d, _, n, rows) if n > 0L &&
+        cnts.collect { case (d, (rows, _)) if
             (m.dvs.get(d).isEmpty ||
               m.stats.getOrElse(d, Nil).exists(_.col == ManifestCommit.DvDeadStat)) =>
           val prior = m.stats.getOrElse(d, Nil)
@@ -620,6 +506,36 @@ object MergeInto {
         }
       DeleteResult(committed.gen, m.dirs.size, newDvs.size, totalDeleted)
     } finally distinctKeys.unpersist()
+  }
+
+  /** The ONE deletion-vector build, for key DVs (`deleteWhere`) and
+    * position DVs (merge-on-read UPDATE) alike: `fresh` holds the
+    * touched dirs' newly dead identities (the DV columns) attributed by
+    * `__dir` (the data dir's basename), `old` the prior DV rows of the
+    * `hit` dirs that already carry one, attributed the same way; one
+    * partitioned staged write lays out every new DV, then one rename
+    * per hit dir promotes it. The job count is flat in the number of
+    * hit dirs, DV'd or not. Returns hit dir → new DV name. */
+  private def stageDvs(spark: SparkSession, root: String, fresh: => DataFrame,
+      old: Option[DataFrame], hit: Seq[String]): Map[String, String] = {
+    if (hit.isEmpty) return Map.empty
+    import org.apache.hadoop.fs.Path
+    val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = s"$root/._dv_staging_${java.util.UUID.randomUUID().toString.take(8)}"
+    // ONE shuffle: hashed on __dir, which the distinct's grouping keys
+    // contain, so each dir's rows land deduplicated in one task — one
+    // file per DV
+    old.fold(fresh)(fresh.unionByName(_)).repartition(col("__dir")).distinct()
+      .write.partitionBy("__dir").parquet(staging)
+    val out = hit.map { d =>
+      val dv = s"_dv_${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}"
+      require(f.rename(new Path(staging,
+        s"__dir=${new Path(ManifestCommit.dirAbs(root, d)).getName}"),
+        new Path(root, dv)), s"could not promote the DV staged for $d")
+      d -> dv
+    }.toMap
+    f.delete(new Path(staging), true)
+    out
   }
 
   // ---- predicate DML: DELETE/UPDATE WHERE <arbitrary condition> ----
@@ -779,70 +695,42 @@ object MergeInto {
           return None
       }
       val posCols = Seq(ManifestCommit.PosFileCol, ManifestCommit.PosIdxCol)
-      // logical<->physical rename for the raw dv-conversion read
-      val eff: Map[String, String] = tSchema.fieldNames.toSeq
-        .flatMap(n => m.colmap.get(n).filter(_ != n).map(n -> _)).toMap
-      // per-dir position DVs — independent small jobs on a driver pool
-      // (the deleteWhere latency shape)
-      val dvBuilds: Seq[(String, String, Long)] = {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(touched.size, 8))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(touched.map { d => Future {
-          val base = new org.apache.hadoop.fs.Path(
-            ManifestCommit.dirAbs(root, d)).getName
-          val newPos = matched.filter(col("__dir") === base)
-            .select(posCols.map(col): _*)
-          val dvDf: DataFrame = m.dvs.get(d) match {
-            case None => newPos
-            case Some(old) =>
-              val oldDf = ManifestCommit.readDvs(spark,
-                Seq(ManifestCommit.dirAbs(root, old)))
-              if (oldDf.columns.toSet == posCols.toSet)
-                oldDf.unionByName(newPos).distinct()
-              else {
-                // KEY-based prior dv: convert — positions of the
-                // previously-dead rows from a raw (dv-less) scan
-                // semi-joined with the old keys, exact to the row
-                val rawAbs = ManifestCommit.dirAbs(root, d)
-                val raw0 = m.physicalSchema match {
-                  case Some(s) => spark.read.schema(s).parquet(rawAbs)
-                  case None => spark.read.parquet(rawAbs)
-                }
-                val raw = eff.foldLeft(raw0) { case (df, (log, phys)) =>
-                  if (log != phys) df.withColumnRenamed(phys, log) else df
-                }.withColumn(ManifestCommit.PosFileCol,
-                    col("_metadata.file_name"))
-                  .withColumn(ManifestCommit.PosIdxCol,
-                    col("_metadata.row_index"))
-                raw.join(broadcast(oldDf), oldDf.columns.toSeq, "left_semi")
-                  .select(posCols.map(col): _*)
-                  .unionByName(newPos).distinct()
-              }
-          }
-          // positions are row-exact, so the dv's row count IS the dead
-          // count — stamped exactly even where the prior dv predated
-          // the counter
-          val persisted = dvDf.cache()
-          val dead = persisted.count()
-          val dvName = "_dv_" +
-            java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-          persisted.coalesce(1).write.parquet(s"$root/$dvName")
-          persisted.unpersist()
-          (d, dvName, dead)
-        } }), Duration.Inf)
-        finally pool.shutdown()
-      }
-      val newDvs = dvBuilds.map { case (d, dv, _) => d -> dv }.toMap
+      // prior DVs join the same batched build: position DVs as they are,
+      // a KEY-based prior DV converted to the positions of the rows it
+      // killed — a raw (DV-less) scan of its dirs semi-joined with the
+      // old keys by dir, exact to the row
+      val old = touched.filter(m.dvs.contains)
+        .groupBy(d => ManifestCommit.dvColumnsOf(spark,
+          ManifestCommit.dirAbs(root, m.dvs(d))))
+        .toSeq.map { case (dvCols, ds) =>
+          val rows = ManifestCommit.dvRowsOf(spark, root, m, ds)
+          if (dvCols.toSet == posCols.toSet) rows
+          else ManifestCommit.readDirsOf(spark, root, m.copy(dvs = Map.empty),
+              ds, Some(tSchema), keepPos = true)
+            .join(broadcast(rows), dvCols :+ "__dir", "left_semi")
+            .select((col("__dir") +: posCols.map(col)): _*)
+        }
+      val newDvs = stageDvs(spark, root,
+        matched.select((col("__dir") +: posCols.map(col)): _*),
+        old.reduceOption(_.unionByName(_)), touched)
+      // positions are row-exact, so the DV's row count (its files'
+      // footers, no job) IS the dead count — stamped exactly even where
+      // the prior DV predated the counter
+      val conf = spark.sparkContext.hadoopConfiguration
       val dvStatUpdates: Map[String, Seq[ColStats]] =
-        dvBuilds.map { case (d, _, dead) =>
+        newDvs.map { case (d, dv) =>
+          val dead = new org.apache.hadoop.fs.Path(root, dv).getFileSystem(conf)
+            .listStatus(new org.apache.hadoop.fs.Path(root, dv))
+            .filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+              try r.getRecordCount finally r.close()
+            }.sum
           val prior = m.stats.getOrElse(d, Nil)
           d -> (prior.filterNot(_.col == ManifestCommit.DvDeadStat) :+
             ColStats(ManifestCommit.DvDeadStat, "num",
               dead.toString, dead.toString))
-        }.toMap
+        }
       def reclaimDvs(): Unit = {
         val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
@@ -1183,11 +1071,10 @@ object MergeInto {
         written
     }
     val added = delAdded ++ insDirs.map(_._1)
-    // one grouped stats pass over the survivor-rewrite dirs (a single
-    // dir today — dirStatsBatch degrades to dirStats at size 1)
-    val stats = (if (statCols.isEmpty) delAdded.map(_ -> Seq.empty[ManifestCommit.ColStats]).toMap
-                 else ManifestCommit.dirStatsBatch(spark, delAdded, statCols,
-                   colmap = m.colmap, schema = m.physicalSchema)) ++ insDirs.toMap
+    // one stats read-back over the survivor-rewrite dir (a single dir
+    // today — dirStatsBatch's ungrouped one-dir case)
+    val stats = ManifestCommit.dirStatsBatch(spark, delAdded, statCols,
+      colmap = m.colmap, schema = m.physicalSchema) ++ insDirs.toMap
     val committed = ManifestCommit.commitReconciled(spark, root, m,
       displaced = affected, added = added, addedStats = stats,
       schema = m.tableSchema, op = op, pinned = affected.toSet,

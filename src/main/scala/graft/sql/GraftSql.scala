@@ -1451,6 +1451,7 @@ case class GraftDataSkipping(spark: SparkSession)
 
   /** Classification of one aggregate output the manifest can serve. */
   private sealed trait AggSpec
+  private case object GroupKey extends AggSpec
   private case object CountStar extends AggSpec
   private case class CountCol(a: AttributeReference) extends AggSpec
   private case class MinOf(a: AttributeReference) extends AggSpec
@@ -1534,26 +1535,17 @@ case class GraftDataSkipping(spark: SparkSession)
     case _ => None
   }
 
-  /** `SELECT count(*) / count(c) / min(c) / max(c) FROM graft.t
-    * [WHERE <pred>]` (no grouping) answered from manifest stats — the
-    * Delta/Iceberg metadata-only aggregate idea, three tiers:
+  /** `SELECT [k,] count(*) / count(c) / min(c) / max(c) FROM graft.t
+    * [WHERE <pred>] [GROUP BY k]` answered from manifest stats — the
+    * Delta/Iceberg metadata-only aggregate and the Spark
+    * OptimizeMetadataOnlyQuery / Iceberg partition-rollup ideas, on stats
+    * instead of paths, in ONE evaluator. The ungrouped query is the
+    * grouped case with zero keys: a single group holding every candidate
+    * dir, which always emits one row.
     *
-    *  - COUNT(*) from `__rows` minus per-dir DV dead counts (exact
-    *    through deletes — carried from the original count shortcut);
-    *  - MIN/MAX from per-dir min/max stats with ZERO scan when every
-    *    live dir is DV-free and either carries the stat or an
-    *    `__analyzed` marker proving the column is all-null there (a DV
-    *    may have deleted the extreme row, so a DV'd dir's stats are
-    *    bounds, not witnesses — never served from metadata);
-    *  - HYBRID otherwise: scan ONLY the DV'd / unmetered / straddling
-    *    dirs and union the metered dirs' stats in as two literal rows
-    *    (per-column min and max), leaving the original Aggregate to
-    *    fold them — at 100 TB a `SELECT max(ts)` after a point DELETE
-    *    reads one dir, not the table.
-    *
-    * With a WHERE clause (round 19 — the reference's flagship BI shape
-    * is the FILTERED count, create_working_metabase_questions.py:78-100)
-    * every live dir is classified against the predicate:
+    * Every live dir is classified against the predicate (round 19 — the
+    * reference's flagship BI shape is the FILTERED count,
+    * create_working_metabase_questions.py:78-100):
     *  - DISJOINT (ordinary stats/bloom pruning, [[keptDirs]]) —
     *    contributes nothing;
     *  - FULLY COVERED (the q177 whole-dir DML proof: `extract(NOT
@@ -1561,20 +1553,41 @@ case class GraftDataSkipping(spark: SparkSession)
     *    AND every predicate column is proven null-free there by the
     *    non-null counters — a row where the predicate evaluates NULL
     *    matches nothing, so without the witness the fold would
-    *    over-count) — ALL live rows match and the dir's counters /
-    *    bounds serve exactly;
-    *  - STRADDLING — hybrid: scan just that dir WITH the predicate.
-    * `SELECT count(*) … WHERE month = X` on a month-sliced 100-TB
-    * table is then a zero-job metadata read.
+    *    over-count) — ALL live rows match;
+    *  - STRADDLING — only a scan can answer for it.
+    * A covered dir SERVES every aggregate from its stats when:
+    *  - COUNT(*): row counter (− DV dead counter when DV'd) — exact
+    *    through deletes;
+    *  - COUNT(c): non-null counter; a DV'd dir only when the counter
+    *    proves the column null-free (`__nn_c == __rows`, so COUNT(c) =
+    *    live rows — r19, one DV'd dir no longer de-optimizes the fold);
+    *  - MIN/MAX: DV-free (a DV may have deleted the extreme row, so a
+    *    DV'd dir's stats are bounds, not witnesses) and a recorded bound
+    *    or an `__analyzed` marker proving the column all-null there.
+    * When every candidate dir serves, the answer is a zero-scan
+    * LocalRelation (`SELECT count(*) … WHERE month = X` on a
+    * month-sliced 100-TB table is a zero-job metadata read; an empty
+    * candidate set folds to the empty-input aggregate). Otherwise the
+    * zero-key MIN/MAX-only case goes HYBRID: scan ONLY the unserved dirs
+    * and union the served dirs' bounds in as two literal rows, leaving
+    * the original Aggregate to fold them — at 100 TB a `SELECT max(ts)`
+    * after a point DELETE reads one dir, not the table. COUNT can't ride
+    * a union (it would double-count), and a grouped rollup can't express
+    * a straddling dir's partial group: both take the ordinary scan.
     *
-    * Sound by construction: stats are EXACT per-dir min/max aggregates
-    * (dirStats/observe), values round-trip through
-    * [[ManifestCommit.parseStatValue]] or the rewrite bails to the
-    * ordinary expansion, and MIN/MAX ignore nulls so all-null dirs
-    * contribute nothing. */
+    * GROUP BY k folds when every dir records min == max for the leaf
+    * column k — each dir belongs wholly to ONE group, exactly what
+    * slicing produces — and the non-null counters prove no dir hides
+    * NULL group keys. The BI daily-counts dashboard over a 100-TB sliced
+    * table becomes a metadata read.
+    *
+    * Sound by construction: stats are EXACT per-dir aggregates, values
+    * round-trip through [[ManifestCommit.parseStatValue]] or the rewrite
+    * bails to the ordinary expansion (a POISONED value never throws from
+    * inside the optimizer), and MIN/MAX ignore nulls so all-null dirs
+    * contribute nothing. Any unmet condition returns None — ordinary
+    * scan. */
   private def metadataAgg(agg: Aggregate): Option[LogicalPlan] = {
-    if (agg.groupingExpressions.nonEmpty) return metadataGroupedAgg(agg)
-    if (agg.aggregateExpressions.isEmpty) return None
     val (g, cond) = agg.child match {
       case gr: GraftRelation => (gr, None)
       case Project(ps, gr: GraftRelation) if ps.forall(_.deterministic) =>
@@ -1592,22 +1605,28 @@ case class GraftDataSkipping(spark: SparkSession)
         !c.references.forall(a => g.output.exists(_.exprId == a.exprId)))
         return None
     }
-    val specOpts = agg.aggregateExpressions.map(aggSpecOf)
-    if (specOpts.exists(_.isEmpty)) return None
-    val specs = specOpts.flatten
-    val m = g.manifest
-    val mmCols: Seq[AttributeReference] = specs.collect {
-      case MinOf(a) => a
-      case MaxOf(a) => a
-    }.distinctBy(_.exprId)
-    val ccCols: Seq[AttributeReference] = specs.collect {
-      case CountCol(a) => a
-    }.distinctBy(_.exprId)
+    val key: Option[AttributeReference] = agg.groupingExpressions match {
+      case Seq() if agg.aggregateExpressions.nonEmpty => None
+      case Seq(a: AttributeReference)
+          if g.output.exists(_.exprId == a.exprId) &&
+            ManifestCommit.statParseable(a.dataType) => Some(a)
+      case _ => return None
+    }
+    // each output is the grouping key itself or a servable aggregate
+    val cells: Seq[AggSpec] = agg.aggregateExpressions.map {
+      case a: AttributeReference if key.exists(_.exprId == a.exprId) => GroupKey
+      case Alias(a: AttributeReference, _) if key.exists(_.exprId == a.exprId) =>
+        GroupKey
+      case e => aggSpecOf(e).getOrElse(return None)
+    }
     // stats describe LEAF columns: a min/max/count arg must be the
     // leaf's own attribute (by exprId, not name — a derived projection
     // aliased to a leaf column's name must never read the leaf's stats)
-    if (!(mmCols ++ ccCols).forall(a =>
-      g.output.exists(_.exprId == a.exprId))) return None
+    val argCols = cells.collect {
+      case CountCol(a) => a; case MinOf(a) => a; case MaxOf(a) => a
+    }.distinctBy(_.exprId)
+    if (!argCols.forall(a => g.output.exists(_.exprId == a.exprId))) return None
+    val m = g.manifest
     def statOf(d: String, c: String) =
       m.stats.getOrElse(d, Nil).find(_.col.equalsIgnoreCase(c))
     def statN(d: String, c: String): Option[Long] = statLong(m, d, c)
@@ -1635,15 +1654,11 @@ case class GraftDataSkipping(spark: SparkSession)
       dead <- if (m.dvs.contains(d)) statN(d, ManifestCommit.DvDeadStat)
               else Some(0L)
     } yield r - dead
-    // per-spec servability from one dir's stats:
-    //  - COUNT(*): row counter (+ DV dead counter when DV'd) — exact
-    //    through deletes;
-    //  - COUNT(c): non-null counter; a DV'd dir only when the counter
-    //    proves the column null-free (__nn_c == __rows, so COUNT(c) =
-    //    live rows — r19, one DV'd dir no longer de-optimizes the fold);
-    //  - MIN/MAX: DV-free (a DV may have deleted the extreme row) and
-    //    a recorded bound or an __analyzed all-null marker.
-    def servable(d: String): Boolean = covered(d) && specs.forall {
+    def bounded(d: String, a: AttributeReference): Boolean = !m.dvs.contains(d) &&
+      (statOf(d, a.name).isDefined || ManifestCommit.analyzedColsOf(m, d)
+        .exists(_.equalsIgnoreCase(a.name)))
+    def servable(d: String): Boolean = covered(d) && cells.forall {
+      case GroupKey => true
       case CountStar => live(d).isDefined
       case CountCol(a) =>
         statN(d, ManifestCommit.nnStat(a.name)).isDefined &&
@@ -1651,28 +1666,23 @@ case class GraftDataSkipping(spark: SparkSession)
             (live(d).isDefined &&
               statN(d, ManifestCommit.nnStat(a.name)) ==
                 statN(d, ManifestCommit.RowCountStat)))
-      case MinOf(a) => !m.dvs.contains(d) &&
-        (statOf(d, a.name).isDefined || ManifestCommit.analyzedColsOf(m, d)
-          .exists(_.equalsIgnoreCase(a.name)))
-      case MaxOf(a) => !m.dvs.contains(d) &&
-        (statOf(d, a.name).isDefined || ManifestCommit.analyzedColsOf(m, d)
-          .exists(_.equalsIgnoreCase(a.name)))
+      case MinOf(a) => bounded(d, a)
+      case MaxOf(a) => bounded(d, a)
     }
     val (statsDirs, scanDirs) = candidate.partition(servable)
-    // fold the metered dirs' bounds; None = no dir holds a value (the
-    // column is all-null on the stats side — contributes nothing);
-    // a value that fails to round-trip poisons the whole rewrite
+    // fold the served dirs' bounds; None = no dir holds a value (the
+    // column is all-null on the stats side — contributes nothing); a
+    // value that fails to round-trip, or a malformed counter, poisons
+    // the whole rewrite (scan fallback, never a throw — ADVICE r18)
     var poisoned = false
-    def fold(a: AttributeReference, wantMin: Boolean): Option[Any] =
-      foldStatBounds(statsDirs.flatMap(statOf(_, a.name)), a, wantMin) match {
+    def fold(ds: Seq[String], a: AttributeReference, wantMin: Boolean): Option[Any] =
+      foldStatBounds(ds.flatMap(statOf(_, a.name)), a, wantMin) match {
         case Some(v) => v
         case None => poisoned = true; None
       }
-    def toInternal(a: AttributeReference, v: Option[Any]): Any =
+    def toInternal(dt: org.apache.spark.sql.types.DataType, v: Option[Any]): Any =
       v.map(org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(a.dataType)(_)).orNull
-    // malformed counters poison (scan fallback), never throw from
-    // inside the optimizer (ADVICE r18)
+        .createToCatalystConverter(dt)(_)).orNull
     def liveOr0(d: String): Long = live(d) match {
       case Some(n) => n
       case None => poisoned = true; 0L
@@ -1682,220 +1692,58 @@ case class GraftDataSkipping(spark: SparkSession)
         case Some(n) => n
         case None => poisoned = true; 0L
       }
-    if (scanDirs.isEmpty) {
-      // zero-scan: every output comes from the manifest (an empty
-      // statsDirs — every dir pruned by the predicate — folds to the
-      // empty-input aggregate: count 0, min/max NULL)
-      val cells = specs.map {
-        case CountStar => statsDirs.map(liveOr0).sum
-        case CountCol(a) => statsDirs.map(d =>
-          if (m.dvs.contains(d)) liveOr0(d) else nnOr0(d, a)).sum
-        case MinOf(a) => toInternal(a, fold(a, wantMin = true))
-        case MaxOf(a) => toInternal(a, fold(a, wantMin = false))
-      }
-      if (poisoned) return None
-      Some(LocalRelation(agg.output, Seq(InternalRow.fromSeq(cells))))
-    } else {
-      // hybrid: COUNT can't ride a union (it would double-count), and a
-      // rewrite that scans everything anyway buys nothing over the
-      // ordinary pruned expansion
-      if (specs.exists {
-        case CountStar | CountCol(_) => true; case _ => false }) return None
-      if (statsDirs.isEmpty) return None
+    if (scanDirs.nonEmpty) {
+      val mmOnly = cells.forall { case MinOf(_) | MaxOf(_) => true; case _ => false }
+      if (key.isDefined || !mmOnly || statsDirs.isEmpty) return None
       val minRow = InternalRow.fromSeq(
-        mmCols.map(a => toInternal(a, fold(a, wantMin = true))))
+        argCols.map(a => toInternal(a.dataType, fold(statsDirs, a, wantMin = true))))
       val maxRow = InternalRow.fromSeq(
-        mmCols.map(a => toInternal(a, fold(a, wantMin = false))))
+        argCols.map(a => toInternal(a.dataType, fold(statsDirs, a, wantMin = false))))
       if (poisoned) return None
-      val localAttrs = mmCols.map(a =>
+      val localAttrs = argCols.map(a =>
         AttributeReference(a.name, a.dataType, nullable = true)())
       val scanBase = expand(g, scanDirs)
-      val scanChild = Project(mmCols,
+      val scanChild = Project(argCols,
         cond.map(Filter(_, scanBase)).getOrElse(scanBase))
       val union = Union(Seq(scanChild,
         LocalRelation(localAttrs, Seq(minRow, maxRow))))
-      Some(localOptimize(agg.copy(child = union)))
+      return Some(localOptimize(agg.copy(child = union)))
     }
-  }
-
-  /** `GROUP BY <per-dir-constant column>` answered from the manifest
-    * (the public Spark OptimizeMetadataOnlyQuery / Iceberg
-    * partition-rollup idea, on stats instead of paths): when every live
-    * dir records min == max for the grouping column — each dir belongs
-    * wholly to ONE group, exactly what slicing produces — and the
-    * non-null counters prove no dir hides NULL group keys, the rollup
-    * folds driver-side with ZERO scan:
-    *  - COUNT(*) per group = Σ (row counter − DV dead counter) over the
-    *    group's dirs (exact through deletes — a DV'd dir's dead rows
-    *    carry the same constant);
-    *  - COUNT(c) per group = Σ non-null counters; a DV'd dir serves
-    *    when the counter proves the column null-free (`__nn_c ==
-    *    __rows`, so COUNT(c) = live rows — r19, one DV'd dir no longer
-    *    de-optimizes the whole rollup);
-    *  - MIN(c)/MAX(c) per group fold the member dirs' bounds (DV-free,
-    *    metered-or-marked, same rules as the ungrouped path).
-    * With a WHERE clause (r19, the q179 extension) each dir must be
-    * either DISJOINT from the predicate (excluded) or FULLY COVERED by
-    * it (the q177 proof — all live rows match, the dir serves whole);
-    * any straddling dir bails the rewrite to the ordinary scan.
-    * The BI daily-counts dashboard over a 100-TB sliced table becomes a
-    * metadata read. Any unmet condition returns None — ordinary scan. */
-  private def metadataGroupedAgg(agg: Aggregate): Option[LogicalPlan] = {
-    val (g, cond) = agg.child match {
-      case gr: GraftRelation => (gr, None)
-      case Project(ps, gr: GraftRelation) if ps.forall(_.deterministic) =>
-        (gr, None)
-      case Filter(c, gr: GraftRelation) => (gr, Some(c))
-      case Project(ps, Filter(c, gr: GraftRelation))
-          if ps.forall(_.deterministic) => (gr, Some(c))
-      case _ => return None
+    val groups: Seq[(Option[String], Seq[String])] = key match {
+      case None => Seq(None -> statsDirs)
+      case Some(k) =>
+        // every dir constant on the key, with no null keys anywhere (a
+        // null group key is invisible to min/max stats)
+        val const: Map[String, String] = statsDirs.flatMap(d =>
+          statOf(d, k.name).filter(s => s.min == s.max).map(d -> _.min)).toMap
+        val noNullKeys = statsDirs.forall(d => (for {
+          r <- statN(d, ManifestCommit.RowCountStat)
+          nn <- statN(d, ManifestCommit.nnStat(k.name))
+        } yield nn == r).getOrElse(false))
+        if (const.size != statsDirs.size || !noNullKeys) return None
+        statsDirs.groupBy(const).toSeq.map { case (v, ds) => Some(v) -> ds }
     }
-    cond.foreach { c =>
-      if (!c.deterministic || c.exists(_.isInstanceOf[PlanExpression[_]]) ||
-        !c.references.forall(a => g.output.exists(_.exprId == a.exprId)))
-        return None
-    }
-    val gCol = agg.groupingExpressions match {
-      case Seq(a: AttributeReference)
-          if g.output.exists(_.exprId == a.exprId) &&
-            ManifestCommit.statParseable(a.dataType) => a
-      case _ => return None
-    }
-    val m = g.manifest
-    def statOf(d: String, c: String) =
-      m.stats.getOrElse(d, Nil).find(_.col.equalsIgnoreCase(c))
-    def statN(d: String, c: String): Option[Long] = statLong(m, d, c)
-    // under a predicate: keep only non-pruned dirs, and require each of
-    // them PROVEN fully covered — a straddling dir would contribute a
-    // partial group count the stats cannot express
-    val dirs: Seq[String] = cond match {
-      case None => m.dirs
-      case Some(c) =>
-        val kept = keptDirs(c, g)
-        val names = g.output.map(_.name).toSet
-        val refCols = c.references.map(_.name).toSet
-        lazy val exNot = graft.ingest.StatsPredicate.extract(
-          Not(graft.ingest.StatsPredicate.minusNotNull(c))).restrict(names)
-        def fullCover(d: String): Boolean = {
-          val st = m.stats.getOrElse(d, Nil)
-          val rows = statN(d, ManifestCommit.RowCountStat)
-          refCols.nonEmpty && rows.isDefined && exNot.disjoint(st) &&
-            refCols.forall(cn =>
-              statN(d, ManifestCommit.nnStat(cn)).contains(rows.get))
-        }
-        if (!kept.forall(fullCover)) return None
-        kept
-    }
-    // every dir constant on the grouping column, with no null keys
-    // anywhere (a null group key is invisible to min/max stats)
-    val dirConst: Map[String, String] = dirs.flatMap(d =>
-      statOf(d, gCol.name).filter(s => s.min == s.max).map(d -> _.min)).toMap
-    if (dirConst.size != dirs.size) return None
-    val noNullKeys = dirs.forall { d =>
-      (for {
-        r <- statN(d, ManifestCommit.RowCountStat)
-        nn <- statN(d, ManifestCommit.nnStat(gCol.name))
-      } yield nn == r).getOrElse(false)
-    }
-    if (!noNullKeys) return None
-    // classify outputs: the grouping key itself or a servable aggregate
-    sealed trait Cell
-    case object Key extends Cell
-    case class Agg(s: AggSpec) extends Cell
-    val cells: Seq[Cell] = agg.aggregateExpressions.map {
-      case a: AttributeReference if a.exprId == gCol.exprId => Key
-      case Alias(a: AttributeReference, _) if a.exprId == gCol.exprId => Key
-      case e => aggSpecOf(e) match {
-        case Some(s) => Agg(s)
-        case None => return None
-      }
-    }
-    val specs = cells.collect { case Agg(s) => s }
-    // leaf-identity guard for aggregate args
-    val argCols = specs.collect {
-      case CountCol(a) => a; case MinOf(a) => a; case MaxOf(a) => a }
-    if (!argCols.forall(a => g.output.exists(_.exprId == a.exprId)))
-      return None
-    val anyDv = dirs.exists(m.dvs.contains)
-    def dvLiveServed(d: String): Boolean =
-      statN(d, ManifestCommit.RowCountStat).isDefined &&
-        statN(d, ManifestCommit.DvDeadStat).isDefined
-    // per-kind eligibility over ALL participating dirs (groups share
-    // the dir set)
-    val ok = specs.forall {
-      case CountStar =>
-        dirs.forall(d => statN(d, ManifestCommit.RowCountStat).isDefined &&
-          (!m.dvs.contains(d) ||
-            statN(d, ManifestCommit.DvDeadStat).isDefined))
-      case CountCol(a) =>
-        dirs.forall(d => statN(d, ManifestCommit.nnStat(a.name)).isDefined &&
-          (!m.dvs.contains(d) ||
-            (dvLiveServed(d) &&
-              statN(d, ManifestCommit.nnStat(a.name)) ==
-                statN(d, ManifestCommit.RowCountStat))))
-      case MinOf(a) => !anyDv && dirs.forall(d =>
-        statOf(d, a.name).isDefined || ManifestCommit.analyzedColsOf(m, d)
-          .exists(_.equalsIgnoreCase(a.name)))
-      case MaxOf(a) => !anyDv && dirs.forall(d =>
-        statOf(d, a.name).isDefined || ManifestCommit.analyzedColsOf(m, d)
-          .exists(_.equalsIgnoreCase(a.name)))
-    }
-    if (!ok) return None
-    val groups: Map[String, Seq[String]] =
-      dirs.groupBy(dirConst).map { case (k, ds) => k -> ds.toSeq }
-    var poisoned = false
-    def toInternal(dt: org.apache.spark.sql.types.DataType, v: Option[Any]): Any =
-      v.map(org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(dt)(_)).orNull
-    def foldGroup(ds: Seq[String], a: AttributeReference,
-        wantMin: Boolean): Option[Any] =
-      foldStatBounds(ds.flatMap(statOf(_, a.name)), a, wantMin) match {
-        case Some(v) => v
-        case None => poisoned = true; None
-      }
-    def liveOf(ds: Seq[String]): Long = ds.map(d =>
-      statN(d, ManifestCommit.RowCountStat).getOrElse(0L) -
-        (if (m.dvs.contains(d))
-           statN(d, ManifestCommit.DvDeadStat).getOrElse(0L)
-         else 0L)).sum
-    val rows: Seq[InternalRow] = groups.toSeq.flatMap { case (k, ds) =>
-      // a group whose dirs are fully DV-dead has NO live rows: a real
-      // GROUP BY emits no row for it. A DV-free dir is non-empty by
-      // construction (it recorded a constant), so any such member keeps
-      // the group; an all-DV'd group needs its counters to prove
-      // liveness — absent counters keep it (conservative, matches the
-      // scan only when the delete path recorded them, which it always
-      // does).
-      val live =
-        if (ds.exists(d => !m.dvs.contains(d))) 1L
-        else if (ds.exists(d =>
-          statN(d, ManifestCommit.RowCountStat).isEmpty ||
-            statN(d, ManifestCommit.DvDeadStat).isEmpty)) 1L
-        else liveOf(ds)
-      if (live == 0L) None
-      else {
-        val keyInternal = {
-          val parsed = ManifestCommit.parseStatValue(k, gCol.dataType)
+    // a group whose dirs are all DV'd with counters proving zero live
+    // rows has NO live rows: a real GROUP BY emits no row for it. A
+    // DV-free dir is non-empty by construction (it recorded a constant)
+    // and absent counters keep the group (conservative); the zero-key
+    // group always emits its one row.
+    def emits(ds: Seq[String]): Boolean = key.isEmpty ||
+      ds.exists(d => !m.dvs.contains(d) || live(d).isEmpty) ||
+      ds.flatMap(live).sum != 0L
+    val rows = groups.collect { case (v, ds) if emits(ds) =>
+      InternalRow.fromSeq(cells.map {
+        case GroupKey =>
+          val parsed = v.flatMap(ManifestCommit.parseStatValue(_, key.get.dataType))
           if (parsed.isEmpty) poisoned = true
-          toInternal(gCol.dataType, parsed)
-        }
-        Some(InternalRow.fromSeq(cells.map {
-          case Key => keyInternal
-          case Agg(CountStar) => liveOf(ds)
-          case Agg(CountCol(a)) =>
-            // a DV'd dir passed eligibility only as null-free
-            // (__nn == __rows): its COUNT(c) is its LIVE count
-            ds.map(d =>
-              if (m.dvs.contains(d))
-                statN(d, ManifestCommit.RowCountStat).getOrElse(0L) -
-                  statN(d, ManifestCommit.DvDeadStat).getOrElse(0L)
-              else statN(d, ManifestCommit.nnStat(a.name)).getOrElse(0L)).sum
-          case Agg(MinOf(a)) => toInternal(a.dataType, foldGroup(ds, a, wantMin = true))
-          case Agg(MaxOf(a)) => toInternal(a.dataType, foldGroup(ds, a, wantMin = false))
-        }))
-      }
+          toInternal(key.get.dataType, parsed)
+        case CountStar => ds.map(liveOr0).sum
+        case CountCol(a) => ds.map(d =>
+          if (m.dvs.contains(d)) liveOr0(d) else nnOr0(d, a)).sum
+        case MinOf(a) => toInternal(a.dataType, fold(ds, a, wantMin = true))
+        case MaxOf(a) => toInternal(a.dataType, fold(ds, a, wantMin = false))
+      })
     }
-    if (poisoned) return None
-    Some(LocalRelation(agg.output, rows))
+    if (poisoned) None else Some(LocalRelation(agg.output, rows))
   }
 }

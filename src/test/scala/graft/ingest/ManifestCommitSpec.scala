@@ -486,6 +486,54 @@ class ManifestCommitSpec extends SparkSpec {
     val (kept, total) = ManifestCommit.resolvePruned(spark, root, "id",
       Some("35"), Some("45"))
     assert(kept.size === 1 && total === 3)
+
+    // every producer yields identical ColStats for every input it can
+    // take: a slice-component expression stat, an all-null column,
+    // __rows/__bytes, a column-mapped (renamed) column and an empty dir
+    val root2 = Files.createTempDirectory("manifest_spec_").toString + "/p"
+    val src = df.withColumn("n", lit(null).cast("long"))
+      .withColumn("k", col("id") % 7)
+    val seed = ManifestCommit.writeSliced(spark, root2, src, slice,
+      Seq("id", "k"))
+    ManifestCommit.commitReplace(spark, root2, seed.map(_._1),
+      pruneDisplaced = false, stats = seed.toMap, schema = Some(src.schema))
+    val colmap = ManifestCommit.renameColumn(spark, root2, "k", "kk").colmap
+    assert(colmap.get("kk").exists(_ != "kk"), colmap)
+    val logical = src.withColumnRenamed("k", "kk")
+    val cols = Seq("id", "v", "n", "kk", "pmod(hash(kk), 4)",
+      ManifestCommit.RowCountStat, ManifestCommit.BytesStat)
+    def reread(d: String) = ManifestCommit.dirStats(spark, d, cols, colmap)
+    val sliced = ManifestCommit.writeSliced(spark, root2, logical, slice, cols)
+    val written = (0 until 3).map { i =>
+      val d = ManifestCommit.newDataDir(root2)
+      d -> ManifestCommit.writeDirWithStats(spark, root2,
+        logical.filter(slice === i), d, cols)
+    }
+    val empty = ManifestCommit.newDataDir(root2)
+    val emptyStats = ManifestCommit.writeDirWithStats(spark, root2,
+      logical.limit(0), empty, cols)
+    val all = sliced ++ written :+ (empty -> emptyStats)
+    val batch = ManifestCommit.dirStatsBatch(spark, all.map(_._1), cols, colmap)
+    all.foreach { case (d, st) =>
+      assert(st === reread(d), s"$d: producer vs dirStats")
+      assert(st === batch(d), s"$d: producer vs dirStatsBatch")
+    }
+    // the same rows through the two writers: equal up to the byte meter
+    // (file layout differs)
+    def noBytes(st: Seq[ManifestCommit.ColStats]) =
+      st.filterNot(_.col == ManifestCommit.BytesStat)
+    sliced.zip(written).foreach { case ((_, a), (_, b)) =>
+      assert(noBytes(a) === noBytes(b))
+    }
+    val s0 = sliced.head._2
+    assert(s0.find(_.col == "kk").map(s => (s.min, s.max)) === Some(("0", "6")))
+    assert(s0.exists(_.col == "pmod(hash(kk), 4)"))
+    assert(!s0.exists(_.col == "n") &&
+      s0.find(_.col == "__nn_n").map(_.min) === Some("0"))
+    assert(s0.find(_.col == ManifestCommit.RowCountStat).map(_.min) === Some("30"))
+    assert(emptyStats.map(_.col) === Seq("__nn_id", "__nn_v", "__nn_n",
+      "__nn_kk", "__nn_pmod(hash(kk), 4)", ManifestCommit.RowCountStat,
+      ManifestCommit.BytesStat))
   }
 
   test("writeSliced keeps per-dir stats for TIMESTAMP-typed and hive-ESCAPED " +

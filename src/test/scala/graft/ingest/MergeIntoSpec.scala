@@ -404,6 +404,47 @@ class MergeIntoSpec extends SparkSpec {
       s"observe-computed stats must equal a re-read: $observed vs $reread")
     // deleted row's key (1) must not widen the range: min is 5, not 1
     assert(observed.find(_.col == "id").get.min === "5")
+
+    // every stats input a merge can take: a slice-component expression
+    // stat, an all-null column, __rows/__bytes, a column-mapped (renamed)
+    // column, and an all-deleting merge's empty dir
+    val root2 = Files.createTempDirectory("merge_spec_").toString + "/p"
+    val base = spark.range(0, 40).toDF("id")
+      .withColumn("v", concat(lit("v"), col("id")))
+      .withColumn("amt", col("id").cast("double"))
+      .withColumn("n", lit(null).cast("long"))
+      .withColumn("k", col("id") % 5)
+    val dirs = ManifestCommit.writeSliced(spark, root2, base,
+      floor(col("id") / lit(10)), Seq("id", "n", "k", "pmod(hash(id), 4)",
+        ManifestCommit.RowCountStat, ManifestCommit.BytesStat))
+    ManifestCommit.commitReplace(spark, root2, dirs.map(_._1),
+      pruneDisplaced = false, stats = dirs.toMap,
+      schema = Some(StructType(base.schema.fields.map(_.copy(nullable = true)))))
+    ManifestCommit.renameColumn(spark, root2, "k", "kk")
+    def source(ids: Long*): DataFrame = spark.createDataFrame(ids.map(i =>
+      (i, s"s$i", i * 2.0, Option.empty[Long], i % 5)))
+      .toDF("id", "v", "amt", "n", "kk")
+    def meteredMatchesReread(): Seq[ManifestCommit.ColStats] = {
+      val m = ManifestCommit.readManifest(spark, root2).get
+      val newDir = m.dirs.last
+      val observed = m.stats.getOrElse(newDir, Nil)
+      val cols = observed.map(s => ManifestCommit.baseStatCol(s.col)).distinct
+      assert(observed === ManifestCommit.dirStats(spark, s"$root2/$newDir",
+        cols, m.colmap), s"merge-metered vs re-read of $newDir")
+      observed
+    }
+    // delete every row of the [30, 40) dir: the new dir is empty
+    MergeInto.merge(spark, root2, source(30L until 40L: _*), Seq("id"),
+      deleteWhen = Some(lit(true)))
+    assert(meteredMatchesReread()
+      .find(_.col == ManifestCommit.RowCountStat).map(_.min) === Some("0"))
+    // rewrites [0, 20) and the (stat-less, so always read) empty dir
+    MergeInto.merge(spark, root2, source(5L, 15L, 99L), Seq("id"))
+    val st = meteredMatchesReread()
+    assert(Seq("kk", "pmod(hash(id), 4)", "__nn_n",
+      ManifestCommit.RowCountStat, ManifestCommit.BytesStat)
+      .forall(c => st.exists(_.col == c)) && !st.exists(_.col == "n"), st)
+    assert(st.find(_.col == ManifestCommit.RowCountStat).map(_.min) === Some("21"))
   }
 
   test("pruneOrphans reclaims a crashed deleteWhere's uncommitted dv file") {

@@ -10,11 +10,11 @@ import java.nio.file.Files
   * the DVs away (the q131 discipline). */
 class MorUpdateSpec extends SparkSpec {
 
-  /** 4 range dirs of 100 rows, sliced by grp = id/100, with id+grp+v
-    * stats and counters. */
-  private def mkTable(): String = {
+  /** `groups` range dirs of 100 rows, sliced by grp = id/100, with
+    * id+grp+v stats and counters. */
+  private def mkTable(groups: Int = 4): String = {
     val root = Files.createTempDirectory("graft_morupd_").toString + "/t"
-    val df = spark.range(0, 400).toDF("id")
+    val df = spark.range(0, groups * 100L).toDF("id")
       .withColumn("grp", floor(col("id") / lit(100)))
       .withColumn("v", (col("id") % 10).cast("double"))
       .withColumn("s", concat(lit("w"), col("id")))
@@ -25,6 +25,108 @@ class MorUpdateSpec extends SparkSpec {
       pruneDisplaced = false, stats = dirs.toMap, schema = Some(df.schema),
       slice = Some(ManifestCommit.sliceSql(slice)))
     root
+  }
+
+  private def keys(ids: Long*) =
+    spark.createDataFrame(ids.map(Tuple1(_))).toDF("id")
+
+  /** The grp -> data dir map of a freshly built table. */
+  private def dirOfGrp(root: String): Map[Long, String] = {
+    val m = ManifestCommit.readManifest(spark, root).get
+    m.dirs.map(d => m.stats(d).find(_.col == "grp").get.min.toLong -> d).toMap
+  }
+
+  /** Spark jobs `f` launches (listener events are async — settle first). */
+  private def jobsOf[T](f: => T): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      val deadline = System.currentTimeMillis() + 5000
+      var last = -1
+      while (last != jobs.get && System.currentTimeMillis() < deadline) {
+        last = jobs.get; Thread.sleep(300)
+      }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("deleteWhere over DV'd and plain dirs: one batched DV build keeps " +
+      "old keys, exact counters, no DV without a new match") {
+    val root = mkTable(6)
+    val g = dirOfGrp(root)
+    MergeInto.deleteWhere(spark, root, keys(0, 1, 100, 101, 200, 201))
+    val m0 = ManifestCommit.readManifest(spark, root).get
+    // grp 0-2 carry a DV; 200 is already dead, so grp 2 is touched by the
+    // stats but gets no new match; grp 3 and 4 are plain
+    val res = MergeInto.deleteWhere(spark, root,
+      keys(2, 3, 102, 200, 300, 301, 400))
+    assert(res.dvsWritten === 4 && res.deleted === 6L, res)
+    val m1 = ManifestCommit.readManifest(spark, root).get
+    def dvKeys(grp: Long): Set[Long] = ManifestCommit.readDvs(spark,
+      Seq(ManifestCommit.dirAbs(root, m1.dvs(g(grp)))))
+      .collect().map(_.getLong(0)).toSet
+    assert(dvKeys(0) === Set(0L, 1L, 2L, 3L))
+    assert(dvKeys(1) === Set(100L, 101L, 102L))
+    assert(dvKeys(3) === Set(300L, 301L))
+    assert(dvKeys(4) === Set(400L))
+    assert(m1.dvs(g(2)) === m0.dvs(g(2)), "a no-match dir must keep its DV")
+    assert(!m1.dvs.contains(g(5)))
+    def dead(grp: Long): Option[String] = m1.stats(g(grp))
+      .find(_.col == ManifestCommit.DvDeadStat).map(_.min)
+    assert((0L to 4L).map(dead) ===
+      Seq(Some("4"), Some("3"), Some("2"), Some("2"), Some("1")))
+    assert(ManifestCommit.read(spark, root).count() === 588L)
+    assert(ManifestCommit.tableRowCount(spark, root) === Some(588L))
+  }
+
+  test("deleteWhere runs the same Spark jobs with 1 and with 4 DV'd dirs " +
+      "touched") {
+    def jobsTouching(dvd: Seq[Long]): Int = {
+      val root = mkTable(6)
+      MergeInto.deleteWhere(spark, root, keys(0, 100, 200, 300))
+      jobsOf(MergeInto.deleteWhere(spark, root,
+        keys(dvd.map(_ * 100 + 50) ++ Seq(450L, 550L): _*)))
+    }
+    val one = jobsTouching(Seq(0L))
+    val four = jobsTouching(Seq(0L, 1L, 2L, 3L))
+    assert(one === four, s"1 DV'd dir: $one jobs, 4 DV'd dirs: $four jobs")
+  }
+
+  test("merge-on-read UPDATE over a key-DV'd and a position-DV'd dir: " +
+      "exact counters, read equals the model") {
+    val root = mkTable()
+    val g = dirOfGrp(root)
+    MergeInto.deleteWhere(spark, root, keys(110, 111)) // key DV on grp 1
+    MergeInto.updateRows(spark, root, Seq("v" -> lit(-5.0)),
+      col("id") === 250, mode = "mor") // position DV on grp 2
+    MergeInto.updateRows(spark, root, Seq("v" -> lit(-7.0)),
+      col("id").isin(150, 260), mode = "mor")
+    val m = ManifestCommit.readManifest(spark, root).get
+    def dead(grp: Long): Option[String] = m.stats(g(grp))
+      .find(_.col == ManifestCommit.DvDeadStat).map(_.min)
+    assert(dead(1) === Some("3") && dead(2) === Some("2"))
+    Seq(1L, 2L).foreach { grp =>
+      assert(ManifestCommit.readDvs(spark,
+        Seq(ManifestCommit.dirAbs(root, m.dvs(g(grp))))).columns.toSet ===
+        Set(ManifestCommit.PosFileCol, ManifestCommit.PosIdxCol))
+    }
+    val model = spark.range(0, 400).toDF("id")
+      .filter(!col("id").isin(110, 111))
+      .withColumn("grp", floor(col("id") / lit(100)))
+      .withColumn("v", when(col("id") === 250, -5.0)
+        .when(col("id").isin(150, 260), -7.0)
+        .otherwise((col("id") % 10).cast("double")))
+      .withColumn("s", concat(lit("w"), col("id")))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "grp", "v", "s").collect().map(_.toString).sorted.toSeq
+    assert(rows(ManifestCommit.read(spark, root)) === rows(model))
+    assert(ManifestCommit.tableRowCount(spark, root) === Some(398L))
   }
 
   test("single-row update: 0 dirs rewritten, 1 position DV, 1 appended dir") {

@@ -323,6 +323,80 @@ class GraftSqlSpec extends SparkSpec {
     assert(q.collect().head.getDouble(0).isNaN)
   }
 
+  test("fold parity: {COUNT(*), COUNT(c), MIN, MAX} x {no WHERE, covering, " +
+      "straddling, all-pruning} x {ungrouped, GROUP BY slice} in four table " +
+      "states answer like the DataFrame API; exactly the pinned shapes fold") {
+    // 4 grp-sliced dirs of 100 rows; c is null on every 10th row of grp 2.
+    // States: fresh; a DV on the null-free grp-1 dir; a DV on the
+    // null-bearing grp-2 dir; grp 3's c all NaN plus a second grp-3 dir
+    // (an INSERT), so the NaN bound meets another one in its group.
+    def mk(state: String): String = {
+      val root = Files.createTempDirectory("graft_sqlspec_").toString + "/t"
+      val df = spark.range(0, 400).toDF("id")
+        .withColumn("grp", floor(col("id") / lit(100)))
+        .withColumn("c", when(col("grp") === 2 && col("id") % 10 === 0,
+            lit(null).cast("double"))
+          .when(col("grp") === 3 && lit(state == "nan"), lit(Double.NaN))
+          .otherwise(col("id").cast("double")))
+      val slice = col("grp")
+      val dirs = ManifestCommit.writeSliced(spark, root, df, slice,
+        Seq("grp", "id", "c", ManifestCommit.RowCountStat))
+      ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
+        pruneDisplaced = false, stats = dirs.toMap, schema = Some(df.schema),
+        slice = Some(ManifestCommit.sliceSql(slice)))
+      state match {
+        case "dv_nullfree" =>
+          MergeInto.deleteWhere(spark, root, spark.range(100, 105).toDF("id"))
+        case "dv_nullbearing" =>
+          MergeInto.deleteWhere(spark, root, spark.range(201, 204).toDF("id"))
+        case _ => ()
+      }
+      GraftSql.register(s"sqlspec_parity_$state", root)
+      if (state == "nan") spark.sql("INSERT INTO graft.sqlspec_parity_nan " +
+        "SELECT id, CAST(3 AS BIGINT) AS grp, 1.0 AS c FROM range(400, 410)")
+      root
+    }
+    val wheres = Seq("none" -> None, "covering" -> Some("grp >= 1"),
+      "straddling" -> Some("id < 150"), "all_pruning" -> Some("id >= 1000"))
+    // the pin: an all-pruning WHERE always folds (the empty-input
+    // aggregate, or zero groups); a straddling one never does (COUNT and
+    // rollups take the scan, ungrouped MIN/MAX go hybrid); otherwise
+    // COUNT(*) always folds, COUNT(c) unless a DV sits on the
+    // null-bearing dir, MIN/MAX only with no DV'd dir and no NaN bound
+    def folds(state: String, agg: String, where: String): Boolean = where match {
+      case "all_pruning" => true
+      case "straddling" => false
+      case _ => agg match {
+        case "count(*)" => true
+        case "count(c)" => state != "dv_nullbearing"
+        case _ => state == "fresh"
+      }
+    }
+    for (state <- Seq("fresh", "dv_nullfree", "dv_nullbearing", "nan")) {
+      val root = mk(state)
+      for (agg <- Seq("count(*)", "count(c)", "min(c)", "max(c)");
+           (wn, w) <- wheres; grouped <- Seq(false, true)) {
+        val sql = s"SELECT ${if (grouped) "grp, " else ""}$agg AS a " +
+          s"FROM graft.sqlspec_parity_$state" + w.fold("")(" WHERE " + _) +
+          (if (grouped) " GROUP BY grp" else "")
+        val q = spark.sql(sql)
+        val base = ManifestCommit.read(spark, root)
+          .where(w.map(expr).getOrElse(lit(true)))
+        val want =
+          if (grouped) base.groupBy("grp").agg(expr(agg).as("a"))
+          else base.agg(expr(agg).as("a"))
+        val tag = s"[$state] $sql"
+        val local = q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+        assert(local === folds(state, agg, wn),
+          s"$tag\n${q.queryExecution.optimizedPlan}")
+        val got = q.collect().map(_.toString).sorted.toSeq
+        assert(got === want.collect().map(_.toString).sorted.toSeq, tag)
+        // a grouped rollup whose WHERE prunes every dir is ZERO rows
+        if (grouped && wn == "all_pruning") assert(got.isEmpty, tag)
+      }
+    }
+  }
+
   test("metadata MIN/MAX round-trips strings and timestamps") {
     val root = Files.createTempDirectory("graft_sqlspec_").toString + "/t"
     val df = spark.range(0, 100).toDF("id")
