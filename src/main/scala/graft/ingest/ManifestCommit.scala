@@ -1575,6 +1575,16 @@ object ManifestCommit {
     spark.read.schema(dvFooterOf(spark, absDirs.head)._1)
       .parquet(absDirs.flatMap(dvFooterOf(spark, _)._2): _*)
 
+  /** The row count of the DV dir `absDir`: its cached leaf files'
+    * footer counts summed on the driver, no job. */
+  private[ingest] def dvRowCount(spark: SparkSession, absDir: String): Long =
+    dvFooterOf(spark, absDir)._2.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(p),
+          spark.sparkContext.hadoopConfiguration))
+      try r.getRecordCount finally r.close()
+    }.sum
+
   /** The DV rows of DV'd `dirs` (one DV column set), each attributed to
     * its owning data dir's BASENAME in `__dir`: ONE scan over the DV
     * files (never one scan node per DV — the plan stays flat in DV

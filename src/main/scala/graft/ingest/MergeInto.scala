@@ -457,6 +457,16 @@ object MergeInto {
           .collect().flatMap(r => byBase.get(r.getString(0))
             .map(_ -> (r.getLong(1), r.getLong(2)))).toMap
       val hitDvd = touched.filter(d => cnts.contains(d) && m.dvs.contains(d))
+      // a key DV grows by a union on the delete's own key columns, so a
+      // hit dir whose DV holds other columns — a merge-on-read UPDATE's
+      // position DV, or a key DV on other keys — cannot take these keys
+      val foreign = hitDvd.filter(d => ManifestCommit.dvColumnsOf(spark,
+        ManifestCommit.dirAbs(root, m.dvs(d))).toSet != keyCols.toSet)
+      if (foreign.nonEmpty) throw new UnsupportedOperationException(
+        s"deleteWhere on (${keyCols.mkString(", ")}): ${foreign.size} " +
+          s"matched dir(s) carry a deletion vector on other columns " +
+          s"(${foreign.take(3).mkString(", ")}); compact them with " +
+          "OPTIMIZE first, or delete by predicate (deleteRows)")
       val newDvs = stageDvs(spark, root, matched,
         if (hitDvd.isEmpty) None
         else Some(ManifestCommit.dvRowsOf(spark, root, m, hitDvd)),
@@ -716,16 +726,10 @@ object MergeInto {
       // positions are row-exact, so the DV's row count (its files'
       // footers, no job) IS the dead count — stamped exactly even where
       // the prior DV predated the counter
-      val conf = spark.sparkContext.hadoopConfiguration
       val dvStatUpdates: Map[String, Seq[ColStats]] =
         newDvs.map { case (d, dv) =>
-          val dead = new org.apache.hadoop.fs.Path(root, dv).getFileSystem(conf)
-            .listStatus(new org.apache.hadoop.fs.Path(root, dv))
-            .filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-              try r.getRecordCount finally r.close()
-            }.sum
+          val dead = ManifestCommit.dvRowCount(spark,
+            ManifestCommit.dirAbs(root, dv))
           val prior = m.stats.getOrElse(d, Nil)
           d -> (prior.filterNot(_.col == ManifestCommit.DvDeadStat) :+
             ColStats(ManifestCommit.DvDeadStat, "num",

@@ -331,19 +331,10 @@ class ManifestCommitSpec extends SparkSpec {
       stats = ManifestCommit.dirStats(spark, d2, Seq("id")) :+
         ManifestCommit.rowCountStat(spark, d2))
     // count the jobs the lookup launches: must be zero
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val n = ManifestCommit.tableRowCount(spark, root)
-      Thread.sleep(500) // listener events are async; let any job event land
-      assert(n === Some(3L))
-      assert(jobs.get() === 0, "row count must not launch any Spark job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    var n: Option[Long] = None
+    val jobs = jobsOf { n = ManifestCommit.tableRowCount(spark, root) }
+    assert(n === Some(3L))
+    assert(jobs === 0, "row count must not launch any Spark job")
     // conservative Nones: a dir without the stat, then a deletion vector
     val d3 = ManifestCommit.newDataDir(root); write(Row(4L, "d"))(d3)
     ManifestCommit.commitAppend(spark, root, d3)
@@ -553,25 +544,11 @@ class ManifestCommitSpec extends SparkSpec {
       // ONE stats job; a silent per-dir re-meter fallback would add a job
       // per slice dir (3 here) — pin it so the fix can't regress into the
       // fallback still producing stats but at N× the cost
-      @volatile var jobs = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
+      var dirs: Seq[(String, Seq[ManifestCommit.ColStats])] = Nil
+      val jobs = jobsOf {
+        dirs = ManifestCommit.writeSliced(spark, root, df,
+          df("ts"), Seq("ts", "id", ManifestCommit.RowCountStat))
       }
-      spark.sparkContext.addSparkListener(listener)
-      val dirs =
-        try {
-          val d = ManifestCommit.writeSliced(spark, root, df,
-            df("ts"), Seq("ts", "id", ManifestCommit.RowCountStat))
-          // listener events are async — settle before reading the count
-          val deadline = System.currentTimeMillis() + 5000
-          var last = -1
-          while (last != jobs && System.currentTimeMillis() < deadline) {
-            last = jobs; Thread.sleep(200)
-          }
-          d
-        } finally spark.sparkContext.removeSparkListener(listener)
       // base cost observed (r19 shape): hash-distributed write (2 jobs:
       // shuffle stage + write) + ONE grouped read-back stats pass
       // (schema inference + 2 AQE stage jobs) = 5; a per-dir fallback

@@ -36,26 +36,6 @@ class MorUpdateSpec extends SparkSpec {
     m.dirs.map(d => m.stats(d).find(_.col == "grp").get.min.toLong -> d).toMap
   }
 
-  /** Spark jobs `f` launches (listener events are async — settle first). */
-  private def jobsOf[T](f: => T): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      val deadline = System.currentTimeMillis() + 5000
-      var last = -1
-      while (last != jobs.get && System.currentTimeMillis() < deadline) {
-        last = jobs.get; Thread.sleep(300)
-      }
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("deleteWhere over DV'd and plain dirs: one batched DV build keeps " +
       "old keys, exact counters, no DV without a new match") {
     val root = mkTable(6)
@@ -127,6 +107,26 @@ class MorUpdateSpec extends SparkSpec {
       df.select("id", "grp", "v", "s").collect().map(_.toString).sorted.toSeq
     assert(rows(ManifestCommit.read(spark, root)) === rows(model))
     assert(ManifestCommit.tableRowCount(spark, root) === Some(398L))
+  }
+
+  test("deleteWhere matching a key-DV'd and a position-DV'd dir fails " +
+      "before writing; the table is untouched") {
+    val root = mkTable()
+    MergeInto.deleteWhere(spark, root, keys(110, 111)) // key DV on grp 1
+    MergeInto.updateRows(spark, root, Seq("v" -> lit(-5.0)),
+      col("id") === 250, mode = "mor") // position DV on grp 2
+    val m0 = ManifestCommit.readManifest(spark, root).get
+    val e = intercept[UnsupportedOperationException](
+      MergeInto.deleteWhere(spark, root, keys(120, 260, 310)))
+    assert(e.getMessage.contains("deletion vector on other columns"))
+    val m1 = ManifestCommit.readManifest(spark, root).get
+    assert(m1.gen === m0.gen && m1.dvs === m0.dvs && m1.stats === m0.stats)
+    assert(ManifestCommit.tableRowCount(spark, root) === Some(398L))
+    assert(ManifestCommit.read(spark, root).count() === 398L)
+    // a delete that matches only key-DV'd and plain dirs still commits
+    MergeInto.deleteWhere(spark, root, keys(120, 310))
+    assert(ManifestCommit.tableRowCount(spark, root) === Some(396L))
+    assert(ManifestCommit.read(spark, root).count() === 396L)
   }
 
   test("single-row update: 0 dirs rewritten, 1 position DV, 1 appended dir") {
