@@ -210,17 +210,12 @@ object Bench {
     // can equalize. The Spark canary pair stays on the stderr diag for
     // per-query triage.
 
-    // Aggregate executor task time per query: wall >> task flags external
-    // interference (this sandbox's CPU/IO contention comes in episodes),
-    // wall ≈ task flags genuine compute. Attribution smears slightly when
-    // listener events drain late; good enough for triage.
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) taskMs.addAndGet(e.taskMetrics.executorCpuTime / 1000000L)
-    })
     var errors = List.empty[(String, String)]
+    // Executor task time and Spark jobs per query, from the job meter:
+    // wall >> task flags external interference (CPU/IO contention from
+    // other load comes in episodes), wall ≈ task flags genuine compute.
     var taskSecs = List.empty[(String, Double)]
+    var jobCounts = List.empty[(String, Double)]
     // Reps: the first execution of a query pays whole-stage-codegen
     // compilation + HotSpot C2 warm-up (measured: q47 12 s cold vs 0.9 s
     // steady at sf0.1) — cost a 1000-executor production job pays once
@@ -240,15 +235,19 @@ object Bench {
       kernSamples ::= Bench.kernelPassSec() // machine probe, ~30 ms
       val fn = SparkEntry.queries(name)
       var repSecs = List.empty[Double]
-      var lastTask = 0.0
+      var last = (0.0, 0) // the steady-state (last) rep's task CPU, jobs
       var ok = true
       // takeWhile(_ => ok): once a rep fails, re-running the known-broken
       // query only multiplies the failure's wall-clock by reps
       (1 to reps).iterator.takeWhile(_ => ok).foreach { rep =>
-        val task0 = taskMs.get()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
+        val m = JobMeter.measure(spark) {
+          val t0 = System.nanoTime()
+          val err = try { fn(spark, sfDir).count(); None }
+            catch { case e: Throwable => Some(e) }
+          (err, (System.nanoTime() - t0) / 1e9)
+        }
+        val (err, sec) = m.value
+        err.foreach { e =>
           // getMessage can be null (NPE, some SparkExceptions)
           val msg = Option(e.getMessage).getOrElse(e.toString)
           // strip everything JSON-hostile (backslashes included: a regex
@@ -256,17 +255,17 @@ object Bench {
           if (ok) errors ::= (name -> msg.take(200).replaceAll("[\"\\\\\\p{Cntrl}]", " "))
           ok = false
         }
-        val sec = (System.nanoTime() - t0) / 1e9
+        last = (m.cpuSec, m.count)
         if (rep == 1) coldSecs ::= (name -> sec)
         repSecs ::= sec
-        lastTask = (taskMs.get() - task0) / 1e3 // steady-state rep's task CPU
         // Each rep is timed standalone; drop cached blocks so a rep isn't
         // taxed by accumulated executor-memory pressure/GC from earlier
         // ones, and so CacheManager plan-dedup can't hand rep 2 a free
         // cache hit (q31/q47 cache small tables by design).
         spark.catalog.clearCache()
       }
-      taskSecs ::= (name -> lastTask)
+      taskSecs ::= (name -> last._1)
+      jobCounts ::= (name -> last._2.toDouble)
       val sorted = repSecs.sorted
       if (sorted.nonEmpty) medSecs ::= (name -> sorted(sorted.size / 2))
       val minSec = if (sorted.nonEmpty) sorted.head else Double.MaxValue
@@ -366,6 +365,7 @@ object Bench {
     val total = results.map { case (_, v) => math.abs(v) }.sum
     val medianTotal = medSecs.map(_._2).sum
     val taskJson = jmap(taskSecs.reverse)
+    val jobsJson = jmap(jobCounts.reverse, v => v.toLong.toString)
     val coldJson = jmap(coldSecs.reverse)
     val medJson = jmap(medSecs.reverse)
     // closing canary pass (stderr diag); drift = median/min of the
@@ -398,7 +398,7 @@ object Bench {
         "__kern_med" -> kernSorted(kernSorted.size / 2),
         "__kern_max" -> kernSorted.last)))
     System.err.println(
-      s"""[bench-diag] {"task_sec":$taskJson,"cold_sec":$coldJson,"med_sec":$medJson,"rerun_sec":$rerunFullJson,"slow_rerun_sec":$slowJson,"canary_sec":$canaryJson,"errors":$errFullJson,"reps":$reps}""")
+      s"""[bench-diag] {"task_sec":$taskJson,"jobs":$jobsJson,"cold_sec":$coldJson,"med_sec":$medJson,"rerun_sec":$rerunFullJson,"slow_rerun_sec":$slowJson,"canary_sec":$canaryJson,"errors":$errFullJson,"reps":$reps}""")
     // sf is the directory BASENAME (e.g. "sf0.1") — the full path spends
     // ~20 chars of the tail budget on redundancy
     val sfName = new java.io.File(sfDir).getName

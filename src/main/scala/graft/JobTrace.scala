@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
 /** Dev-only per-job profiler (optimization rounds): runs selected
   * queries (SPARK_GRAFT_ONLY) once and prints one line per Spark JOB —
   * start offset, wall, aggregate task CPU, description — plus the
@@ -15,74 +13,35 @@ object JobTrace {
     val spark = GraftSession.fromEnv("graft-jobtrace")
     Tables.load(spark, sfDir, "region").count() // warm
 
-    case class J(id: Int, desc: String, t0: Long, var t1: Long = 0L,
-      var taskMs: Long = 0L, var nTasks: Int = 0)
-    val jobs = mutable.LinkedHashMap.empty[Int, J]
-    val stageToJob = mutable.HashMap.empty[Int, Int]
-    // executionId -> the action call site that started the SQL execution
-    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execSite.put(s.executionId, s.description.linesIterator.next().take(90))
-          case _ => ()
-        }
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // the result stage's name carries the action call site
-        // ("count at Ingest.scala:123") — the attribution that matters;
-        // AQE stage-materialization jobs get theirs from callSite.short
-        val stage = e.stageInfos.lastOption.map(_.name).getOrElse("")
-        val d = if (!stage.contains("withThreadLocalCaptured")) stage
-          else Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .flatMap(id => Option(execSite.get(id.toLong)))
-            .map("aqe: " + _).getOrElse(stage)
-        jobs.synchronized {
-          jobs(e.jobId) = J(e.jobId, d, System.nanoTime())
-          e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
-        }
-      }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        jobs.synchronized { jobs.get(e.jobId).foreach(_.t1 = System.nanoTime()) }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        jobs.synchronized {
-          stageToJob.get(e.stageId).flatMap(jobs.get).foreach { j =>
-            if (e.taskMetrics != null) j.taskMs += e.taskMetrics.executorCpuTime / 1000000L
-            j.nTasks += 1
-          }
-        }
-    })
-
     val names = GraftSession.selectedNames(SparkEntry.queries.keys.toSeq.sorted)
     names.foreach { name =>
-      jobs.synchronized { jobs.clear(); stageToJob.clear() }
       val fn = SparkEntry.queries(name)
       // rep 1 = cold (codegen/JIT); rep 2 = steady state, the one traced
       spark.sparkContext.setJobDescription(null)
       scala.util.Try(fn(spark, sfDir).count())
       spark.catalog.clearCache()
-      jobs.synchronized { jobs.clear(); stageToJob.clear() }
-      val w0 = System.nanoTime()
-      val ok = scala.util.Try(fn(spark, sfDir).count())
-      val wall = (System.nanoTime() - w0) / 1e9
-      Thread.sleep(300) // let the listener bus drain
-      val js = jobs.synchronized { jobs.values.toSeq.sortBy(_.t0) }
-      println(f"%n=== $name wall=$wall%.2f s ok=${ok.isSuccess} jobs=${js.size} ===")
-      var prevEnd = w0
-      js.foreach { j =>
-        val gap = (j.t0 - prevEnd) / 1e9
-        val jw = if (j.t1 > 0) (j.t1 - j.t0) / 1e9 else -1.0
-        if (gap > 0.05) println(f"  -- driver gap ${gap}%5.2f s --")
-        println(f"  job ${j.id}%3d wall $jw%5.2f task ${j.taskMs / 1e3}%6.2f " +
-          f"tasks ${j.nTasks}%4d  ${j.desc.take(90)}")
-        prevEnd = math.max(prevEnd, if (j.t1 > 0) j.t1 else j.t0)
+      val w0 = System.currentTimeMillis()
+      val m = JobMeter.measure(spark) {
+        val ok = scala.util.Try(fn(spark, sfDir).count())
+        (ok, System.currentTimeMillis())
       }
-      val tailGap = (System.nanoTime() - 300L * 1000000L - prevEnd) / 1e9
+      val (ok, w1) = m.value
+      val wall = (w1 - w0) / 1e3
+      println(f"%n=== $name wall=$wall%.2f s ok=${ok.isSuccess} jobs=${m.count} ===")
+      var prevEnd = w0
+      m.jobs.sortBy(_.startMs).foreach { j =>
+        val gap = (j.startMs - prevEnd) / 1e3
+        val jw = if (j.endMs > 0) (j.endMs - j.startMs) / 1e3 else -1.0
+        if (gap > 0.05) println(f"  -- driver gap ${gap}%5.2f s --")
+        println(f"  job ${j.id}%3d wall $jw%5.2f task ${j.cpuNs / 1e9}%6.2f " +
+          f"tasks ${j.tasks}%4d  ${j.desc.take(90)}")
+        prevEnd = math.max(prevEnd, if (j.endMs > 0) j.endMs else j.startMs)
+      }
+      val tailGap = (w1 - prevEnd) / 1e3
       if (tailGap > 0.05) println(f"  -- tail driver gap ${tailGap}%5.2f s --")
-      val jobWall = js.map(j => if (j.t1 > 0) (j.t1 - j.t0) / 1e9 else 0.0).sum
-      val task = js.map(_.taskMs).sum / 1e3
-      println(f"  total: jobs-wall $jobWall%.2f s  task-cpu $task%.2f s  " +
+      val jobWall = m.jobs.map(j =>
+        if (j.endMs > 0) (j.endMs - j.startMs) / 1e3 else 0.0).sum
+      println(f"  total: jobs-wall $jobWall%.2f s  task-cpu ${m.cpuSec}%.2f s  " +
         f"driver/gaps ${math.max(0, wall - jobWall)}%.2f s")
       spark.catalog.clearCache()
     }

@@ -14,14 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object ScaleCheck {
 
+  private var session: SparkSession = _
+
   /** Executor task-time (CPU) per kernel, not wall — this sandbox has
     * episodic external CPU/IO interference that corrupts wall ratios
     * (observed 8x runs "faster" than 1x). Task time is what actually
     * scales with data. */
-  private val taskMs = new java.util.concurrent.atomic.AtomicLong
-
-  private var session: SparkSession = _
-
   def time[A](label: String)(f: => A): Double = {
     // two reps, min task time: robust to interference episodes and to
     // first-rep codegen warm-up. Cache cleared per rep — operators that
@@ -30,9 +28,8 @@ object ScaleCheck {
     val reps = (1 to 2).map { _ =>
       session.catalog.clearCache()
       val t0 = System.nanoTime()
-      val task0 = taskMs.get()
-      f
-      ((System.nanoTime() - t0) / 1e9, (taskMs.get() - task0) / 1e3)
+      val m = JobMeter.measure(session)(f)
+      ((System.nanoTime() - t0) / 1e9, m.cpuSec)
     }
     val (wall, task) = reps.minBy(_._2)
     println(f"[scale] $label%-42s wall $wall%7.2f s  task $task%8.2f s")
@@ -51,10 +48,6 @@ object ScaleCheck {
     val spark: SparkSession = GraftSession.fromEnv("graft-scale")
     session = spark
     spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) taskMs.addAndGet(e.taskMetrics.executorCpuTime / 1000000L)
-    })
     Tables.load(spark, sf, "region").count()
 
     val base = GraftTmp.dir("scalecheck_")

@@ -1047,19 +1047,6 @@ object ManifestCommit {
     // remedy — those carry structure a rename cannot preserve. A
     // file-less leaf (only _SUCCESS, or empty) contributes no rows and
     // is SKIPPED (the post-commit sweep deletes file-free shells).
-    def concurrently[A, B](xs: Seq[A])(g: A => B): Seq[B] =
-      if (xs.size <= 4) xs.map(g)
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(xs.size, 32))
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(xs.map(x => Future(g(x)))),
-          Duration.Inf)
-        finally pool.shutdown()
-      }
     val (hiveLeaves: Seq[String], hiveLevelCols: Seq[String]) =
       if (subdirs.isEmpty) (Nil, Nil)
       else {
@@ -1092,7 +1079,7 @@ object ManifestCommit {
             s"convert: $root nests deeper than 16 partition levels — " +
               "not a plausible hive layout")
           val listed: Seq[(String, Seq[String], Boolean)] =
-            concurrently(frontier) { rel =>
+            concurrently(frontier, 32) { rel =>
               val st = f.listStatus(new Path(rootP, rel)).toSeq
               val visible = st.filterNot(s0 =>
                 s0.getPath.getName.startsWith("_") ||
@@ -1201,7 +1188,7 @@ object ManifestCommit {
         // and OPTIMIZE's probe-free small-dir selection start life armed
         // on converted tables too): one content-summary round-trip per
         // leaf, overlapped on the same concurrent pool as discovery
-        val bytesOf: Map[String, ColStats] = concurrently(hiveLeaves)(n =>
+        val bytesOf: Map[String, ColStats] = concurrently(hiveLeaves, 32)(n =>
           n -> dirBytesStat(spark, dirOf(n))).toMap
         val stats = hiveLeaves.map { n =>
           val cs = groupedRows.get(unescapeSuffixValues(n)).map { r =>
@@ -1287,6 +1274,23 @@ object ManifestCommit {
       }
     }
   }
+
+  /** `g` over `xs` in order: serial up to 4 items, else on a pool of at
+    * most `cap` threads — for independent filesystem round trips, where
+    * a sequential loop costs latency linear in `xs`.
+    * One pool per call: its threads are created by the caller, so they
+    * inherit the caller's Spark local properties (job tags included). */
+  private[ingest] def concurrently[A, B](xs: Seq[A], cap: Int)(g: A => B): Seq[B] =
+    if (xs.size <= 4) xs.map(g)
+    else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(xs.size, cap))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try Await.result(Future.sequence(xs.map(x => Future(g(x)))), Duration.Inf)
+      finally pool.shutdown()
+    }
 
   /** Below this many independent filesystem operations, a driver-side
     * loop or small thread pool beats a Spark job's scheduling overhead;
@@ -1393,14 +1397,7 @@ object ManifestCommit {
       }
       if (filePairs.size <= SmallFanout) {
         // small fan-out: overlap round-trips on a driver pool
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(filePairs.size, 8))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(filePairs.map { case (s, d) =>
-          Future(copyOne(conf)(s, d)) }), Duration.Inf)
-        finally pool.shutdown()
+        concurrently(filePairs, 8) { case (s, d) => copyOne(conf)(s, d) }
       } else {
         val ser = new SerConf(conf)
         val slices = math.min(filePairs.size,
@@ -1696,20 +1693,8 @@ object ManifestCommit {
     // (one footer each — a sequential loop is a driver-latency wall at
     // hundreds of DVs, the resolveBloom lesson).
     val dvFilesAll = dvd.map(m.dvs).distinct
-    val dvSchema: Map[String, Seq[String]] = {
-      def fetch(f: String) = f -> dvColumnsOf(spark, dirAbs(root, f))
-      if (dvFilesAll.size <= 4) dvFilesAll.map(fetch).toMap
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(dvFilesAll.size, 16))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(
-          Future.sequence(dvFilesAll.map(f => Future(fetch(f)))), Duration.Inf).toMap
-        finally pool.shutdown()
-      }
-    }
+    val dvSchema: Map[String, Seq[String]] =
+      concurrently(dvFilesAll, 16)(f => f -> dvColumnsOf(spark, dirAbs(root, f))).toMap
     val dvdDfs = dvd.groupBy(d => (dvSchema(m.dvs(d)), partColsOf(d)))
       .toSeq.sortBy(_._2.head).map { case ((keyCols, _), groupDirs) =>
         val dvUnion = dvRowsOf(spark, root, m, groupDirs)
@@ -3320,18 +3305,7 @@ object ManifestCommit {
           values.exists(bf.mightContain)
       }
     }
-    val flags: Seq[Boolean] =
-      if (m.dirs.size <= 4) m.dirs.map(probe)
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(m.dirs.size, 32))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(m.dirs.map(d => Future(probe(d)))),
-          Duration.Inf)
-        finally pool.shutdown()
-      }
+    val flags = concurrently(m.dirs, 32)(probe)
     m.dirs.zip(flags).collect { case (d, true) => d }
   }
 
@@ -3392,18 +3366,7 @@ object ManifestCommit {
     // listing — one filesystem round-trip chain per orphan, so a
     // sequential loop is driver latency linear in garbage (the
     // resolveBloom/compactSmall wall); probe on a pool, delete serially
-    val stale: Seq[Boolean] =
-      if (candidates.size <= 4) candidates.map(st => newestMtime(st.getPath) <= cutoff)
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(candidates.size, 32))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(candidates.map(st =>
-          Future(newestMtime(st.getPath) <= cutoff))), Duration.Inf)
-        finally pool.shutdown()
-      }
+    val stale = concurrently(candidates, 32)(st => newestMtime(st.getPath) <= cutoff)
     candidates.zip(stale).collect { case (st, true) =>
       if (!dryRun) f.delete(st.getPath, true)
       st.getPath.toString

@@ -341,12 +341,12 @@ object Optimize {
     // resolves as `cast(col AS timestamp) >= lit`, and the extractor
     // rightly refuses cast-wrapped attributes (recorded stats describe
     // the UNCAST column), which silently widened the scope to the whole
-    // table (caught by ZorderScopeKernel: "scoped" rewrote all 80
-    // dirs). When the cast pair is an INJECTIVE order-embedding and the
-    // literal ROUND-TRIPS exactly through the column's native type, the
-    // comparison is equivalent with the bare attribute against the
-    // back-cast literal; anything unprovable stays wrapped (widens,
-    // never narrows wrongly).
+    // table (caught by ZorderScopeKernel, source at commit 842ff63:
+    // "scoped" rewrote all 80 dirs). When the cast pair is an INJECTIVE
+    // order-embedding and the literal ROUND-TRIPS exactly through the
+    // column's native type, the comparison is equivalent with the bare
+    // attribute against the back-cast literal; anything unprovable stays
+    // wrapped (widens, never narrows wrongly).
     val normalized = {
       import org.apache.spark.sql.catalyst.expressions.{
         AttributeReference, BinaryComparison, Cast, EvalMode, Literal}

@@ -221,7 +221,8 @@ object TextAnalysis {
     * shuffles every token occurrence on the skewed token key, the same
     * relation DuckDB computes) — production runs
     * [[rareTokenFlagsBroadcast]], the common-set inversion, measured at
-    * 0.05× the shuffle volume (`RareTokenKernel`). */
+    * 0.05× the shuffle volume (`RareTokenKernel`, source at commit
+    * 842ff63). */
   def rareTokenFlags(docs: DataFrame, idCol: String, textCol: String,
       minCount: Long, ratioPct: Int): DataFrame = {
     require(minCount >= 1 && ratioPct >= 0 && ratioPct <= 100,

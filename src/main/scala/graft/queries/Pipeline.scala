@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{JobMeter, Tables}
 import graft.ingest.{DedupMode, Ingest}
 import graft.schema.{ColumnMeta, SchemaReflector, TableMeta}
 import graft.views.Views
@@ -1839,7 +1839,7 @@ object Pipeline {
     * pseudo-stats — the single most common audit/BI probe, answered with
     * ZERO data I/O, zero footer reads, zero Spark jobs; the reference
     * gets the equivalent from ClickHouse's part-level count metadata).
-    * The inline listener pins the zero-jobs claim (`probe_jobs` = 0 in
+    * The job meter pins the zero-jobs claim (`probe_jobs` = 0 in
     * the hashed output — a probe that ran ANY job reds the gate), and
     * the count itself hash-matches DuckDB's full count(*). */
   val q135_manifest_count = Q(
@@ -1855,31 +1855,13 @@ object Pipeline {
       Seq("o_orderkey", ManifestCommit.RowCountStat))
     ManifestCommit.commitReplace(s, root, dirs.map(_._1),
       pruneDisplaced = false, stats = dirs.toMap)
-    // the zero-jobs witness must be scoped to THIS probe's job group —
-    // the gate harness runs queries concurrently on one SparkContext, so
-    // a raw job counter would catch neighbors' jobs
-    val group = s"q135_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
-    val n = try {
-      s.sparkContext.setJobGroup(group, "manifest-only COUNT(*) probe", false)
-      val n0 = try ManifestCommit.tableRowCount(s, root)
-        finally s.sparkContext.clearJobGroup()
-      Thread.sleep(500) // listener events are async; let any job event land
-      n0
-    } finally s.sparkContext.removeSparkListener(listener)
+    // the zero-jobs witness is scoped to THIS probe's meter window —
+    // the gate harness runs queries concurrently on one SparkContext
+    val probe = JobMeter.measure(s)(ManifestCommit.tableRowCount(s, root))
+    val n = probe.value
     s.range(1).select(
       lit(n.getOrElse(-1L)).as("n_rows"),
-      lit(jobs.get()).as("probe_jobs"),
+      lit(probe.count).as("probe_jobs"),
       lit(if (n.isDefined) 1 else 0).as("from_manifest"))
   }
 
@@ -2301,8 +2283,8 @@ object Pipeline {
     * table; this pins the half that usually breaks it in production —
     * a `deleteWhere` repoints deletion vectors, and the delete path
     * records each dv's exact dead-row count in the same commit, so
-    * `SELECT count(*)` keeps costing ZERO Spark jobs (job-group-scoped
-    * listener, both probes inside the hashed output) instead of
+    * `SELECT count(*)` keeps costing ZERO Spark jobs (metered by
+    * `JobMeter`, both probes inside the hashed output) instead of
     * degrading to a full scan the moment rows are soft-deleted.
     *
     * 100-TB shape: COUNT(*) is the most common audit/BI probe; on a
@@ -2329,31 +2311,14 @@ object Pipeline {
     MergeInto.deleteWhere(s, root,
       orders.filter(pmod(col("o_orderkey"), lit(97)) === 0)
         .select("o_orderkey"))
-    // both probes (pre-recorded `before` re-check + post-delete) run
-    // inside one job-group-scoped listener window — the q135 discipline
-    val group = s"q140_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
-    val after = try {
-      s.sparkContext.setJobGroup(group, "manifest-only COUNT(*) probe over DVs", false)
-      val a = try ManifestCommit.tableRowCount(s, root)
-        finally s.sparkContext.clearJobGroup()
-      Thread.sleep(500) // listener events are async; let any job event land
-      a
-    } finally s.sparkContext.removeSparkListener(listener)
+    // the post-delete probe runs inside its own meter window — the
+    // q135 discipline
+    val probe = JobMeter.measure(s)(ManifestCommit.tableRowCount(s, root))
+    val after = probe.value
     s.range(1).select(
       lit(before.getOrElse(-1L)).as("n_before"),
       lit(after.getOrElse(-1L)).as("n_after"),
-      lit(jobs.get()).as("probe_jobs"),
+      lit(probe.count).as("probe_jobs"),
       lit(if (before.isDefined && after.isDefined) 1 else 0).as("from_manifest"))
   }
 

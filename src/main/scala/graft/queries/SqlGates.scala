@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{JobMeter, Tables}
 import graft.ingest.{ManifestCommit, MergeInto}
 import graft.sql.GraftSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -128,7 +128,7 @@ object SqlGates {
     * merge-on-read delete: `SELECT count(*) FROM graft.t` optimizes to a
     * LocalRelation (NO scan operator in the plan — pinned) answered from
     * RowCountStat/DvDeadStat pseudo-stats, before AND after a
-    * `deleteWhere` repoints deletion vectors; the job-group listener
+    * `deleteWhere` repoints deletion vectors; the job meter
     * pins zero Spark jobs for both probes, and both counts hash-match
     * DuckDB. The q135/q140 contract, now reachable from SQL text. */
   val q145_sql_count = Q(
@@ -149,43 +149,25 @@ object SqlGates {
     val name = uniq("graft_q145")
     GraftSql.register(name, root)
 
-    val group = s"q145_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
+    // one probe = plan + execute inside its meter window, so a metadata
+    // count that silently regressed to a scan is counted
+    def probe() = JobMeter.measure(s) {
+      val df = s.sql(s"SELECT count(*) AS n FROM graft.$name")
+      val isLocal = df.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      (df.collect()(0).getLong(0), isLocal)
     }
-    // one probe = plan + execute inside the job-group window, so a
-    // metadata count that silently regressed to a scan is counted
-    def probe(): (Long, Boolean) = {
-      s.sparkContext.setJobGroup(group, "SQL metadata COUNT(*) probe", false)
-      try {
-        val df = s.sql(s"SELECT count(*) AS n FROM graft.$name")
-        val isLocal = df.queryExecution.optimizedPlan
-          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-        (df.collect()(0).getLong(0), isLocal)
-      } finally s.sparkContext.clearJobGroup()
-    }
-    s.sparkContext.addSparkListener(listener)
-    val ((nBefore, localBefore), (nAfter, localAfter)) = try {
-      val before = probe()
-      MergeInto.deleteWhere(s, root,
-        orders.filter(pmod(col("o_orderkey"), lit(97)) === 0)
-          .select("o_orderkey"))
-      val after = probe()
-      Thread.sleep(500) // listener events are async; let any job event land
-      (before, after)
-    } finally s.sparkContext.removeSparkListener(listener)
+    val before = probe()
+    MergeInto.deleteWhere(s, root,
+      orders.filter(pmod(col("o_orderkey"), lit(97)) === 0)
+        .select("o_orderkey"))
+    val after = probe()
+    val ((nBefore, localBefore), (nAfter, localAfter)) = (before.value, after.value)
     s.range(1).select(
       lit(nBefore).as("n_before"), lit(nAfter).as("n_after"),
       lit(if (localBefore) 1 else 0).as("local_before"),
       lit(if (localAfter) 1 else 0).as("local_after"),
-      lit(jobs.get()).as("probe_jobs"))
+      lit(before.count + after.count).as("probe_jobs"))
   }
 
   /** q146 — SQL join across TWO graft tables: the full relational
@@ -1747,22 +1729,9 @@ object SqlGates {
         .ofInstant(i, java.time.ZoneOffset.UTC).format(tsFmt)
       case other => String.valueOf(other)
     }
-    val group = s"q174_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
     try {
       // probe 1: fully metered, DV-free → LocalRelation, zero jobs
-      s.sparkContext.setJobGroup(group, "SQL metadata MIN/MAX probe", false)
-      val (row, isLocal) = try {
+      val probe = JobMeter.measure(s) {
         val df = s.sql(
           s"""SELECT min(o_orderdate) AS mind, max(o_orderdate) AS maxd,
              |  min(o_orderkey) AS mink, max(o_orderkey) AS maxk,
@@ -1770,7 +1739,8 @@ object SqlGates {
              |FROM graft.$name""".stripMargin)
         (df.collect()(0), df.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      } finally s.sparkContext.clearJobGroup()
+      }
+      val (row, isLocal) = probe.value
       // point DELETE: the global-max key's dir gains a deletion vector —
       // its recorded max is now a bound, not a witness
       val maxKey = row.getLong(3)
@@ -1780,7 +1750,6 @@ object SqlGates {
       val after = s.sql(s"SELECT max(o_orderkey) AS maxk FROM graft.$name")
       val scanned = scannedDataDirs(after, root)
       val hybridOk = scanned == 1 && months > 10
-      Thread.sleep(500) // listener events are async
       s.range(1).select(
         lit(fmtTs(row.get(0))).as("min_date"),
         lit(fmtTs(row.get(1))).as("max_date"),
@@ -1788,13 +1757,10 @@ object SqlGates {
         lit(maxKey).as("max_key"),
         lit(row.getLong(4)).as("n"),
         lit(if (isLocal) 1 else 0).as("local_before"),
-        lit(jobs.get()).as("probe_jobs"),
+        lit(probe.count).as("probe_jobs"),
         lit(after.collect()(0).getLong(0)).as("max_after"),
         lit(if (hybridOk) 1 else 0).as("hybrid_dirs"))
-    } finally {
-      s.sparkContext.removeSparkListener(listener)
-      GraftSql.unregister(name)
-    }
+    } finally GraftSql.unregister(name)
   }
 
   /** q175 — `INSERT INTO … REPLACE WHERE` (round 18, the public Delta
@@ -1888,42 +1854,26 @@ object SqlGates {
       slice = Some(ManifestCommit.sliceSql(slice)))
     val name = uniq("graft_q176")
     GraftSql.register(name, root)
-    val group = s"q176_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
     try {
       // probe 1: COUNT(note) + COUNT(*) from the counters — zero jobs
-      s.sparkContext.setJobGroup(group, "metadata COUNT(col) probe", false)
-      val (row, isLocal) = try {
+      val probe = JobMeter.measure(s) {
         val q = s.sql(
           s"SELECT count(*) AS n, count(note) AS nf FROM graft.$name")
         (q.collect()(0), q.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      } finally s.sparkContext.clearJobGroup()
+      }
+      val (row, isLocal) = probe.value
       // probe 2: IS NULL plans only the null-bearing stripe
       val nullProbe = s.sql(
         s"SELECT o_orderkey FROM graft.$name WHERE note IS NULL")
       val prunedOk = scannedDataDirs(nullProbe, root) == 1
-      Thread.sleep(500)
       s.range(1).select(
         lit(row.getLong(0)).as("n_rows"),
         lit(row.getLong(1)).as("n_filled"),
         lit(if (isLocal) 1 else 0).as("count_local"),
-        lit(jobs.get()).as("probe_jobs"),
+        lit(probe.count).as("probe_jobs"),
         lit(if (prunedOk) 1 else 0).as("null_probe_pruned"))
-    } finally {
-      s.sparkContext.removeSparkListener(listener)
-      GraftSql.unregister(name)
-    }
+    } finally GraftSql.unregister(name)
   }
 
   /** q177 — metadata-only PARTITION DROP (round 18): `DELETE FROM t
@@ -1944,25 +1894,10 @@ object SqlGates {
     (s, dir) =>
     val (root, name, _) = ordersTable(s, dir, "graft_q177_")
     val m1 = ManifestCommit.readManifest(s, root).get
-    val group = s"q177_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
     try {
-      s.sparkContext.setJobGroup(group, "partition-drop DELETE probe", false)
-      try s.sql(s"DELETE FROM graft.$name WHERE " +
+      val probe = JobMeter.measure(s)(s.sql(s"DELETE FROM graft.$name WHERE " +
         "o_orderdate >= TIMESTAMP '1997-03-01 00:00:00' AND " +
-        "o_orderdate < TIMESTAMP '1997-04-01 00:00:00'")
-      finally s.sparkContext.clearJobGroup()
-      Thread.sleep(500)
+        "o_orderdate < TIMESTAMP '1997-04-01 00:00:00'"))
       val m2 = ManifestCommit.readManifest(s, root).get
       val dropped = m2.dirs.size == m1.dirs.size - 1 &&
         m1.dirs.toSet.intersect(m2.dirs.toSet).size == m2.dirs.size
@@ -1973,12 +1908,9 @@ object SqlGates {
       s.range(1).select(
         lit(agg.getLong(0)).as("n_after"),
         lit(agg.getDouble(1)).as("revenue_after"),
-        lit(jobs.get()).as("delete_jobs"),
+        lit(probe.count).as("delete_jobs"),
         lit(if (dropped) 1 else 0).as("dir_dropped"))
-    } finally {
-      s.sparkContext.removeSparkListener(listener)
-      GraftSql.unregister(name)
-    }
+    } finally GraftSql.unregister(name)
   }
 
   /** q178 — GROUP-BY-partition-key rollup from the manifest (round 18,
@@ -2005,39 +1937,23 @@ object SqlGates {
       slice = Some(ManifestCommit.sliceSql(slice)))
     val name = uniq("graft_q178")
     GraftSql.register(name, root)
-    val group = s"q178_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
     try {
-      s.sparkContext.setJobGroup(group, "metadata GROUP BY rollup probe", false)
-      val (rows, isLocal) = try {
+      val probe = JobMeter.measure(s) {
         val q = s.sql(
           s"""SELECT o_orderstatus AS status, count(*) AS n,
              |  min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
              |FROM graft.$name GROUP BY o_orderstatus""".stripMargin)
         (q.collect(), q.queryExecution.optimizedPlan
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      } finally s.sparkContext.clearJobGroup()
-      Thread.sleep(500)
+      }
+      val (rows, isLocal) = probe.value
       val sorted = rows.sortBy(_.getString(0)).toSeq
       s.createDataFrame(sorted.map(r => (r.getString(0), r.getLong(1),
         r.getDouble(2), r.getDouble(3))))
         .toDF("status", "n", "min_price", "max_price")
         .withColumn("rollup_local", lit(if (isLocal) 1 else 0))
-        .withColumn("probe_jobs", lit(jobs.get()))
-    } finally {
-      s.sparkContext.removeSparkListener(listener)
-      GraftSql.unregister(name)
-    }
+        .withColumn("probe_jobs", lit(probe.count))
+    } finally GraftSql.unregister(name)
   }
 
   /** q179 — FILTERED metadata-only aggregates (round 19): the
@@ -2101,24 +2017,11 @@ object SqlGates {
       slice = Some(ManifestCommit.sliceSql(gSlice)))
     val gName = uniq("graft_q179g")
     GraftSql.register(gName, gRoot)
-    val group = s"q179_probe_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
     def isLocal(q: DataFrame): Boolean = q.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    s.sparkContext.addSparkListener(listener)
     try {
-      // probe 1 + 3 under the job-group listener: both must run ZERO jobs
-      s.sparkContext.setJobGroup(group, "filtered metadata fold probe", false)
-      val (nQ1, countLocal, gRows, groupLocal) = try {
+      // probe 1 + 3 inside one meter window: both must run ZERO jobs
+      val probe = JobMeter.measure(s) {
         val q1 = s.sql(
           s"""SELECT count(*) AS n FROM graft.$name
              |WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -2129,7 +2032,8 @@ object SqlGates {
              |FROM graft.$gName WHERE o_orderstatus IN ('F', 'O')
              |GROUP BY o_orderstatus""".stripMargin)
         (q1.collect()(0).getLong(0), isLocal(q1), q3.collect(), isLocal(q3))
-      } finally s.sparkContext.clearJobGroup()
+      }
+      val (nQ1, countLocal, gRows, groupLocal) = probe.value
       // probe 2: mid-month cut STRADDLES January — hybrid scans ONLY it
       val q2 = s.sql(
         s"""SELECT min(o_orderkey) AS mn FROM graft.$name
@@ -2137,7 +2041,6 @@ object SqlGates {
            |  AND o_orderdate < TIMESTAMP '1997-04-01 00:00:00'""".stripMargin)
       val mnQ2 = q2.collect()(0).getLong(0)
       val straddleOk = scannedDataDirs(q2, root) == 1
-      Thread.sleep(500) // listener events are async
       val sorted = gRows.sortBy(_.getString(0)).toSeq
       s.createDataFrame(sorted.map(r =>
         (r.getString(0), r.getLong(1), r.getDouble(2))))
@@ -2146,10 +2049,9 @@ object SqlGates {
         .withColumn("mn_q2", lit(mnQ2))
         .withColumn("fold_count_local", lit(if (countLocal) 1 else 0))
         .withColumn("fold_group_local", lit(if (groupLocal) 1 else 0))
-        .withColumn("probe_jobs", lit(jobs.get()))
+        .withColumn("probe_jobs", lit(probe.count))
         .withColumn("straddle_scans_one", lit(if (straddleOk) 1 else 0))
     } finally {
-      s.sparkContext.removeSparkListener(listener)
       GraftSql.unregister(name)
       GraftSql.unregister(gName)
     }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.SparkSpec
+import graft.{JobMeter, SparkSpec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, concat, lit, sum}
 import org.apache.spark.sql.types._
@@ -1591,24 +1591,11 @@ class ManifestCommitSpec extends SparkSpec {
     spark.range(240, 480).repartition(12).write.parquet(d2)
     ManifestCommit.commitReplace(spark, src, Seq(d1, d2))
     ManifestCommit.shallowClone(spark, src, dst)
-    // pin the copy job through its description; numTasks proves fan-out
-    @volatile var copyTasks = -1
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-        if (desc.exists(_.startsWith("graft materialize")))
-          copyTasks = js.stageInfos.map(_.numTasks).sum
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      ManifestCommit.materializeExternal(spark, dst)
-      val deadline = System.currentTimeMillis() + 10000
-      while (copyTasks < 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // pin the copy job through its description; its task count proves
+    // fan-out
+    val copyTasks = JobMeter.measure(spark)(
+      ManifestCommit.materializeExternal(spark, dst)).jobs
+      .filter(_.desc.startsWith("graft materialize")).map(_.tasks).sum
     assert(copyTasks > 1,
       s"expected a distributed copy job with >1 task, saw $copyTasks")
     // and the copy is correct + self-contained

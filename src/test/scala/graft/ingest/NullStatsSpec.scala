@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.SparkSpec
+import graft.{JobMeter, SparkSpec}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -98,31 +98,14 @@ class NullStatsSpec extends SparkSpec {
         val out = f.create(st.getPath, true)
         out.write("corrupt".getBytes); out.close()
       }
-    val group = s"nn_drop_${java.util.UUID.randomUUID().toString.take(8)}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (e.properties != null &&
-            group == e.properties.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet(); ()
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val res = try {
-      spark.sparkContext.setJobGroup(group, "whole-dir delete probe", false)
-      // <= 99, not < 100: extraction renders a CLOSED upper bound, so
-      // `< 100` keeps the [100,200) dir as a witness candidate (one
-      // read job); `<= 99` stats-prunes it and the whole op is
-      // metadata-only
-      try MergeInto.deleteRows(spark, root, col("id") <= 99)
-      finally spark.sparkContext.clearJobGroup()
-    } finally {
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() === 0, s"whole-dir delete must run ZERO Spark jobs")
+    // <= 99, not < 100: extraction renders a CLOSED upper bound, so
+    // `< 100` keeps the [100,200) dir as a witness candidate (one
+    // read job); `<= 99` stats-prunes it and the whole op is
+    // metadata-only
+    val probe = JobMeter.measure(spark)(
+      MergeInto.deleteRows(spark, root, col("id") <= 99))
+    val res = probe.value
+    assert(probe.count === 0, s"whole-dir delete must run ZERO Spark jobs")
     assert(res.dirsRewritten === 1 && res.rowsAffected === 100L)
     val m2 = ManifestCommit.readManifest(spark, root).get
     assert(!m2.dirs.contains(dir0))
