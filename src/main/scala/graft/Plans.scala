@@ -81,12 +81,10 @@ object Plans {
         val root = GraftTmp.dir("plans_dv_") + "/t"
         val orders = Tables.load(spark, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
-        val d = graft.ingest.ManifestCommit.newDataDir(root)
-        orders.write.parquet(d)
-        graft.ingest.ManifestCommit.commitReplace(spark, root, Seq(d),
-          pruneDisplaced = false,
-          stats = Map(d -> graft.ingest.ManifestCommit.dirStats(
-            spark, d, Seq("o_orderkey"))))
+        val dirs = graft.ingest.ManifestCommit.writeData(spark, root, orders,
+          None, Seq("o_orderkey"))
+        graft.ingest.ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
+          pruneDisplaced = false, stats = dirs.toMap)
         graft.ingest.MergeInto.deleteWhere(spark, root,
           orders.filter(col("o_orderkey") % 97 === 0).select("o_orderkey"))
         graft.ingest.ManifestCommit.read(spark, root)

@@ -292,21 +292,10 @@ object ScaleCheck {
         val qWidth = baseMax / 4 + 1
         def commitSliced(prefix: String): String = {
           val root = GraftTmp.dir(prefix) + "/t"
-          val staging = s"$root/__staging"
-          lk.withColumn("__slice",
+          val dirs = ManifestCommit.writeSliced(spark, root, lk,
             concat(col("l_orderkey") / repOffset cast "long", lit("_"),
-              (col("l_orderkey") % repOffset) / qWidth cast "long"))
-            .write.partitionBy("__slice").parquet(staging)
-          val fsys = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val dirs = fsys.listStatus(new org.apache.hadoop.fs.Path(staging)).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("__slice="))
-            .map { st =>
-              val d = ManifestCommit.newDataDir(root)
-              fsys.rename(st.getPath, new org.apache.hadoop.fs.Path(d))
-              d -> ManifestCommit.dirStats(spark, d, Seq("l_orderkey"))
-            }
-          fsys.delete(new org.apache.hadoop.fs.Path(staging), true)
+              (col("l_orderkey") % repOffset) / qWidth cast "long"),
+            Seq("l_orderkey"))
           ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
             pruneDisplaced = false, stats = dirs.toMap)
           root

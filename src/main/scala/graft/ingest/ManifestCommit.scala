@@ -584,8 +584,7 @@ object ManifestCommit {
     if (checks.isEmpty || dirs.isEmpty) return
     val bad = violations(spark.read.parquet(dirs.map(dirAbs(root, _)): _*), checks)
     if (bad.nonEmpty) {
-      val f = fs(spark, root)
-      dirs.foreach(d => f.delete(new Path(dirAbs(root, d)), true))
+      reclaim(spark, root, dirs)
       val (n, cnt) = bad.head
       throw new IllegalArgumentException(
         s"$writer to $root violates CHECK constraint $n " +
@@ -2527,7 +2526,8 @@ object ManifestCommit {
     * an INSERT would pay double I/O, and locally ~3 extra
     * scheduler-latency jobs). Stats are observed on the LOGICAL frame,
     * so keys come out logical with no colmap back-rename. `cols` may
-    * include [[RowCountStat]] and [[BytesStat]]. */
+    * include [[RowCountStat]] and [[BytesStat]]. Table writers reach it
+    * through [[writeData]]; MERGE calls the full form below. */
   def writeDirWithStats(spark: SparkSession, root: String, df: DataFrame,
       dir: String, cols: Seq[String]): Seq[ColStats] =
     writeDirWithStats(spark, root, df, dir, cols, None, Nil)._1
@@ -2555,6 +2555,31 @@ object ManifestCommit {
       dirBytesStat(spark, dir)), row)
   }
 
+  /** THE table write path: `df` lands in the table's layout — one dir
+    * per distinct value of the recorded slicing expression `slice`
+    * ([[writeSliced]]), or one fresh dir metered on the write pass
+    * ([[writeDirWithStats]]) when the table records none. Returns
+    * (absolute dir, stats) pairs ready for any commit verb; a refused
+    * write hands them to [[reclaim]]. */
+  def writeData(spark: SparkSession, root: String, df: DataFrame,
+      slice: Option[String], statCols: Seq[String])
+      : Seq[(String, Seq[ColStats])] = slice match {
+    case Some(s) => writeSliced(spark, root, df,
+      org.apache.spark.sql.functions.expr(s), statCols)
+    case None =>
+      val d = newDataDir(root)
+      Seq(d -> writeDirWithStats(spark, root, df, d, statCols))
+  }
+
+  /** Delete staged, never-committed dirs or DV files (absolute, or named
+    * relative to `root`) — the cleanup of a refused or conflicting
+    * write, instead of leaving them to [[pruneOrphans]]' freshness
+    * window. */
+  def reclaim(spark: SparkSession, root: String, dirs: Seq[String]): Unit = {
+    val f = fs(spark, root)
+    dirs.foreach(d => f.delete(new Path(dirAbs(root, d)), true))
+  }
+
   /** Per-dir stats for MANY dirs in ONE aggregate pass — the ONE
     * read-back producer. Several dirs group on the owning dir's basename
     * via `input_file_name()` (rewrite loops: zorder promotion,
@@ -2565,10 +2590,11 @@ object ManifestCommit {
     * SAME writer (one schema) — the single parquet read resolves one
     * schema for all of them. Under a column mapping the dirs carry
     * PHYSICAL names while `cols` are logical — the frame is projected
-    * back before aggregating so stat keys stay logical. A dir missing
-    * from the grouped result (empty dir, or a basename-extraction
-    * surprise) falls back to its own one-dir pass — correctness of the
-    * stats contract over speed. */
+    * back before aggregating so stat keys stay logical. The scan reads
+    * every file of every dir, so a dir with no group read zero rows and
+    * gets [[dirStats]]' empty-dir stats with no extra pass; a group key
+    * naming no requested dir (files in a nested leaf dir) is refused —
+    * its rows would be metered to no dir. */
   def dirStatsBatch(spark: SparkSession, dirs: Seq[String],
       cols: Seq[String],
       colmap: Map[String, String] = Map.empty,
@@ -2604,14 +2630,15 @@ object ManifestCommit {
       .groupBy(element_at(split(input_file_name(), "/"), -2).as("__dir"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-      .flatMap(r => byName.get(r.getString(0)).map(render(_, r, 1)))
-      .toMap
-    grouped ++ dirs.filterNot(grouped.contains).map { d =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"dirStatsBatch: dir $d missed the grouped key — metering it " +
-          "with its own per-dir pass")
-      d -> dirStats(spark, d, cols, colmap, schema)
-    }
+      .map { r =>
+        val d = byName.getOrElse(r.getString(0), throw new IllegalStateException(
+          s"dirStatsBatch: grouped key ${r.getString(0)} names no requested " +
+            "dir (files in a nested leaf?) — meter such dirs one by one"))
+        render(d, r, 1)
+      }.toMap
+    val zeroRows = org.apache.spark.sql.Row.fromSeq(
+      real.flatMap(_ => Seq(null, null, 0L)) :+ 0L)
+    grouped ++ dirs.filterNot(grouped.contains).map(render(_, zeroRows, 0))
   }
 
   /** SQL text of a slicing Column, for recording in the manifest
@@ -2755,7 +2782,8 @@ object ManifestCommit {
     * (absolute dir, stats) pairs ready for `commitReplace`. The
     * promotion is a local/HDFS rename; an object-store deployment
     * writes final dirs directly via its committer — the manifest
-    * protocol above is unchanged. */
+    * protocol above is unchanged. Table writers reach it through
+    * [[writeData]] with the table's recorded slice. */
   def writeSliced(spark: SparkSession, root: String, df: DataFrame,
       slice: org.apache.spark.sql.Column,
       statCols: Seq[String]): Seq[(String, Seq[ColStats])] = {

@@ -335,11 +335,8 @@ object MergeInto {
       catch {
         case e: ManifestCommit.ConcurrentCommitException =>
           // the staged rewrite can never be referenced — reclaim it now
-          // (a retried merge re-stages from the new generation) instead
-          // of leaving it to pruneOrphans' freshness window
-          new org.apache.hadoop.fs.Path(newDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(newDir), true)
+          // (a retried merge re-stages from the new generation)
+          ManifestCommit.reclaim(spark, root, Seq(newDir))
           throw e
       }
 
@@ -735,12 +732,6 @@ object MergeInto {
             ColStats(ManifestCommit.DvDeadStat, "num",
               dead.toString, dead.toString))
         }
-      def reclaimDvs(): Unit = {
-        val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        newDvs.values.foreach(v =>
-          f.delete(new org.apache.hadoop.fs.Path(root, v), true))
-      }
       // updated images: assignment RHS evaluate against the PRE-image
       // (every row here matched, so the application is unconditional)
       val imgCols = tSchema.fields.toIndexedSeq.map { f =>
@@ -750,38 +741,30 @@ object MergeInto {
         }
       }
       val images = matched.select(imgCols: _*)
-      val statCols = tableStatCols(m, names)
-      val written: Seq[(String, Seq[ColStats])] =
-        try m.slice match {
-          case Some(sl) => ManifestCommit.writeSliced(spark, root, images,
-            org.apache.spark.sql.functions.expr(sl), statCols)
-          case None =>
-            val d = ManifestCommit.newDataDir(root)
-            // stats metered on the write pass itself (observe, r19)
-            Seq(d -> ManifestCommit.writeDirWithStats(spark, root, images,
-              d, statCols))
-        } catch { case e: Throwable => reclaimDvs(); throw e }
-      def reclaimWritten(): Unit = {
-        val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        written.map(_._1).foreach(d => f.delete(new org.apache.hadoop.fs.Path(
-          ManifestCommit.dirAbs(root, d)), true))
-      }
-      // an UPDATE can move a row OUT of a CHECK constraint — staged
-      // bytes proven before commit, same as the CoW route
-      try ManifestCommit.validateWrittenChecks(spark, root, m.checks,
-        written.map(_._1), "UPDATE")
-      catch { case e: Throwable => reclaimDvs(); throw e }
+      val written =
+        try ManifestCommit.writeData(spark, root, images, m.slice,
+          tableStatCols(m, names))
+        catch { case e: Throwable =>
+          ManifestCommit.reclaim(spark, root, newDvs.values.toSeq); throw e }
       val committed =
-        try ManifestCommit.commitReconciled(spark, root, base = m,
-          displaced = Nil, added = written.map(_._1),
-          addedStats = written.toMap,
-          dvUpdates = newDvs, statUpdates = dvStatUpdates,
-          schema = m.tableSchema, op = "update",
-          pinned = touched.toSet,
-          disjoint = (_, st) => ex.disjoint(st),
-          expectedChecks = Some(m.checks))
-        catch { case e: Throwable => reclaimDvs(); reclaimWritten(); throw e }
+        try {
+          // an UPDATE can move a row OUT of a CHECK constraint — staged
+          // bytes proven before commit, same as the CoW route
+          ManifestCommit.validateWrittenChecks(spark, root, m.checks,
+            written.map(_._1), "UPDATE")
+          ManifestCommit.commitReconciled(spark, root, base = m,
+            displaced = Nil, added = written.map(_._1),
+            addedStats = written.toMap,
+            dvUpdates = newDvs, statUpdates = dvStatUpdates,
+            schema = m.tableSchema, op = "update",
+            pinned = touched.toSet,
+            disjoint = (_, st) => ex.disjoint(st),
+            expectedChecks = Some(m.checks))
+        } catch { case e: Throwable =>
+          ManifestCommit.reclaim(spark, root,
+            newDvs.values.toSeq ++ written.map(_._1))
+          throw e
+        }
       Some(RowOpResult(committed.gen, m.dirs.size, 0, totalMatched))
     } finally { matched.unpersist(); () }
   }
@@ -986,7 +969,7 @@ object MergeInto {
     val statCols = tableStatCols(m, names)
     // the survivor rewrite reads ONLY the witnessed dirs — fully-covered
     // dirs are displaced whole, their row counts folded in from stats
-    val (delAdded, matched): (Seq[String], Long) =
+    val (delAdded, matched): (Seq[(String, Seq[ColStats])], Long) =
       if (witnessed.isEmpty) (Nil, coveredMatched)
     else {
       val src = ManifestCommit.readDirsOf(spark, root, m, witnessed, Some(tSchema))
@@ -995,24 +978,24 @@ object MergeInto {
         sum(when(coalesce(cond, lit(false)), 1L).otherwise(0L)).as("matched"),
         count(lit(1)).as("total")), cond)
       val newDir = ManifestCommit.newDataDir(root)
-      // logical->physical rename under a column mapping (no-op otherwise)
-      ManifestCommit.toPhysicalNames(spark, root, out).write.parquet(newDir)
+      // the survivors' stats are metered on the same write pass
+      val newStats = ManifestCommit.writeDirWithStats(spark, root, out,
+        newDir, statCols)
       val row = obs.get
       val hit = Option(row("matched")).map(_.asInstanceOf[Long]).getOrElse(0L)
       val total = row("total").asInstanceOf[Long]
       val written = if (op == "delete" || op == "replace_where") total - hit else total
       val added =
         if (written == 0L) { // everything in the affected set deleted
-          new org.apache.hadoop.fs.Path(newDir).getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-            .delete(new org.apache.hadoop.fs.Path(newDir), true)
+          ManifestCommit.reclaim(spark, root, Seq(newDir))
           Nil
-        } else Seq(newDir)
+        } else Seq(newDir -> newStats)
       // UPDATE can move a row OUT of a CHECK constraint: the staged
       // rewrite is validated byte-for-byte before commit (DELETE only
       // removes rows and needs no proof)
       if (op == "update")
-        ManifestCommit.validateWrittenChecks(spark, root, m.checks, added, "UPDATE")
+        ManifestCommit.validateWrittenChecks(spark, root, m.checks,
+          added.map(_._1), "UPDATE")
       (added, hit + coveredMatched)
     }
     // REPLACE WHERE's insert side: the new rows land in the table's own
@@ -1021,28 +1004,15 @@ object MergeInto {
     // post-write, so a nondeterministic source can't smuggle a row the
     // validation never saw), and ride the SAME atomic commit as the
     // delete — no reader ever sees the range half-replaced.
-    val insDirs: Seq[(String, Seq[ManifestCommit.ColStats])] = insert match {
+    val insDirs: Seq[(String, Seq[ColStats])] = insert match {
       case None => Nil
       case Some(data) =>
         val aligned = data.select(tSchema.fields.toIndexedSeq.map(f =>
           col(f.name).cast(f.dataType).as(f.name)): _*)
-        val written = m.slice match {
-          case Some(sl) => ManifestCommit.writeSliced(spark, root, aligned,
-            org.apache.spark.sql.functions.expr(sl), statCols)
-          case None =>
-            val d = ManifestCommit.newDataDir(root)
-            // stats metered on the write pass itself (observe, r19)
-            Seq(d -> ManifestCommit.writeDirWithStats(spark, root, aligned,
-              d, statCols))
-        }
+        val written = ManifestCommit.writeData(spark, root, aligned,
+          m.slice, statCols)
         val staged = written.map(_._1)
         if (staged.nonEmpty) {
-          def reclaim(dirs: Seq[String]): Unit = {
-            val f = new org.apache.hadoop.fs.Path(root).getFileSystem(
-              spark.sparkContext.hadoopConfiguration)
-            dirs.foreach(d => f.delete(new org.apache.hadoop.fs.Path(
-              ManifestCommit.dirAbs(root, d)), true))
-          }
           // a REFUSED insert must leave NO staged bytes behind — the
           // delete-side survivor rewrite (delAdded) is equally
           // uncommitted and equally orphaned without cleanup
@@ -1058,7 +1028,7 @@ object MergeInto {
               if (log != phys) d.withColumnRenamed(phys, log) else d }
             val bad = dfL.filter(!coalesce(cond, lit(false))).limit(1).count()
             if (bad > 0) {
-              reclaim(staged)
+              ManifestCommit.reclaim(spark, root, staged)
               throw new IllegalArgumentException(
                 s"REPLACE WHERE to $root: written data does not conform to " +
                   "the replace predicate — nothing was committed")
@@ -1068,19 +1038,15 @@ object MergeInto {
               staged, "REPLACE WHERE")
           } catch {
             case e: Throwable =>
-              reclaim(delAdded)
+              ManifestCommit.reclaim(spark, root, delAdded.map(_._1))
               throw e
           }
         }
         written
     }
-    val added = delAdded ++ insDirs.map(_._1)
-    // one stats read-back over the survivor-rewrite dir (a single dir
-    // today — dirStatsBatch's ungrouped one-dir case)
-    val stats = ManifestCommit.dirStatsBatch(spark, delAdded, statCols,
-      colmap = m.colmap, schema = m.physicalSchema) ++ insDirs.toMap
+    val added = delAdded ++ insDirs
     val committed = ManifestCommit.commitReconciled(spark, root, m,
-      displaced = affected, added = added, addedStats = stats,
+      displaced = affected, added = added.map(_._1), addedStats = added.toMap,
       schema = m.tableSchema, op = op, pinned = affected.toSet,
       disjoint = (_, st) => ex.disjoint(st),
       // inserting rows must CAS against concurrent constraint changes,

@@ -481,39 +481,17 @@ object Optimize {
         Ingest.dedupLatest(rows, keys, version)
       case (None, _) => rows
     }
-    sliceText match {
-      case Some(s) =>
-        val promoted = ManifestCommit.writeSliced(spark, root, collapsed,
-          expr(s), statCols)
-        promoted.foreach { case (d, _) =>
-          rebuildBlooms(spark, d, bloomCols.map(m.physNameOf), bloomFpp) }
-        ManifestCommit.commitReconciled(spark, root, base = m,
-          displaced = fold,
-          added = promoted.map(_._1),
-          addedStats = promoted.map { case (d, cs) =>
-            new Path(d).getName -> cs }.toMap,
-          schema = m.tableSchema,
-          op = op,
-          pinned = fold.toSet)
-      case None =>
-        val newDir = ManifestCommit.newDataDir(root)
-        // logical->physical rename under a column mapping (no-op otherwise)
-        ManifestCommit.toPhysicalNames(spark, root, collapsed)
-          .write.parquet(newDir)
-        rebuildBlooms(spark, newDir, bloomCols.map(m.physNameOf), bloomFpp)
-        val newName = new Path(newDir).getName
-        ManifestCommit.commitReconciled(spark, root, base = m,
-          displaced = fold,
-          added = Seq(newName),
-          addedStats =
-            if (statCols.nonEmpty)
-              Map(newName -> ManifestCommit.dirStats(spark, newDir, statCols,
-                colmap = m.colmap, schema = m.physicalSchema))
-            else Map.empty,
-          schema = m.tableSchema,
-          op = op,
-          pinned = fold.toSet)
-    }
+    val written = ManifestCommit.writeData(spark, root, collapsed,
+      sliceText, statCols)
+    written.foreach { case (d, _) =>
+      rebuildBlooms(spark, d, bloomCols.map(m.physNameOf), bloomFpp) }
+    ManifestCommit.commitReconciled(spark, root, base = m,
+      displaced = fold,
+      added = written.map(_._1),
+      addedStats = written.toMap,
+      schema = m.tableSchema,
+      op = op,
+      pinned = fold.toSet)
   }
 
   /** MINOR compaction (SQL `OPTIMIZE`; `OPTIMIZE … WHERE` reaches it
@@ -572,17 +550,7 @@ object Optimize {
       def probe(d: String) =
         d -> (f.getContentSummary(new Path(
           ManifestCommit.dirAbs(root, d))).getLength < smallBytes)
-      viaStat ++ (if (probed.size <= 4) probed.map(probe).toMap
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(probed.size, 32))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(
-          Future.sequence(probed.map(d => Future(probe(d)))), Duration.Inf).toMap
-        finally pool.shutdown()
-      })
+      viaStat ++ ManifestCommit.concurrently(probed, 32)(probe)
     }
     val candidates = m.dirs.filter(d =>
       inScope(d) && (m.dvs.contains(d) || small.getOrElse(d, false)))
@@ -900,20 +868,10 @@ object Optimize {
       if (batchable.size >= 2)
         buildBloomsBatch(spark, root, m, batchable, bloomFpp)
       val rest = perDir ++ (if (batchable.size >= 2) Nil else batchable)
-      // overlap from TWO dirs up (guide §2.6): each index() is a few
-      // small driver-submitted jobs, and running them back-to-back was
+      // overlap past four dirs (guide §2.6): each index() is a few
+      // small driver-submitted jobs, and running many back-to-back is
       // a pure latency wall — the scheduler happily interleaves them
-      if (rest.size <= 1) rest.foreach { case (d, w) => index(d, w) }
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(rest.size, 8))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(
-          rest.map { case (d, w) => Future(index(d, w)) }), Duration.Inf)
-        finally pool.shutdown()
-      }
+      ManifestCommit.concurrently(rest, 8) { case (d, w) => index(d, w) }
     }
     // a column can LEGITIMATELY yield no min/max entry (all-null values,
     // or absent from an old dir's files under schema evolution) — "no
@@ -956,17 +914,7 @@ object Optimize {
     def footerOf(d: String): org.apache.spark.sql.types.StructType =
       spark.read.parquet(ManifestCommit.dirAbs(root, d)).schema
     val footers: Map[String, org.apache.spark.sql.types.StructType] =
-      if (targets.size <= 1) targets.map(d => d -> footerOf(d)).toMap
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(targets.size, 8))
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(Future.sequence(
-          targets.map(d => Future(d -> footerOf(d)))), Duration.Inf).toMap
-        finally pool.shutdown()
-      }
+      ManifestCommit.concurrently(targets, 8)(d => d -> footerOf(d)).toMap
     // stats → the per-dir entry (marker logic unchanged from the
     // per-dir meter this replaces)
     def finish(d: String, cs: Seq[ManifestCommit.ColStats])
@@ -1048,17 +996,9 @@ object Optimize {
       d -> ManifestCommit.dirAbs(root, d) }.toMap
     def baseOf(d: String) = new Path(absOf(d)).getName
     // footer presence per dir — pooled driver-side footer reads
-    val footers: Map[String, Set[String]] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(targets.size, 8))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(Future.sequence(targets.map { case (d, _) => Future(
-        d -> spark.read.parquet(absOf(d)).schema.fieldNames.toSet) }),
-        Duration.Inf).toMap
-      finally pool.shutdown()
-    }
+    val footers: Map[String, Set[String]] =
+      ManifestCommit.concurrently(targets, 8) { case (d, _) =>
+        d -> spark.read.parquet(absOf(d)).schema.fieldNames.toSet }.toMap
     // wanted PHYSICAL columns per dir basename, footer-present only
     val wantByDir: Map[String, Seq[String]] = targets.map { case (d, want) =>
       baseOf(d) -> want.map(m.physNameOf).distinct.filter(footers(d))

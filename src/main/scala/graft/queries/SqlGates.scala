@@ -33,6 +33,10 @@ object SqlGates {
     * collapse every path to that one segment and the pruning witness
     * would silently pass (or red) spuriously. */
   private def scannedDataDirs(df: DataFrame, root: String): Int =
+    scannedDataDirNames(df, root).size
+
+  /** The distinct `data_*` dir names behind [[scannedDataDirs]]. */
+  private def scannedDataDirNames(df: DataFrame, root: String): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation match {
@@ -48,7 +52,7 @@ object SqlGates {
               }
           case _ => Nil
         }
-    }.flatten.distinct.size
+    }.flatten.distinct
 
   /** Month-sliced orders graft table with o_orderdate min/max + row-count
     * stats and a recorded schema; returns (root, registered name, months). */
@@ -860,16 +864,7 @@ object SqlGates {
       // stats may prune further within the bucket, which is fine)
       val b = orders.sparkSession.range(1)
         .select(pmod(hash(lit(ck)), lit(8))).collect()(0).getInt(0).toString
-      val scannedNames = bucketProbe.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.filter(p =>
-                p.getName.startsWith("data_") && p.toString.contains(root))
-                .map(_.getName)
-            case _ => Nil
-          }
-      }.flatten
+      val scannedNames = scannedDataDirNames(bucketProbe, root)
       val bucketPrunes = scannedNames.nonEmpty &&
         scannedNames.forall(d => m.stats.getOrElse(d, Nil)
           .find(_.col == "pmod(hash(o_custkey), 8)")
@@ -1481,29 +1476,18 @@ object SqlGates {
       s.sql(s"INSERT INTO graft.$name SELECT * FROM $src")
       val after = ManifestCommit.readManifest(s, root).get
       val dayDirs = after.dirs.size - before.dirs.size // 3 new day dirs
-      def scanned(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation match {
-              case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toString).filter(_.contains(root))
-                  .flatMap(_.split("/").filter(x =>
-                    x.startsWith("data_") && !x.contains("=")).lastOption)
-              case _ => Nil
-            }
-        }.flatten.distinct.size
       // a probe INSIDE day 2 of the re-ingested window: the old March
       // month dir overlaps it (conservative keep), the NEW layout
       // contributes exactly its one day dir — 2 scanned, never 4
       val day = s.sql(s"SELECT count(*) FROM graft.$name " +
         "WHERE o_orderdate >= TIMESTAMP '1996-03-02 00:00:00' " +
         "AND o_orderdate <= TIMESTAMP '1996-03-02 12:00:00'")
-      val dayOk = dayDirs == 3 && zeroIo && scanned(day) == 2
+      val dayOk = dayDirs == 3 && zeroIo && scannedDataDirs(day, root) == 2
       // an old-layout month probe entirely OUTSIDE the re-ingest: 1 dir
       val jan = s.sql(s"SELECT count(*) FROM graft.$name " +
         "WHERE o_orderdate >= TIMESTAMP '1996-01-05 00:00:00' " +
         "AND o_orderdate <= TIMESTAMP '1996-01-25 23:59:59'")
-      val janOk = scanned(jan) == 1
+      val janOk = scannedDataDirs(jan, root) == 1
       val agg = s.sql(
         s"""SELECT CAST(count(*) AS LONG) AS n_rows,
            |  cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price
@@ -1561,16 +1545,7 @@ object SqlGates {
       val probe = s.sql(s"SELECT count(*) FROM graft.$name " +
         "WHERE o_orderdate >= TIMESTAMP '1996-02-01 00:00:00' " +
         "AND o_orderdate <= TIMESTAMP '1996-11-30 23:59:59'")
-      val scanned = probe.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          l.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString).filter(_.contains(root))
-                .flatMap(_.split("/").filter(x =>
-                  x.startsWith("data_") && !x.contains("=")).lastOption)
-            case _ => Nil
-          }
-      }.flatten.distinct.size
+      val scanned = scannedDataDirs(probe, root)
       val agg = s.sql(
         s"""SELECT CAST(count(*) AS LONG) AS n_rows,
            |  cast(sum(cast(o_totalprice as decimal(18,2))) as double) AS sum_price

@@ -112,28 +112,15 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
             GraftWriteUtil.sliceRefCols(s, df.columns.toSeq) ++
               ManifestCommit.sliceExprStatCols(s, df.columns.toSeq)) :+
             ManifestCommit.RowCountStat
-          slice match {
-            case Some(s) =>
-              val dirs = ManifestCommit.writeSliced(spark, root, df,
-                org.apache.spark.sql.functions.expr(s), statCols)
-              // expectedChecks = empty: CTAS rows were never validated
-              // against any constraint — a constraint that appeared
-              // concurrently (CREATE+ADD racing this CTAS) must fail
-              // the commit, not silently govern unproven rows
-              ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
-                pruneDisplaced = false, stats = dirs.toMap,
-                schema = Some(schema), op = "create", slice = slice,
-                expectedChecks = Some(Map.empty))
-            case None =>
-              val d = ManifestCommit.newDataDir(root)
-              // stats metered on the write pass itself (observe, r19)
-              val stats = ManifestCommit.writeDirWithStats(spark, root,
-                df, d, statCols)
-              ManifestCommit.commitReplace(spark, root, Seq(d),
-                pruneDisplaced = false, stats = Map(d -> stats),
-                schema = Some(schema), op = "create",
-                expectedChecks = Some(Map.empty))
-          }
+          val dirs = ManifestCommit.writeData(spark, root, df, slice, statCols)
+          // expectedChecks = empty: CTAS rows were never validated
+          // against any constraint — a constraint that appeared
+          // concurrently (CREATE+ADD racing this CTAS) must fail the
+          // commit, not silently govern unproven rows
+          ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
+            pruneDisplaced = false, stats = dirs.toMap,
+            schema = Some(schema), op = "create", slice = slice,
+            expectedChecks = Some(Map.empty))
           GraftSql.register(name, root)
         }
         ()
@@ -652,52 +639,25 @@ case class GraftInsertExec(@transient spark: SparkSession, root: String,
       else if (sliceSeed.nonEmpty)
         (sliceSeed :+ ManifestCommit.RowCountStat).distinct
       else Nil
-    prev.flatMap(_.slice) match {
-      // The table records a slicing expression: land the INSERT in its
-      // established layout — one dir per slice value with slice-tight
-      // stats — so a year-sized INSERT SELECT into a month-sliced table
-      // keeps skipping month-granular instead of degrading to one
-      // table-spanning stat range until the next OPTIMIZE. Small inserts
-      // are unharmed (one slice value → one dir, same cost as before).
-      case Some(sliceText) =>
-        val sliceCol = org.apache.spark.sql.functions.expr(sliceText)
-        val dirs = ManifestCommit.writeSliced(spark, root, df, sliceCol, statCols)
-        ManifestCommit.validateWrittenChecks(spark, root, checks,
-          dirs.map(_._1), "INSERT")
-        if (overwrite)
-          ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
-            pruneDisplaced = false, stats = dirs.toMap,
-            schema = prev.flatMap(_.tableSchema), op = "insert_overwrite",
-            expectedChecks = checksCas)
-        else
-          // multi-dir append: nothing displaced, nothing pinned — an
-          // insert reads no table state, so it commutes with any
-          // concurrent commit (AlwaysDisjoint), and stats/DVs/txns of
-          // the current generation carry through
-          ManifestCommit.commitReconciled(spark, root, base = prev.get,
-            displaced = Nil, added = dirs.map(_._1), addedStats = dirs.toMap,
-            schema = prev.flatMap(_.tableSchema), op = "insert",
-            expectedChecks = checksCas)
-        ()
-      case None =>
-        val dir = ManifestCommit.newDataDir(root)
-        // stats metered on the write pass itself (observe, r19) — the
-        // dirStats read-back was a full second scan of the written bytes
-        val stats = ManifestCommit.writeDirWithStats(spark, root, df,
-          dir, statCols)
-        ManifestCommit.validateWrittenChecks(spark, root, checks,
-          Seq(dir), "INSERT")
-        if (overwrite)
-          ManifestCommit.commitReplace(spark, root, Seq(dir),
-            pruneDisplaced = false, stats = Map(dir -> stats),
-            schema = prev.flatMap(_.tableSchema), op = "insert_overwrite",
-            expectedChecks = checksCas)
-        else {
-          ManifestCommit.commitAppend(spark, root, dir, stats = stats,
-            op = "insert", expectedChecks = checksCas)
-          ()
-        }
-    }
+    // The table's layout: one dir per slice value with slice-tight
+    // stats when it records a slicing expression — so a year-sized
+    // INSERT SELECT into a month-sliced table keeps skipping
+    // month-granular instead of degrading to one table-spanning stat
+    // range until the next OPTIMIZE — else one dir
+    val dirs = ManifestCommit.writeData(spark, root, df,
+      prev.flatMap(_.slice), statCols)
+    ManifestCommit.validateWrittenChecks(spark, root, checks,
+      dirs.map(_._1), "INSERT")
+    if (overwrite)
+      ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
+        pruneDisplaced = false, stats = dirs.toMap,
+        schema = prev.flatMap(_.tableSchema), op = "insert_overwrite",
+        expectedChecks = checksCas)
+    else
+      // nothing displaced, nothing pinned: an append reads no table
+      // state, so it commutes with any concurrent commit
+      ManifestCommit.commitAppendMulti(spark, root, dirs, op = "insert",
+        expectedChecks = checksCas)
     Nil
   }
 }

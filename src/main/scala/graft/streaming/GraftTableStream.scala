@@ -69,7 +69,7 @@ import graft.ingest.{ChangeFeed, ManifestCommit}
   *
   * SINK: each `addBatch` lands in the target's ESTABLISHED layout — a
   * table with a recorded slicing expression gets one dir per slice
-  * value with slice-tight stats (the `writeSliced` path SQL INSERT
+  * value with slice-tight stats (the `writeData` path SQL INSERT
   * takes, so a mixed-slice batch keeps month-granular pruning instead
   * of one dir whose stats span months), an unsliced table gets one dir
   * — committed as ONE generation via an O(changes) append carrying
@@ -780,43 +780,29 @@ class GraftTableSink(spark: SparkSession, params: Map[String, String])
       else if (sliceSeed.nonEmpty)
         (sliceSeed :+ ManifestCommit.RowCountStat).distinct
       else Nil
-    prev.flatMap(_.slice) match {
-      // The table records a slicing expression: land the batch in its
-      // established layout — one dir PER SLICE VALUE with slice-tight
-      // stats, exactly what the same rows through INSERT get — instead
-      // of one batch-granular dir whose slice-column min/max can span
-      // months (a backfill replayed through the replication path, an
-      // out-of-order CDC feed) and silently degrade the pruning the
-      // table was DDL'd for. All of the batch's slice dirs commit in
-      // ONE generation carrying the batch txn, so exactly-once replay
-      // detection covers the whole batch; the common single-slice batch
-      // still lands one dir (writeSliced of one distinct value).
-      case Some(sliceText) =>
-        val dirs = ManifestCommit.writeSliced(spark, root, aligned,
-          org.apache.spark.sql.functions.expr(sliceText), statCols)
-        // CHECK constraints proven on the staged dirs before commit (the
-        // validated bytes are the served bytes); violation deletes them
-        // and fails the batch — the stream stops, never lands bad rows
-        ManifestCommit.validateWrittenChecks(spark, root, checks,
-          dirs.map(_._1), "streaming append")
-        // Some even when empty: a concurrent ADD CONSTRAINT landing
-        // between this batch's validation and its commit must fail the
-        // CAS (and the engine retries the batch), never silently govern
-        // unproven rows
-        ManifestCommit.commitAppendMulti(spark, root, dirs,
-          op = "stream_append", txn = Some(appId -> batchId),
-          expectedChecks = Some(checks))
-      case None =>
-        val dir = ManifestCommit.newDataDir(root)
-        // stats metered on the write pass itself (observe, r19)
-        val stats = ManifestCommit.writeDirWithStats(spark, root, aligned,
-          dir, statCols)
-        ManifestCommit.validateWrittenChecks(spark, root, checks,
-          Seq(dir), "streaming append")
-        ManifestCommit.commitAppend(spark, root, dir, stats = stats,
-          op = "stream_append", txn = Some(appId -> batchId),
-          expectedChecks = Some(checks))
-    }
+    // A table that records a slicing expression gets the batch in its
+    // established layout — one dir PER SLICE VALUE with slice-tight
+    // stats, exactly what the same rows through INSERT get — instead
+    // of one batch-granular dir whose slice-column min/max can span
+    // months (a backfill replayed through the replication path, an
+    // out-of-order CDC feed) and silently degrade the pruning the
+    // table was DDL'd for. All of the batch's dirs commit in ONE
+    // generation carrying the batch txn, so exactly-once replay
+    // detection covers the whole batch.
+    val dirs = ManifestCommit.writeData(spark, root, aligned,
+      prev.flatMap(_.slice), statCols)
+    // CHECK constraints proven on the staged dirs before commit (the
+    // validated bytes are the served bytes); violation deletes them
+    // and fails the batch — the stream stops, never lands bad rows
+    ManifestCommit.validateWrittenChecks(spark, root, checks,
+      dirs.map(_._1), "streaming append")
+    // Some even when empty: a concurrent ADD CONSTRAINT landing
+    // between this batch's validation and its commit must fail the
+    // CAS (and the engine retries the batch), never silently govern
+    // unproven rows
+    ManifestCommit.commitAppendMulti(spark, root, dirs,
+      op = "stream_append", txn = Some(appId -> batchId),
+      expectedChecks = Some(checks))
     ()
   }
 

@@ -525,6 +525,115 @@ class ManifestCommitSpec extends SparkSpec {
     assert(emptyStats.map(_.col) === Seq("__nn_id", "__nn_v", "__nn_n",
       "__nn_kk", "__nn_pmod(hash(kk), 4)", ManifestCommit.RowCountStat,
       ManifestCommit.BytesStat))
+
+    // the single-dir rewrites meter on their write pass too: the
+    // survivor dir of a predicate DELETE and of a predicate UPDATE (the
+    // recorded slice makes DML meter the expression stat) and an
+    // unsliced OPTIMIZE fold dir each equal a dirStats re-read
+    ManifestCommit.commitReplace(spark, root2, written.map(_._1),
+      pruneDisplaced = false, stats = written.toMap,
+      schema = ManifestCommit.readManifest(spark, root2).get.tableSchema)
+    ManifestCommit.setSlice(spark, root2, Some("pmod(hash(kk), 4)"))
+    def meteredLikeReread(rewrite: => Any): Unit = {
+      val before = ManifestCommit.readManifest(spark, root2).get
+      rewrite
+      val after = ManifestCommit.readManifest(spark, root2).get
+      val added = after.dirs.filterNot(before.dirs.toSet)
+      assert(added.size === 1, added)
+      val st = after.stats(added.head)
+      assert(Seq("pmod(hash(kk), 4)", "__nn_n", ManifestCommit.RowCountStat,
+        ManifestCommit.BytesStat).forall(c => st.exists(_.col == c)), st)
+      assert(st === reread(ManifestCommit.dirAbs(root2, added.head)),
+        s"${added.head}: write-pass stats vs dirStats")
+    }
+    meteredLikeReread(MergeInto.deleteRows(spark, root2, col("id") === 5))
+    meteredLikeReread(MergeInto.updateRows(spark, root2,
+      Seq("v" -> lit("u")), col("id") === 40, mode = "cow"))
+    ManifestCommit.setSlice(spark, root2, None)
+    meteredLikeReread(Optimize.compactSmall(spark, root2, Long.MaxValue))
+    assert(ManifestCommit.read(spark, root2).count() === 89L)
+  }
+
+  test("writeData: one dir per slice value, or one dir; stats as the " +
+      "direct writers give") {
+    val root = Files.createTempDirectory("manifest_spec_").toString + "/wd"
+    val df = spark.range(0, 60).select(col("id"), (col("id") % 3).as("g"))
+    val cols = Seq("id", "g", ManifestCommit.RowCountStat,
+      ManifestCommit.BytesStat)
+    def noBytes(st: Seq[ManifestCommit.ColStats]) =
+      st.filterNot(_.col == ManifestCommit.BytesStat)
+    val sliced = ManifestCommit.writeData(spark, root, df, Some("g"), cols)
+    val direct = ManifestCommit.writeSliced(spark, root, df, col("g"), cols)
+    assert(sliced.size === 3)
+    assert(sliced.map(d => noBytes(d._2)) === direct.map(d => noBytes(d._2)))
+    val one = ManifestCommit.writeData(spark, root, df, None, cols)
+    val d1 = ManifestCommit.newDataDir(root)
+    val direct1 = ManifestCommit.writeDirWithStats(spark, root, df, d1, cols)
+    assert(one.size === 1)
+    assert(noBytes(one.head._2) === noBytes(direct1))
+    (sliced ++ one).foreach { case (d, st) =>
+      assert(st === ManifestCommit.dirStats(spark, d, cols), d)
+    }
+  }
+
+  test("dirStatsBatch: an empty dir gets dirStats' zero-row stats with no " +
+      "extra job; a nested leaf is refused") {
+    val root = Files.createTempDirectory("manifest_spec_").toString + "/bt"
+    val cols = Seq("id", "v", ManifestCommit.RowCountStat,
+      ManifestCommit.BytesStat)
+    val Seq(a, e, b) = Seq(0L -> 10L, 0L -> 0L, 10L -> 25L).map { case (lo, hi) =>
+      val d = ManifestCommit.newDataDir(root)
+      spark.range(lo, hi).select(col("id"),
+        concat(lit("v"), col("id")).as("v")).write.parquet(d)
+      d
+    }
+    val schema = Some(spark.read.parquet(a).schema)
+    var withEmpty = Map.empty[String, Seq[ManifestCommit.ColStats]]
+    val jobsWith = jobsOf {
+      withEmpty = ManifestCommit.dirStatsBatch(spark, Seq(a, e, b), cols,
+        schema = schema)
+    }
+    val jobsWithout = jobsOf(ManifestCommit.dirStatsBatch(spark, Seq(a, b),
+      cols, schema = schema))
+    assert(jobsWith === jobsWithout)
+    Seq(a, e, b).foreach { d =>
+      assert(withEmpty(d) === ManifestCommit.dirStats(spark, d, cols,
+        schema = schema), d)
+    }
+    assert(withEmpty(e).find(_.col == ManifestCommit.RowCountStat)
+      .map(_.min) === Some("0"))
+    // a dir whose files sit in nested k=v leaves (batched beside a dir
+    // with no files, so the scan discovers one partition base): the
+    // grouped keys are the p=… leaves, which name no requested dir
+    val nested = ManifestCommit.newDataDir(root)
+    spark.range(0, 4).select(col("id"), concat(lit("v"), col("id")).as("v"),
+      (col("id") % 2).as("p")).write.partitionBy("p").parquet(nested)
+    val hollow = ManifestCommit.newDataDir(root)
+    Files.createDirectories(java.nio.file.Paths.get(hollow))
+    val err = intercept[IllegalStateException](
+      ManifestCommit.dirStatsBatch(spark, Seq(nested, hollow), cols))
+    assert(err.getMessage.contains("grouped key p="), err.getMessage)
+  }
+
+  test("single-dir rewrites meter stats on the write pass: exact jobs of a " +
+      "one-dir predicate DELETE and an unsliced OPTIMIZE fold") {
+    val root = Files.createTempDirectory("manifest_spec_").toString + "/sj"
+    val cols = Seq("id", ManifestCommit.RowCountStat)
+    val dirs = Seq(0L -> 50L, 50L -> 100L).map { case (lo, hi) =>
+      val d = ManifestCommit.newDataDir(root)
+      d -> ManifestCommit.writeDirWithStats(spark, root,
+        spark.range(lo, hi).toDF("id"), d, cols)
+    }
+    ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
+      pruneDisplaced = false, stats = dirs.toMap,
+      schema = Some(StructType(Seq(StructField("id", LongType)))))
+    val del = jobsOf(MergeInto.deleteRows(spark, root, col("id") === 7L))
+    val fold = jobsOf(Optimize.compactSmall(spark, root, Long.MaxValue))
+    assert(ManifestCommit.tableRowCount(spark, root) === Some(99L))
+    assert(ManifestCommit.readManifest(spark, root).get.dirs.size === 1)
+    // a stats read-back of the written dir would add 2 jobs to each
+    assert(del === 3, s"one-dir predicate DELETE: $del jobs")
+    assert(fold === 1, s"unsliced OPTIMIZE fold: $fold jobs")
   }
 
   test("writeSliced keeps per-dir stats for TIMESTAMP-typed and hive-ESCAPED " +

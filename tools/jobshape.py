@@ -1,0 +1,65 @@
+"""Compare the Spark job shape of two traced perfbench runs.
+
+    python3 tools/jobshape.py PARENT.json CHANGE.json
+
+Each file holds the output of one `perfbench/run.py ... --trace 1` run;
+its last JSON line is read. Every job-count metric (`*.jobs`,
+`spark.jobs`, `spark.tasks`, `sql.jobs_per_query`) is printed side by
+side. Job counts are deterministic for a fixed workload and seed, so the
+script exits 1 if any of them rose from PARENT to CHANGE, else 0.
+"""
+import json
+import sys
+
+EXACT = ("spark.jobs", "spark.tasks", "sql.jobs_per_query")
+
+
+def last_json(path):
+    """The metrics of the last line of `path` that is a JSON object."""
+    with open(path) as f:
+        lines = [ln.strip() for ln in f if ln.strip().startswith("{")]
+    for ln in reversed(lines):
+        try:
+            return json.loads(ln)["metrics"]
+        except (ValueError, KeyError):
+            continue
+    raise SystemExit(f"{path}: no JSON result line")
+
+
+def job_metrics(metrics):
+    return {k: v["value"] for k, v in metrics.items()
+            if k.endswith(".jobs") or k in EXACT}
+
+
+def fmt(v):
+    return "-" if v is None else f"{v:g}"
+
+
+def compare(parent, change):
+    """(report lines, names of the metrics that rose)."""
+    a, b = job_metrics(parent), job_metrics(change)
+    lines = [f"{'metric':<22}{'parent':>12}{'change':>12}"]
+    rose = []
+    for k in sorted(set(a) | set(b)):
+        pa, ch = a.get(k), b.get(k)
+        flag = ""
+        if pa is not None and ch is not None and ch > pa:
+            rose.append(k)
+            flag = "  ROSE"
+        lines.append(f"{k:<22}{fmt(pa):>12}{fmt(ch):>12}{flag}")
+    return lines, rose
+
+
+def main(argv):
+    if len(argv) != 2:
+        raise SystemExit("usage: python3 tools/jobshape.py PARENT.json CHANGE.json")
+    lines, rose = compare(last_json(argv[0]), last_json(argv[1]))
+    print("\n".join(lines))
+    if rose:
+        print("job shape rose: " + ", ".join(rose))
+        return 1
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

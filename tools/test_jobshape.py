@@ -1,0 +1,71 @@
+"""Tests for tools/jobshape.py. Run: python3 -m unittest discover -s tools"""
+import contextlib
+import io
+import json
+import os
+import sys
+import tempfile
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import jobshape  # noqa: E402
+
+
+def run_file(metrics, noise="merge.p50_s 1.0\n"):
+    """A perfbench log: metric lines, then the JSON result line."""
+    body = {"correct": True, "failed": 0,
+            "metrics": {k: {"value": v, "unit": "count"}
+                        for k, v in metrics.items()}}
+    f = tempfile.NamedTemporaryFile("w", suffix=".json", delete=False)
+    f.write(noise + json.dumps(body) + "\n")
+    f.close()
+    return f.name
+
+
+class JobShapeTest(unittest.TestCase):
+    def main(self, parent, change):
+        paths = [run_file(parent), run_file(change)]
+        out = io.StringIO()
+        try:
+            with contextlib.redirect_stdout(out):
+                code = jobshape.main(paths)
+        finally:
+            for p in paths:
+                os.unlink(p)
+        return code, out.getvalue()
+
+    def test_equal_shape_passes_and_prints_only_job_metrics(self):
+        m = {"merge.jobs": 6, "spark.jobs": 45, "spark.tasks": 74,
+             "sql.jobs_per_query": 2, "merge.p50_s": 1.2}
+        code, out = self.main(m, m)
+        self.assertEqual(code, 0)
+        for k in ("merge.jobs", "spark.jobs", "spark.tasks",
+                  "sql.jobs_per_query"):
+            self.assertIn(k, out)
+        self.assertNotIn("merge.p50_s", out)
+
+    def test_a_rise_fails_and_is_named(self):
+        code, out = self.main({"delete.jobs": 10, "spark.tasks": 74},
+                              {"delete.jobs": 11, "spark.tasks": 70})
+        self.assertEqual(code, 1)
+        self.assertIn("ROSE", out)
+        self.assertIn("job shape rose: delete.jobs", out)
+
+    def test_a_fall_passes(self):
+        code, _ = self.main({"optimize.jobs": 8}, {"optimize.jobs": 6})
+        self.assertEqual(code, 0)
+
+    def test_reads_the_last_json_line(self):
+        p = run_file({"spark.jobs": 3})
+        with open(p, "a") as f:
+            f.write(json.dumps({"metrics": {"spark.jobs":
+                                            {"value": 5, "unit": "count"}}}))
+        try:
+            self.assertEqual(jobshape.last_json(p)["spark.jobs"]["value"], 5)
+        finally:
+            os.unlink(p)
+
+
+if __name__ == "__main__":
+    unittest.main()
