@@ -109,9 +109,9 @@ object MetaScaleCheck {
         assert(ManifestCommit.readManifest(spark, root).get.dirs.size >= nDirs)
       }
       all("resolve_pruned") = time(s"$tag resolvePruned 1% band") {
-        val (kept, total) = ManifestCommit.resolvePruned(spark, root, "id",
+        val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(("id",
           Some((nDirs / 2 * 100L).toString),
-          Some((nDirs / 2 * 100L + nDirs).toString))
+          Some((nDirs / 2 * 100L + nDirs).toString))))
         assert(kept.size < total)
       }
       all("resolve_bloom") = time(s"$tag resolveBloom point probe") {
@@ -219,9 +219,9 @@ object MetaScaleCheck {
         val dst2 = GraftTmp.dir(s"meta_clone_dst2_${tag}_") + "/c"
         ManifestCommit.shallowClone(spark, srcR, dst2)
         all("clone_pruned_read") = time(s"$tag clone pruned read (1 dir of $nDirs)") {
-          val (df, kept, total) = ManifestCommit.readPruned(spark, dst2, "id",
+          val (df, kept, total) = ManifestCommit.readPruned(spark, dst2, Seq(("id",
             Some((nDirs / 2 * 100L).toString),
-            Some((nDirs / 2 * 100L + 50).toString))
+            Some((nDirs / 2 * 100L + 50).toString))))
           assert(kept < total && df.count() > 0)
         }
       }
@@ -246,8 +246,8 @@ object MetaScaleCheck {
         }
         all("hive_pruned_read") = time(
           s"$tag converted-table pruned read (1 leaf of $nDirs)") {
-          val (df, kept, total) = ManifestCommit.readPruned(spark, hr, "part",
-            Some((nDirs / 2).toString), Some((nDirs / 2).toString))
+          val (df, kept, total) = ManifestCommit.readPruned(spark, hr, Seq(("part",
+            Some((nDirs / 2).toString), Some((nDirs / 2).toString))))
           assert(kept == 1 && total == nDirs && df.count() == 50)
         }
       }
@@ -278,11 +278,11 @@ object MetaScaleCheck {
         }
         all("hive2_dim_read") = time(
           s"$tag two-level pruned read (1 of $side on each dimension)") {
-          val (da, ka, ta) = ManifestCommit.readPruned(spark, h2, "a",
-            Some((side / 2).toString), Some((side / 2).toString))
+          val (da, ka, ta) = ManifestCommit.readPruned(spark, h2, Seq(("a",
+            Some((side / 2).toString), Some((side / 2).toString))))
           assert(ka == side && ta == leaves && da.count() == 20L * side)
-          val (db, kb, _) = ManifestCommit.readPruned(spark, h2, "b",
-            Some((side / 2).toString), Some((side / 2).toString))
+          val (db, kb, _) = ManifestCommit.readPruned(spark, h2, Seq(("b",
+            Some((side / 2).toString), Some((side / 2).toString))))
           assert(kb == side && db.count() == 20L * side)
         }
       }
@@ -319,9 +319,9 @@ object MetaScaleCheck {
         val renamedCol = if (flip % 2 == 0) "v" else "w"
         all("renamed_pruned_read") = time(
           s"$tag pruned read under the renamed name (1 dir of $nDirs)") {
-          val (df, kept, total) = ManifestCommit.readPruned(spark, root, "id",
+          val (df, kept, total) = ManifestCommit.readPruned(spark, root, Seq(("id",
             Some((nDirs / 2 * 100L).toString),
-            Some((nDirs / 2 * 100L + 50).toString))
+            Some((nDirs / 2 * 100L + 50).toString))))
           assert(kept < total && df.select(renamedCol).count() > 0)
         }
       }

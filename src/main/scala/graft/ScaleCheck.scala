@@ -366,7 +366,7 @@ object ScaleCheck {
       all.toMap
     }
 
-    println(s"[scale] --- 1x (sf0.1) ---")
+    println(s"[scale] --- 1x (${new java.io.File(sf).getName}) ---")
     val one = kernels("1x", docs1, line1, emb1, media1)
     println(s"[scale] --- ${n}x ---")
     val big = kernels(s"${n}x", docsN, lineN, embN, mediaN)

@@ -2700,23 +2700,6 @@ object ManifestCommit {
 
   private val BucketComponent = """pmod\(hash\((\w+)\), (\d+)\)""".r
 
-  /** Stats bounds a point predicate implies on BUCKET slice components:
-    * `domain = v` against a slice component `pmod(hash(domain), n)`
-    * pins that component to `pmod(hash(v), n)` — evaluated here with
-    * the same Catalyst Murmur3 hash the write side used, so the bound
-    * compares exactly against the recorded component stat.
-    *
-    * TYPE-EXACT by coercion, not assumption: Murmur3 is width-sensitive
-    * (hash(5: int) != hash(5L)), and while the ANALYZED SQL path always
-    * hands over literals of the column's own type (the analyzer casts
-    * mismatches, and a cast wrapper extracts no point), the programmatic
-    * DML path (`deleteRows(col("k") === 5)`) extracts from UNRESOLVED
-    * expressions where the literal keeps whatever width the caller
-    * typed. `colType` (the table schema's type for a column) drives a
-    * lossless coercion of the literal to the column's type before
-    * hashing; a value that cannot be represented exactly — or an
-    * unknown column — contributes NO bound (skipping stays an
-    * optimization, never a wrong filter). */
   /** LOSSLESS coercion of a caller-typed probe value to the COLUMN's own
     * type — shared by bucket-component pinning and bloom probing, both
     * of which are TYPE-SENSITIVE (Murmur3 is width-sensitive; a bloom
@@ -2751,15 +2734,30 @@ object ManifestCommit {
     }
   }
 
+  /** Stats bounds a point predicate implies on BUCKET slice components:
+    * `domain = v` against a slice component `pmod(hash(domain), n)`
+    * pins that component to `pmod(hash(v), n)` — evaluated here with
+    * the same Catalyst Murmur3 hash the write side used, so the bound
+    * compares exactly against the recorded component stat.
+    *
+    * TYPE-EXACT by coercion, not assumption: Murmur3 is width-sensitive
+    * (hash(5: int) != hash(5L)), and while the ANALYZED SQL path always
+    * hands over literals of the column's own type (the analyzer casts
+    * mismatches, and a cast wrapper extracts no point), the programmatic
+    * DML path (`deleteRows(col("k") === 5)`) extracts from UNRESOLVED
+    * expressions where the literal keeps whatever width the caller
+    * typed. `colType` (the table schema's type for a column) drives a
+    * lossless coercion of the literal to the column's type before
+    * hashing; a value that cannot be represented exactly — or an
+    * unknown column — contributes NO bound (skipping stays an
+    * optimization, never a wrong filter). */
   def bucketBoundsOf(slice: Option[String], points: Seq[(String, Any)],
       colType: String => Option[org.apache.spark.sql.types.DataType])
-      : Seq[(String, Option[String], Option[String])] = {
-    def coerce(v: Any, dt: org.apache.spark.sql.types.DataType): Option[Any] =
-      coerceExact(v, dt)
+      : Seq[(String, Option[String], Option[String])] =
     slice.toSeq.flatMap(sliceComponents).flatMap {
       case comp @ BucketComponent(col, n) =>
         points.filter(_._1.equalsIgnoreCase(col)).flatMap { case (_, v) =>
-          colType(col).flatMap(dt => coerce(v, dt)).map { cv =>
+          colType(col).flatMap(dt => coerceExact(v, dt)).map { cv =>
             val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
               Seq(org.apache.spark.sql.catalyst.expressions.Literal(cv)))
               .eval(null).asInstanceOf[Int]
@@ -2770,7 +2768,6 @@ object ManifestCommit {
         }
       case _ => Nil
     }
-  }
 
   /** Write `df` as one immutable data dir per distinct value of `slice`
     * in a SINGLE write job (hive-style staging layout, then each
@@ -2866,35 +2863,29 @@ object ManifestCommit {
     sfx.split('/').toSeq.map(seg =>
       unescapeSegValue(seg.drop(seg.indexOf('=') + 1)))
 
-  /** Data-skipping resolve: live dirs whose `col` stats can overlap
-    * [lo, hi] (either bound optional). Dirs without stats for `col` are
-    * kept — skipping is an optimization, never a filter; callers still
-    * apply the real predicate. Returns (kept absolute paths, total live
-    * dirs) so callers can surface the pruning ratio.
+  /** Data-skipping resolve: live dirs whose stats can overlap EVERY
+    * `(col, lo, hi)` bound (either side optional) — [[prunedDirsOf]]'s
+    * kept set. Dirs without stats for a column are kept for it —
+    * skipping is an optimization, never a filter; callers still apply
+    * the real predicate. Returns (kept absolute paths, total live dirs)
+    * so callers can surface the pruning ratio.
     *
     * Raw-path contract, ENFORCED: a kept dir carrying a deletion vector
     * cannot be served as a raw path (reading it directly would resurrect
     * deleted rows), so this throws `IllegalStateException` on that case —
     * use [[readPruned]] (DV-aware DataFrame) or [[readDirsOf]] instead.
-    * Same enforcement in [[resolveBloom]] and
-    * `Optimize.resolvePrunedMulti`. */
-  def resolvePruned(spark: SparkSession, root: String, col: String,
-      lo: Option[String], hi: Option[String]): (Seq[String], Int) =
+    * Same enforcement in [[resolveBloom]]. */
+  def resolvePruned(spark: SparkSession, root: String,
+      bounds: Seq[(String, Option[String], Option[String])]): (Seq[String], Int) =
     readManifest(spark, root) match {
       case Some(m) =>
-        val kept = prunedNames(m, col, lo, hi)
+        val kept = prunedDirsOf(m, bounds)
         requireNoDvs(m, kept, "resolvePruned")
         (kept.map(dirAbs(root, _)), m.dirs.size)
       case None => (Seq(root), 1)
     }
 
-  private def prunedNames(m: Manifest, col: String,
-      lo: Option[String], hi: Option[String]): Seq[String] =
-    m.dirs.filter { d =>
-      m.stats.getOrElse(d, Nil).find(_.col == col).forall(_.overlaps(lo, hi))
-    }
-
-  private[ingest] def requireNoDvs(m: Manifest, kept: Seq[String],
+  private def requireNoDvs(m: Manifest, kept: Seq[String],
       who: String): Unit = {
     val dvd = kept.filter(m.dvs.contains)
     if (dvd.nonEmpty) throw new IllegalStateException(
@@ -2906,11 +2897,11 @@ object ManifestCommit {
   /** DV-safe data-skipping read: [[resolvePruned]]'s kept set, read
     * through the manifest so deletion vectors and the recorded schema
     * apply. Returns (frame, kept dirs, total live dirs). */
-  def readPruned(spark: SparkSession, root: String, col: String,
-      lo: Option[String], hi: Option[String]): (DataFrame, Int, Int) =
+  def readPruned(spark: SparkSession, root: String,
+      bounds: Seq[(String, Option[String], Option[String])]): (DataFrame, Int, Int) =
     readManifest(spark, root) match {
       case Some(m) =>
-        val kept = prunedNames(m, col, lo, hi)
+        val kept = prunedDirsOf(m, bounds)
         (readDirsOf(spark, root, m, kept), kept.size, m.dirs.size)
       case None =>
         (spark.read.option("mergeSchema", "true").parquet(root), 1, 1)
@@ -2966,8 +2957,7 @@ object ManifestCommit {
     * the caller estimates. DV'd dirs count their FULL bytes (the files
     * are what a scan reads; conservative for planning). */
   def tableBytesOf(m: Manifest): Option[Long] = {
-    val per = m.dirs.map(d =>
-      m.stats.getOrElse(d, Nil).find(_.col == BytesStat).map(_.min.toLong))
+    val per = m.dirs.map(statLong(m, _, BytesStat))
     if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
   }
 
@@ -3134,15 +3124,27 @@ object ManifestCommit {
     * a query resolved, so a concurrent commit between resolution and
     * execution cannot skew the answer. */
   def tableRowCountOf(m: Manifest): Option[Long] = {
-    def stat(d: String, c: String): Option[Long] =
-      m.stats.getOrElse(d, Nil).find(_.col == c).map(_.min.toLong)
-    val rows = m.dirs.map(stat(_, RowCountStat))
-    val dead = m.dirs.map(d =>
-      if (m.dvs.contains(d)) stat(d, DvDeadStat) else Some(0L))
-    if (rows.forall(_.isDefined) && dead.forall(_.isDefined))
-      Some(rows.flatten.sum - dead.flatten.sum)
-    else None
+    val lives = m.dirs.map(liveRowsOf(m, _))
+    if (lives.forall(_.isDefined)) Some(lives.flatten.sum) else None
   }
+
+  /** A dir's counter stat ([[RowCountStat]], [[DvDeadStat]], a
+    * [[nnStat]]) as a Long: None when absent OR malformed — a counter
+    * that does not parse is no counter, and every reader falls back to
+    * the scan instead of throwing. */
+  def statLong(m: Manifest, d: String, c: String): Option[Long] =
+    statLong(m.stats.getOrElse(d, Nil), c)
+
+  /** [[statLong]] over one dir's stat list. */
+  def statLong(stats: Seq[ColStats], c: String): Option[Long] =
+    stats.find(_.col == c).flatMap(s => scala.util.Try(s.min.toLong).toOption)
+
+  /** A dir's live row count: rows − DV dead rows (a DV-free dir has no
+    * dead rows). None when a needed counter is absent or malformed. */
+  def liveRowsOf(m: Manifest, d: String): Option[Long] = for {
+    r <- statLong(m, d, RowCountStat)
+    dead <- if (m.dvs.contains(d)) statLong(m, d, DvDeadStat) else Some(0L)
+  } yield r - dead
 
   /** Pinned-manifest data skipping over a CONJUNCTION of per-column
     * bounds: live dirs whose stats can satisfy EVERY `(col, lo, hi)`
@@ -3167,13 +3169,6 @@ object ManifestCommit {
         !extraOff(st)
     }
 
-  /** Pinned-manifest bloom point-lookup: [[resolveBloom]]'s kept NAMES
-    * for an already-resolved manifest, without the raw-path contract
-    * (callers read DV-aware via [[readDirsOf]]). */
-  def bloomDirsOf(spark: SparkSession, root: String, m: Manifest,
-      col: String, value: Any): Seq[String] =
-    bloomNames(spark, root, m, col, value)
-
   /** Render a value in the manifest's stats format (the exact
     * [[dirStats]] rendering, so caller-supplied literals compare
     * consistently against recorded min/max). */
@@ -3188,7 +3183,7 @@ object ManifestCommit {
     * float/double); zoned TIMESTAMP only under a UTC JVM zone, because
     * [[renderStatValue]] renders `java.sql.Timestamp` through the JVM
     * default zone and a DST zone's fall-back hour makes the wall text
-    * ambiguous (the injectivePair precedent in Optimize.whereScope). */
+    * ambiguous (the ntz↔ltz rule of `StatsPredicate.normalizeCasts`). */
   private def utcJvmZone: Boolean = {
     val r = java.time.ZoneId.systemDefault().getRules
     r.isFixedOffset && r.getOffset(java.time.Instant.EPOCH).getTotalSeconds == 0
@@ -3288,30 +3283,24 @@ object ManifestCommit {
       value: Any): (Seq[String], Int) =
     readManifest(spark, root) match {
       case Some(m) =>
-        val kept = bloomNames(spark, root, m, col, value)
+        val kept = bloomDirsOf(spark, root, m, col, Seq(value))
         requireNoDvs(m, kept, "resolveBloom")
         (kept.map(dirAbs(root, _)), m.dirs.size)
       case None => (Seq(root), 1)
     }
 
-  /** The probe loop runs on CONCURRENT threads: each dir's check is an
-    * independent open + deserialize of a few-KB side file, so at high
-    * dir counts a sequential loop pays one filesystem round-trip per dir
-    * end to end — the driver-side latency wall, not a data-size cost.
-    * Probe order doesn't matter; the kept set preserves manifest order. */
-  private def bloomNames(spark: SparkSession, root: String, m: Manifest,
-      col: String, value: Any): Seq[String] =
-    bloomNamesAny(spark, root, m, col, Seq(value))
-
-  /** Multi-value disjunctive probe (IN-lists): keep a dir iff its bloom
-    * might contain ANY of `values` — ONE open + deserialize per dir for
-    * the whole list, not one per value (a 16-value IN over 1000 dirs is
-    * 1000 file round-trips, not 16,000). */
-  def bloomDirsOfAny(spark: SparkSession, root: String, m: Manifest,
-      col: String, values: Seq[Any]): Seq[String] =
-    bloomNamesAny(spark, root, m, col, values)
-
-  private def bloomNamesAny(spark: SparkSession, root: String, m: Manifest,
+  /** Pinned-manifest bloom probe: the live dirs of `m` whose `col`
+    * bloom might contain ANY of `values` (a point lookup is one value,
+    * an IN-list several) — ONE open + deserialize per dir for the whole
+    * list, not one per value (a 16-value IN over 1000 dirs is 1000 file
+    * round-trips, not 16,000). No raw-path contract: callers read the
+    * kept names DV-aware via [[readDirsOf]]. The probe loop runs on
+    * CONCURRENT threads: each dir's check is an independent open +
+    * deserialize of a few-KB side file, so at high dir counts a
+    * sequential loop pays one filesystem round-trip per dir end to end —
+    * a planning-latency wall, not a data-size cost. Probe order
+    * doesn't matter; the kept set preserves manifest order. */
+  def bloomDirsOf(spark: SparkSession, root: String, m: Manifest,
       col: String, values: Seq[Any]): Seq[String] = {
     val f = fs(spark, root)
     // under a column mapping, dirs written before the rename carry their
@@ -3344,7 +3333,7 @@ object ManifestCommit {
       value: Any): (DataFrame, Int, Int) =
     readManifest(spark, root) match {
       case Some(m) =>
-        val kept = bloomNames(spark, root, m, col, value)
+        val kept = bloomDirsOf(spark, root, m, col, Seq(value))
         (readDirsOf(spark, root, m, kept), kept.size, m.dirs.size)
       case None =>
         (spark.read.option("mergeSchema", "true").parquet(root), 1, 1)

@@ -663,7 +663,10 @@ object MergeInto {
         ManifestCommit.readDirsOf(spark, root, m, m.dirs).schema)
         .fields.map(_.copy(nullable = true)))
     val names = tSchema.fieldNames.toSet
-    val (ex, cand) = predicateCandidates(spark, root, m, tSchema, cond)
+    val ex = StatsPredicate.extract(
+      org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond))
+      .restrict(names)
+    val cand = StatsPredicate.candidates(spark, root, m, ex, tSchema)
     if (cand.isEmpty) return Some(RowOpResult(m.gen, m.dirs.size, 0, 0L))
     // hive-nested dirs scan through path-injected partition values — no
     // per-file position identity there
@@ -672,9 +675,6 @@ object MergeInto {
         "have no position identity — use copy-on-write")
       return None
     }
-    def statN(d: String, c: String): Option[Long] =
-      m.stats.getOrElse(d, Nil).find(_.col == c)
-        .flatMap(s => scala.util.Try(s.min.toLong).toOption)
     val live = ManifestCommit.readDirsOf(spark, root, m, cand,
       Some(tSchema), keepPos = true)
     val matched = live.filter(coalesce(cond, lit(false))).cache()
@@ -689,13 +689,7 @@ object MergeInto {
       if (!force) {
         // counters arbitrate the auto mode; a counter-less dir can't
         // prove the fraction, so it takes the known-correct CoW path
-        val lives = touched.map { d =>
-          for {
-            r <- statN(d, ManifestCommit.RowCountStat)
-            dead <- if (m.dvs.contains(d))
-              statN(d, ManifestCommit.DvDeadStat) else Some(0L)
-          } yield r - dead
-        }
+        val lives = touched.map(ManifestCommit.liveRowsOf(m, _))
         if (lives.exists(_.isEmpty)) return None
         val liveSum = lives.flatten.sum.max(1L)
         if (totalMatched.toDouble > MorUpdateMaxFraction * liveSum)
@@ -785,60 +779,6 @@ object MergeInto {
         "apply to a different row set than was witnessed (the Spark/Delta " +
         "row-level DML contract rejects nondeterministic conditions)")
 
-  /** Stats + bloom candidate pruning for a predicate DML op — ONE
-    * implementation shared by the copy-on-write [[rowOp]] and the
-    * merge-on-read [[updateMorOnce]], so every DML route prunes
-    * identically to the SQL read path. Conservative throughout:
-    * unextractable conjuncts keep dirs, and the caller always applies
-    * the real predicate to what it reads. */
-  private def predicateCandidates(spark: SparkSession, root: String,
-      m: ManifestCommit.Manifest,
-      tSchema: org.apache.spark.sql.types.StructType,
-      cond: Column): (StatsPredicate.Extracted, Seq[String]) = {
-    val names = tSchema.fieldNames.toSet
-    val ex = StatsPredicate.extract(
-      org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond))
-      .restrict(names)
-    // bucket slice components prune point predicates exactly (same
-    // derivation as the SQL read path — DML rewrites prune identically)
-    val bucketBounds = ManifestCommit.bucketBoundsOf(
-      m.slice, ex.points,
-      c => tSchema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
-    // extraOff = ex.disjoint: strict-aware disproof (open bounds,
-    // or-groups, nullness counters); closed tuples carry bucket bounds
-    var cand = ManifestCommit.prunedDirsOf(m,
-      ex.bounds ++ bucketBounds, ex.orGroups, ex.disjoint)
-    // bloom probes coerce to the COLUMN's type or skip (coerceExact):
-    // the programmatic path carries UNRESOLVED literals, and a
-    // wrong-typed probe reads false from every bloom — pruning dirs
-    // whose rows DO match under SQL's own coercion (the
-    // skipping-as-filter failure mode)
-    def probeType(c: String) =
-      tSchema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
-    ex.points.foreach { case (c, v) =>
-      if (cand.nonEmpty && cand.size <= 1024)
-        probeType(c).flatMap(dt => ManifestCommit.coerceExact(v, dt))
-          .foreach { cv =>
-            cand = cand.filter(
-              ManifestCommit.bloomDirsOf(spark, root, m, c, cv).toSet)
-          }
-    }
-    // disjunctive per-value probe for IN / OR-of-equality predicates
-    // (DELETE WHERE id IN (…) — the common point-DML shape); one bloom
-    // open per dir for the whole list, entry skipped whole if any value
-    // resists exact coercion
-    ex.anyPoints.foreach { case (c, vs) =>
-      if (cand.nonEmpty && cand.size <= 1024)
-        probeType(c).foreach { dt =>
-          val cvs = vs.map(v => ManifestCommit.coerceExact(v, dt))
-          if (cvs.forall(_.isDefined))
-            cand = cand.filter(ManifestCommit.bloomDirsOfAny(
-              spark, root, m, c, cvs.flatten).toSet)
-        }
-    }
-    (ex, cand)
-  }
-
   /** The table's recorded stat-column vocabulary, for metering freshly
     * appended dirs identically to the existing ones. */
   private def tableStatCols(m: ManifestCommit.Manifest,
@@ -862,66 +802,32 @@ object MergeInto {
         ManifestCommit.readDirsOf(spark, root, m, m.dirs).schema)
         .fields.map(_.copy(nullable = true)))
     val names = tSchema.fieldNames.toSet
-    val (ex, cand) = predicateCandidates(spark, root, m, tSchema, cond)
+    val condE = org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond)
+    // StatsPredicate: the evaluator the SQL read path prunes with; `ex`
+    // is kept for the rebase disjointness proof at commit
+    val ex = StatsPredicate.extract(condE).restrict(names)
+    val cand = StatsPredicate.candidates(spark, root, m, ex, tSchema)
     if (cand.isEmpty && insert.isEmpty)
       return RowOpResult(m.gen, m.dirs.size, 0, 0L)
 
     // WHOLE-DIR FAST PATH for delete-shaped ops (round 18, the Delta
     // partition-delete idea): a candidate dir is dropped WITHOUT being
     // read — not even by the witness — when stats prove every row in it
-    // satisfies the predicate:
-    //  (a) extract(NOT cond) is DISJOINT from the dir's stats: no row
-    //      can satisfy the predicate's negation, and
-    //  (b) every column the predicate REFERENCES is proven null-free
-    //      there (`__nn_c == __rows`) — min/max bounds speak only for
-    //      non-null values, and a row where the predicate evaluates
-    //      NULL satisfies neither side and must be KEPT, so without the
-    //      no-nulls witness the drop would destroy it.
-    // A DV'd dir stays eligible: its file-level counters include dead
-    // rows, and "every file row matches" implies every LIVE row does.
-    // `DELETE FROM t WHERE month = X` on a month-sliced table is then
-    // ZERO Spark jobs — a pure metadata commit. UPDATE gains nothing
+    // satisfies the predicate (StatsPredicate.coveredBy: NOT cond is
+    // stats-disjoint and every referenced column is proven null-free
+    // there). `DELETE FROM t WHERE month = X` on a month-sliced table is
+    // then ZERO Spark jobs — a pure metadata commit. UPDATE gains nothing
     // (it must rewrite the rows anyway) and stays on the witness path.
     val fastEligible = op == "delete" || op == "replace_where"
-    val refCols: Set[String] =
-      if (!fastEligible) Set.empty
-      else org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond)
-        .collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-              if a.nameParts.length == 1 => a.name
-          case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-            a.name
-        }.flatMap(n => tSchema.fieldNames.find(_.equalsIgnoreCase(n))).toSet
-    // minusNotNull: sound under fullCover's no-nulls witness below; an
-    // analyzer-shaped condition carries isnotnull(c) conjuncts whose
-    // negated IS NULL branch would otherwise defeat the disproof (r19)
-    lazy val exNot = StatsPredicate.extract(
-      org.apache.spark.sql.catalyst.expressions.Not(
-        StatsPredicate.minusNotNull(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond))))
-      .restrict(names)
-    def statN(d: String, c: String): Option[Long] =
-      m.stats.getOrElse(d, Nil).find(_.col == c)
-        .flatMap(s => scala.util.Try(s.min.toLong).toOption)
-    def fullCover(d: String): Boolean = {
-      val st = m.stats.getOrElse(d, Nil)
-      val rows = statN(d, ManifestCommit.RowCountStat)
-      refCols.nonEmpty && rows.isDefined && exNot.disjoint(st) &&
-        refCols.forall(c =>
-          statN(d, ManifestCommit.nnStat(c)).contains(rows.get))
-    }
     val (covered, candRest) =
-      if (fastEligible) cand.partition(fullCover) else (Nil, cand)
-    val coveredMatched: Long = covered.map(d =>
-      statN(d, ManifestCommit.RowCountStat).getOrElse(0L) -
-        (if (m.dvs.contains(d))
-           statN(d, ManifestCommit.DvDeadStat).getOrElse(0L)
-         else 0L)).sum
+      if (fastEligible) cand.partition(StatsPredicate.coveredBy(m, condE, names))
+      else (Nil, cand)
+    val coveredMatched: Long = covered.map(d => ManifestCommit.liveRowsOf(m, d)
+      .orElse(ManifestCommit.statLong(m, d, ManifestCommit.RowCountStat))
+      .getOrElse(0L)).sum
 
-    // exact matched-dir witness on the plain candidates, one job per
-    // layout group (hive-nested converted dirs scan apart from flat
-    // ones — mixing the two in one read raises "conflicting directory
-    // structures")
+    // exact matched-dir witness on the plain candidates, read through
+    // the manifest (column mapping and hive-nested groups handled there)
     val (dvCand, plainCand) = candRest.partition(m.dvs.contains)
     // the witness identifies dirs by the data-dir BASENAME from the file
     // path ([[ManifestCommit.dirIdCol]], nesting-proof) — map back to
@@ -929,38 +835,12 @@ object MergeInto {
     // absolute; UUID basenames are unique across roots)
     val byBase = plainCand.map(d =>
       new org.apache.hadoop.fs.Path(ManifestCommit.dirAbs(root, d)).getName -> d).toMap
-    // under a column mapping the files carry PHYSICAL names: the witness
-    // reads them and aliases back to logical, so `cond` (logical names)
-    // resolves — a logical-schema read would null-fill a renamed column
-    // and the DML would silently match nothing
-    val eff: Map[String, String] = tSchema.fieldNames.toSeq
-      .flatMap(n => m.colmap.get(n).filter(_ != n).map(n -> _)).toMap
-    val physT =
-      if (eff.isEmpty) tSchema
-      else org.apache.spark.sql.types.StructType(tSchema.fields.map(f =>
-        f.copy(name = eff.getOrElse(f.name, f.name))))
-    def logicalize(df: DataFrame): DataFrame =
-      if (eff.isEmpty) df
-      else df.select((tSchema.fields.toIndexedSeq.map(f =>
-        col(eff.getOrElse(f.name, f.name)).as(f.name)) :+ col("__dir")): _*)
-    val matchedPlain: Seq[String] = plainCand
-      .groupBy(d => ManifestCommit.partSuffixOf(m, d)
-        .map(_.split('/').map(_.takeWhile(_ != '=')).mkString(",")))
-      .toSeq.flatMap {
-        case (None, g) =>
-          logicalize(spark.read.schema(physT)
-            .parquet(g.map(ManifestCommit.dirAbs(root, _)): _*)
-            .withColumn("__dir", ManifestCommit.dirIdCol))
-            .filter(cond)
-            .select("__dir").distinct().collect().map(_.getString(0)).toSeq
-        case (Some(_), g) =>
-          logicalize(ManifestCommit.readNestedPaths(spark,
-            g.map(d => ManifestCommit.dirAbs(root, d) ->
-              ManifestCommit.partSuffixOf(m, d).get),
-            Some(physT), keepDirId = true))
-            .filter(cond)
-            .select("__dir").distinct().collect().map(_.getString(0)).toSeq
-      }.flatMap(byBase.get)
+    val matchedPlain: Seq[String] =
+      if (plainCand.isEmpty) Nil
+      else ManifestCommit.readDirsOf(spark, root, m, plainCand, Some(tSchema),
+          keepDir = true)
+        .filter(cond).select("__dir").distinct()
+        .collect().map(_.getString(0)).toSeq.flatMap(byBase.get)
     val witnessed = (matchedPlain ++ dvCand).sorted
     val affected = (witnessed ++ covered).sorted
     if (affected.isEmpty && insert.isEmpty)
@@ -1019,14 +899,9 @@ object MergeInto {
           try {
             // read the staged bytes back under LOGICAL names so `cond`
             // resolves (files carry physical names under a column mapping)
-            val stagedAbs = staged.map(ManifestCommit.dirAbs(root, _))
-            val df0 = m.physicalSchema match {
-              case Some(s) => spark.read.schema(s).parquet(stagedAbs: _*)
-              case None => spark.read.parquet(stagedAbs: _*)
-            }
-            val dfL = m.colmap.foldLeft(df0) { case (d, (log, phys)) =>
-              if (log != phys) d.withColumnRenamed(phys, log) else d }
-            val bad = dfL.filter(!coalesce(cond, lit(false))).limit(1).count()
+            val bad = ManifestCommit.readDirsOf(spark, root, m, staged,
+                Some(tSchema))
+              .filter(!coalesce(cond, lit(false))).limit(1).count()
             if (bad > 0) {
               ManifestCommit.reclaim(spark, root, staged)
               throw new IllegalArgumentException(

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
   * of two dimensions (`functions.ZOrderKey`, codegen'd) makes each
   * z-range dir a small RECTANGLE in (a, b) space, so a conjunctive
   * predicate box overlaps only the dirs its rectangle touches —
-  * `resolvePrunedMulti` skips the rest from footer-only manifest stats.
+  * `ManifestCommit.resolvePruned` skips the rest from footer-only manifest stats.
   *
   * Scale shape: one pass computes the key, `repartitionByRange` on it
   * (one shuffle — sampled range boundaries, the standard distributed
@@ -335,83 +335,17 @@ object Optimize {
         org.apache.spark.sql.catalyst.expressions.Literal
           .create(e.eval(null), e.dataType)
     }
-    // UNWRAP analyzer-coerced casts on the COLUMN side before
-    // extraction: comparing a TIMESTAMP_NTZ column to an ltz literal —
-    // the common DSL shape `col(ts) >= lit(s).cast("timestamp")` —
-    // resolves as `cast(col AS timestamp) >= lit`, and the extractor
-    // rightly refuses cast-wrapped attributes (recorded stats describe
-    // the UNCAST column), which silently widened the scope to the whole
-    // table (caught by ZorderScopeKernel, source at commit 842ff63:
-    // "scoped" rewrote all 80 dirs). When the cast pair is an INJECTIVE
-    // order-embedding and the literal ROUND-TRIPS exactly through the
-    // column's native type, the comparison is equivalent with the bare
-    // attribute against the back-cast literal; anything unprovable stays
-    // wrapped (widens, never narrows wrongly).
-    val normalized = {
-      import org.apache.spark.sql.catalyst.expressions.{
-        AttributeReference, BinaryComparison, Cast, EvalMode, Literal}
-      import org.apache.spark.sql.types._
-      // INJECTIVE order-embeddings only (round 18 — monotone is NOT
-      // enough): cast-to-date FLOORS a timestamp, so it is monotone yet
-      // not injective, and the rewrite `cast(ts AS date) ⊕ DATE'D'` →
-      // `ts ⊕ midnight(D)` is wrong for ⊕ ∈ {=, <=} — a dir holding only
-      // afternoon rows of day D has per-dir min past midnight and would
-      // be WRONGLY EXCLUDED from the maintenance scope (the round-17
-      // unwrap overcorrected the silent-widening defect into a
-      // silent-narrowing one). The literal round-trip check below cannot
-      // catch this: DATE'D' round-trips exactly through midnight even
-      // though the COLUMN-side cast collapses the whole day onto it.
-      // Admitted pairs: date→timestamp[_ntz] (one instant per day),
-      // strict integral widening, float→double, and ntz↔ltz ONLY under a
-      // fixed-offset session zone (a DST zone repeats the fall-back wall
-      // hour — not injective). Timestamp→date stays WRAPPED, so those
-      // conjuncts contribute nothing and the scope widens, never narrows.
-      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-      def injectivePair(from: DataType, to: DataType): Boolean = {
-        val intOrder = Seq[DataType](ByteType, ShortType, IntegerType, LongType)
-        lazy val fixedOffsetZone = scala.util.Try(
-          java.time.ZoneId.of(tz.get).getRules.isFixedOffset).getOrElse(false)
-        (from, to) match {
-          case (DateType, TimestampType) | (DateType, TimestampNTZType) => true
-          case (TimestampNTZType, TimestampType) |
-               (TimestampType, TimestampNTZType) => fixedOffsetZone
-          case (FloatType, DoubleType) => true
-          case _ =>
-            intOrder.indexOf(from) >= 0 && intOrder.indexOf(to) >= 0 &&
-              intOrder.indexOf(from) < intOrder.indexOf(to)
-        }
-      }
-      def backLit(c: Cast, l: Literal): Option[Literal] = {
-        val t1 = c.child.dataType
-        if (!injectivePair(t1, c.dataType) || l.value == null) return None
-        val back = scala.util.Try(
-          Cast(l, t1, tz, EvalMode.TRY).eval(null)).getOrElse(null)
-        if (back == null) return None
-        val fwd = scala.util.Try(Cast(Literal.create(back, t1), l.dataType,
-          tz, EvalMode.TRY).eval(null)).getOrElse(null)
-        if (fwd != l.value) return None // not round-trip exact
-        Some(Literal.create(back, t1))
-      }
-      folded.transformUp {
-        case bc: BinaryComparison => (bc.left, bc.right) match {
-          case (c: Cast, l: Literal)
-              if c.child.isInstanceOf[AttributeReference] =>
-            backLit(c, l).map(b =>
-              bc.withNewChildren(Seq(c.child, b))).getOrElse(bc)
-          case (l: Literal, c: Cast)
-              if c.child.isInstanceOf[AttributeReference] =>
-            backLit(c, l).map(b =>
-              bc.withNewChildren(Seq(b, c.child))).getOrElse(bc)
-          case _ => bc
-        }
-      }
-    }
-    // fallback: the RAW unresolved form keeps the attribute bare for
+    // analyzer-coerced casts on the COLUMN side (`cast(ts AS timestamp)
+    // >= lit` for an ntz column — the common DSL shape) are unwrapped by
+    // the extractor itself (StatsPredicate.normalizeCasts: injective
+    // order-embeddings with a round-trip-exact literal only; a FLOORING
+    // cast-to-date stays wrapped, so the scope widens, never narrows).
+    // Fallback: the RAW unresolved form keeps the attribute bare for
     // shapes the normalization could not prove; its literal rendering
     // matches the stats under the session's pinned UTC. Still
     // conservative: unparseable conjuncts widen, never narrow.
     val ex = {
-      val e0 = StatsPredicate.extract(normalized)
+      val e0 = StatsPredicate.extract(folded)
       val e1 =
         if (e0.bounds.nonEmpty || e0.points.nonEmpty || e0.orGroups.nonEmpty)
           e0
@@ -419,15 +353,10 @@ object Optimize {
           org.apache.spark.sql.graftbridge.ColumnBridge.expression(cond))
       if (names.isEmpty) e1 else e1.restrict(names)
     }
-    // extraOff = ex.disjoint (round 18): strict bounds, or-group and
-    // nullness-counter disproofs narrow the maintenance scope the same
-    // way they narrow reads — still widening-only for unparseable shapes
-    ManifestCommit.prunedDirsOf(m,
-      ex.bounds ++
-        ManifestCommit.bucketBoundsOf(m.slice, ex.points,
-          c => m.tableSchema.flatMap(_.fields
-            .find(_.name.equalsIgnoreCase(c)).map(_.dataType))),
-      ex.orGroups, ex.disjoint).toSet
+    // stats only (no bloom opens): the scope narrows the same way reads
+    // do through min/max, bucket, or-group and nullness disproofs
+    StatsPredicate.statsCandidates(m, ex,
+      m.tableSchema.getOrElse(new org.apache.spark.sql.types.StructType())).toSet
   }
 
   /** PREDICATE-SCOPED Z-ORDER (the Delta `OPTIMIZE t WHERE p ZORDER BY
@@ -544,8 +473,8 @@ object Optimize {
       // (old manifests) pay the content-summary probe
       val candidates = m.dirs.filter(inScope).filterNot(m.dvs.contains)
       val viaStat: Map[String, Boolean] = candidates.flatMap(d =>
-        m.stats.getOrElse(d, Nil).find(_.col == ManifestCommit.BytesStat)
-          .map(cs => d -> (cs.min.toLong < smallBytes))).toMap
+        ManifestCommit.statLong(m, d, ManifestCommit.BytesStat)
+          .map(b => d -> (b < smallBytes))).toMap
       val probed = candidates.filterNot(viaStat.contains)
       def probe(d: String) =
         d -> (f.getContentSummary(new Path(
@@ -732,44 +661,6 @@ object Optimize {
         op = "compact_months")
     } finally { deltaDfOpt.foreach(_.unpersist()); () }
   }
-
-  /** Conjunctive multi-column data-skipping resolve: keep dirs whose
-    * stats can overlap EVERY (col, lo, hi) bound. Dirs missing stats for
-    * a column are kept for it (skipping is an optimization, never a
-    * filter — `ManifestCommit.resolvePruned` contract, per column).
-    * Returns (kept absolute paths, total live dirs). Raw-path contract
-    * enforced as in `resolvePruned` — DV-carrying kept dirs throw; use
-    * [[readPrunedMulti]]. */
-  def resolvePrunedMulti(spark: SparkSession, root: String,
-      bounds: Seq[(String, Option[String], Option[String])]): (Seq[String], Int) =
-    ManifestCommit.readManifest(spark, root) match {
-      case Some(m) =>
-        val kept = prunedMultiNames(m, bounds)
-        ManifestCommit.requireNoDvs(m, kept, "resolvePrunedMulti")
-        (kept.map(ManifestCommit.dirAbs(root, _)), m.dirs.size)
-      case None => (Seq(root), 1)
-    }
-
-  private def prunedMultiNames(m: ManifestCommit.Manifest,
-      bounds: Seq[(String, Option[String], Option[String])]): Seq[String] =
-    m.dirs.filter { d =>
-      bounds.forall { case (c, lo, hi) =>
-        m.stats.getOrElse(d, Nil).find(_.col == c).forall(_.overlaps(lo, hi))
-      }
-    }
-
-  /** DV-safe multi-column data-skipping read: the kept set read through
-    * the manifest (deletion vectors + recorded schema applied). Returns
-    * (frame, kept dirs, total live dirs). */
-  def readPrunedMulti(spark: SparkSession, root: String,
-      bounds: Seq[(String, Option[String], Option[String])]): (DataFrame, Int, Int) =
-    ManifestCommit.readManifest(spark, root) match {
-      case Some(m) =>
-        val kept = prunedMultiNames(m, bounds)
-        (ManifestCommit.readDirsOf(spark, root, m, kept), kept.size, m.dirs.size)
-      case None =>
-        (spark.read.option("mergeSchema", "true").parquet(root), 1, 1)
-    }
 
   /** `ANALYZE TABLE graft.t COMPUTE STATISTICS [FOR COLUMNS (a, b)]` —
     * RETROFIT per-dir stats onto EXISTING dirs without rewriting a

@@ -1,23 +1,110 @@
 package graft.ingest
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.NumericType
+import org.apache.spark.sql.types.{NumericType, StructType}
 
-import graft.ingest.ManifestCommit.ColStats
+import graft.ingest.ManifestCommit.{ColStats, Manifest}
 
-/** Maps a Catalyst predicate onto the manifest's per-dir stats language:
-  * extracts single-column range BOUNDS (for min/max skipping) and
-  * equality POINTS (for bloom probes) from the predicate's conjuncts.
-  * Shared by the SQL data-skipping rule and the predicate DML operators
-  * (`MergeInto.deleteRows`/`updateRows`) so both prune identically.
+/** The one data-skipping evaluator: maps a Catalyst predicate onto the
+  * manifest's per-dir stats language and turns it into candidate dirs.
+  * [[extract]] pulls single-column range BOUNDS (min/max skipping),
+  * equality POINTS (bloom probes and bucket pinning), OR groups and
+  * nullness conjuncts out of the predicate; [[statsCandidates]] and
+  * [[candidates]] evaluate that against a pinned manifest, and
+  * [[coveredBy]] proves whole dirs fully matched. Its four callers prune
+  * identically because they share every step after extraction:
+  *  - the SQL data-skipping rule (`GraftDataSkipping.keptDirs` and its
+  *    metadata fold);
+  *  - predicate DML (`MergeInto.rowOp`: DELETE / UPDATE / REPLACE
+  *    WHERE, and its whole-dir fast path);
+  *  - merge-on-read UPDATE (`MergeInto.updateMorOnce`);
+  *  - OPTIMIZE / ZORDER WHERE scope (`Optimize.whereScope`, stats only).
+  * Extraction stays at each caller because the inputs differ (a
+  * resolved SQL condition, a bridged DSL Column, OPTIMIZE's resolved
+  * and constant-folded form).
   *
   * Conservative by construction: conjuncts that don't fit the
   * single-column-vs-literal shape contribute nothing (candidates stay),
   * and callers ALWAYS apply the real predicate to what they read —
   * extraction can only skip, never filter. */
 object StatsPredicate {
+
+  /** Probing bloom side files is one filesystem round-trip per live dir;
+    * past this many candidate dirs the probe costs more driver latency
+    * than the scan it might save, and min/max pruning has had its say. */
+  val BloomProbeMaxDirs = 1024
+
+  private def typeOf(schema: StructType)(c: String) =
+    schema.fields.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
+
+  /** Dirs of `m` whose recorded stats can hold a row satisfying `ex`:
+    * the closed bounds plus the bounds point predicates pin on bucket
+    * slice components, the OR groups, and `ex.disjoint` (strict bounds,
+    * or-group and nullness-counter disproofs). `schema` types the
+    * columns for bucket pinning. No I/O beyond the manifest. */
+  def statsCandidates(m: Manifest, ex: Extracted,
+      schema: StructType): Seq[String] =
+    ManifestCommit.prunedDirsOf(m,
+      ex.bounds ++ ManifestCommit.bucketBoundsOf(m.slice, ex.points,
+        typeOf(schema)),
+      ex.orGroups, ex.disjoint)
+
+  /** [[statsCandidates]], then bloom probes while 1 to
+    * [[BloomProbeMaxDirs]] dirs remain: one per equality point, then one
+    * DISJUNCTIVE probe per IN-list (a dir is kept iff its bloom might
+    * contain ANY listed value — the envelope spans the whole list and
+    * prunes nothing on modulo/hash layouts). Probes are TYPE-SENSITIVE:
+    * every value must coerce LOSSLESSLY to the column's own type
+    * (`ManifestCommit.coerceExact`) or the probe is skipped — the DSL
+    * path carries caller-typed literals, and a String "1" against a long
+    * column's bloom reads false and would wrongly prune the owning dir. */
+  def candidates(spark: SparkSession, root: String, m: Manifest,
+      ex: Extracted, schema: StructType): Seq[String] = {
+    var kept = statsCandidates(m, ex, schema)
+    (ex.points.map { case (c, v) => (c, Seq(v)) } ++ ex.anyPoints).foreach {
+      case (c, vs) =>
+        if (kept.nonEmpty && kept.size <= BloomProbeMaxDirs)
+          typeOf(schema)(c).foreach { dt =>
+            val cvs = vs.flatMap(ManifestCommit.coerceExact(_, dt))
+            if (cvs.size == vs.size)
+              kept = kept.filter(
+                ManifestCommit.bloomDirsOf(spark, root, m, c, cvs).toSet)
+          }
+    }
+    kept
+  }
+
+  /** The whole-dir COVER proof: a dir is covered when stats prove every
+    * row in it satisfies `cond` —
+    *  (a) it records a row count ([[ManifestCommit.RowCountStat]]);
+    *  (b) every column `cond` references (resolved or single-part
+    *      unresolved attributes, matched case-insensitively against
+    *      `names`) is proven null-free there (`__nn_c == __rows`) —
+    *      min/max speak only for non-null values, and a row where `cond`
+    *      evaluates NULL matches nothing;
+    *  (c) `extract(NOT cond)` is DISJOINT from its stats: no row can
+    *      satisfy the negation ([[minusNotNull]] is sound under (b)).
+    * File-level counters include DV-dead rows, and "every file row
+    * matches" implies every LIVE row does. Shared by the SQL metadata
+    * fold and predicate DML's whole-dir DELETE / REPLACE WHERE. */
+  def coveredBy(m: Manifest, cond: Expression,
+      names: Set[String]): String => Boolean = {
+    val refCols = cond.collect {
+      case a: AttributeReference => a.name
+      case u: UnresolvedAttribute if u.nameParts.length == 1 => u.name
+    }.flatMap(n => names.find(_.equalsIgnoreCase(n))).toSet
+    lazy val exNot = extract(Not(minusNotNull(cond))).restrict(names)
+    d => {
+      val rows = ManifestCommit.statLong(m, d, ManifestCommit.RowCountStat)
+      refCols.nonEmpty && rows.isDefined &&
+        exNot.disjoint(m.stats.getOrElse(d, Nil)) &&
+        refCols.forall(c =>
+          ManifestCommit.statLong(m, d, ManifestCommit.nnStat(c)) == rows)
+    }
+  }
 
   type Bound = (String, Option[String], Option[String])
 
@@ -84,9 +171,7 @@ object StatsPredicate {
     /** Nullness disproof against a dir's full stat list — true when the
       * counters PROVE no row can satisfy the nullness conjuncts. */
     def nullsDisprove(stats: Seq[ColStats]): Boolean = {
-      def statN(c: String): Option[Long] =
-        stats.find(_.col == c)
-          .flatMap(s => scala.util.Try(s.min.toLong).toOption)
+      def statN(c: String): Option[Long] = ManifestCommit.statLong(stats, c)
       lazy val rows = statN(ManifestCommit.RowCountStat)
       isNull.exists(c => (for {
         r <- rows; nn <- statN(ManifestCommit.nnStat(c))
@@ -289,9 +374,11 @@ object StatsPredicate {
     *  - a cast over the COLUMN side unwraps by back-casting the
     *    literal, ONLY for injective order-embeddings (integral
     *    widening, float→double, date→timestamp[_ntz], ntz↔ltz under a
-    *    fixed-offset zone — the Optimize.whereScope rules; cast-to-date
-    *    FLOORS and must stay wrapped) and only when the literal
-    *    round-trips exactly. */
+    *    fixed-offset zone; cast-to-date FLOORS a timestamp, monotone
+    *    yet not injective, and must stay wrapped) and only when the
+    *    literal round-trips exactly. OPTIMIZE WHERE's resolved scope
+    *    predicate reaches these same rules through [[extract]] (an
+    *    analyzed Cast carries the session zone as `timeZoneId`). */
   private def injectiveCastPair(from: org.apache.spark.sql.types.DataType,
       to: org.apache.spark.sql.types.DataType, tz: Option[String]): Boolean = {
     import org.apache.spark.sql.types._

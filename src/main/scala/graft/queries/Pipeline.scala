@@ -911,9 +911,9 @@ object Pipeline {
       Seq("o_orderdate", "o_orderkey"))
     ManifestCommit.commitReplace(s, root, dirsWithStats.map(_._1),
       stats = dirsWithStats.toMap)
-    val (paths, total) = ManifestCommit.resolvePruned(s, root, "o_orderdate",
+    val (paths, total) = ManifestCommit.resolvePruned(s, root, Seq(("o_orderdate",
       Some(ManifestCommit.temporalBound("1996-01-01")),
-      Some(ManifestCommit.temporalBound("1997-12-31")))
+      Some(ManifestCommit.temporalBound("1997-12-31")))))
     s.read.parquet(paths: _*)
       .filter(col("o_orderdate").between("1996-01-01", "1997-12-31"))
       .agg(count(lit(1)).as("n_rows"), sum(col("o_orderkey")).as("key_sum"))
@@ -1462,7 +1462,7 @@ object Pipeline {
       pruneDisplaced = false, stats = dirs.toMap)
     Optimize.zorderCompact(s, root, "o_orderkey", "o_custkey", targetDirs = 8)
     val kHi = maxk / 4; val cHi = maxc / 4
-    val (kept, total) = Optimize.resolvePrunedMulti(s, root, Seq(
+    val (kept, total) = ManifestCommit.resolvePruned(s, root, Seq(
       ("o_orderkey", None, Some(kHi.toString)),
       ("o_custkey", None, Some(cHi.toString))))
     s.read.parquet(kept: _*)
@@ -1742,7 +1742,7 @@ object Pipeline {
       ("o_orderkey", None, Some((maxk / 4).toString)),
       ("o_custkey", None, Some((maxc / 4).toString)),
       ("o_days", None, Some(dHi.toString)))
-    val (kept, total) = Optimize.resolvePrunedMulti(s, root, bounds)
+    val (kept, total) = ManifestCommit.resolvePruned(s, root, bounds)
     s.read.parquet(kept: _*)
       .filter(col("o_orderkey") <= maxk / 4 && col("o_custkey") <= maxc / 4 &&
         col("o_days") <= dHi)
@@ -1819,9 +1819,9 @@ object Pipeline {
     val removed = ManifestCommit.history(s, root)
       .filter(col("gen") === m.gen).collect()(0).getAs[Long]("dirs_removed")
     // month-bounded read resolves to exactly one dir from manifest stats
-    val (kept2, _) = ManifestCommit.resolvePruned(s, root, "o_orderdate",
+    val (kept2, _) = ManifestCommit.resolvePruned(s, root, Seq(("o_orderdate",
       Some(ManifestCommit.temporalBound(s"${months(1)}-01")),
-      Some(s"${months(1)}-31T23:59:59.999"))
+      Some(s"${months(1)}-31T23:59:59.999"))))
     ManifestCommit.read(s, root)
       .groupBy(moCol.as("mo"))
       .agg(count(lit(1)).as("n_rows"),

@@ -693,7 +693,7 @@ object SqlGates {
         val zeroCopy = localDataDirs() == 0
         // inherited stats keep skipping live on the clone
         val (_, kept, total) = ManifestCommit.readPruned(s, cloneRoot,
-          "o_orderkey", None, Some(cuts(0).toString))
+          Seq(("o_orderkey", None, Some(cuts(0).toString))))
         val pruneWorks = kept < total
         // diverge the fork: INSERT shifted rows, row-level DELETE
         orders.filter(col("o_orderkey") <= 100)
@@ -1655,7 +1655,7 @@ object SqlGates {
     // the whole head — the probe needs the one-level-deeper split
     graft.ingest.Optimize.zorderCompactN(s, root, Seq("k", "y"),
       targetDirs = 32, rankBuckets = 256)
-    val (probe, _, _) = graft.ingest.Optimize.readPrunedMulti(s, root,
+    val (probe, _, _) = ManifestCommit.readPruned(s, root,
       Seq(("k", Some("4"), Some("4"))))
     val scanned = probe.count()
     val agg = probe.filter(col("k") === 4L)

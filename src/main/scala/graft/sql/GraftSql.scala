@@ -409,13 +409,13 @@ case class GraftResolveRelations(spark: SparkSession)
       case "files" =>
         val m = ManifestCommit.readManifest(spark, root).getOrElse(
           throw new IllegalArgumentException(s"graft.$base: no manifest at $root"))
-        def stat(d: String, c: String): Option[Long] =
-          m.stats.getOrElse(d, Nil).find(_.col == c).map(_.min.toLong)
+        def stat(d: String, c: String) =
+          ManifestCommit.statLong(m, d, c).map(Long.box).orNull
         val rows = m.dirs.map { d =>
           org.apache.spark.sql.Row(
             d,
-            stat(d, ManifestCommit.RowCountStat).map(Long.box).orNull,
-            stat(d, ManifestCommit.BytesStat).map(Long.box).orNull,
+            stat(d, ManifestCommit.RowCountStat),
+            stat(d, ManifestCommit.BytesStat),
             m.dvs.get(d).orNull,
             m.stats.getOrElse(d, Nil)
               .filterNot(s => ManifestCommit.isPseudoStat(s.col))
@@ -1326,11 +1326,6 @@ case class GraftMergeDelete(root: String, source: LogicalPlan,
 case class GraftDataSkipping(spark: SparkSession)
     extends Rule[LogicalPlan] {
 
-  /** Probing bloom side files is one filesystem round-trip per kept dir;
-    * past this many dirs the probe costs more driver latency than the
-    * scan it might save, and min/max pruning has already had its say. */
-  private val BloomProbeMaxDirs = 1024
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     // extractor, not guard-plus-body: the metadata fold walks every
     // dir's stat list and must run ONCE per matching aggregate
@@ -1392,57 +1387,15 @@ case class GraftDataSkipping(spark: SparkSession)
     * min/max stats prune range/equality conjuncts; bloom side files
     * additionally prune point lookups. Conservative by construction —
     * unparseable conjuncts contribute nothing, stat-less dirs are kept,
-    * and the full filter still runs on what's read. */
+    * and the full filter still runs on what's read. The evaluator is
+    * shared with predicate DML and OPTIMIZE WHERE (StatsPredicate), so
+    * all of them prune identically; extraction is restricted to the
+    * leaf's own column names. */
   private def keptDirs(cond: Expression, g: GraftRelation): Seq[String] = {
-    // extraction shared with the predicate DML operators
-    // (ingest.StatsPredicate) so SQL reads and DML rewrites prune
-    // identically; restricted to the leaf's own column names
-    val names = g.output.map(_.name).toSet
-    val ex = graft.ingest.StatsPredicate.extract(cond).restrict(names)
-    // bucket slice components give point predicates an EXACT per-dir
-    // bound: `domain = v` pins `pmod(hash(domain), n)` to one value,
-    // recorded per dir as a component stat (Iceberg partition-tuple
-    // pruning through the ordinary stats channel)
-    val bucketBounds = ManifestCommit.bucketBoundsOf(
-      g.manifest.slice, ex.points,
-      c => g.output.find(_.name.equalsIgnoreCase(c)).map(_.dataType))
-    // extraOff = ex.disjoint: the STRICT-aware disproof (open bounds,
-    // or-groups, nullness counters) — the closed tuple channel still
-    // carries the bucket-component bounds
-    var kept = ManifestCommit.prunedDirsOf(g.manifest,
-      ex.bounds ++ bucketBounds, ex.orGroups, ex.disjoint)
-    // bloom probes are TYPE-SENSITIVE: the value must coerce LOSSLESSLY
-    // to the column's own type (ManifestCommit.coerceExact) or the
-    // probe is skipped — a String "1" against a long column's bloom
-    // reads false and would wrongly prune the owning dir
-    def probeType(c: String) =
-      g.output.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
-    ex.points.foreach { case (c, v) =>
-      if (kept.nonEmpty && kept.size <= BloomProbeMaxDirs)
-        probeType(c).flatMap(dt => ManifestCommit.coerceExact(v, dt))
-          .foreach { cv =>
-            val hit = ManifestCommit
-              .bloomDirsOf(spark, g.root, g.manifest, c, cv).toSet
-            kept = kept.filter(hit)
-          }
-    }
-    // IN-lists / OR-of-equalities probe DISJUNCTIVELY: keep a dir iff
-    // its bloom might contain ANY listed value (the envelope spans the
-    // whole list and prunes nothing on modulo/hash layouts). One bloom
-    // open per dir for the whole list; any un-coercible value skips the
-    // entire entry (it might still match under SQL's own coercion)
-    ex.anyPoints.foreach { case (c, vs) =>
-      if (kept.nonEmpty && kept.size <= BloomProbeMaxDirs)
-        probeType(c).foreach { dt =>
-          val cvs = vs.map(v => ManifestCommit.coerceExact(v, dt))
-          if (cvs.forall(_.isDefined)) {
-            val hit = ManifestCommit.bloomDirsOfAny(
-              spark, g.root, g.manifest, c, cvs.flatten).toSet
-            kept = kept.filter(hit)
-          }
-        }
-    }
-    kept
+    val ex = graft.ingest.StatsPredicate.extract(cond)
+      .restrict(g.output.map(_.name).toSet)
+    graft.ingest.StatsPredicate.candidates(spark, g.root, g.manifest, ex,
+      g.schema)
   }
 
   private object MetadataServed {
@@ -1504,10 +1457,6 @@ case class GraftDataSkipping(spark: SparkSession)
       }
     }
   }
-
-  private def statLong(m: Manifest, d: String, c: String): Option[Long] =
-    m.stats.getOrElse(d, Nil).find(_.col == c)
-      .flatMap(s => scala.util.Try(s.min.toLong).toOption)
 
   private def aggSpecOf(e: NamedExpression): Option[AggSpec] = e match {
     case Alias(ae: AggregateExpression, _)
@@ -1629,31 +1578,17 @@ case class GraftDataSkipping(spark: SparkSession)
     val m = g.manifest
     def statOf(d: String, c: String) =
       m.stats.getOrElse(d, Nil).find(_.col.equalsIgnoreCase(c))
-    def statN(d: String, c: String): Option[Long] = statLong(m, d, c)
+    def statN(d: String, c: String): Option[Long] = ManifestCommit.statLong(m, d, c)
     // dirs surviving ordinary pruning under the predicate, and of those
     // the subset PROVEN fully covered (every live row matches)
     val (candidate, covered): (Seq[String], Set[String]) = cond match {
       case None => (m.dirs, m.dirs.toSet)
       case Some(c) =>
         val kept = keptDirs(c, g)
-        val names = g.output.map(_.name).toSet
-        val refCols = c.references.map(_.name).toSet
-        lazy val exNot = graft.ingest.StatsPredicate.extract(
-          Not(graft.ingest.StatsPredicate.minusNotNull(c))).restrict(names)
-        def fullCover(d: String): Boolean = {
-          val st = m.stats.getOrElse(d, Nil)
-          val rows = statN(d, ManifestCommit.RowCountStat)
-          refCols.nonEmpty && rows.isDefined && exNot.disjoint(st) &&
-            refCols.forall(cn =>
-              statN(d, ManifestCommit.nnStat(cn)).contains(rows.get))
-        }
-        (kept, kept.filter(fullCover).toSet)
+        (kept, kept.filter(graft.ingest.StatsPredicate.coveredBy(m, c,
+          g.output.map(_.name).toSet)).toSet)
     }
-    def live(d: String): Option[Long] = for {
-      r <- statN(d, ManifestCommit.RowCountStat)
-      dead <- if (m.dvs.contains(d)) statN(d, ManifestCommit.DvDeadStat)
-              else Some(0L)
-    } yield r - dead
+    def live(d: String): Option[Long] = ManifestCommit.liveRowsOf(m, d)
     def bounded(d: String, a: AttributeReference): Boolean = !m.dvs.contains(d) &&
       (statOf(d, a.name).isDefined || ManifestCommit.analyzedColsOf(m, d)
         .exists(_.equalsIgnoreCase(a.name)))

@@ -410,9 +410,8 @@ class GraftTableSource(spark: SparkSession, params: Map[String, String],
             def ident(m: ManifestCommit.Manifest)(d: String) = (d, m.dvs.get(d))
             val prevSet = prev.dirs.map(ident(prev)).toSet
             cur.dirs.filterNot(d => prevSet(ident(cur)(d))).map { d =>
-              cur.stats.getOrElse(d, Nil)
-                .find(_.col == ManifestCommit.RowCountStat)
-                .map(_.min.toLong).getOrElse(Long.MaxValue / 4) // unknown
+              ManifestCommit.statLong(cur, d, ManifestCommit.RowCountStat)
+                .getOrElse(Long.MaxValue / 4) // unknown
             }.foldLeft(0L)((a, b) => math.min(Long.MaxValue / 2, a + b))
           }
         }

@@ -53,7 +53,7 @@ class AnalyzeStatsSpec extends SparkSpec {
     assert(ManifestCommit.tableBytesOf(m).isDefined)
     // skipping armed: an id-range probe keeps exactly one dir
     val (pruned, kept, total) = ManifestCommit.readPruned(spark, root,
-      "id", Some("120"), Some("150"))
+      Seq(("id", Some("120"), Some("150"))))
     assert(total === 3 && kept === 1, s"kept $kept of $total")
     assert(pruned.filter(col("id").between(120, 150)).count() === 31L)
     // the files themselves are untouched
@@ -106,7 +106,7 @@ class AnalyzeStatsSpec extends SparkSpec {
       }
       // v-range probe prunes now
       val (_, kept, total) = ManifestCommit.readPruned(spark, root,
-        "v", Some("250"), Some("300"))
+        Seq(("v", Some("250"), Some("300"))))
       assert(total === 3 && kept === 1, s"kept $kept of $total")
       val e = intercept[Exception](spark.sql(
         s"ANALYZE TABLE graft.`$name` COMPUTE STATISTICS FOR COLUMNS nosuch"))
@@ -165,7 +165,7 @@ class AnalyzeStatsSpec extends SparkSpec {
     assert(ManifestCommit.readManifest(spark, root).get.gen === g1)
     // pruning on v keeps every dir (no stats = never a filter)
     val (_, kept, total) = ManifestCommit.readPruned(spark, root,
-      "v", Some("10"), Some("20"))
+      Seq(("v", Some("10"), Some("20"))))
     assert(total === 2 && kept === 2, s"kept $kept of $total")
     assert(ManifestCommit.tableRowCount(spark, root) === Some(100L))
   }
@@ -254,7 +254,7 @@ class AnalyzeStatsSpec extends SparkSpec {
         s"$d stats: ${m.stats(d).map(_.col)}")
     }
     val (_, kept, total) = ManifestCommit.readPruned(spark, root,
-      "amount", Some("250"), Some("300"))
+      Seq(("amount", Some("250"), Some("300"))))
     assert(total === 3 && kept === 1, s"kept $kept of $total")
   }
 }

@@ -672,9 +672,9 @@ class LifecycleFuzzSpec extends SparkSpec {
       // invariant 4: a month probe through stats skipping == the model's
       // month slice, whatever mix of layouts the dirs carry right now
       val mo = monthsPool(rnd.nextInt(monthsPool.size))
-      val (pdf, keptN, _) = ManifestCommit.readPruned(spark, root, "ts",
+      val (pdf, keptN, _) = ManifestCommit.readPruned(spark, root, Seq(("ts",
         Some(ManifestCommit.temporalBound(s"$mo-01")),
-        Some(s"$mo-31T23:59:59.999"))
+        Some(s"$mo-31T23:59:59.999"))))
       val gotMo =
         if (keptN == 0) Set.empty[Long]
         else pdf.filter(date_format(col("ts"), "yyyy-MM") === mo)
@@ -999,9 +999,9 @@ class LifecycleFuzzSpec extends SparkSpec {
       // delta-ridden, dv'd — skipping must never change an answer)
       val mo = monthsPool(rnd.nextInt(monthsPool.size))
       // DV-safe skipping read: deletion vectors apply inside the helper
-      val (prunedDf, keptN, _) = ManifestCommit.readPruned(spark, root, "ts",
+      val (prunedDf, keptN, _) = ManifestCommit.readPruned(spark, root, Seq(("ts",
         Some(ManifestCommit.temporalBound(s"$mo-01")),
-        Some(s"$mo-31T23:59:59.999"))
+        Some(s"$mo-31T23:59:59.999"))))
       val got =
         if (keptN == 0) Set.empty[Long]
         else prunedDf
@@ -1096,8 +1096,8 @@ class LifecycleFuzzSpec extends SparkSpec {
       // invariant 2: a year-pruned read + residual filter == the model's
       // year slice whatever the layout (nested, mixed, z-ordered, dv'd)
       val y = years(rnd.nextInt(2))
-      val (pdf, keptN, _) = ManifestCommit.readPruned(spark, root, "y",
-        Some(y.toString), Some(y.toString))
+      val (pdf, keptN, _) = ManifestCommit.readPruned(spark, root, Seq(("y",
+        Some(y.toString), Some(y.toString))))
       val got =
         if (keptN == 0) Set.empty[Long]
         else pdf.filter(col("y") === y).select("id")

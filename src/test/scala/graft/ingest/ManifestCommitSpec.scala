@@ -174,18 +174,18 @@ class ManifestCommitSpec extends SparkSpec {
     val m = ManifestCommit.readManifest(spark, root).get
     assert(m.stats.size === 2)
     // range [2, 7] overlaps only d1; [6, 9] overlaps neither; no-bounds keeps all
-    val (kept, total) = ManifestCommit.resolvePruned(spark, root, "id",
-      Some("2"), Some("7"))
+    val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(("id",
+      Some("2"), Some("7"))))
     assert(total === 2 && kept.map(_.split('/').last) === Seq(d1.split('/').last))
-    assert(ManifestCommit.resolvePruned(spark, root, "id",
-      Some("6"), Some("9"))._1.isEmpty)
-    assert(ManifestCommit.resolvePruned(spark, root, "id", None, None)._1.size === 2)
+    assert(ManifestCommit.resolvePruned(spark, root, Seq(("id",
+      Some("6"), Some("9"))))._1.isEmpty)
+    assert(ManifestCommit.resolvePruned(spark, root, Seq(("id", None, None)))._1.size === 2)
     // a column with NO stats never prunes (skipping is an optimization)
-    assert(ManifestCommit.resolvePruned(spark, root, "nope",
-      Some("x"), Some("y"))._1.size === 2)
+    assert(ManifestCommit.resolvePruned(spark, root, Seq(("nope",
+      Some("x"), Some("y"))))._1.size === 2)
     // string-kind bounds compare lexicographically
-    assert(ManifestCommit.resolvePruned(spark, root, "v",
-      Some("c"), None)._1.map(_.split('/').last) === Seq(d2.split('/').last))
+    assert(ManifestCommit.resolvePruned(spark, root, Seq(("v",
+      Some("c"), None)))._1.map(_.split('/').last) === Seq(d2.split('/').last))
   }
 
   test("temporal stats render fixed-width; empty dirs carry no stats") {
@@ -387,24 +387,24 @@ class ManifestCommitSpec extends SparkSpec {
     // raw-path helpers throw: reading the kept path directly would
     // resurrect the deleted row
     intercept[IllegalStateException] {
-      ManifestCommit.resolvePruned(spark, root, "id", Some("1"), Some("2"))
+      ManifestCommit.resolvePruned(spark, root, Seq(("id", Some("1"), Some("2"))))
     }
     intercept[IllegalStateException] {
       ManifestCommit.resolveBloom(spark, root, "id", 2L)
     }
     intercept[IllegalStateException] {
-      Optimize.resolvePrunedMulti(spark, root, Seq(("id", Some("1"), Some("2"))))
+      ManifestCommit.resolvePruned(spark, root, Seq(("id", Some("1"), Some("2"))))
     }
     // the DV-aware read variants serve the same resolve WITH the DV applied
     val (pr, keptP, totalP) =
-      ManifestCommit.readPruned(spark, root, "id", Some("1"), Some("2"))
+      ManifestCommit.readPruned(spark, root, Seq(("id", Some("1"), Some("2"))))
     assert(keptP === 1 && totalP === 1)
     assert(pr.collect().map(_.getLong(0)).toSet === Set(1L))
     val (br, keptB, _) = ManifestCommit.readBloom(spark, root, "id", 2L)
     assert(keptB === 1 && br.filter(col("id") === 2L).count() === 0L,
       "bloom keeps the dir (fp-possible) but the DV removes the row")
     val (mr, keptM, _) =
-      Optimize.readPrunedMulti(spark, root, Seq(("id", Some("1"), Some("2"))))
+      ManifestCommit.readPruned(spark, root, Seq(("id", Some("1"), Some("2"))))
     assert(keptM === 1 && mr.collect().map(_.getLong(0)).toSet === Set(1L))
   }
 
@@ -474,8 +474,8 @@ class ManifestCommitSpec extends SparkSpec {
       assert(stats === reread, s"$d: $stats vs $reread")
     }
     // ranges are the expected thirds and drive skipping
-    val (kept, total) = ManifestCommit.resolvePruned(spark, root, "id",
-      Some("35"), Some("45"))
+    val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(("id",
+      Some("35"), Some("45"))))
     assert(kept.size === 1 && total === 3)
 
     // every producer yields identical ColStats for every input it can
@@ -675,8 +675,8 @@ class ManifestCommitSpec extends SparkSpec {
       assert(ManifestCommit.tableRowCount(spark, root) === Some(60L),
         "manifest-only COUNT must stay zero-job under a timestamp slice")
       val feb = ManifestCommit.temporalBound("2024-02-01T00:00:00")
-      val (kept, total) = ManifestCommit.resolvePruned(spark, root, "ts",
-        Some(feb), Some(feb))
+      val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(("ts",
+        Some(feb), Some(feb))))
       assert(total === 3 && kept.size === 1, s"ts pruning dead: $kept")
     }
     // (b) a domain slice carrying ':' and '/' (URLs — the LLM-pipeline
@@ -699,8 +699,8 @@ class ManifestCommitSpec extends SparkSpec {
       ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
         pruneDisplaced = false, stats = dirs.toMap)
       assert(ManifestCommit.tableRowCount(spark, root) === Some(40L))
-      val (kept, total) = ManifestCommit.resolvePruned(spark, root, "domain",
-        Some("https://a.example/x"), Some("https://a.example/x"))
+      val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(("domain",
+        Some("https://a.example/x"), Some("https://a.example/x"))))
       assert(total === 2 && kept.size === 1, s"domain pruning dead: $kept")
     }
     // (c) a NULL slice lands in __HIVE_DEFAULT_PARTITION__ and still
@@ -921,8 +921,8 @@ class ManifestCommitSpec extends SparkSpec {
     val m = ManifestCommit.readManifest(spark, root).get
     assert(m.gen === 4L && m.dirs.size === 4)
     // stats survive the delta round-trip (resolvePruned still prunes)
-    val (kept, total) = ManifestCommit.resolvePruned(spark, root, "id",
-      Some("3"), Some("3"))
+    val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(("id",
+      Some("3"), Some("3"))))
     assert(total === 4 && kept.size === 1)
     // time travel across the chain
     assert(ManifestCommit.readAt(spark, root, 2).collect()
@@ -1130,8 +1130,8 @@ class ManifestCommitSpec extends SparkSpec {
       .exists(_.getPath.getName.startsWith("data_")), "clone copied data")
     assert(idsOf(dst) === Set(1L, 3L))
     // stats carried: pruning works on the clone via inherited stats
-    val (kept, total) = ManifestCommit.readPruned(spark, dst, "id",
-      Some("5"), None) match { case (_, k, t) => (k, t) }
+    val (kept, total) = ManifestCommit.readPruned(spark, dst, Seq(("id",
+      Some("5"), None))) match { case (_, k, t) => (k, t) }
     assert(kept === 0 && total === 1)
     // divergence: writes to the clone never touch the source
     val d2 = ManifestCommit.newDataDir(dst)
@@ -1244,7 +1244,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(ManifestCommit.tableRowCount(spark, root) === Some(300L))
     // per-dir month stats arm pruning immediately; __part marks nesting
     val (pruned, kept, total) = ManifestCommit.readPruned(spark, root,
-      "month", Some("202402"), Some("202402"))
+      Seq(("month", Some("202402"), Some("202402"))))
     assert(total === 3 && kept === 1, s"kept $kept of $total")
     assert(pruned.count() === 100L)
     assert(m.dirs.forall(d => ManifestCommit.partSuffixOf(m, d).isDefined))
@@ -1324,11 +1324,11 @@ class ManifestCommitSpec extends SparkSpec {
     assert(ManifestCommit.tableRowCount(spark, root) === Some(600L))
     // BOTH dimensions prune independently from the manifest stats
     val (py, ky, ty) = ManifestCommit.readPruned(spark, root,
-      "year", Some("2024"), Some("2024"))
+      Seq(("year", Some("2024"), Some("2024"))))
     assert(ty === 6 && ky === 3, s"year pruning kept $ky of $ty")
     assert(py.count() === 300L)
     val (pm, km, tm) = ManifestCommit.readPruned(spark, root,
-      "month", Some("3"), Some("3"))
+      Seq(("month", Some("3"), Some("3"))))
     assert(tm === 6 && km === 2, s"month pruning kept $km of $tm")
     assert(pm.count() === 200L)
     // data-column filters PUSH DOWN below the two-column injection join
@@ -1402,15 +1402,15 @@ class ManifestCommitSpec extends SparkSpec {
       === Set("http://a/x", "http://b/y"))
     // every dimension prunes independently from the manifest stats
     val (p1, k1, t1) = ManifestCommit.readPruned(spark, root,
-      "src", Some("db:main"), Some("db:main"))
+      Seq(("src", Some("db:main"), Some("db:main"))))
     assert(t1 === 4 && k1 === 2, s"src pruning kept $k1 of $t1")
     assert(p1.count() === 120L)
     val (p2, k2, t2) = ManifestCommit.readPruned(spark, root,
-      "year", Some("2024"), Some("2024"))
+      Seq(("year", Some("2024"), Some("2024"))))
     assert(t2 === 4 && k2 === 2, s"year pruning kept $k2 of $t2")
     assert(p2.count() === 120L)
     val (p3, k3, t3) = ManifestCommit.readPruned(spark, root,
-      "url", Some("http://a/x"), Some("http://a/x"))
+      Seq(("url", Some("http://a/x"), Some("http://a/x"))))
     assert(t3 === 4 && k3 === 2, s"url pruning kept $k3 of $t3")
     assert(p3.count() === 80L)
     // row-level DML over the 3-level nested dirs
@@ -1677,7 +1677,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(m.dvs.values.forall(!_.startsWith("/")), m.dvs)
     assert(idsOf(dst) === Set(1L, 3L))
     // the stats survived the re-point: pruning still works
-    assert(ManifestCommit.readPruned(spark, dst, "id", Some("5"), None)
+    assert(ManifestCommit.readPruned(spark, dst, Seq(("id", Some("5"), None)))
       match { case (_, k, _) => k == 0 })
     // idempotent: nothing external left, second call is a no-op commit
     assert(ManifestCommit.materializeExternal(spark, dst).gen === m.gen)

@@ -67,10 +67,10 @@ class OptimizeSpec extends SparkSpec {
       ("x", Option.empty[String], Some("7")),
       ("y", Option.empty[String], Some("7")))
     // un-clustered: every dir's stats span the full grid — nothing prunes
-    val (kept0, total0) = Optimize.resolvePrunedMulti(spark, root, box)
+    val (kept0, total0) = ManifestCommit.resolvePruned(spark, root, box)
     assert(total0 === 4 && kept0.size === 4)
     Optimize.zorderCompact(spark, root, "x", "y", targetDirs = 16)
-    val (kept1, total1) = Optimize.resolvePrunedMulti(spark, root, box)
+    val (kept1, total1) = ManifestCommit.resolvePruned(spark, root, box)
     // the 8×8 box is 1/16 of the plane; z-range dirs are rectangles, so
     // most dirs cannot overlap it
     assert(kept1.size < total1 / 2, s"kept ${kept1.size} of $total1")
@@ -94,10 +94,10 @@ class OptimizeSpec extends SparkSpec {
     ManifestCommit.commitReplace(spark, root, dirs.map(_._1),
       pruneDisplaced = false, stats = dirs.toMap)
     val yOnly = Seq(("y", Option.empty[String], Some("7")))
-    val (keptY, totalY) = Optimize.resolvePrunedMulti(spark, root, yOnly)
+    val (keptY, totalY) = ManifestCommit.resolvePruned(spark, root, yOnly)
     assert(keptY.size === totalY, "x-sorted layout cannot prune on y")
     Optimize.zorderCompact(spark, root, "x", "y", targetDirs = 16)
-    val (keptZ, totalZ) = Optimize.resolvePrunedMulti(spark, root, yOnly)
+    val (keptZ, totalZ) = ManifestCommit.resolvePruned(spark, root, yOnly)
     assert(keptZ.size < totalZ, "z-ordered layout prunes on y alone")
   }
 
@@ -114,12 +114,12 @@ class OptimizeSpec extends SparkSpec {
       stats = Map(d -> ManifestCommit.dirStats(spark, d, Seq("x", "y", "w"))))
     Optimize.zorderCompactN(spark, root, Seq("x", "y", "w"), targetDirs = 16)
     Seq("x", "y", "w").foreach { c =>
-      val (kept, total) = Optimize.resolvePrunedMulti(spark, root,
+      val (kept, total) = ManifestCommit.resolvePruned(spark, root,
         Seq((c, None, Some("3"))))
       assert(kept.size < total, s"$c-alone bound should prune")
     }
     // and the 3-box prunes hardest
-    val (kept3, total3) = Optimize.resolvePrunedMulti(spark, root, Seq(
+    val (kept3, total3) = ManifestCommit.resolvePruned(spark, root, Seq(
       ("x", None, Some("3")), ("y", None, Some("3")), ("w", None, Some("3"))))
     assert(kept3.size <= total3 / 4, s"3-box kept ${kept3.size} of $total3")
     val got = spark.read.parquet(kept3: _*)
@@ -256,11 +256,11 @@ class OptimizeSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got === Map(1L -> 1L, 2L -> 0L))
     // the rebuilt bloom answers point lookups under the LOGICAL name
-    // (bloomNames probes the physical side file when the logical one
+    // (bloomDirsOf probes the physical side file when the logical one
     // is absent)
-    val kept = ManifestCommit.bloomDirsOf(spark, root, m, "key", 1L)
+    val kept = ManifestCommit.bloomDirsOf(spark, root, m, "key", Seq(1L))
     assert(kept.nonEmpty)
-    val none = ManifestCommit.bloomDirsOf(spark, root, m, "key", 999999L)
+    val none = ManifestCommit.bloomDirsOf(spark, root, m, "key", Seq(999999L))
     assert(none.size < m.dirs.size,
       "bloom on the renamed column never excludes anything")
   }
@@ -352,7 +352,7 @@ class OptimizeSpec extends SparkSpec {
     ManifestCommit.commitReplace(spark, root, Seq(d),
       pruneDisplaced = false,
       stats = Map(d -> ManifestCommit.dirStats(spark, d, Seq("x"))))
-    val (kept, total) = Optimize.resolvePrunedMulti(spark, root, Seq(
+    val (kept, total) = ManifestCommit.resolvePruned(spark, root, Seq(
       ("x", None, Some("7")), ("y", None, Some("7"))))
     assert(kept.size === 1 && total === 1)
   }
@@ -524,7 +524,7 @@ class OptimizeSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq === want)
     // pruning still live on the partition column across the mixed layout
     val (pruned, kept, total) = ManifestCommit.readPruned(spark, root,
-      "y", Some("2025"), Some("2025"))
+      Seq(("y", Some("2025"), Some("2025"))))
     assert(total === 6 && kept === 3, s"kept $kept of $total")
     assert(pruned.count() === 120L)
   }
@@ -660,13 +660,13 @@ class OptimizeSpec extends SparkSpec {
     }
     assert(m.dirs.size >= 8, s"z granularity kept: ${m.dirs.size}")
     // month pruning still exact
-    val (_, kept, total) = ManifestCommit.readPruned(spark, root, "ts",
-      Some("2024-02-01"), Some("2024-02-28"))
+    val (_, kept, total) = ManifestCommit.readPruned(spark, root, Seq(("ts",
+      Some("2024-02-01"), Some("2024-02-28"))))
     assert(kept < total, s"month probe kept $kept of $total")
     // and the z-rectangles prune WITHIN a month: a conjunctive (id, x)
     // box probe skips same-month dirs holding other rectangles
     val (keptZ, totalZ) = {
-      val (ds, tot) = Optimize.resolvePrunedMulti(spark, root,
+      val (ds, tot) = ManifestCommit.resolvePruned(spark, root,
         Seq(("id", Some("0"), Some("40")), ("x", Some("0"), Some("10"))))
       (ds.size, tot)
     }
@@ -753,7 +753,7 @@ class OptimizeSpec extends SparkSpec {
     // probe still scans ~90% of the table (and the layout is skewed:
     // a handful of huge files among 12 near-empty ones)
     def scannedFor(root: String): Long =
-      Optimize.readPrunedMulti(spark, root,
+      ManifestCommit.readPruned(spark, root,
         Seq(("k", Some("4"), Some("4"))))._1.count()
     val lin = build()
     Optimize.zorderCompactN(spark, lin, Seq("k", "y"), targetDirs = 16)
@@ -832,7 +832,7 @@ class OptimizeSpec extends SparkSpec {
     // manifest COUNT stays exact; a month probe scans exactly 1 dir
     assert(ManifestCommit.tableRowCount(spark, root) === Some(wantCount))
     val (pruned, kept, total) = ManifestCommit.readPruned(spark, root,
-      "ts", Some("2024-02-01T00:00:00.000"), Some("2024-02-28T23:59:59.000"))
+      Seq(("ts", Some("2024-02-01T00:00:00.000"), Some("2024-02-28T23:59:59.000"))))
     assert(total === 2 && kept === 1, s"kept $kept of $total")
     assert(pruned.count() ===
       df.filter(month(col("ts")) === 2).count() + 20)

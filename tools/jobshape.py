@@ -4,14 +4,20 @@
 
 Each file holds the output of one `perfbench/run.py ... --trace 1` run;
 its last JSON line is read. Every job-count metric (`*.jobs`,
-`spark.jobs`, `spark.tasks`, `sql.jobs_per_query`) is printed side by
-side. Job counts are deterministic for a fixed workload and seed, so the
-script exits 1 if any of them rose from PARENT to CHANGE, else 0.
+`spark.jobs`, `spark.tasks`, `sql.jobs_per_query`) and every skip-shape
+metric (`sql.dirs_scanned_frac`, `merge.dirs_rewritten_frac`,
+`delete.dvs_per_op`) is printed side by side. These are deterministic
+for a fixed workload and seed (two runs of one tree at seed 901 matched
+exactly on both workloads), so the script exits 1 if any of them rose
+from PARENT to CHANGE, else 0.
 """
 import json
 import sys
 
 EXACT = ("spark.jobs", "spark.tasks", "sql.jobs_per_query")
+# how much data a query or DML op touched: more is worse, like more jobs
+SKIP = ("sql.dirs_scanned_frac", "merge.dirs_rewritten_frac",
+        "delete.dvs_per_op")
 
 
 def last_json(path):
@@ -28,7 +34,7 @@ def last_json(path):
 
 def job_metrics(metrics):
     return {k: v["value"] for k, v in metrics.items()
-            if k.endswith(".jobs") or k in EXACT}
+            if k.endswith(".jobs") or k in EXACT or k in SKIP}
 
 
 def fmt(v):
@@ -38,7 +44,7 @@ def fmt(v):
 def compare(parent, change):
     """(report lines, names of the metrics that rose)."""
     a, b = job_metrics(parent), job_metrics(change)
-    lines = [f"{'metric':<22}{'parent':>12}{'change':>12}"]
+    lines = [f"{'metric':<26}{'parent':>12}{'change':>12}"]
     rose = []
     for k in sorted(set(a) | set(b)):
         pa, ch = a.get(k), b.get(k)
@@ -46,7 +52,7 @@ def compare(parent, change):
         if pa is not None and ch is not None and ch > pa:
             rose.append(k)
             flag = "  ROSE"
-        lines.append(f"{k:<22}{fmt(pa):>12}{fmt(ch):>12}{flag}")
+        lines.append(f"{k:<26}{fmt(pa):>12}{fmt(ch):>12}{flag}")
     return lines, rose
 
 
@@ -56,7 +62,7 @@ def main(argv):
     lines, rose = compare(last_json(argv[0]), last_json(argv[1]))
     print("\n".join(lines))
     if rose:
-        print("job shape rose: " + ", ".join(rose))
+        print("job or skip shape rose: " + ", ".join(rose))
         return 1
     return 0
 

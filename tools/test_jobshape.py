@@ -50,7 +50,18 @@ class JobShapeTest(unittest.TestCase):
                               {"delete.jobs": 11, "spark.tasks": 70})
         self.assertEqual(code, 1)
         self.assertIn("ROSE", out)
-        self.assertIn("job shape rose: delete.jobs", out)
+        self.assertIn("shape rose: delete.jobs", out)
+
+    def test_a_skip_shape_rise_fails_and_equal_skip_shape_passes(self):
+        m = {"sql.dirs_scanned_frac": 0.12, "merge.dirs_rewritten_frac": 0.375,
+             "delete.dvs_per_op": 1.0, "sql.plan_s": 0.05}
+        code, out = self.main(m, dict(m, **{"sql.plan_s": 0.09}))
+        self.assertEqual(code, 0)
+        self.assertIn("delete.dvs_per_op", out)
+        self.assertNotIn("sql.plan_s", out)
+        code, out = self.main(m, dict(m, **{"sql.dirs_scanned_frac": 0.2}))
+        self.assertEqual(code, 1)
+        self.assertIn("shape rose: sql.dirs_scanned_frac", out)
 
     def test_a_fall_passes(self):
         code, _ = self.main({"optimize.jobs": 8}, {"optimize.jobs": 6})
