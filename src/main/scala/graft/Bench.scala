@@ -105,6 +105,10 @@ object Bench {
   def kernelPassSec(): Double =
     Seq(kernelOnePass(), kernelOnePass(), kernelOnePass()).min
 
+  /** Generated classes Janino has compiled in this JVM so far. */
+  def compiled(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Compose the stdout contract line WITHIN the parent's ~2000-char tail
     * budget, degrading gracefully instead of letting the parent truncate
     * mid-JSON (a truncated line = no bench evidence at all, the r1-r4
@@ -216,6 +220,11 @@ object Bench {
     // other load comes in episodes), wall ≈ task flags genuine compute.
     var taskSecs = List.empty[(String, Double)]
     var jobCounts = List.empty[(String, Double)]
+    // Generated classes compiled per query (Spark's JVM-wide codegen
+    // metric): like the job count a deterministic signal — a steady-state
+    // rep that compiles means a class fell out of the codegen cache or a
+    // plan inlines a per-run literal
+    var compileCounts = List.empty[(String, Double)]
     // Reps: the first execution of a query pays whole-stage-codegen
     // compilation + HotSpot C2 warm-up (measured: q47 12 s cold vs 0.9 s
     // steady at sf0.1) — cost a 1000-executor production job pays once
@@ -235,11 +244,12 @@ object Bench {
       kernSamples ::= Bench.kernelPassSec() // machine probe, ~30 ms
       val fn = SparkEntry.queries(name)
       var repSecs = List.empty[Double]
-      var last = (0.0, 0) // the steady-state (last) rep's task CPU, jobs
+      var last = (0.0, 0, 0L) // the steady-state (last) rep's task CPU, jobs, compiles
       var ok = true
       // takeWhile(_ => ok): once a rep fails, re-running the known-broken
       // query only multiplies the failure's wall-clock by reps
       (1 to reps).iterator.takeWhile(_ => ok).foreach { rep =>
+        val c0 = Bench.compiled()
         val m = JobMeter.measure(spark) {
           val t0 = System.nanoTime()
           val err = try { fn(spark, sfDir).count(); None }
@@ -255,7 +265,7 @@ object Bench {
           if (ok) errors ::= (name -> msg.take(200).replaceAll("[\"\\\\\\p{Cntrl}]", " "))
           ok = false
         }
-        last = (m.cpuSec, m.count)
+        last = (m.cpuSec, m.count, Bench.compiled() - c0)
         if (rep == 1) coldSecs ::= (name -> sec)
         repSecs ::= sec
         // Each rep is timed standalone; drop cached blocks so a rep isn't
@@ -266,6 +276,7 @@ object Bench {
       }
       taskSecs ::= (name -> last._1)
       jobCounts ::= (name -> last._2.toDouble)
+      compileCounts ::= (name -> last._3.toDouble)
       val sorted = repSecs.sorted
       if (sorted.nonEmpty) medSecs ::= (name -> sorted(sorted.size / 2))
       val minSec = if (sorted.nonEmpty) sorted.head else Double.MaxValue
@@ -366,6 +377,7 @@ object Bench {
     val medianTotal = medSecs.map(_._2).sum
     val taskJson = jmap(taskSecs.reverse)
     val jobsJson = jmap(jobCounts.reverse, v => v.toLong.toString)
+    val compilesJson = jmap(compileCounts.reverse, v => v.toLong.toString)
     val coldJson = jmap(coldSecs.reverse)
     val medJson = jmap(medSecs.reverse)
     // closing canary pass (stderr diag); drift = median/min of the
@@ -398,7 +410,7 @@ object Bench {
         "__kern_med" -> kernSorted(kernSorted.size / 2),
         "__kern_max" -> kernSorted.last)))
     System.err.println(
-      s"""[bench-diag] {"task_sec":$taskJson,"jobs":$jobsJson,"cold_sec":$coldJson,"med_sec":$medJson,"rerun_sec":$rerunFullJson,"slow_rerun_sec":$slowJson,"canary_sec":$canaryJson,"errors":$errFullJson,"reps":$reps}""")
+      s"""[bench-diag] {"task_sec":$taskJson,"jobs":$jobsJson,"compiles":$compilesJson,"cold_sec":$coldJson,"med_sec":$medJson,"rerun_sec":$rerunFullJson,"slow_rerun_sec":$slowJson,"canary_sec":$canaryJson,"errors":$errFullJson,"reps":$reps}""")
     // sf is the directory BASENAME (e.g. "sf0.1") — the full path spends
     // ~20 chars of the tail budget on redundancy
     val sfName = new java.io.File(sfDir).getName

@@ -13,6 +13,17 @@ import org.apache.spark.sql.SparkSession
   *   which Spark rejects by default) instead of per-read mutation.
   */
 object GraftSession {
+  /** Bound of Spark's JVM-wide cache of compiled generated classes (a
+    * static conf, read once when `CodeGenerator` is first used). Spark's
+    * default of 100 is below graft's working set: one CDC batch (MERGE,
+    * DV delete, UPDATE, OPTIMIZE, replica sync) needs ~157 distinct
+    * classes and one BI session ~166, so under LRU every class was
+    * evicted before its next use and recompiled (a traced CDC batch spent
+    * 2.08 s of 9.4 s in Janino; a BI loop whose queries had all run once
+    * compiled 166 classes). A whole CDC run touches ~261 distinct classes
+    * and a BI run ~482; 1024 holds twice the larger. */
+  val CodegenCacheEntries = 1024
+
   def build(appName: String, cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .appName(appName)
@@ -51,6 +62,7 @@ object GraftSession {
       // at the JIT threshold makes Spark fall back to per-operator codegen
       // — whose expression splitting keeps every method JIT-able.
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Shuffle/spill files on the RAM-backed tmpfs: this sandbox's block
       // device throttles buffered writes to ~25 MB/s in bursts (measured),
       // which made shuffle-heavy runs bimodal. On a real cluster

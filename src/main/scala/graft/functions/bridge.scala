@@ -18,6 +18,14 @@ object ColumnBridge {
     * catalyst tree. */
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Spark's bloom-filter aggregate, the one `df.stat.bloomFilter` runs
+    * and deserializes: its serialized filter, or NULL when the column
+    * holds no non-null value (where `bloomFilter` itself throws). */
+  def bloomFilterAgg(c: Column, expectedItems: Long, numBits: Long): Column =
+    Column.internalFn("bloom_filter_agg", c,
+      org.apache.spark.sql.functions.lit(expectedItems),
+      org.apache.spark.sql.functions.lit(numBits))
 }
 
 /** Bridge into the private[sql] DSv2 transform case classes: map a

@@ -3248,9 +3248,19 @@ object ManifestCommit {
     * distinct count: bits ≈ -n·ln(fpp)/ln(2)², ~1.2 KB per 1k keys at
     * 1% fpp. */
   def writeDirBloom(spark: SparkSession, dir: String, col: String,
-      expectedItems: Long, fpp: Double = 0.01): Unit =
+      expectedItems: Long, fpp: Double = 0.01): Unit = {
+    import org.apache.spark.util.sketch.BloomFilter
+    val df = spark.read.parquet(dir)
+    val bytes = df.select(org.apache.spark.sql.graftbridge.ColumnBridge
+      .bloomFilterAgg(df.col(col), expectedItems,
+        BloomFilter.optimalNumOfBits(expectedItems, fpp)))
+      .head().getAs[Array[Byte]](0)
+    // a dir whose column is all null gets the empty filter (it rules
+    // every value out), as the batched ANALYZE build installs
     installDirBloom(spark, dir, col,
-      spark.read.parquet(dir).stat.bloomFilter(col, expectedItems, fpp))
+      if (bytes == null) BloomFilter.create(expectedItems, fpp)
+      else BloomFilter.readFrom(bytes))
+  }
 
   /** Install an ALREADY-BUILT bloom as `dir`'s `_bloom_<col>` side file
     * (tmp + rename: ANALYZE retrofits blooms onto LIVE dirs — readers
@@ -3301,7 +3311,14 @@ object ManifestCommit {
     * a planning-latency wall, not a data-size cost. Probe order
     * doesn't matter; the kept set preserves manifest order. */
   def bloomDirsOf(spark: SparkSession, root: String, m: Manifest,
-      col: String, values: Seq[Any]): Seq[String] = {
+      col: String, values: Seq[Any]): Seq[String] =
+    bloomDirsOf(spark, root, m, col, values, m.dirs)
+
+  /** [[bloomDirsOf]] over `dirs` only (live dirs of `m` that min/max
+    * pruning kept): one side file opened per listed dir, none for the
+    * rest. */
+  def bloomDirsOf(spark: SparkSession, root: String, m: Manifest,
+      col: String, values: Seq[Any], dirs: Seq[String]): Seq[String] = {
     val f = fs(spark, root)
     // under a column mapping, dirs written before the rename carry their
     // bloom under the PHYSICAL name — probe it when the logical file is
@@ -3322,8 +3339,8 @@ object ManifestCommit {
           values.exists(bf.mightContain)
       }
     }
-    val flags = concurrently(m.dirs, 32)(probe)
-    m.dirs.zip(flags).collect { case (d, true) => d }
+    val flags = concurrently(dirs, 32)(probe)
+    dirs.zip(flags).collect { case (d, true) => d }
   }
 
   /** DV-safe point-lookup read: [[resolveBloom]]'s kept set, read

@@ -1,9 +1,14 @@
 package graft.ingest
 
 import graft.ingest.ManifestCommit.ColStats
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StringType}
+import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** MERGE INTO over a manifest-committed table — the copy-on-write upsert
   * the reference expresses as ReplacingMergeTree INSERT + `FINAL` collapse
@@ -22,9 +27,9 @@ import org.apache.spark.sql.types.{DecimalType, StringType}
   * provably contains NO source key is never read, never rewritten, and
   * survives the commit byte-identical — on a 100 TB table a merge that
   * touches one hot range costs O(touched dirs + source), not O(table).
-  * The affected-dir test is EXACT (one aggregate over the source counting
-  * keys inside each dir's range — a single job, one long per dir on the
-  * driver), not a min/max-overlap approximation, so a source whose key
+  * The affected-dir test is EXACT (one aggregate over the source marking
+  * each dir whose range holds a key — a single job, one bit per dir on
+  * the driver), not a min/max-overlap approximation, so a source whose key
   * span straddles a cold dir without actually containing any of its keys
   * still skips it. Dirs without stats on `keys.head` are always rewritten
   * (stats are an optimization, never a correctness gate — same contract
@@ -52,52 +57,102 @@ import org.apache.spark.sql.types.{DecimalType, StringType}
   */
 object MergeInto {
 
-  /** Largest ranged-dir count for which the exact affected-dir test rides
-    * per-dir conditional-sum columns inside ONE aggregate. Beyond it the
-    * plan itself becomes O(dirs) expressions — at 10k+ dirs codegen and
-    * analysis choke on a 10k-column aggregate long before any data moves
-    * — so the test goes two-stage: a free driver-side [srcMin, srcMax]
-    * overlap prune over the manifest stats first, then the exact per-dir
-    * counts only over the overlap SURVIVORS. A hot-band source on a
-    * range-laid-out table survives to a handful of dirs (exact, one
-    * small aggregate); a scattered source that overlaps more than the
-    * cap falls back to overlap-based pruning — still CORRECT (rewriting
-    * an overlap-only dir preserves its rows through the merge join; the
-    * cost is I/O, not answers), and exactly the public Delta/Iceberg
-    * min-max merge-pruning contract. */
-  private val MaxExactRangeDirs = 512
+  /** The exact affected-dir test packs one bit per ranged dir into
+    * `HitWords` fixed `bit_or` aggregates, so it runs in ONE aggregate
+    * for at most this many ranged dirs. Beyond it the test goes
+    * two-stage: a free driver-side [srcMin, srcMax] overlap prune over
+    * the manifest stats first, then the exact bits only over the overlap
+    * SURVIVORS. A hot-band source on a range-laid-out table survives to
+    * a handful of dirs (exact, one small aggregate); a scattered source
+    * that overlaps more than the cap falls back to overlap-based pruning
+    * — still CORRECT (rewriting an overlap-only dir preserves its rows
+    * through the merge join; the cost is I/O, not answers), and exactly
+    * the public Delta/Iceberg min-max merge-pruning contract. */
+  private val HitWords = 8
+  private val MaxExactRangeDirs = 64 * HitWords
 
-  private def inRangeSum(df: DataFrame, keyCol: String,
-      cs: ColStats): org.apache.spark.sql.Column = {
-    val c = df.col(keyCol)
-    val in =
-      if (cs.kind == "num")
-        c.cast(DecimalType(38, 6)).between(
-          lit(new java.math.BigDecimal(cs.min)), lit(new java.math.BigDecimal(cs.max)))
-      else c.cast(StringType).between(lit(cs.min), lit(cs.max))
-    sum(when(in, 1L).otherwise(0L))
+  /** `HitWords` aggregates over `src`: bit `i` of word `w` is set when
+    * ranged dir `64w + i` holds a key of `src` in its [min, max] (numeric
+    * stats compare the key as decimal(38,6), others as a string). The
+    * bounds ride the plan as data ([[DirRanges]]), not as literals, so
+    * the generated aggregate depends only on the key's type: a batch
+    * that adds a dir or moves a bound reuses the compiled class. */
+  private def hitAggs(src: DataFrame, keyCol: String,
+      ranged: Seq[(String, ColStats)]): Seq[Column] = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val ranges = DirRanges(ranged.map(_._2))
+    val k = src.col(keyCol)
+    // a kind no dir carries is never read — no cast of a string key to
+    // a decimal (which fails under ANSI)
+    def as(dt: DataType, used: Boolean) =
+      ColumnBridge.expression(if (used) k.cast(dt) else lit(null).cast(dt))
+    val num = as(DecimalType(38, 6), ranges.numeric.exists(identity))
+    val str = as(StringType, ranges.numeric.exists(!_))
+    (0 until HitWords).map(w =>
+      bit_or(ColumnBridge.column(DirHitWord(num, str, ranges, w))))
   }
 
-  /** Two-stage exact-or-overlap affected-dir test (see
-    * [[MaxExactRangeDirs]]): candidates by stats overlap with the
-    * source's own key range, then exact counts when few enough. */
-  private def exactOrOverlapTouched(src: DataFrame, keyCol: String,
-      ranged: Seq[(String, ColStats)],
-      srcRange: Option[ColStats]): Set[String] = {
-    val candidates = srcRange match {
-      case None => Nil // empty source: nothing touched
-      case Some(sr) =>
-        ranged.filter { case (_, cs) => cs.overlaps(Some(sr.min), Some(sr.max)) }
-    }
-    if (candidates.isEmpty) Set.empty
-    else if (candidates.size > MaxExactRangeDirs) candidates.map(_._1).toSet
-    else {
-      val aggs = candidates.map { case (_, cs) => inRangeSum(src, keyCol, cs) }
-      val row = src.agg(aggs.head, aggs.tail: _*).collect()(0)
-      candidates.zipWithIndex.collect {
-        case ((d, _), i) if !row.isNullAt(i) && row.getLong(i) > 0 => d
-      }.toSet
-    }
+  /** The `ranged` dirs whose bit is set in the hit words at `at`. */
+  private def hitDirs(ranged: Seq[(String, ColStats)], row: Row,
+      at: Int): Set[String] =
+    ranged.indices.collect {
+      case i if !row.isNullAt(at + i / 64) &&
+          ((row.getLong(at + i / 64) >>> (i % 64)) & 1L) == 1L => ranged(i)._1
+    }.toSet
+
+  /** What ONE aggregate over a DML's source keys proves. `lead` holds
+    * the caller's own aggregates (a row count first); `touched` the live
+    * dirs the source's keys reach, in manifest order; `disjoint` the
+    * rebase proof for [[ManifestCommit.commitReconciled]] — a
+    * concurrently-added dir is provably untouched when its recorded key
+    * range cannot overlap the source's (null keys defeat range proofs;
+    * no stats = no proof). */
+  private final case class KeyScan(lead: Row,
+      touched: Seq[String], disjoint: (String, Seq[ColStats]) => Boolean)
+
+  /** The exact affected-dir test shared by [[merge]] and [[deleteWhere]]:
+    * `lead`, the source's own key range + null witness and — when the
+    * ranged-dir count fits [[MaxExactRangeDirs]] — the exact per-dir hit
+    * bits, all on ONE pass (a second job here is pure sequential-latency
+    * waste on a merge gate). Dirs without stats on `keyCol` are always
+    * touched (stats are an optimization, never a correctness gate). A
+    * null source key touches every ranged dir when the caller's match is
+    * null-SAFE (`nullSafe`, MERGE's `<=>` join); a null-unsafe match
+    * (the delete's semi-join) deletes nothing with it. */
+  private def scanKeys(m: ManifestCommit.Manifest, src: DataFrame,
+      keyCol: String, lead: Seq[Column], nullSafe: Boolean): KeyScan = {
+    val dirRange: Seq[(String, Option[ColStats])] =
+      m.dirs.map(d => d -> m.stats.getOrElse(d, Nil).find(_.col == keyCol))
+    val ranged = dirRange.collect { case (d, Some(cs)) => (d, cs) }
+    val few = ranged.size <= MaxExactRangeDirs
+    val k = src.col(keyCol)
+    val n = lead.size
+    val row = src.agg(lead.head, (lead.tail ++
+      Seq(min(k), max(k), sum(when(k.isNull, 1L).otherwise(0L))) ++
+      (if (few) hitAggs(src, keyCol, ranged) else Nil)): _*).collect()(0)
+    val empty = row.getLong(0) == 0L
+    val range = ManifestCommit.colStatsOf(keyCol, src.schema(keyCol).dataType,
+      row.get(n), row.get(n + 1))
+    val nullKey = !row.isNullAt(n + 2) && row.getLong(n + 2) > 0L
+    val hit: Set[String] =
+      if (empty) Set.empty
+      else if (nullKey && nullSafe) ranged.map(_._1).toSet
+      else if (few) hitDirs(ranged, row, n + 3)
+      else {
+        val overlap = ranged.filter { case (_, cs) =>
+          range.exists(sr => cs.overlaps(Some(sr.min), Some(sr.max))) }
+        if (overlap.isEmpty) Set.empty
+        else if (overlap.size > MaxExactRangeDirs) overlap.map(_._1).toSet
+        else {
+          val aggs = hitAggs(src, keyCol, overlap)
+          hitDirs(overlap, src.agg(aggs.head, aggs.tail: _*).collect()(0), 0)
+        }
+      }
+    val touched = dirRange.collect { case (d, cs) if cs.isEmpty || hit(d) => d }
+    KeyScan(row, touched, (_, stats) =>
+      empty || (!nullKey && range.exists(sr =>
+        stats.find(_.col == keyCol).exists(cs =>
+          !cs.overlaps(Some(sr.min), Some(sr.max))))))
   }
 
   final case class MergeResult(
@@ -187,57 +242,16 @@ object MergeInto {
       else Nil
     val outCols = tCols ++ extraCols
 
-    // ---- ONE aggregate over the source: key uniqueness, the source's
-    // own key range + null witness (the rebase DISJOINTNESS proof against
-    // dirs a concurrent commit adds — see commitReconciled below), AND —
-    // when the dir count keeps the plan small — the exact per-dir
-    // affected counts, all on the same pass (a second job here is pure
-    // sequential-latency waste on a merge gate)
-    val pruneCol = keys.head
-    val dirRange: Seq[(String, Option[ColStats])] =
-      m.dirs.map(d => d -> m.stats.getOrElse(d, Nil).find(_.col == pruneCol))
-    val statless = dirRange.collect { case (d, None) => d }
-    val ranged = dirRange.collect { case (d, Some(cs)) => (d, cs) }
-    val few = ranged.size <= MaxExactRangeDirs
-    val rangeAggs =
-      if (few) ranged.map { case (_, cs) => inRangeSum(source, pruneCol, cs) }
-      else Nil
-    val aggRow = source.agg(count(lit(1)).as("n"),
-      ((countDistinct(keys.head, keys.tail: _*).as("d") +: rangeAggs) ++ Seq(
-        min(source.col(pruneCol)), max(source.col(pruneCol)),
-        sum(when(source.col(pruneCol).isNull, 1L).otherwise(0L)))): _*)
-      .collect()(0)
-    require(aggRow.getLong(0) == aggRow.getLong(1),
+    // ---- ONE aggregate over the source: key uniqueness plus the exact
+    // affected-dir test (scanKeys)
+    val scan = scanKeys(m, source, keys.head,
+      Seq(count(lit(1)).as("n"), countDistinct(keys.head, keys.tail: _*).as("d")),
+      nullSafe = true)
+    require(scan.lead.getLong(0) == scan.lead.getLong(1),
       s"source is not unique on (${keys.mkString(",")}): " +
-        s"${aggRow.getLong(0)} rows, ${aggRow.getLong(1)} distinct keys")
-    val nR = rangeAggs.size
-    val srcEmpty = aggRow.getLong(0) == 0L
-    val srcRange = ManifestCommit.colStatsOf(pruneCol,
-      source.schema(pruneCol).dataType,
-      aggRow.get(nR + 2), aggRow.get(nR + 3))
-    val srcHasNullKey =
-      !aggRow.isNullAt(nR + 4) && aggRow.getLong(nR + 4) > 0L
-    val touched: Set[String] = statless.toSet ++ (
-      if (srcEmpty) Set.empty[String]
-      // stats cannot witness null keys, and the merge join is null-SAFE
-      // (<=>): a null-keyed source row may match a null-keyed target row
-      // in ANY dir, so every ranged dir must be read — conservative,
-      // never wrong (the old conditional-sum test silently matched null
-      // keys nowhere and could duplicate a null-keyed row)
-      else if (srcHasNullKey) ranged.map(_._1).toSet
-      else if (few)
-        ranged.zipWithIndex.collect {
-          case ((d, _), i) if !aggRow.isNullAt(i + 2) && aggRow.getLong(i + 2) > 0 => d
-        }.toSet
-      else exactOrOverlapTouched(source, pruneCol, ranged, srcRange))
+        s"${scan.lead.getLong(0)} rows, ${scan.lead.getLong(1)} distinct keys")
+    val touched = scan.touched.toSet
     val keptDirs = m.dirs.filterNot(touched)
-    // a concurrently-added dir is provably untouched by this merge when
-    // its recorded key range cannot overlap the source's (null keys defeat
-    // range proofs — the <=> join matches them; no stats = no proof)
-    val disjointFromSource: (String, Seq[ColStats]) => Boolean = (_, stats) =>
-      srcEmpty || (!srcHasNullKey && srcRange.exists(sr =>
-        stats.find(_.col == pruneCol).exists(cs =>
-          !cs.overlaps(Some(sr.min), Some(sr.max)))))
 
     // ---- one full-outer join: survivors + updates + deletes + inserts
     val tgt = extraCols.foldLeft(
@@ -328,7 +342,7 @@ object MergeInto {
         schema = Some(unionSchema),
         op = "merge",
         pinned = touched,
-        disjoint = disjointFromSource,
+        disjoint = scan.disjoint,
         // Some even when the read set was empty — a concurrent ADD
         // CONSTRAINT must fail this commit's CAS, not adopt its rows
         expectedChecks = Some(m.checks))
@@ -393,45 +407,12 @@ object MergeInto {
       throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
     val distinctKeys = keys.distinct().cache()
     try {
-      // exact affected-dir test on keyCols.head — same contract (and same
-      // two-stage high-dir-count shape) as merge; the delete set's own
-      // range + null witness ride the same pass as the rebase
-      // disjointness proof (commitReconciled below). Null delete keys
-      // need no conservative widening here: the per-dir semi-join is
-      // null-UNSAFE equality, so a null key deletes nothing by contract.
-      val pruneCol = keyCols.head
-      val dirRange: Seq[(String, Option[ColStats])] =
-        m.dirs.map(d => d -> m.stats.getOrElse(d, Nil).find(_.col == pruneCol))
-      val statless = dirRange.collect { case (d, None) => d }
-      val ranged = dirRange.collect { case (d, Some(cs)) => (d, cs) }
-      val few = ranged.size <= MaxExactRangeDirs
-      val rangeAggs =
-        if (few) ranged.map { case (_, cs) => inRangeSum(distinctKeys, pruneCol, cs) }
-        else Nil
-      val aggRow = distinctKeys.agg(count(lit(1)).as("n"),
-        (rangeAggs ++ Seq(
-          min(distinctKeys.col(pruneCol)), max(distinctKeys.col(pruneCol)),
-          sum(when(distinctKeys.col(pruneCol).isNull, 1L).otherwise(0L)))): _*)
-        .collect()(0)
-      val nR = rangeAggs.size
-      val keysEmpty = aggRow.getLong(0) == 0L
-      val keyRange = ManifestCommit.colStatsOf(pruneCol,
-        distinctKeys.schema(pruneCol).dataType,
-        aggRow.get(nR + 1), aggRow.get(nR + 2))
-      val hasNullKey =
-        !aggRow.isNullAt(nR + 3) && aggRow.getLong(nR + 3) > 0L
-      val touched: Seq[String] = statless ++ (
-        if (keysEmpty) Nil
-        else if (few)
-          ranged.zipWithIndex.collect {
-            case ((d, _), i) if !aggRow.isNullAt(i + 1) && aggRow.getLong(i + 1) > 0 => d
-          }
-        else exactOrOverlapTouched(distinctKeys, pruneCol, ranged, keyRange)
-          .toSeq.sorted)
-      val disjointFromKeys: (String, Seq[ColStats]) => Boolean = (_, stats) =>
-        keysEmpty || (!hasNullKey && keyRange.exists(kr =>
-          stats.find(_.col == pruneCol).exists(cs =>
-            !cs.overlaps(Some(kr.min), Some(kr.max)))))
+      // exact affected-dir test on keyCols.head — same contract as merge
+      // (scanKeys). Null delete keys touch nothing: the per-dir semi-join
+      // is null-UNSAFE equality, so a null key deletes nothing by contract.
+      val scan = scanKeys(m, distinctKeys, keyCols.head, Seq(count(lit(1))),
+        nullSafe = false)
+      val touched = scan.touched
 
       // keys actually present among each touched dir's LIVE rows
       // (existing DV applied first, so re-deleting an already-deleted key
@@ -499,7 +480,7 @@ object MergeInto {
           schema = m.tableSchema,
           op = "delete",
           pinned = touched.toSet,
-          disjoint = disjointFromKeys,
+          disjoint = scan.disjoint,
           statUpdates = statUpdates)
         catch {
           case e: ManifestCommit.ConcurrentCommitException =>
@@ -931,4 +912,71 @@ object MergeInto {
         if (op == "update" || insert.isDefined) Some(m.checks) else None)
     RowOpResult(committed.gen, m.dirs.size, affected.size, matched)
   }
+}
+
+/** The [min, max] key ranges of the dirs [[MergeInto]]'s affected-dir
+  * test probes: dir `i` compares a key as decimal(38,6) when
+  * `numeric(i)` (its stats are numeric), else as a string. */
+private[ingest] final case class DirRanges(numeric: Array[Boolean],
+    lo: Array[AnyRef], hi: Array[AnyRef]) {
+
+  /** Bits of the dirs `64w` to `64w + 63` whose range holds the key; a
+    * null key holds nowhere. */
+  def word(num: Decimal, str: UTF8String, w: Int): Long = {
+    var bits = 0L
+    var i = 64 * w
+    val end = math.min(lo.length, i + 64)
+    while (i < end) {
+      val in =
+        if (numeric(i)) num != null &&
+          num.compare(lo(i).asInstanceOf[Decimal]) >= 0 &&
+          num.compare(hi(i).asInstanceOf[Decimal]) <= 0
+        else str != null &&
+          str.binaryCompare(lo(i).asInstanceOf[UTF8String]) >= 0 &&
+          str.binaryCompare(hi(i).asInstanceOf[UTF8String]) <= 0
+      if (in) bits |= 1L << (i % 64)
+      i += 1
+    }
+    bits
+  }
+}
+
+private[ingest] object DirRanges {
+  def apply(stats: Seq[ColStats]): DirRanges = {
+    def bound(cs: ColStats, v: String): AnyRef =
+      if (cs.kind == "num") Decimal(new java.math.BigDecimal(v))
+      else UTF8String.fromString(v)
+    DirRanges(stats.map(_.kind == "num").toArray,
+      stats.map(cs => bound(cs, cs.min)).toArray,
+      stats.map(cs => bound(cs, cs.max)).toArray)
+  }
+}
+
+/** One word of [[DirRanges.word]] for the key given both ways (`num`:
+  * the decimal(38,6) cast, `str`: the string cast). The ranges are a
+  * reference object of the generated code, so the compiled class is the
+  * same whatever the dirs and bounds are. */
+private[ingest] final case class DirHitWord(num: Expression, str: Expression,
+    ranges: DirRanges, word: Int) extends Expression {
+  override def children: Seq[Expression] = Seq(num, str)
+  override def nullable: Boolean = false
+  override def dataType: DataType = LongType
+
+  override def eval(input: InternalRow): Any =
+    ranges.word(num.eval(input).asInstanceOf[Decimal],
+      str.eval(input).asInstanceOf[UTF8String], word)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val r = ctx.addReferenceObj("dirRanges", ranges, classOf[DirRanges].getName)
+    val n = num.genCode(ctx)
+    val s = str.genCode(ctx)
+    ev.copy(code = code"""
+      ${n.code}
+      ${s.code}
+      long ${ev.value} = $r.word(${n.isNull} ? null : ${n.value},
+        ${s.isNull} ? null : ${s.value}, $word);""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): DirHitWord = copy(num = c(0), str = c(1))
 }

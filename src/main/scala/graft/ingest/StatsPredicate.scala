@@ -70,8 +70,7 @@ object StatsPredicate {
           typeOf(schema)(c).foreach { dt =>
             val cvs = vs.flatMap(ManifestCommit.coerceExact(_, dt))
             if (cvs.size == vs.size)
-              kept = kept.filter(
-                ManifestCommit.bloomDirsOf(spark, root, m, c, cvs).toSet)
+              kept = ManifestCommit.bloomDirsOf(spark, root, m, c, cvs, kept)
           }
     }
     kept
@@ -376,7 +375,10 @@ object StatsPredicate {
     *    widening, float→double, date→timestamp[_ntz], ntz↔ltz under a
     *    fixed-offset zone; cast-to-date FLOORS a timestamp, monotone
     *    yet not injective, and must stay wrapped) and only when the
-    *    literal round-trips exactly. OPTIMIZE WHERE's resolved scope
+    *    literal round-trips exactly; an identity cast always unwraps;
+    *  - `cast(col) IN (lits)` unwraps the same way when every listed
+    *    literal does (the analyzer casts `k IN (5, 7)` on a bigint `k`
+    *    to `cast(k AS bigint) IN (…)`). OPTIMIZE WHERE's resolved scope
     *    predicate reaches these same rules through [[extract]] (an
     *    analyzed Cast carries the session zone as `timeZoneId`). */
   private def injectiveCastPair(from: org.apache.spark.sql.types.DataType,
@@ -407,8 +409,11 @@ object StatsPredicate {
     def backLit(c: Cast, l: Literal): Option[Literal] = {
       // an unresolved child has no dataType — no unwrap (conservative)
       val t1 = scala.util.Try(c.child.dataType).getOrElse(return None)
-      if (!injectiveCastPair(t1, c.dataType, c.timeZoneId) ||
-        l.value == null) return None
+      if (l.value == null) return None
+      // an identity cast (the IN coercion casts every side to the common
+      // type, the column included) changes no value
+      if (t1 == c.dataType && l.dataType == t1) return Some(l)
+      if (!injectiveCastPair(t1, c.dataType, c.timeZoneId)) return None
       val back = scala.util.Try(
         Cast(l, t1, c.timeZoneId, EvalMode.TRY).eval(null)).getOrElse(null)
       if (back == null) return None
@@ -429,6 +434,10 @@ object StatsPredicate {
             cmp.withNewChildren(Seq(l2, c.child))).getOrElse(cmp)
         case _ => cmp
       }
+      case in @ In(c: Cast, vs) if colOf(c.child).isDefined && vs.nonEmpty &&
+          vs.forall(_.isInstanceOf[Literal]) =>
+        val back = vs.map(v => backLit(c, v.asInstanceOf[Literal]))
+        if (back.forall(_.isDefined)) In(c.child, back.flatten) else in
     }
   }
 
