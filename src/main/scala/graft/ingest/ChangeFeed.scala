@@ -291,8 +291,7 @@ object ChangeFeed {
     * slowest consumer's lag. */
   def consume(spark: SparkSession, root: String, cursorPath: String,
       keys: Seq[String], assumeUnique: Boolean = false): Option[Consumed] = {
-    val cur = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table")).gen
+    val cur = ManifestCommit.requireManifest(spark, root).gen
     cursorGen(spark, cursorPath) match {
       case Some(g) if g == cur => None
       case Some(g) =>

@@ -214,8 +214,7 @@ object IncrementalAgg {
       s"measure kinds not maintainable: ${badRetr.map(_.out).mkString(",")}")
     require(mm.nonEmpty,
       "applyChangesExact is the min/max path; use applyChanges when none")
-    val m0 = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m0 = ManifestCommit.requireManifest(spark, root)
 
     val cur = mergeStates(
       ManifestCommit.readDirsOf(spark, root, m0, m0.dirs), keys, measures)
@@ -282,7 +281,6 @@ object IncrementalAgg {
       }
       val committed = ManifestCommit.commitReconciled(spark, root, base = m0,
         displaced = m0.dirs, added = Seq(d),
-        schema = m0.tableSchema,
         op = "apply_changes_exact", pinned = m0.dirs.toSet)
       ApplyExactResult(committed, metric(obsJ, "dirty_groups"),
         metric(obs, "rescanned"))
@@ -300,15 +298,13 @@ object IncrementalAgg {
     * append's part wholesale. */
   def compactStates(spark: SparkSession, root: String, keys: Seq[String],
       measures: Seq[Measure]): ManifestCommit.Manifest = {
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val merged = mergeStates(
       ManifestCommit.readDirsOf(spark, root, m, m.dirs), keys, measures)
     val d = ManifestCommit.newDataDir(root)
     merged.write.parquet(d)
     ManifestCommit.commitReconciled(spark, root, base = m,
       displaced = m.dirs, added = Seq(d),
-      schema = m.tableSchema,
       op = "compact", pinned = m.dirs.toSet)
   }
 }

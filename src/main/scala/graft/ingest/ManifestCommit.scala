@@ -34,6 +34,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * shape. Pre-delta-log tables (full content in the pointer, every
   * g-file full) read unchanged and migrate on their next commit.
   *
+  * Every generation, whatever the verb, is written by the one [[commit]]
+  * step (lock, read, CAS, draft, guard, write, prune).
+  *
   * Generations: `commitReplace` installs an exact set of live dirs (the
   * staging-swap analogue, one dir per generation); `commitAppend` adds a
   * delta dir to the live set (the ReplacingMergeTree INSERT analogue).
@@ -77,21 +80,24 @@ object ManifestCommit {
     * `op` labels the operation that produced this generation (append,
     * replace, merge, zorder, compact, …) — the commit-provenance half of
     * the public DESCRIBE HISTORY idea; [[history]] walks the retained
-    * snapshots and derives the dir-level delta per step. */
-  /** `dvs` maps a data dir to its DELETION VECTOR file (merge-on-read
+    * snapshots and derives the dir-level delta per step.
+    *
+    * `dvs` maps a data dir to its DELETION VECTOR file (merge-on-read
     * deletes, the public Delta DV / Iceberg delete-file idea): the dir's
     * rows minus the keys in the DV file are its live rows. DV files are
     * immutable `_dv_*` parquet at the table root holding exactly the key
     * columns; a new delete writes a NEW dv file (the union for that dir)
     * and repoints — dirs and dv files never mutate, so time travel stays
-    * exact (each generation references its own dv set). */
-  /** `txns` records, per idempotent WRITER id, the highest batch version
+    * exact (each generation references its own dv set).
+    *
+    * `txns` records, per idempotent WRITER id, the highest batch version
     * it has committed (the public Delta txnAppId/txnVersion idea): a
     * streaming sink whose checkpoint replays a batch after a crash
     * between manifest commit and checkpoint write presents the same
     * (writer, version) again and the commit is skipped — exactly-once
-    * table contents without any coordination beyond the manifest. */
-  /** `slice` records the table's SLICING EXPRESSION as SQL text (set at
+    * table contents without any coordination beyond the manifest.
+    *
+    * `slice` records the table's SLICING EXPRESSION as SQL text (set at
     * creation by range/month-sliced writers, inherited by every later
     * commit): writers that receive an arbitrary row set — SQL INSERT
     * above all — re-derive the table's layout from it via `writeSliced`,
@@ -100,8 +106,9 @@ object ManifestCommit {
     * skipping until the next OPTIMIZE (the reference's log tables are
     * month-partitioned by DDL — create_clickhouse_models.py:57 — and its
     * INSERT path cannot produce an unpartitioned part). Advisory layout
-    * metadata: readers never consult it. */
-  /** `colmap` is the COLUMN MAPPING (the public Delta column-mapping
+    * metadata: readers never consult it.
+    *
+    * `colmap` is the COLUMN MAPPING (the public Delta column-mapping
     * idea, name-based): logical field name → the PHYSICAL name the data
     * files carry, with only differing entries recorded. Created by
     * `renameColumn` (an O(metadata) commit — cold dirs keep their
@@ -355,15 +362,6 @@ object ManifestCommit {
   def newDataDir(root: String): String =
     s"$root/data_${java.util.UUID.randomUUID().toString.replace("-", "").take(16)}"
 
-  /** EXTERNAL dir/DV reference: an absolute path OUTSIDE this table's
-    * root — how a SHALLOW CLONE's manifest names the source's immutable
-    * dirs. Local entries are stored as bare names; external entries stay
-    * absolute. A clone never OWNS its external references: every delete
-    * path (eager prune, retention, orphan sweep) skips them — reclaiming
-    * them is the SOURCE table's retention's job, exactly the public
-    * Delta shallow-clone contract (vacuuming the source invalidates
-    * clones that still reference the removed files; vacuuming the clone
-    * touches only its own local dirs). */
   /** A fully-qualified manifest entry: a filesystem-absolute path or a
     * scheme-qualified URI (`s3a://…`, `hdfs://…`, `file:/…`, and
     * authority-less forms like `hdfs:/nn/x`) — anything that must NOT
@@ -375,6 +373,15 @@ object ManifestCommit {
   private def isQualified(d: String): Boolean =
     d.startsWith("/") || QualifiedScheme.matcher(d).lookingAt()
 
+  /** EXTERNAL dir/DV reference: an absolute path OUTSIDE this table's
+    * root — how a SHALLOW CLONE's manifest names the source's immutable
+    * dirs. Local entries are stored as bare names; external entries stay
+    * absolute. A clone never OWNS its external references: every delete
+    * path (eager prune, retention, orphan sweep) skips them — reclaiming
+    * them is the SOURCE table's retention's job, exactly the public
+    * Delta shallow-clone contract (vacuuming the source invalidates
+    * clones that still reference the removed files; vacuuming the clone
+    * touches only its own local dirs). */
   private[graft] def isExternal(root: String, d: String): Boolean =
     isQualified(d) && !d.startsWith(root.stripSuffix("/") + "/")
 
@@ -426,6 +433,18 @@ object ManifestCommit {
 
   def readManifest(spark: SparkSession, root: String): Option[Manifest] =
     readManifestRetrying(spark, root, 0)
+
+  /** The live manifest of `root`, or an IllegalArgumentException saying
+    * it is not a manifest-committed table (`what` prefixes the message,
+    * e.g. the verb that needed one). */
+  def requireManifest(spark: SparkSession, root: String,
+      what: String = ""): Manifest =
+    requireManifest(root, readManifest(spark, root), what)
+
+  private def requireManifest(root: String, m: Option[Manifest],
+      what: String): Manifest =
+    m.getOrElse(throw new IllegalArgumentException(
+      s"$what$root is not a manifest-committed table"))
 
   /** The historical manifest of generation `gen`, if its record is
     * still retained (see `expireSnapshots`). */
@@ -502,9 +521,7 @@ object ManifestCommit {
       conditionSql: String): Manifest = {
     require(name.nonEmpty && !name.contains(":") && !name.contains(","),
       s"constraint name may not contain ':' or ',': $name")
-    val m = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val m = requireManifest(spark, root)
     // silently replacing an existing constraint could WEAKEN it while
     // both owners believe theirs is in force — duplicate names error
     require(!m.checks.contains(name),
@@ -530,28 +547,22 @@ object ManifestCommit {
     if (bad.nonEmpty) throw new IllegalArgumentException(
       s"cannot add CHECK constraint $name ($conditionSql) to $root: " +
         s"${bad.head._2} existing row(s) violate it")
-    commitReplace(spark, root, m.dirs, pruneDisplaced = false,
-      stats = m.stats, dvs = m.dvs, schema = m.tableSchema,
-      op = "add_constraint", expectedGen = Some(m.gen),
-      checks = Some(m.checks + (name -> conditionSql)))
+    commit(spark, root, "add_constraint", expectedGen = Some(m.gen))(_ =>
+      m.copy(checks = m.checks + (name -> conditionSql)))
   }
 
   /** Drop a CHECK constraint (O(1) metadata commit). */
   def dropCheck(spark: SparkSession, root: String, name: String,
       ifExists: Boolean = false): Manifest = {
-    val m = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val m = requireManifest(spark, root)
     if (!m.checks.contains(name)) {
       if (ifExists) return m
       throw new IllegalArgumentException(
         s"$root has no CHECK constraint $name (use IF EXISTS); " +
           s"defined: ${m.checks.keys.toSeq.sorted.mkString(", ")}")
     }
-    commitReplace(spark, root, m.dirs, pruneDisplaced = false,
-      stats = m.stats, dvs = m.dvs, schema = m.tableSchema,
-      op = "drop_constraint", expectedGen = Some(m.gen),
-      checks = Some(m.checks - name))
+    commit(spark, root, "drop_constraint", expectedGen = Some(m.gen))(_ =>
+      m.copy(checks = m.checks - name))
   }
 
   /** Per-constraint violation counts over `df` — ONE aggregate pass for
@@ -602,9 +613,7 @@ object ManifestCommit {
     * against the generation the caller observed. Restoring to the live
     * generation is a no-op. */
   def restore(spark: SparkSession, root: String, gen: Long): Manifest = {
-    val cur = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val cur = requireManifest(spark, root)
     if (cur.gen == gen) return cur
     require(gen < cur.gen,
       s"cannot restore $root to generation $gen: the table is at ${cur.gen}")
@@ -613,21 +622,19 @@ object ManifestCommit {
         s"generation $gen of $root is not retained (expired or never " +
           "committed) — cannot restore; size expireSnapshots keepLast to " +
           "the rollback window you need"))
-    commitReplace(spark, root, m.dirs, pruneDisplaced = false,
-      stats = m.stats, schema = m.tableSchema, op = "restore",
-      dvs = m.dvs, slice = m.slice, clearSlice = true,
-      expectedGen = Some(cur.gen), checks = Some(m.checks),
-      // the restored generation's COLUMN MAPPING and tombstones are part
-      // of its read identity: restoring to a pre-rename generation
-      // restores the old name AND the absence of the mapping; restoring
-      // to a pre-drop generation legitimately revives the column — its
-      // bytes are exactly what that generation's readers saw (a
-      // conflicting post-drop re-add was refused by the tombstone, so
-      // no newer dir can have repurposed the name). The restored dir
-      // set is exactly the target generation's, so its metadata is
-      // self-consistent by construction.
-      colmap = Some(m.colmap),
-      deadCols = Some(m.deadCols))
+    // everything but the writer-txn ledger is the target generation's,
+    // COLUMN MAPPING and tombstones included — they are part of its read
+    // identity: restoring to a pre-rename generation restores the old
+    // name AND the absence of the mapping; restoring to a pre-drop
+    // generation legitimately revives the column — its bytes are exactly
+    // what that generation's readers saw (a conflicting post-drop re-add
+    // was refused by the tombstone, so no newer dir can have repurposed
+    // the name). The restored dir set is exactly the target generation's,
+    // so its metadata is self-consistent by construction. The ledger
+    // stays current, as in every replace: a rollback must not reopen a
+    // streaming writer's idempotence window.
+    commit(spark, root, "restore", expectedGen = Some(cur.gen))(_ =>
+      m.copy(txns = cur.txns))
   }
 
   /** LOGICAL→PHYSICAL projection for data-file writes into `root`: under
@@ -638,7 +645,7 @@ object ManifestCommit {
     * case — when the table has no mapping. Helper columns a writer adds
     * (`__slice`, `__zbucket`) pass through untouched. Writers that
     * forget this call are caught loudly by the commit-time footer guard
-    * ([[commitAppend]]/[[commitReconciled]]/[[commitReplace]] under a
+    * ([[guardPhysicalNames]], which every [[commit]] runs under a
     * non-empty mapping). */
   def toPhysicalNames(spark: SparkSession, root: String,
       df: DataFrame): DataFrame = {
@@ -686,10 +693,8 @@ object ManifestCommit {
     *    DROPPED column's tombstone (old files still carry those bytes —
     *    an explicit-schema read would serve stale values). */
   def renameColumn(spark: SparkSession, root: String, from: String,
-      to: String): Manifest = commitLock(root).synchronized {
-    val m = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+      to: String): Manifest = commit(spark, root, "rename_column") { prev =>
+    val m = requireManifest(root, prev, "")
     val cur = m.tableSchema.getOrElse(throw new IllegalArgumentException(
       "graft RENAME COLUMN: the table has no recorded schema " +
         "(pre-evolution table — rewrite it through a schema-recording " +
@@ -762,11 +767,7 @@ object ManifestCommit {
         } else c
       }
     }
-    val m2 = Manifest(m.gen + 1, m.dirs, newStats, Some(newSchema),
-      Some("rename_column"), m.dvs, m.txns, m.slice, m.checks,
-      newColmap, m.deadCols)
-    writeManifest(spark, root, m2, Some(m))
-    m2
+    m.copy(stats = newStats, tableSchema = Some(newSchema), colmap = newColmap)
   }
 
   /** READ-TIME WIDENING whitelist — exactly the upcasts Spark 4's
@@ -815,10 +816,8 @@ object ManifestCommit {
     * recorded key type). */
   def alterColumnType(spark: SparkSession, root: String, colName: String,
       to: org.apache.spark.sql.types.DataType): Manifest =
-      commitLock(root).synchronized {
-    val m = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+      commit(spark, root, "alter_column_type") { prev =>
+    val m = requireManifest(root, prev, "")
     val cur = m.tableSchema.getOrElse(throw new IllegalArgumentException(
       "graft ALTER COLUMN TYPE: the table has no recorded schema " +
         "(pre-evolution table — rewrite it through a schema-recording " +
@@ -884,11 +883,7 @@ object ManifestCommit {
           else c)
         }
       else m.stats
-    val m2 = Manifest(m.gen + 1, m.dirs, newStats, Some(newSchema),
-      Some("alter_column_type"), m.dvs, m.txns, m.slice, m.checks,
-      m.colmap, m.deadCols)
-    writeManifest(spark, root, m2, Some(m))
-    m2
+    m.copy(stats = newStats, tableSchema = Some(newSchema))
   }
 
   /** PARTITION EVOLUTION (the public Iceberg partition-spec-evolution
@@ -906,10 +901,8 @@ object ManifestCommit {
     * table schema (logical names — writers compute the slice over the
     * logical frame, so a column mapping needs no translation here). */
   def setSlice(spark: SparkSession, root: String,
-      slice: Option[String]): Manifest = commitLock(root).synchronized {
-    val m = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+      slice: Option[String]): Manifest = commit(spark, root, "set_slice") { prev =>
+    val m = requireManifest(root, prev, "")
     slice.foreach { s =>
       val cur = m.tableSchema.getOrElse(throw new IllegalArgumentException(
         "graft SET PARTITIONED BY: the table has no recorded schema " +
@@ -928,11 +921,7 @@ object ManifestCommit {
             s"(${cur.fieldNames.mkString(", ")}): ${e.getMessage}")
       }
     }
-    val m2 = Manifest(m.gen + 1, m.dirs, m.stats, m.tableSchema,
-      Some("set_slice"), m.dvs, m.txns, slice, m.checks,
-      m.colmap, m.deadCols)
-    writeManifest(spark, root, m2, Some(m))
-    m2
+    m.copy(slice = slice)
   }
 
   /** ZERO-COPY SHALLOW CLONE (the public Delta `CREATE TABLE ... SHALLOW
@@ -974,26 +963,22 @@ object ManifestCommit {
         throw new IllegalArgumentException(
           s"shallow clone: generation $g of $src is not retained " +
             "(expired or never committed)"))
-      case None => readManifest(spark, src).getOrElse(
-        throw new IllegalArgumentException(
-          s"shallow clone: $src is not a manifest-committed table"))
+      case None => requireManifest(spark, src, "shallow clone: ")
     }
     val extDirs = m.dirs.map(dirAbs(src, _))
     // expectedGen 0: two clones racing to the same destination must not
-    // both claim generation 1 — the loser's CAS fails crisply
-    commitReplace(spark, dstRoot, extDirs, pruneDisplaced = false,
-      expectedGen = Some(0L),
-      stats = m.dirs.zip(extDirs)
-        .flatMap { case (d, e) => m.stats.get(d).map(e -> _) }.toMap,
-      schema = m.tableSchema, op = "clone",
-      dvs = m.dirs.zip(extDirs)
-        .flatMap { case (d, e) => m.dvs.get(d).map(f => e -> dirAbs(src, f)) }
-        .toMap,
-      slice = m.slice, clearSlice = true,
-      checks = Some(m.checks), expectedChecks = None,
-      // the clone reads the SOURCE's physical files — its column mapping
-      // and tombstones are part of the cloned read identity
-      colmap = Some(m.colmap), deadCols = Some(m.deadCols))
+    // both claim generation 1 — the loser's CAS fails crisply. Schema,
+    // slicing, constraints, and the column mapping and tombstones (the
+    // clone reads the SOURCE's physical files) carry; the writer-txn
+    // ledger is the source's own and does not.
+    commit(spark, dstRoot, "clone", expectedGen = Some(0L))(_ =>
+      m.copy(dirs = extDirs,
+        stats = m.dirs.zip(extDirs)
+          .flatMap { case (d, e) => m.stats.get(d).map(e -> _) }.toMap,
+        dvs = m.dirs.zip(extDirs)
+          .flatMap { case (d, e) => m.dvs.get(d).map(f => e -> dirAbs(src, f)) }
+          .toMap,
+        txns = Map.empty))
   }
 
   /** IN-PLACE conversion of a plain parquet directory into a
@@ -1356,9 +1341,7 @@ object ManifestCommit {
     * an unreferenced orphan that `pruneOrphans` reclaims). After this
     * the table depends on no other root. */
   def materializeExternal(spark: SparkSession, root: String): Manifest = {
-    val m = readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val m = requireManifest(spark, root)
     val extDirs = m.dirs.filter(isExternal(root, _))
     val extDvs = m.dvs.values.toSeq.distinct.filter(isExternal(root, _))
     if (extDirs.isEmpty && extDvs.isEmpty) return m
@@ -1418,14 +1401,11 @@ object ManifestCommit {
       }
       val local: Map[String, String] =
         targets.map { case (s, d) => s -> new Path(d).getName }.toMap
-      commitReplace(spark, root,
-        m.dirs.map(d => local.getOrElse(d, d)),
-        pruneDisplaced = false,
-        stats = m.stats.map { case (d, cs) => local.getOrElse(d, d) -> cs },
-        dvs = m.dvs.map { case (d, f) =>
-          local.getOrElse(d, d) -> local.getOrElse(f, f) },
-        schema = m.tableSchema, op = "materialize",
-        expectedGen = Some(m.gen), checks = Some(m.checks))
+      commit(spark, root, "materialize", expectedGen = Some(m.gen))(_ =>
+        m.copy(dirs = m.dirs.map(d => local.getOrElse(d, d)),
+          stats = m.stats.map { case (d, cs) => local.getOrElse(d, d) -> cs },
+          dvs = m.dvs.map { case (d, f) =>
+            local.getOrElse(d, d) -> local.getOrElse(f, f) }))
     } catch { case scala.util.control.NonFatal(e) =>
       // copied-but-uncommitted dirs are orphans — reclaim them now
       // rather than waiting for pruneOrphans (best-effort)
@@ -1873,12 +1853,13 @@ object ManifestCommit {
     * tiny `#ref` naming the generation — commit I/O drops from O(dirs)
     * to O(changes). A full checkpoint is forced every
     * [[CheckpointInterval]] generations (tracked via the pointer's
-    * `#base` line) so chains stay short; full replaces (`prev = None`)
-    * always checkpoint, which is what keeps the eager-prune path
-    * self-contained. Old-format tables (full content in the pointer)
-    * keep reading fine; their first new commit moves them onto the log. */
+    * `#base` line) so chains stay short; a commit that prunes history
+    * (`prev = None`) always checkpoints, which is what keeps the
+    * eager-prune path self-contained. Old-format tables (full content in
+    * the pointer) keep reading fine; their first new commit moves them
+    * onto the log. */
   private def writeManifest(spark: SparkSession, root: String, m: Manifest,
-      prev: Option[Manifest] = None): Unit = {
+      prev: Option[Manifest]): Unit = {
     // the `__graft_` namespace is RESERVED for engine helper columns
     // (ChangeFeed's gk/gn shape columns, applyTo's change-type marker):
     // a table column in it would be silently REPLACED by withColumn in
@@ -1933,13 +1914,6 @@ object ManifestCommit {
     resolveCache.put(cacheKey(root, m.gen), m)
   }
 
-  /** Staging-swap analogue: install `dirs` (relative names under `root`)
-    * as the EXACT live set. Displaced dirs of the previous generation are
-    * deleted after the commit (safe: they are no longer reachable through
-    * the manifest; a reader holding the old generation's file list mid-
-    * scan has the same exposure as with the rename swap, and zero
-    * exposure on object stores where deletes don't invalidate open
-    * reads). Returns the new manifest. */
   /** Per-root commit arbitration for SAME-PROCESS writers: manifest
     * commits happen on the Spark driver, so concurrent committers of one
     * table normally share this JVM — an interned lock around the
@@ -1953,20 +1927,102 @@ object ManifestCommit {
   private def commitLock(root: String): Object =
     commitLocks.computeIfAbsent(root, _ => new Object)
 
-  /** `slice`: record (or at creation, set) the table's slicing expression
+  /** The manifest a table with no commits yet presents to [[commit]]'s
+    * `next` functions that build on the live generation. */
+  private[graft] val EmptyTable = Manifest(0L, Nil)
+
+  /** The ONE commit step every manifest generation goes through — every
+    * table change is one optimistic action on the log (the public Delta
+    * design). Under the per-root [[commitLock]] it reads the live
+    * manifest (`prev`, None for a table with no commits), absorbs a
+    * writer-txn replay, checks the constraint CAS and then the
+    * generation CAS, lets `next` draft the new generation from `prev`,
+    * stamps `gen`, `op` and the writer txn, guards physical names and
+    * writes the record: a delta whenever the change fits
+    * [[renderDelta]], a full checkpoint when the commit prunes history.
+    *
+    * `next` builds on `prev` with `copy`, so txns, slice, checks,
+    * colmap and deadCols carry over unless the verb sets them; it may
+    * throw to refuse the commit (a failed guard, an irreconcilable
+    * rebase), and then nothing is written.
+    *
+    * `txn = Some((writer, version))`: if `writer` already committed this
+    * or a later version, the commit is a replay — `onReplay` runs and
+    * the live manifest is returned unchanged. This runs BEFORE either
+    * CAS: a replayed batch's rows are already committed (and were
+    * re-validated by any constraint ADDed since — setCheck scans
+    * existing rows), so failing its CAS would turn a routine
+    * crash-replay into a spurious conflict.
+    *
+    * `pruneDisplaced`: eager-prune mode — after the write, the dirs and
+    * DV files the new generation dropped are deleted, and with them
+    * every older record (those snapshots would dangle). `false` is the
+    * time-travel mode that keeps both. */
+  private[graft] def commit(spark: SparkSession, root: String, op: String,
+      expectedGen: Option[Long] = None,
+      expectedChecks: Option[Map[String, String]] = None,
+      pruneDisplaced: Boolean = false,
+      txn: Option[(String, Long)] = None,
+      onReplay: () => Unit = () => ())(
+      next: Option[Manifest] => Manifest): Manifest =
+      commitLock(root).synchronized {
+    val prev = readManifest(spark, root)
+    val replay = prev.filter(p =>
+      txn.exists { case (w, v) => p.txns.get(w).exists(_ >= v) })
+    if (replay.isDefined) { onReplay(); return replay.get }
+    checkConstraintCas(root, prev.map(_.checks).getOrElse(Map.empty),
+      expectedChecks)
+    checkCas(root, prev, expectedGen)
+    val drafted = next(prev)
+    val m = drafted.copy(gen = prev.map(_.gen + 1).getOrElse(1L),
+      op = Some(op), txns = drafted.txns ++ txn)
+    guardPhysicalNames(spark, root, m, prev.map(_.dirs.toSet).getOrElse(Set.empty))
+    writeManifest(spark, root, m, prev.filterNot(_ => pruneDisplaced))
+    if (pruneDisplaced) prev.foreach { p =>
+      val f = fs(spark, root)
+      // set membership: Seq.contains here is O(dirs^2) at high dir counts.
+      // DV "files" are single-part parquet DIRECTORIES, so both deletes
+      // are recursive. EXTERNAL (shallow-clone) references are never
+      // deleted — the clone doesn't own them; the source's retention does
+      val live = m.dirs.toSet ++ m.dvs.values
+      (p.dirs ++ p.dvs.values.toSeq.distinct).filterNot(live)
+        .filterNot(isExternal(root, _))
+        .foreach(d => f.delete(new Path(root, d), true))
+      snapshotGens(spark, root).filter(_ < m.gen).foreach { g =>
+        f.delete(snapshotPath(root, g), false)
+        resolveCache.remove(cacheKey(root, g)) // expired gens must not resolve
+      }
+    }
+    m
+  }
+
+  /** Staging-swap analogue: install `dirs` (relative names under `root`)
+    * as the EXACT live set. Displaced dirs of the previous generation are
+    * deleted after the commit (safe: they are no longer reachable through
+    * the manifest; a reader holding the old generation's file list mid-
+    * scan has the same exposure as with the rename swap, and zero
+    * exposure on object stores where deletes don't invalidate open
+    * reads). Returns the new manifest.
+    *
+    * `schema` is caller-asserted, never silently inherited: a full
+    * replace may legitimately change the table's shape, and a stale
+    * schema line would MASK new columns at read (explicit-schema reads
+    * only see recorded columns). None → no schema line → mergeSchema
+    * fallback. Writer txns, CHECK constraints and the column mapping
+    * carry over from the live generation: a compaction that lands
+    * between a streaming commit and its checkpoint write must not reopen
+    * the idempotence window for the replayed batch.
+    *
+    * `slice`: record (or at creation, set) the table's slicing expression
     * — SQL text over the table's columns; `None` INHERITS the previous
     * generation's (slicing is standing layout policy, and an INSERT
-    * OVERWRITE must not silently drop it). `clearSlice = true` makes
-    * `slice` authoritative instead — `None` then records NO slicing
-    * expression (RESTORE to a pre-slicing generation must restore its
-    * absence, not inherit the current one).
+    * OVERWRITE must not silently drop it).
     *
     * `expectedChecks`: the CHECK-constraint set the caller VALIDATED its
     * rows against (pass `Some(Map.empty)` when the table had none —
     * skipping the guard on an empty read is exactly the hole that lets a
     * concurrent ADD CONSTRAINT join unproven rows); `None` only for
-    * writers that re-state rows already proven (metadata-only commits
-    * CAS-guarded by `expectedGen`, TRUNCATE, row-removal). */
+    * writers that re-state rows already proven (row removal, re-layout). */
   def commitReplace(spark: SparkSession, root: String, dirs: Seq[String],
       pruneDisplaced: Boolean = true,
       stats: Map[String, Seq[ColStats]] = Map.empty,
@@ -1975,68 +2031,20 @@ object ManifestCommit {
       op: String = "replace",
       dvs: Map[String, String] = Map.empty,
       slice: Option[String] = None,
-      checks: Option[Map[String, String]] = None,
-      expectedChecks: Option[Map[String, String]] = None,
-      clearSlice: Boolean = false,
-      colmap: Option[Map[String, String]] = None,
-      deadCols: Option[Seq[String]] = None): Manifest =
-      commitLock(root).synchronized {
-    // local dirs canonicalize to bare names; external (clone) refs stay
-    val names = dirs.map(entryName(root))
-    val prev = readManifest(spark, root)
-    checkConstraintCas(root, prev.map(_.checks).getOrElse(Map.empty),
-      expectedChecks)
-    checkCas(root, prev, expectedGen)
-    // schema is caller-asserted, never silently inherited: a full replace
-    // may legitimately change the table's shape, and a stale schema line
-    // would MASK new columns at read (explicit-schema reads only see
-    // recorded columns). None → no schema line → mergeSchema fallback.
-    // writer-txn state is PRESERVED through replaces: a compaction that
-    // lands between a streaming commit and its checkpoint write must not
-    // reopen the idempotence window for the replayed batch.
-    // colmap/deadCols INHERIT by default (column mapping is standing
-    // layout metadata, like the slicing expression); RESTORE / CLONE /
-    // RENAME pass the target state explicitly.
-    val m = Manifest(prev.map(_.gen + 1).getOrElse(1L), names,
-      stats.map { case (d, cs) => entryName(root)(d) -> cs }, schema, Some(op),
-      dvs.map { case (d, f) => entryName(root)(d) -> f },
-      prev.map(_.txns).getOrElse(Map.empty),
-      if (clearSlice) slice else slice.orElse(prev.flatMap(_.slice)),
-      checks.getOrElse(prev.map(_.checks).getOrElse(Map.empty)),
-      colmap.getOrElse(prev.map(_.colmap).getOrElse(Map.empty)),
-      deadCols.getOrElse(prev.map(_.deadCols).getOrElse(Nil)))
-    guardPhysicalNames(spark, root, m, prev.map(_.dirs.toSet).getOrElse(Set.empty))
-    writeManifest(spark, root, m)
-    if (pruneDisplaced) {
-      // eager-prune mode: displaced dirs go away, so the older snapshots
-      // that reference them would dangle — expire them in the same breath
-      // (pruneDisplaced = false is the time-travel mode that keeps both).
-      // Set membership: Seq.contains here is O(dirs^2) at high dir counts
-      val f = fs(spark, root)
-      val nameSet = names.toSet
-      // EXTERNAL (shallow-clone) references are never deleted — the
-      // clone doesn't own them; the source table's retention does
-      prev.foreach(_.dirs.filterNot(nameSet)
-        .filterNot(isExternal(root, _)).foreach { d =>
-          f.delete(new Path(root, d), true)
-        })
-      // displaced deletion-vector files go with their generation; DV
-      // "files" are single-part parquet DIRECTORIES (deleteWhere writes
-      // them via coalesce(1).write.parquet), so the delete must be
-      // recursive — the same contract expireSnapshots and pruneOrphans
-      // already apply to them
-      prev.foreach(_.dvs.values.toSeq.distinct
-        .filterNot(m.dvs.values.toSet)
-        .filterNot(isExternal(root, _)).foreach { v =>
-          f.delete(new Path(root, v), true)
-        })
-      snapshotGens(spark, root).filter(_ < m.gen).foreach { g =>
-        f.delete(snapshotPath(root, g), false)
-        resolveCache.remove(cacheKey(root, g)) // expired gens must not resolve
-      }
+      expectedChecks: Option[Map[String, String]] = None): Manifest =
+    commit(spark, root, op, expectedGen, expectedChecks, pruneDisplaced) { prev =>
+      // local dirs canonicalize to bare names; external (clone) refs stay
+      val name = entryName(root) _
+      prev.getOrElse(EmptyTable).copy(dirs = dirs.map(name),
+        stats = stats.map { case (d, cs) => name(d) -> cs },
+        tableSchema = schema,
+        dvs = dvs.map { case (d, f) => name(d) -> f },
+        slice = slice.orElse(prev.flatMap(_.slice)))
     }
-    m
-  }
+
+  /** The `disjoint` proof of a row-preserving re-layout (OPTIMIZE,
+    * compaction): a concurrent append commutes with it by construction. */
+  val AlwaysDisjoint: (String, Seq[ColStats]) => Boolean = (_, _) => true
 
   /** REBASING replace-family commit (the public Delta-style logical
     * conflict reconciliation): the commit is described as a DELTA against
@@ -2052,6 +2060,12 @@ object ManifestCommit {
     *   - `displaced`: dirs this commit consumes (leave the live set);
     *   - `added` (+ `addedStats`): new immutable dirs it installs;
     *   - `dvUpdates`: deletion-vector (re)points on surviving dirs;
+    *   - `statUpdates`: re-stated stats of SURVIVING dirs (the DV-dead
+    *     counter rides a dv repoint this way); such dirs must be in
+    *     `pinned` — the rebase check that their content and dv are
+    *     unchanged is what keeps a re-stated stat truthful;
+    *   - `schema`: the new generation's recorded schema; None keeps the
+    *     current generation's;
     *   - `pinned`: every dir whose CONTENT the writer read — the commit's
     *     read set. Rebase requires each pinned dir to still be live with
     *     an UNCHANGED deletion vector (a concurrent rewrite/delete of a
@@ -2079,12 +2093,6 @@ object ManifestCommit {
     * History (`pruneDisplaced = false` semantics — rebasing callers all
     * retain snapshots) and writer-txn state follow the current
     * generation. */
-  val AlwaysDisjoint: (String, Seq[ColStats]) => Boolean = (_, _) => true
-
-  /** `statUpdates` re-states the stats of SURVIVING dirs (the DV-dead
-    * counter rides a dv repoint this way); such dirs must be in
-    * `pinned` — the rebase check that their content and dv are
-    * unchanged is what keeps a re-stated stat truthful. */
   def commitReconciled(spark: SparkSession, root: String,
       base: Manifest,
       displaced: Seq[String],
@@ -2096,53 +2104,46 @@ object ManifestCommit {
       pinned: Set[String] = Set.empty,
       disjoint: (String, Seq[ColStats]) => Boolean = AlwaysDisjoint,
       statUpdates: Map[String, Seq[ColStats]] = Map.empty,
-      expectedChecks: Option[Map[String, String]] = None): Manifest =
-      commitLock(root).synchronized {
-    def name(d: String) = entryName(root)(d)
+      expectedChecks: Option[Map[String, String]] = None): Manifest = {
+    val name = entryName(root) _
     val dispN = displaced.map(name).toSet
-    val addN = added.map(name)
-    val cur = readManifest(spark, root).getOrElse(throw new IllegalStateException(
-      s"$root: commitReconciled on a table with no manifest"))
-    checkConstraintCas(root, cur.checks, expectedChecks)
-    if (cur.gen != base.gen) {
-      // ---- rebase path: verify the delta commutes with what interleaved
-      // (set-indexed lookups: a full-rewrite op pins EVERY dir, so
-      // Seq.contains would make this loop O(dirs^2) at high dir counts)
-      if (cur.tableSchema.map(_.json) != base.tableSchema.map(_.json))
-        throw new ConcurrentCommitException(
-          s"$root: schema changed concurrently (gen ${base.gen} -> ${cur.gen}); " +
-            "re-read and retry")
-      val curSet = cur.dirs.toSet
-      val baseSet = base.dirs.toSet
-      (pinned.map(name(_)) ++ dispN).foreach { d =>
-        if (!curSet.contains(d))
+    commit(spark, root, op, expectedChecks = expectedChecks) { prev =>
+      val cur = prev.getOrElse(throw new IllegalStateException(
+        s"$root: commitReconciled on a table with no manifest"))
+      if (cur.gen != base.gen) {
+        // ---- rebase path: verify the delta commutes with what interleaved
+        // (set-indexed lookups: a full-rewrite op pins EVERY dir, so
+        // Seq.contains would make this loop O(dirs^2) at high dir counts)
+        if (cur.tableSchema.map(_.json) != base.tableSchema.map(_.json))
           throw new ConcurrentCommitException(
-            s"$root: dir $d in this commit's read set was rewritten by a " +
-              s"concurrent commit (gen ${base.gen} -> ${cur.gen}); re-read and retry")
-        if (cur.dvs.get(d) != base.dvs.get(d))
-          throw new ConcurrentCommitException(
-            s"$root: dir $d in this commit's read set had its deletion " +
-              "vector repointed concurrently; re-read and retry")
+            s"$root: schema changed concurrently (gen ${base.gen} -> ${cur.gen}); " +
+              "re-read and retry")
+        val curSet = cur.dirs.toSet
+        val baseSet = base.dirs.toSet
+        (pinned.map(name(_)) ++ dispN).foreach { d =>
+          if (!curSet.contains(d))
+            throw new ConcurrentCommitException(
+              s"$root: dir $d in this commit's read set was rewritten by a " +
+                s"concurrent commit (gen ${base.gen} -> ${cur.gen}); re-read and retry")
+          if (cur.dvs.get(d) != base.dvs.get(d))
+            throw new ConcurrentCommitException(
+              s"$root: dir $d in this commit's read set had its deletion " +
+                "vector repointed concurrently; re-read and retry")
+        }
+        cur.dirs.filterNot(baseSet).foreach { d =>
+          if (!disjoint(d, cur.stats.getOrElse(d, Nil)))
+            throw new ConcurrentCommitException(
+              s"$root: concurrently-added dir $d cannot be proven disjoint " +
+                "from this commit's predicate; re-read and retry")
+        }
       }
-      cur.dirs.filterNot(baseSet).foreach { d =>
-        if (!disjoint(d, cur.stats.getOrElse(d, Nil)))
-          throw new ConcurrentCommitException(
-            s"$root: concurrently-added dir $d cannot be proven disjoint " +
-              "from this commit's predicate; re-read and retry")
-      }
+      cur.copy(dirs = cur.dirs.filterNot(dispN) ++ added.map(name),
+        stats = (cur.stats -- dispN) ++
+          addedStats.map { case (d, cs) => name(d) -> cs } ++
+          statUpdates.map { case (d, cs) => name(d) -> cs },
+        tableSchema = schema.orElse(cur.tableSchema),
+        dvs = (cur.dvs -- dispN) ++ dvUpdates.map { case (d, f) => name(d) -> f })
     }
-    val m = Manifest(
-      cur.gen + 1,
-      cur.dirs.filterNot(dispN) ++ addN,
-      (cur.stats -- dispN) ++ addedStats.map { case (d, cs) => name(d) -> cs } ++
-        statUpdates.map { case (d, cs) => name(d) -> cs },
-      schema,
-      Some(op),
-      (cur.dvs -- dispN) ++ dvUpdates.map { case (d, f) => name(d) -> f },
-      cur.txns, cur.slice, cur.checks, cur.colmap, cur.deadCols)
-    guardPhysicalNames(spark, root, m, cur.dirs.toSet)
-    writeManifest(spark, root, m, Some(cur))
-    m
   }
 
   /** Snapshot retention: keep the newest `keepLast` generations (always
@@ -2235,8 +2236,9 @@ object ManifestCommit {
   }
 
   /** ReplacingMergeTree INSERT analogue: add one delta dir to the live
-    * set (existing dirs keep their stats). */
-  /** `txn = Some((writerId, version))` makes the append IDEMPOTENT: if
+    * set (existing dirs keep their stats).
+    *
+    * `txn = Some((writerId, version))` makes the append IDEMPOTENT: if
     * this writer already committed this (or a later) version, the call
     * is a no-op — the staged `dir` is deleted and the CURRENT manifest
     * returned unchanged. A checkpointed streaming sink passes its
@@ -2269,44 +2271,16 @@ object ManifestCommit {
       // state part). A recorded schema always wins; appends never
       // change schema. Spares every later read the mergeSchema footer
       // sweep a schemaless table pays (r19).
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Manifest =
-      commitLock(root).synchronized {
-    val prev = readManifest(spark, root)
-    // the txn replay check runs FIRST: a replayed batch's rows are
-    // ALREADY committed (and were re-validated by any constraint ADDed
-    // since — setCheck scans existing rows), so absorbing it as a no-op
-    // is correct under any constraint set; failing its CAS would turn a
-    // routine crash-replay into a spurious conflict
-    txn.foreach { case (writer, ver) =>
-      prev.foreach { p =>
-        if (p.txns.get(writer).exists(_ >= ver)) {
-          // replayed batch: drop every staged dir, serve the current gen
-          dirs.foreach { case (d, _) => fs(spark, root).delete(new Path(d), true) }
-          return p
-        }
-      }
-    }
-    checkConstraintCas(root, prev.map(_.checks).getOrElse(Map.empty),
-      expectedChecks)
-    checkCas(root, prev, expectedGen)
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Manifest = {
     val named = dirs.map { case (d, cs) => entryName(root)(d) -> cs }
-    // appends inherit the recorded schema: an append adds rows, not
-    // columns (schema-changing writes go through commitReplace/merge)
-    val m = Manifest(
-      prev.map(_.gen + 1).getOrElse(1L),
-      prev.map(_.dirs).getOrElse(Nil) ++ named.map(_._1),
-      prev.map(_.stats).getOrElse(Map.empty) ++
-        named.collect { case (n, cs) if cs.nonEmpty => n -> cs },
-      prev.flatMap(_.tableSchema).orElse(schema), Some(op),
-      prev.map(_.dvs).getOrElse(Map.empty),
-      prev.map(_.txns).getOrElse(Map.empty) ++ txn,
-      prev.flatMap(_.slice),
-      prev.map(_.checks).getOrElse(Map.empty),
-      prev.map(_.colmap).getOrElse(Map.empty),
-      prev.map(_.deadCols).getOrElse(Nil))
-    guardPhysicalNames(spark, root, m, prev.map(_.dirs.toSet).getOrElse(Set.empty))
-    writeManifest(spark, root, m, prev)
-    m
+    commit(spark, root, op, expectedGen, expectedChecks, txn = txn,
+        onReplay = () => dirs.foreach { case (d, _) =>
+          fs(spark, root).delete(new Path(d), true) }) { prev =>
+      val m = prev.getOrElse(EmptyTable)
+      m.copy(dirs = m.dirs ++ named.map(_._1),
+        stats = m.stats ++ named.collect { case (n, cs) if cs.nonEmpty => n -> cs },
+        tableSchema = m.tableSchema.orElse(schema))
+    }
   }
 
   /** Commit provenance over the RETAINED history (DESCRIBE HISTORY,
@@ -2352,13 +2326,6 @@ object ManifestCommit {
   final class ConcurrentCommitException(msg: String)
       extends RuntimeException(msg)
 
-  /** Optimistic concurrency: the caller's `expectedGen` (the generation
-    * it READ before staging its write; None/0 = expects a fresh table)
-    * must still be current at commit time. Locally this is check-then-
-    * rename — a narrowed, not closed, race window; on an object store
-    * the manifest PUT carries If-Match on the read ETag, which closes it
-    * (the single-mutable-file design exists exactly so the store's
-    * conditional write can arbitrate writers). */
   /** A writer that VALIDATED its rows against one constraint set must
     * not commit under another — a concurrent ADD CONSTRAINT between the
     * writer's read and its commit would otherwise land rows no one
@@ -2397,6 +2364,13 @@ object ManifestCommit {
       }
     }
 
+  /** Optimistic concurrency: the caller's `expectedGen` (the generation
+    * it READ before staging its write; None/0 = expects a fresh table)
+    * must still be current at commit time. Locally this is check-then-
+    * rename — a narrowed, not closed, race window; on an object store
+    * the manifest PUT carries If-Match on the read ETag, which closes it
+    * (the single-mutable-file design exists exactly so the store's
+    * conditional write can arbitrate writers). */
   private def checkCas(root: String, prev: Option[Manifest],
       expectedGen: Option[Long]): Unit =
     expectedGen.foreach { eg =>

@@ -187,17 +187,21 @@ object MergeInto {
       insertUnmatched: Boolean = true,
       evolveSchema: Boolean = false,
       retries: Int = 0,
-      unmatchedDeleteInserts: Boolean = false): MergeResult = {
-    var attempt = 0
-    while (attempt < retries.max(0)) {
-      try return mergeOnce(spark, root, source, keys, deleteWhen,
-        insertUnmatched, evolveSchema, unmatchedDeleteInserts)
-      catch {
-        case _: ManifestCommit.ConcurrentCommitException => attempt += 1
-      }
+      unmatchedDeleteInserts: Boolean = false): MergeResult =
+    retrying(retries)(mergeOnce(spark, root, source, keys, deleteWhen,
+      insertUnmatched, evolveSchema, unmatchedDeleteInserts))
+
+  /** The OCC loop (optimistic concurrency control) of every DML verb:
+    * `attempt` runs up to `retries + 1` times while it loses to a
+    * concurrent commit, each run re-reading the table; the final
+    * attempt's conflict propagates. */
+  private def retrying[T](retries: Int)(attempt: => T): T = {
+    var left = retries.max(0)
+    while (left > 0) {
+      try return attempt
+      catch { case _: ManifestCommit.ConcurrentCommitException => left -= 1 }
     }
-    mergeOnce(spark, root, source, keys, deleteWhen, insertUnmatched,
-      evolveSchema, unmatchedDeleteInserts) // final attempt propagates its conflict
+    attempt
   }
 
   private def mergeOnce(
@@ -210,8 +214,7 @@ object MergeInto {
       evolveSchema: Boolean,
       unmatchedDeleteInserts: Boolean = false): MergeResult = {
     require(keys.nonEmpty, "merge requires at least one key column")
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
 
     // the target's schema comes from the MANIFEST when recorded — building
     // a frame over every live dir just to learn the column set forces an
@@ -243,9 +246,12 @@ object MergeInto {
     val outCols = tCols ++ extraCols
 
     // ---- ONE aggregate over the source: key uniqueness plus the exact
-    // affected-dir test (scanKeys)
+    // affected-dir test (scanKeys). Keys are distinct as a struct, which
+    // is never null itself, so a null key counts like any other value —
+    // the null-safe `<=>` join below matches it (countDistinct over the
+    // bare keys would skip it and refuse every null-keyed source)
     val scan = scanKeys(m, source, keys.head,
-      Seq(count(lit(1)).as("n"), countDistinct(keys.head, keys.tail: _*).as("d")),
+      Seq(count(lit(1)).as("n"), countDistinct(struct(keys.map(col): _*)).as("d")),
       nullSafe = true)
     require(scan.lead.getLong(0) == scan.lead.getLong(1),
       s"source is not unique on (${keys.mkString(",")}): " +
@@ -378,24 +384,17 @@ object MergeInto {
     * Reads apply DVs as per-dir anti-joins; `OPTIMIZE`/compaction and a
     * later `merge` of a dv'd dir materialize the subtraction and drop
     * the DV. Time travel is exact: each generation references its own
-    * immutable dv files. */
-  /** `retries`: bounded auto-retry on concurrent-commit conflict, the
+    * immutable dv files.
+    *
+    * `retries`: bounded auto-retry on concurrent-commit conflict, the
     * same OCC loop as [[merge]]; staged `_dv_*` files of an aborted
     * attempt are reclaimed eagerly. */
   def deleteWhere(
       spark: SparkSession,
       root: String,
       keys: DataFrame,
-      retries: Int = 0): DeleteResult = {
-    var attempt = 0
-    while (attempt < retries.max(0)) {
-      try return deleteWhereOnce(spark, root, keys)
-      catch {
-        case _: ManifestCommit.ConcurrentCommitException => attempt += 1
-      }
-    }
-    deleteWhereOnce(spark, root, keys)
-  }
+      retries: Int = 0): DeleteResult =
+    retrying(retries)(deleteWhereOnce(spark, root, keys))
 
   private def deleteWhereOnce(
       spark: SparkSession,
@@ -403,8 +402,7 @@ object MergeInto {
       keys: DataFrame): DeleteResult = {
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "deleteWhere requires at least one key column")
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val distinctKeys = keys.distinct().cache()
     try {
       // exact affected-dir test on keyCols.head — same contract as merge
@@ -477,7 +475,6 @@ object MergeInto {
           displaced = Nil,
           added = Nil,
           dvUpdates = newDvs,
-          schema = m.tableSchema,
           op = "delete",
           pinned = touched.toSet,
           disjoint = scan.disjoint,
@@ -553,7 +550,7 @@ object MergeInto {
     * columns by NAME (unresolved), e.g. `col("x") % 97 === 0`. */
   def deleteRows(spark: SparkSession, root: String, cond: Column,
       retries: Int = 0): RowOpResult =
-    rowOpRetrying(retries) {
+    retrying(retries) {
       rowOp(spark, root, cond, "delete",
         (df, c) => df.filter(!coalesce(c, lit(false))))
     }
@@ -572,7 +569,7 @@ object MergeInto {
     * concurrent commits provably disjoint from the predicate. */
   def replaceWhere(spark: SparkSession, root: String, data: DataFrame,
       cond: Column, retries: Int = 0): RowOpResult =
-    rowOpRetrying(retries) {
+    retrying(retries) {
       rowOp(spark, root, cond, "replace_where",
         (df, c) => df.filter(!coalesce(c, lit(false))), insert = Some(data))
     }
@@ -613,7 +610,7 @@ object MergeInto {
         }
         df.select(cols: _*)
       })
-    rowOpRetrying(retries) {
+    retrying(retries) {
       if (mode == "cow") cow()
       else updateMorOnce(spark, root, assignments, cond,
         force = mode == "mor").getOrElse(cow())
@@ -637,8 +634,7 @@ object MergeInto {
       assignments: Seq[(String, Column)], cond: Column,
       force: Boolean): Option[RowOpResult] = {
     requireDeterministic("update condition", cond)
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val tSchema = org.apache.spark.sql.types.StructType(
       m.tableSchema.getOrElse(
         ManifestCommit.readDirsOf(spark, root, m, m.dirs).schema)
@@ -731,7 +727,7 @@ object MergeInto {
             displaced = Nil, added = written.map(_._1),
             addedStats = written.toMap,
             dvUpdates = newDvs, statUpdates = dvStatUpdates,
-            schema = m.tableSchema, op = "update",
+            op = "update",
             pinned = touched.toSet,
             disjoint = (_, st) => ex.disjoint(st),
             expectedChecks = Some(m.checks))
@@ -742,15 +738,6 @@ object MergeInto {
         }
       Some(RowOpResult(committed.gen, m.dirs.size, 0, totalMatched))
     } finally { matched.unpersist(); () }
-  }
-
-  private def rowOpRetrying(retries: Int)(f: => RowOpResult): RowOpResult = {
-    var attempt = 0
-    while (attempt < retries.max(0)) {
-      try return f
-      catch { case _: ManifestCommit.ConcurrentCommitException => attempt += 1 }
-    }
-    f
   }
 
   private def requireDeterministic(what: String, c: Column): Unit =
@@ -776,8 +763,7 @@ object MergeInto {
       op: String, transform: (DataFrame, Column) => DataFrame,
       insert: Option[DataFrame] = None): RowOpResult = {
     requireDeterministic(s"$op condition", cond)
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val tSchema = org.apache.spark.sql.types.StructType(
       m.tableSchema.getOrElse(
         ManifestCommit.readDirsOf(spark, root, m, m.dirs).schema)
@@ -903,7 +889,7 @@ object MergeInto {
     val added = delAdded ++ insDirs
     val committed = ManifestCommit.commitReconciled(spark, root, m,
       displaced = affected, added = added.map(_._1), addedStats = added.toMap,
-      schema = m.tableSchema, op = op, pinned = affected.toSet,
+      op = op, pinned = affected.toSet,
       disjoint = (_, st) => ex.disjoint(st),
       // inserting rows must CAS against concurrent constraint changes,
       // exactly like SQL INSERT (a concurrent ADD CONSTRAINT validated

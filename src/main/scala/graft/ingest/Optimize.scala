@@ -75,8 +75,7 @@ object Optimize {
       s"rankBuckets=$rankBuckets exceeds the ${63 / cols.size}-bit z-slot " +
         s"of a ${cols.size}-column key — ranks would spill into " +
         "co-dimensions' interleave bits and silently degrade clustering")
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     // `scope` ([[zorderWhere]]): the rewrite reads and consumes ONLY the
     // in-scope dirs (DV-aware); everything else is never touched
     val inScope = scope.map(s => m.dirs.filter(s.contains))
@@ -292,9 +291,7 @@ object Optimize {
       cond: org.apache.spark.sql.Column, smallBytes: Long,
       bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01): ManifestCommit.Manifest = {
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     compactSmall(spark, root, smallBytes, bloomCols, bloomFpp,
       scope = Some(whereScope(spark, m, cond)))
   }
@@ -374,9 +371,7 @@ object Optimize {
       bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01,
       rankBuckets: Int = 0): ManifestCommit.Manifest = {
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val scope = whereScope(spark, m, cond)
     if (scope.isEmpty) return m
     zorderCompactN(spark, root, cols,
@@ -418,7 +413,6 @@ object Optimize {
       displaced = fold,
       added = written.map(_._1),
       addedStats = written.toMap,
-      schema = m.tableSchema,
       op = op,
       pinned = fold.toSet)
   }
@@ -457,8 +451,7 @@ object Optimize {
       scope: Option[Set[String]] = None,
       collapse: Option[(Seq[String], Option[String])] = None)
       : ManifestCommit.Manifest = {
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // size probe on CONCURRENT threads: getContentSummary is one
     // filesystem round-trip per dir, and a sequential sweep is a driver
@@ -593,8 +586,7 @@ object Optimize {
       bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01): ManifestCommit.Manifest = {
     require(keys.nonEmpty, "compactMonths needs the collapse key")
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     // month identity from the recorded temporal stats rendering
     // (uuuu-MM-… fixed width): pure = min and max in the same month
     def monthOf(d: String): Option[(String, String)] =
@@ -691,9 +683,7 @@ object Optimize {
       cols: Seq[String] = Nil,
       bloomCols: Seq[String] = Nil,
       bloomFpp: Double = 0.01): ManifestCommit.Manifest = {
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"$root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root)
     val resolver = spark.sessionState.conf.resolver
     val fieldNames = m.tableSchema.map(_.fieldNames.toSeq).getOrElse(Nil)
     def canonOf(c: String): String =
@@ -857,7 +847,6 @@ object Optimize {
     ManifestCommit.commitReconciled(spark, root, base = m,
       displaced = Nil, added = Nil,
       statUpdates = updates,
-      schema = m.tableSchema,
       op = "analyze",
       pinned = targets.toSet)
   }

@@ -283,22 +283,20 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
       }) :: Nil
     case GraftTruncate(root) =>
       GraftRowOpExec(s"GraftTruncateExec $root", () => {
-        val prev = ManifestCommit.readManifest(spark, root)
         // a pre-evolution table has no recorded schema — capture it from
         // the live dirs NOW, or the emptied table would be unreadable
         // (zero dirs and no schema to resolve against)
-        val schema = prev.flatMap(_.tableSchema).orElse(
-          prev.filter(_.dirs.nonEmpty).map(m =>
-            ManifestCommit.readDirsOf(spark, root, m, m.dirs).schema))
-        ManifestCommit.commitReplace(spark, root, Nil,
-          pruneDisplaced = false,
-          schema = schema, op = "truncate")
+        ManifestCommit.commit(spark, root, "truncate") { prev =>
+          val m = prev.getOrElse(ManifestCommit.EmptyTable)
+          m.copy(dirs = Nil, stats = Map.empty, dvs = Map.empty,
+            tableSchema = m.tableSchema.orElse(prev.filter(_.dirs.nonEmpty)
+              .map(p => ManifestCommit.readDirsOf(spark, root, p, p.dirs).schema)))
+        }
         ()
       }) :: Nil
     case GraftAddColumns(root, added) =>
       GraftRowOpExec(s"GraftAddColumnsExec $root", () => {
-        val m = ManifestCommit.readManifest(spark, root).getOrElse(
-          throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+        val m = ManifestCommit.requireManifest(spark, root)
         val cur = m.tableSchema.getOrElse(throw new IllegalArgumentException(
           "graft ALTER ADD COLUMNS: the table has no recorded schema " +
             "(pre-evolution table — rewrite it through a schema-recording commit first)"))
@@ -313,17 +311,14 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
         // expectedGen: this commit re-states the dir list it read — a
         // concurrent INSERT/MERGE landing in between would be silently
         // erased from the live set without the CAS guard
-        ManifestCommit.commitReplace(spark, root, m.dirs,
-          pruneDisplaced = false, stats = m.stats, dvs = m.dvs,
-          schema = Some(widened), op = "add_columns",
-          expectedGen = Some(m.gen))
+        ManifestCommit.commit(spark, root, "add_columns",
+          expectedGen = Some(m.gen))(_ => m.copy(tableSchema = Some(widened)))
         GraftSql.biRefreshRoot(root)
         ()
       }) :: Nil
     case GraftDropColumns(root, names, ifExists) =>
       GraftRowOpExec(s"GraftDropColumnsExec $root", () => {
-        val m = ManifestCommit.readManifest(spark, root).getOrElse(
-          throw new IllegalArgumentException(s"$root is not a manifest-committed table"))
+        val m = ManifestCommit.requireManifest(spark, root)
         val cur = m.tableSchema.getOrElse(throw new IllegalArgumentException(
           "graft ALTER DROP COLUMNS: the table has no recorded schema"))
         val resolver = spark.sessionState.conf.resolver
@@ -356,20 +351,18 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
         }
         val narrowed = StructType(cur.fields.filterNot(f => dropped(f.name)))
         require(narrowed.nonEmpty, "graft ALTER DROP COLUMNS: cannot drop every column")
-        // per-dir stats of dropped columns go with them
-        val stats = m.stats.map { case (d, cs) =>
-          d -> cs.filterNot(c => dropped(c.col)) }
-        // the dropped columns' PHYSICAL names tombstone: data files
-        // still carry their bytes, so a later ADD COLUMNS (or RENAME
-        // COLUMN onto) that name would silently serve the stale values
-        // — the tombstone makes the chokepoint refuse it
-        ManifestCommit.commitReplace(spark, root, m.dirs,
-          pruneDisplaced = false, stats = stats,
-          schema = Some(narrowed), op = "drop_columns",
-          expectedGen = Some(m.gen),
-          colmap = Some(m.colmap -- dropped),
-          deadCols = Some(
-            (m.deadCols ++ dropped.toSeq.map(m.physNameOf)).distinct))
+        // per-dir stats of dropped columns go with them; the dropped
+        // columns' PHYSICAL names tombstone: data files still carry
+        // their bytes, so a later ADD COLUMNS (or RENAME COLUMN onto)
+        // that name would silently serve the stale values — the
+        // tombstone makes the chokepoint refuse it
+        ManifestCommit.commit(spark, root, "drop_columns",
+          expectedGen = Some(m.gen))(_ => m.copy(
+            stats = m.stats.map { case (d, cs) =>
+              d -> cs.filterNot(c => dropped(c.col)) },
+            tableSchema = Some(narrowed),
+            colmap = m.colmap -- dropped,
+            deadCols = (m.deadCols ++ dropped.toSeq.map(m.physNameOf)).distinct))
         GraftSql.biRefreshRoot(root)
         ()
       }) :: Nil
@@ -408,9 +401,7 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
           // byte-identical, never read
           require(zcols.size >= 2,
             "graft OPTIMIZE ZORDER: needs at least 2 columns")
-          val m = ManifestCommit.readManifest(spark, root).getOrElse(
-            throw new IllegalArgumentException(
-              s"$root is not a manifest-committed table"))
+          val m = ManifestCommit.requireManifest(spark, root)
           val extra = m.stats.values.flatten.map(s => ManifestCommit.baseStatCol(s.col)).toSeq.distinct
             .filterNot(zcols.contains)
             .filter(c => c == ManifestCommit.RowCountStat ||
@@ -433,9 +424,7 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
         } else {
           require(zcols.size >= 2,
             "graft OPTIMIZE ZORDER: needs at least 2 columns")
-          val m = ManifestCommit.readManifest(spark, root).getOrElse(
-            throw new IllegalArgumentException(
-              s"$root is not a manifest-committed table"))
+          val m = ManifestCommit.requireManifest(spark, root)
           // keep the current dir-count granularity; carry the table's
           // established stat columns (incl. the row counter) that the
           // z-rewrite wouldn't meter on its own
@@ -470,9 +459,7 @@ case class GraftWriteStrategy(spark: SparkSession) extends SparkStrategy {
     case GraftReplaceWhere(root, predText, queryText) =>
       GraftRowOpExec(s"GraftReplaceWhereExec $root", () => {
         val df = spark.sql(queryText)
-        val m = ManifestCommit.readManifest(spark, root).getOrElse(
-          throw new IllegalArgumentException(
-            s"$root is not a manifest-committed table"))
+        val m = ManifestCommit.requireManifest(spark, root)
         // positional binding to the table schema (the SQL insert
         // contract); replaceWhere then applies store casts by name
         val names = m.tableSchema

@@ -136,9 +136,7 @@ private[streaming] object GraftTableSource {
       "graft stream: set .load(<table root>) or .option(\"table\", <registered name>)"))
 
   def tableSchema(spark: SparkSession, root: String): StructType = {
-    val m = ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft stream: $root is not a manifest-committed table"))
+    val m = ManifestCommit.requireManifest(spark, root, "graft stream: ")
     val base = m.tableSchema.getOrElse(ManifestCommit.read(spark, root).schema)
     StructType(base.fields.map(_.copy(nullable = true)))
   }
@@ -195,9 +193,7 @@ class GraftTableSource(spark: SparkSession, params: Map[String, String],
     }
 
   private val liveAtStart: Long =
-    ManifestCommit.readManifest(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft stream: $root is not a manifest-committed table")).gen
+    ManifestCommit.requireManifest(spark, root, "graft stream: ").gen
 
   require(!(params.contains("startingVersion") &&
     params.contains("startingTimestamp")),

@@ -146,6 +146,24 @@ class MergeIntoSpec extends SparkSpec {
     assert(e.getMessage.contains("not unique"))
   }
 
+  test("a null key is one key value: (null, 21) updates the null-keyed " +
+      "row and inserts 21; two null keys are still not unique") {
+    val root = Files.createTempDirectory("merge_spec_").toString + "/nullkey"
+    val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
+    def ndf(rows: (java.lang.Long, String)*): DataFrame =
+      mkDf(nullable, rows.map(r => Row(r._1, r._2, 1.0)): _*)
+    commitSliced(root, Seq(ndf((null, "a"), (5L, "b"))))
+    val res = MergeInto.merge(spark, root, ndf((null, "A"), (21L, "c")), Seq("id"))
+    assert(res.updated === 1 && res.inserted === 1 && res.deleted === 0)
+    assert(ManifestCommit.read(spark, root).collect().toSet
+      .map((r: Row) => (Option(r.get(0)), r.getString(1))) ===
+      Set((None, "A"), (Some(5L), "b"), (Some(21L), "c")))
+    val e = intercept[IllegalArgumentException] {
+      MergeInto.merge(spark, root, ndf((null, "x"), (null, "y")), Seq("id"))
+    }
+    assert(e.getMessage.contains("not unique"), e.getMessage)
+  }
+
   test("concurrent commit between read and merge-commit raises CAS conflict") {
     val root = Files.createTempDirectory("merge_spec_").toString + "/t"
     commitSliced(root, Seq(df((1L, "a", 1.0))))

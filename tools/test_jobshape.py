@@ -63,6 +63,16 @@ class JobShapeTest(unittest.TestCase):
         self.assertEqual(code, 1)
         self.assertIn("shape rose: sql.dirs_scanned_frac", out)
 
+    def test_commit_metrics_are_printed_but_not_gated(self):
+        m = {"commit.gens": 3, "commit.meta_bytes_per_gen": 1413.3,
+             "merge.jobs": 6}
+        code, out = self.main(m, dict(m, **{"commit.meta_bytes_per_gen": 1421.2,
+                                            "commit.gens": 4}))
+        self.assertEqual(code, 0)
+        self.assertIn("commit.meta_bytes_per_gen", out)
+        self.assertIn("not gated", out)
+        self.assertNotIn("shape rose", out)
+
     def test_a_fall_passes(self):
         code, _ = self.main({"optimize.jobs": 8}, {"optimize.jobs": 6})
         self.assertEqual(code, 0)
