@@ -70,6 +70,7 @@ object GraftSession {
       .config("spark.local.dir",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark-local"))
       .config("spark.sql.parquet.compression.codec", "snappy")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // Dev A/B knob: SPARK_GRAFT_CONF="key=value;key=value" overrides any
@@ -94,6 +95,32 @@ object GraftSession {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     all.filter(n => only.forall(f => f.exists(n.startsWith)))
+  }
+}
+
+/** Hadoop's local filesystem with permissions set in-process. Without
+  * Hadoop's native library, `RawLocalFileSystem.setPermission` forks a
+  * `chmod` for every file, `.crc` sidecar and dir a write creates
+  * (measured on a 4-core machine: ~100 forks per CDC batch, 2–5 ms
+  * each). This one sets the same umask-applied bits through `java.nio`;
+  * a mode NIO cannot express (the sticky bit) or a filesystem without
+  * POSIX attributes falls back to Hadoop's own call. */
+class GraftLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
+  new GraftLocalFileSystem.Raw)
+
+object GraftLocalFileSystem {
+  class Raw extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def setPermission(p: org.apache.hadoop.fs.Path,
+        permission: org.apache.hadoop.fs.permission.FsPermission): Unit = {
+      if (permission.getStickyBit) super.setPermission(p, permission)
+      else
+        try java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath,
+          java.nio.file.attribute.PosixFilePermissions.fromString(
+            permission.getUserAction.SYMBOL + permission.getGroupAction.SYMBOL +
+              permission.getOtherAction.SYMBOL))
+        catch { case _: UnsupportedOperationException =>
+          super.setPermission(p, permission) }
+    }
   }
 }
 

@@ -337,17 +337,27 @@ object MetaScaleCheck {
       all.toMap
     }
 
-    // many-DV read shape: EVERY dir dv'd; the grouped anti-join read must
-    // stay one join per key-set group, not one per dir (plan size flat)
-    def dvRead(tag: String, nDirs: Int): Double = {
+    // many-DV read shape: EVERY dir dv'd; the read must hold one DV
+    // filter per key-set group, not one per dir (plan size flat), and a
+    // repeat read (the second rep) finds every DV's keys cached. The same
+    // read with the DVs cleared is timed beside it: the DV-free baseline
+    // (what the scan itself costs at this dir count). Returns both.
+    def dvRead(tag: String, nDirs: Int): (Double, Double) = {
       val root = buildRanged(spark, s"meta_dvread_${tag}_", nDirs, 200)
       val keys = spark.range(nDirs.toLong)
         .select((col("id") * 200L + 3L).as("id"))
       val res = MergeInto.deleteWhere(spark, root, keys)
       assert(res.dvsWritten == nDirs, s"expected $nDirs DVs, got ${res.dvsWritten}")
-      time(s"$tag read+count with $nDirs dv'd dirs") {
+      val plan = ManifestCommit.read(spark, root).queryExecution.executedPlan.toString
+      val filters = plan.linesIterator.count(_.matches(".*Filter .*dv_deleted\\(.*"))
+      assert(filters == 1, s"$nDirs dv'd dirs: $filters DV filters, want 1:\n$plan")
+      val m = ManifestCommit.readManifest(spark, root).get
+      (time(s"$tag read+count with $nDirs dv'd dirs") {
         assert(ManifestCommit.read(spark, root).count() == nDirs.toLong * 199)
-      }
+      }, time(s"$tag read+count of the same $nDirs dirs, DVs cleared") {
+        assert(ManifestCommit.readDirsOf(spark, root, m.copy(dvs = Map.empty),
+          m.dirs).count() == nDirs.toLong * 200)
+      })
     }
 
     println(s"[metascale] --- 1x ($n dirs) ---")
@@ -360,7 +370,8 @@ object MetaScaleCheck {
     one.keys.toSeq.sorted.foreach { k =>
       println(f"[metascale]   $k%-20s ${big(k) / one(k)}%6.2f x")
     }
-    println(f"[metascale]   dv_read_96           ${dv8 / dv1}%6.2f x (12 -> 96 dv'd dirs)")
+    println(f"[metascale]   dv_read_96           ${dv8._1 / dv1._1}%6.2f x (12 -> 96 dv'd dirs)")
+    println(f"[metascale]   dv_free_read_96      ${dv8._2 / dv1._2}%6.2f x (the same reads, DVs cleared)")
     GraftTmp.purge()
     spark.stop()
   }

@@ -60,9 +60,9 @@ object Plans {
       "q144_sql_skipping" ->
         "SQL text over a graft table (round-11 surface): the WHERE clause pruned the plan to 3 month dirs of ~80 via manifest stats BEFORE any file listing — the parquet relation holds only the kept dirs — and the date predicate is re-pushed into the expansion, so it still reaches the scan as PushedFilters with the ReadSchema pruned to the used columns.",
       "DV_read_lineage" ->
-        "Deletion-vector read (dumped as its lineage: a dv'd dir read through readDirsOf): the DV applies as a BroadcastHashJoin LeftAnti against the ~KB key file — no shuffle, no sort; the dir scan keeps its explicit ReadSchema. Since round 10 dv'd dirs are GROUPED by key-set: one scan + ONE anti-join per group on (dir, keys) — at 96 dv'd dirs the plan still holds a single join node (MetaScaleCheck: 11.5s -> 2.1s), with each dv row's owning dir recovered from its file path through a broadcast lookup.",
+        "Deletion-vector read (dumped as its lineage: a dv'd dir read through readDirsOf): the DV applies as ONE Filter NOT dv_deleted(_metadata.file_path, keys) inside the scan's codegen stage — no join, no exchange, no broadcast; the DV's key set rides the generated code as a reference object, read once per DV on the driver (no Spark job) and cached, so a repeat read runs the jobs of the same read without DVs and a DV of other keys reuses the compiled class. dv'd dirs are GROUPED by key-set: one scan + one filter per group, the filter mapping each file to its owning dir once per file — at 96 dv'd dirs the plan still holds a single filter. The dir scan keeps its explicit ReadSchema; the filter runs after the scan, so parquet pushdown of the query's own predicates is untouched.",
       "q137_ann_incremental" ->
-        "Maintained-LSH-index probe: the band index reads through the manifest with its deletion vector applied as one broadcast anti-join; the 4-query side is explicitly broadcast into the bucket join, and cosine + the top-5 window shuffle only (qid, nid, sim) rows — the index maintenance itself (DV delete + signature append) never appears because it touched O(changes), not the corpus.",
+        "Maintained-LSH-index probe: the band index reads through the manifest with its deletion vector applied as one in-scan DV filter (no join, no job once the DV is cached); the 4-query side is explicitly broadcast into the bucket join, and cosine + the top-5 window shuffle only (qid, nid, sim) rows — the index maintenance itself (DV delete + signature append) never appears because it touched O(changes), not the corpus.",
       "q138_ivf_incremental" ->
         "Maintained-IVF-lists probe: assignment of the post-merge queries is the same broadcast NearestCentroids projection as q49 (no exchange, O(1) plan size in k x dim); the persisted (nid, cid) lists join vectors back from the corpus read, and the probe side broadcasts — vectors never lived in the index rows, so the lists stay narrow at any corpus width.",
       "W1_dedup_latest_lineage" ->

@@ -812,8 +812,9 @@ object ManifestCommit {
     * exact). Slicing-referenced columns are refused (a bucket
     * component's Murmur3 hash is width-sensitive: post-widening rows
     * would land in different buckets than equal pre-widening values);
-    * DV-keyed columns are refused (the anti-join reads the DV file's
-    * recorded key type). */
+    * DV-keyed columns are refused (a live DV's key type would trail the
+    * column's; the DV filter compares in the wider type, which serves
+    * change-feed reads of older generations). */
   def alterColumnType(spark: SparkSession, root: String, colName: String,
       to: org.apache.spark.sql.types.DataType): Manifest =
       commit(spark, root, "alter_column_type") { prev =>
@@ -1435,17 +1436,17 @@ object ManifestCommit {
     * manifest carries one (explicit schema = zero planning I/O; parquet
     * null-fills columns a dir predates), else mergeSchema (footer sweep,
     * but tolerates any dir-to-dir drift without recorded metadata).
-    * Dirs carrying a deletion vector subtract it with a per-dir
-    * LEFT ANTI join on the DV's own key columns (DVs are small — the
-    * join broadcasts; per-dir application is exact without any
-    * key-uniqueness assumption, since a key deleted from one dir may
-    * legitimately live on in a later-inserted dir). */
+    * Dirs carrying a deletion vector drop the rows whose DV key columns
+    * their OWN DV holds, with a filter inside the scan ([[dvDeleted]]):
+    * per-dir application is exact without any key-uniqueness
+    * assumption, since a key deleted from one dir may legitimately live
+    * on in a later-inserted dir. */
   private def readDirs(spark: SparkSession, root: String, m: Manifest): DataFrame =
     readDirsOf(spark, root, m, m.dirs)
 
   /** Reserved POSITION-identity columns (round 19 — the Delta
     * position-deletion-vector idea expressed through the existing
-    * key-DV anti-join): a DV file whose columns are exactly these
+    * key-DV filter): a DV file whose columns are exactly these
     * deletes rows by (parquet file name, row index within the file) —
     * null-proof (both are never null, unlike arbitrary key columns)
     * and valid for tables with NO key at all, which is what
@@ -1513,14 +1514,10 @@ object ManifestCommit {
   /** Spark schema and leaf parquet paths of a DV dir, from ONE
     * driver-side listing and footer read, cached forever: DV dirs are
     * IMMUTABLE (every delete writes a new `_dv_<uuid>` and repoints the
-    * manifest), yet every read of a DV'd table re-ran a schema-inference
-    * JOB per distinct DV — pure scheduler latency on the hottest read
-    * path (r19). Caching the full STRUCT (not just names) also lets the
-    * DV-union scan read with an explicit schema, skipping the union's
-    * own inference job. Reads go through the LEAF files ([[readDvs]]):
-    * Spark's hidden-path filter matches the `_dv_` dir names themselves,
-    * so a dir-path read logged "All paths were ignored" on every DV scan.
-    * The fallback (dir path, spark.read schema) covers exotic
+    * manifest), so neither ever changes. The DV's key set, read once
+    * from these leaf files on the driver, is cached beside it
+    * ([[DvApply]], bounded: an evicted or over-bound set is re-read and
+    * counted). The fallback (dir path, spark.read schema) covers exotic
     * filesystems where the direct listing or footer read fails. */
   private val dvCache = new java.util.concurrent.ConcurrentHashMap[
     String, (org.apache.spark.sql.types.StructType, Seq[String])]()
@@ -1545,11 +1542,34 @@ object ManifestCommit {
     dvFooterOf(spark, absDir)._1.fieldNames.toSeq
 
   /** The rows of the DV dirs `absDirs` (one key-column set), read
-    * through their cached leaf files with the first one's schema. */
+    * through their cached leaf files with the first one's schema (a
+    * dir-path read would log "All paths were ignored": Spark's
+    * hidden-path filter matches the `_dv_` names). */
   private[ingest] def readDvs(spark: SparkSession,
       absDirs: Seq[String]): DataFrame =
     spark.read.schema(dvFooterOf(spark, absDirs.head)._1)
       .parquet(absDirs.flatMap(dvFooterOf(spark, _)._2): _*)
+
+  /** The key sets of the DVs of `dirs` (one DV column set), by DV file,
+    * in the compare types: the widest of every DV's key types and
+    * `data`'s (the data key columns' types, when given). */
+  private def dvKeySets(spark: SparkSession, root: String, m: Manifest,
+      dirs: Seq[String], data: Option[Seq[org.apache.spark.sql.types.DataType]])
+      : (Seq[org.apache.spark.sql.types.DataType], Map[String, java.util.HashSet[AnyRef]]) = {
+    def load(f: String) = {
+      val abs = dirAbs(root, f)
+      val (schema, files) = dvFooterOf(spark, abs)
+      f -> DvApply.keys(spark, abs, schema, files)
+    }
+    // only the sets not cached pay a read, on concurrent threads
+    val (hit, miss) = dirs.map(m.dvs).distinct
+      .partition(f => DvApply.cache.cached(dirAbs(root, f)))
+    val loaded = hit.map(load) ++ concurrently(miss, 16)(load)
+    val types = (loaded.map(_._2.schema.map(_.dataType)) ++ data)
+      .reduce((a, b) => a.zip(b).map { case (x, y) => DvApply.compareType(x, y) })
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    (types, loaded.map { case (f, k) => f -> DvApply.keysIn(k, types, tz) }.toMap)
+  }
 
   /** The row count of the DV dir `absDir`: its cached leaf files'
     * footer counts summed on the driver, no job. */
@@ -1562,32 +1582,66 @@ object ManifestCommit {
     }.sum
 
   /** The DV rows of DV'd `dirs` (one DV column set), each attributed to
-    * its owning data dir's BASENAME in `__dir`: ONE scan over the DV
-    * files (never one scan node per DV — the plan stays flat in DV
-    * count), the owning dir recovered from each row's `_dv_*` path
-    * segment through a tiny broadcast lookup (a DV file several dirs
-    * reference fans out to one row per dir, which is exactly the per-dir
-    * delete set). Basename-keyed like [[dirIdCol]]: a clone's external
-    * entries are absolute strings, and UUID dir/DV names make basenames
-    * unique across roots. */
+    * its owning data dir's BASENAME in `__dir` (a DV several dirs share
+    * fans out to one row per dir, which is exactly the per-dir delete
+    * set): a local relation built from the cached key sets, so no scan
+    * and no job produce it. A tuple with a null component is left out
+    * (it deletes nothing). Basename-keyed like [[dirIdCol]]: a clone's
+    * external entries are absolute strings, and UUID dir/DV names make
+    * basenames unique across roots. */
   private[ingest] def dvRowsOf(spark: SparkSession, root: String,
       m: Manifest, dirs: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val lookup = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](java.util.Arrays.asList(
-        dirs.map(d => org.apache.spark.sql.Row(
-          new Path(dirAbs(root, m.dvs(d))).getName,
-          new Path(dirAbs(root, d)).getName)): _*)),
-      StructType(Seq(StructField("__dv_name", StringType, false),
-        StructField("__dir", StringType, false))))
-    // explicit schema from the cached footer read — the scan itself
-    // must not pay an inference job over every DV file (r19)
-    readDvs(spark, dirs.map(d => dirAbs(root, m.dvs(d))).distinct)
-      .withColumn("__dv_name", dirIdCol)
-      .join(org.apache.spark.sql.functions.broadcast(lookup), "__dv_name")
-      .drop("__dv_name")
+    val (types, sets) = dvKeySets(spark, root, m, dirs, None)
+    val schema = StructType(dvColumnsOf(spark, dirAbs(root, m.dvs(dirs.head)))
+      .zip(types).map { case (n, t) => StructField(n, t) } :+
+      StructField("__dir", StringType, false))
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    dirs.foreach { d =>
+      val base = org.apache.spark.unsafe.types.UTF8String.fromString(
+        new Path(dirAbs(root, d)).getName)
+      sets(m.dvs(d)).forEach(t => rows.add(toRow(
+        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+          (DvApply.components(t) :+ base).toArray[Any]))
+        .asInstanceOf[org.apache.spark.sql.Row]))
+    }
+    spark.createDataFrame(rows, schema)
   }
 
+  /** True on the rows of `df` that the DVs of `dirs` (DV'd, one DV
+    * column set) delete: `dir` names each row's data dir (a file path or
+    * a basename), `keys` are its DV key columns. One predicate over any
+    * number of dirs; the key sets ride it as data ([[DvDeleted]]). */
+  private[ingest] def dvDeleted(spark: SparkSession, root: String, m: Manifest,
+      dirs: Seq[String], df: DataFrame, dir: org.apache.spark.sql.Column,
+      keys: Seq[org.apache.spark.sql.Column]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val dataTypes = df.select(keys: _*).schema.map(_.dataType)
+    val (types, sets) = dvKeySets(spark, root, m, dirs, Some(dataTypes))
+    val byDir = new java.util.HashMap[String, java.util.HashSet[AnyRef]]()
+    dirs.foreach(d => byDir.put(new Path(dirAbs(root, d)).getName, sets(m.dvs(d))))
+    val keyExprs = keys.zip(dataTypes.zip(types)).map { case (c, (from, to)) =>
+      val e = ColumnBridge.expression(c)
+      if (from == to) e
+      else org.apache.spark.sql.catalyst.expressions.Cast(e, to,
+        Some(spark.sessionState.conf.sessionLocalTimeZone))
+    }
+    val id = dirs.map(d => s"${new Path(dirAbs(root, d)).getName}=" +
+      dirAbs(root, m.dvs(d))).sorted.mkString(",") + types.mkString(";", ",", "")
+    ColumnBridge.column(DvDeleted(ColumnBridge.expression(dir), keyExprs,
+      new DvProbe(byDir, id)))
+  }
+
+  /** [[readDirsOf]]'s body. Plain dirs scan in one parquet read per
+    * layout group. DV'd dirs scan the same way, grouped by their DV's
+    * key columns, and each group drops its deleted rows with ONE
+    * [[dvDeleted]] filter over (`_metadata.file_path`, key columns)
+    * inside the scan's stage: no join, no broadcast, and no Spark job
+    * once the DVs' key sets are cached, so a repeat read of a DV'd table
+    * runs exactly the jobs of the same read without DVs, and the plan
+    * holds one filter per group at any DV'd dir count. */
   private def readDirsOfImpl(spark: SparkSession, root: String, m: Manifest,
       dirs: Seq[String],
       schemaOverride: Option[org.apache.spark.sql.types.StructType],
@@ -1598,7 +1652,7 @@ object ManifestCommit {
       // per-dir attribution batched DML passes group on (r19)
       keepDir: Boolean = false)
       : DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.{col, not}
     val schema = schemaOverride.orElse(m.tableSchema)
     // COLUMN MAPPING: data files carry PHYSICAL names; the scan reads
     // them and a plain alias projection serves the logical names, so
@@ -1635,11 +1689,22 @@ object ManifestCommit {
       partSuffixOf(m, d).map(
         _.split('/').map(_.takeWhile(_ != '=')).mkString(","))
     val posCols = Seq(PosFileCol, PosIdxCol)
-    def readGroup(g: Seq[String], withId: Boolean,
-        withPos: Boolean = false): DataFrame =
+    // `dvCols`: the group's DV key columns (DV files name them
+    // logically; the filter reads the physical columns, and a POSITION
+    // DV the scan's own metadata), Nil for a DV-free group
+    def readGroup(g: Seq[String], withId: Boolean, withPos: Boolean,
+        dvCols: Seq[String]): DataFrame = {
+      def undeleted(df: DataFrame, dir: org.apache.spark.sql.Column) =
+        if (dvCols.isEmpty) df
+        else df.filter(not(dvDeleted(spark, root, m, g, df, dir, dvCols.map {
+          case PosFileCol => col("_metadata.file_name")
+          case PosIdxCol => col("_metadata.row_index")
+          case k => col(eff.getOrElse(k, k))
+        })))
       partColsOf(g.head) match {
         case None =>
-          val df0 = readPaths(g.map(dirAbs(root, _)))
+          val df0 = undeleted(readPaths(g.map(dirAbs(root, _))),
+            col("_metadata.file_path"))
           val df1 = if (withId) df0.withColumn("__dir", dirIdCol) else df0
           // positions from the scan's own metadata struct — never null,
           // stable for immutable files (the position-DV identity)
@@ -1649,46 +1714,37 @@ object ManifestCommit {
           toLogical(df, (if (withId) Seq("__dir") else Nil) ++
             (if (withPos) posCols else Nil))
         case Some(_) =>
-          require(!withPos,
+          require(!withPos && !dvCols.exists(posCols.contains),
             s"$root: position columns are not supported on hive-nested " +
               "converted dirs (merge-on-read UPDATE falls back to " +
               "copy-on-write there)")
-          toLogical(readNestedPaths(spark,
+          val nested = undeleted(readNestedPaths(spark,
             g.map(d => dirAbs(root, d) -> partSuffixOf(m, d).get),
-            physSchema, keepDirId = withId),
+            physSchema, keepDirId = withId || dvCols.nonEmpty), col("__dir"))
+          toLogical(if (withId || dvCols.isEmpty) nested else nested.drop("__dir"),
             if (withId) Seq("__dir") else Nil)
       }
+    }
     val plainDfs = plain.groupBy(partColsOf).toSeq.sortBy(_._2.head)
       .map { case (_, g) =>
-        readGroup(g, withId = keepPos || keepDir, withPos = keepPos) }
+        readGroup(g, withId = keepPos || keepDir, withPos = keepPos, Nil) }
     // DV'd dirs grouped by their DV's key-column set: ONE scan and ONE
-    // broadcast anti-join per group on (dir, keys), not one join operator
-    // per dir — a sparse-delete-heavy table at scale can carry hundreds
-    // of dv'd dirs, and a plan with hundreds of join nodes pays analysis
-    // and codegen cost linear in dir count. The dir identity rides along
-    // as the parquet file path's parent segment, so per-dir exactness is
-    // preserved (a key deleted from one dir may live on in another).
-    // Grouping needs each DV's schema: fetched on CONCURRENT threads
+    // DV filter per group, never one per dir — a sparse-delete-heavy
+    // table at scale can carry hundreds of dv'd dirs. Per-dir exactness
+    // holds because the filter looks up each row's own dir (a key
+    // deleted from one dir may live on in another). Grouping needs each
+    // DV's schema: the ones not cached yet fetched on CONCURRENT threads
     // (one footer each — a sequential loop is a driver-latency wall at
     // hundreds of DVs, the resolveBloom lesson).
-    val dvFilesAll = dvd.map(m.dvs).distinct
+    def dvCols(f: String) = f -> dvColumnsOf(spark, dirAbs(root, f))
+    val (dvHit, dvMiss) = dvd.map(m.dvs).distinct
+      .partition(f => dvCache.containsKey(dirAbs(root, f)))
     val dvSchema: Map[String, Seq[String]] =
-      concurrently(dvFilesAll, 16)(f => f -> dvColumnsOf(spark, dirAbs(root, f))).toMap
+      (dvHit.map(dvCols) ++ concurrently(dvMiss, 16)(dvCols)).toMap
     val dvdDfs = dvd.groupBy(d => (dvSchema(m.dvs(d)), partColsOf(d)))
       .toSeq.sortBy(_._2.head).map { case ((keyCols, _), groupDirs) =>
-        val dvUnion = dvRowsOf(spark, root, m, groupDirs)
-          .select((keyCols.map(col) :+ col("__dir").as("__dv_dir")): _*)
-        // a POSITION dv (file, row-index identity) needs the scan to
-        // materialize the position columns it anti-joins on
-        val posDv = keyCols.exists(posCols.contains)
-        val joined = readGroup(groupDirs, withId = true,
-          withPos = posDv || keepPos)
-          .withColumnRenamed("__dir", "__dv_dir")
-          .join(broadcast(dvUnion), keyCols :+ "__dv_dir", "left_anti")
-        val back =
-          if (keepPos || keepDir) joined.withColumnRenamed("__dv_dir", "__dir")
-          else joined.drop("__dv_dir")
-        if (posDv && !keepPos) back.drop(posCols: _*) else back
+        readGroup(groupDirs, withId = keepPos || keepDir, withPos = keepPos,
+          keyCols)
       }
     (plainDfs ++ dvdDfs) match {
       case Nil => // empty set: preserve the recorded schema if any; a

@@ -675,18 +675,21 @@ object MergeInto {
       val posCols = Seq(ManifestCommit.PosFileCol, ManifestCommit.PosIdxCol)
       // prior DVs join the same batched build: position DVs as they are,
       // a KEY-based prior DV converted to the positions of the rows it
-      // killed — a raw (DV-less) scan of its dirs semi-joined with the
-      // old keys by dir, exact to the row
+      // killed — a raw (DV-less) scan of its dirs kept where the old DV
+      // deletes, exact to the row
       val old = touched.filter(m.dvs.contains)
         .groupBy(d => ManifestCommit.dvColumnsOf(spark,
           ManifestCommit.dirAbs(root, m.dvs(d))))
         .toSeq.map { case (dvCols, ds) =>
-          val rows = ManifestCommit.dvRowsOf(spark, root, m, ds)
-          if (dvCols.toSet == posCols.toSet) rows
-          else ManifestCommit.readDirsOf(spark, root, m.copy(dvs = Map.empty),
-              ds, Some(tSchema), keepPos = true)
-            .join(broadcast(rows), dvCols :+ "__dir", "left_semi")
-            .select((col("__dir") +: posCols.map(col)): _*)
+          if (dvCols.toSet == posCols.toSet)
+            ManifestCommit.dvRowsOf(spark, root, m, ds)
+          else {
+            val raw = ManifestCommit.readDirsOf(spark, root,
+              m.copy(dvs = Map.empty), ds, Some(tSchema), keepPos = true)
+            raw.filter(ManifestCommit.dvDeleted(spark, root, m, ds, raw,
+                col("__dir"), dvCols.map(col)))
+              .select((col("__dir") +: posCols.map(col)): _*)
+          }
         }
       val newDvs = stageDvs(spark, root,
         matched.select((col("__dir") +: posCols.map(col)): _*),

@@ -427,7 +427,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(rows === Set((1L, "a", -1L), (2L, "b", 20L)))
   }
 
-  test("many dv'd dirs: DV application is ONE anti-join per key-set, not per dir") {
+  test("many dv'd dirs: ONE DV filter per key-set, no join, no shuffle") {
     val root = Files.createTempDirectory("manifest_spec_").toString + "/t"
     val dirs = (0 until 6).map { i =>
       val d = ManifestCommit.newDataDir(root)
@@ -445,11 +445,14 @@ class ManifestCommitSpec extends SparkSpec {
     assert(df.collect().map(_.getLong(0)).toSet ===
       (0 until 6).map(_ * 10L).toSet)
     // AQE's toString repeats the tree under "== Initial Plan =="; count
-    // join operators in the final plan only
+    // operators in the final plan only
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    val antiJoins = "LeftAnti".r.findAllIn(plan).size
-    assert(antiJoins === 1,
-      s"6 dv'd dirs sharing a key-set must fold into ONE anti-join, got $antiJoins:\n$plan")
+    val filters = plan.linesIterator.count(_.matches(".*Filter .*dv_deleted\\(.*"))
+    assert(filters === 1,
+      s"6 dv'd dirs sharing a key-set must fold into ONE DV filter, got $filters:\n$plan")
+    assert(!plan.contains("Join") && !plan.contains("Exchange") &&
+      !plan.contains("LocalTableScan"),
+      s"DV application must not join, shuffle or broadcast:\n$plan")
   }
 
   test("writeSliced: N range dirs from one write job, stats match dirStats") {

@@ -372,16 +372,20 @@ class MergeIntoSpec extends SparkSpec {
       Set((1L, "A!", 100.0), (3L, "c", 3.0)))
   }
 
-  test("DV read plan: broadcast LEFT ANTI per dv'd dir, no shuffle") {
+  test("DV read: a repeat read runs the jobs of the same read without DVs") {
     val root = Files.createTempDirectory("merge_spec_").toString + "/t"
-    commitSliced(root, Seq(df((1L, "a", 1.0), (2L, "b", 2.0))))
-    MergeInto.deleteWhere(spark, root, keyDf(2L))
-    val plan = ManifestCommit.read(spark, root)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"DV must apply as a broadcast anti-join:\n$plan")
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffleExchange"),
-      s"DV application must not shuffle:\n$plan")
+    commitSliced(root, Seq(df((1L, "a", 1.0), (2L, "b", 2.0)),
+      df((3L, "c", 3.0), (4L, "d", 4.0))))
+    MergeInto.deleteWhere(spark, root, keyDf(2L, 3L))
+    val m = ManifestCommit.readManifest(spark, root).get
+    assert(m.dvs.size === 2)
+    assert(rowsOf(ManifestCommit.read(spark, root)) ===
+      Set((1L, "a", 1.0), (4L, "d", 4.0)))
+    val withDvs = jobsOf(ManifestCommit.read(spark, root).collect())
+    val noDvs = jobsOf(ManifestCommit.readDirsOf(spark, root,
+      m.copy(dvs = Map.empty), m.dirs).collect())
+    assert(withDvs === noDvs,
+      s"a repeat DV'd read ran $withDvs jobs, the DV-free read $noDvs")
   }
 
   test("merge on a __rows table keeps manifest-only COUNT(*) alive") {

@@ -24,8 +24,9 @@ def run_file(metrics, noise="merge.p50_s 1.0\n"):
 
 
 class JobShapeTest(unittest.TestCase):
-    def main(self, parent, change):
-        paths = [run_file(parent), run_file(change)]
+    def main(self, parent, change, *more_parents):
+        paths = ([run_file(parent)] + [run_file(m) for m in more_parents]
+                 + [run_file(change)])
         out = io.StringIO()
         try:
             with contextlib.redirect_stdout(out):
@@ -76,6 +77,21 @@ class JobShapeTest(unittest.TestCase):
     def test_a_fall_passes(self):
         code, _ = self.main({"optimize.jobs": 8}, {"optimize.jobs": 6})
         self.assertEqual(code, 0)
+
+    def test_several_parents_flag_only_a_rise_above_their_maximum(self):
+        p1 = {"update.jobs": 12, "spark.tasks": 79.5,
+              "merge.dirs_rewritten_frac": 0.4167}
+        p2 = {"update.jobs": 13, "spark.tasks": 75,
+              "merge.dirs_rewritten_frac": 0.4375}
+        # within the parents' spread: passes, though it rose from p1
+        code, out = self.main(p1, dict(p1, **{"update.jobs": 13}), p2)
+        self.assertEqual(code, 0)
+        self.assertIn("max of 2", out)
+        self.assertNotIn("shape rose", out)
+        # above every parent: fails and is named
+        code, out = self.main(p1, dict(p2, **{"spark.tasks": 80}), p2)
+        self.assertEqual(code, 1)
+        self.assertIn("shape rose: spark.tasks", out)
 
     def test_reads_the_last_json_line(self):
         p = run_file({"spark.jobs": 3})
