@@ -105,6 +105,14 @@ object Bench {
   def kernelPassSec(): Double =
     Seq(kernelOnePass(), kernelOnePass(), kernelOnePass()).min
 
+  /** Hadoop filesystem read ops (listings, opens, status calls) on every
+    * filesystem scheme in this JVM so far. */
+  def fsReadOps(): Long = {
+    import scala.jdk.CollectionConverters._
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .map(_.getReadOps.toLong).sum
+  }
+
   /** Generated classes Janino has compiled in this JVM so far. */
   def compiled(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -225,6 +233,9 @@ object Bench {
     // rep that compiles means a class fell out of the codegen cache or a
     // plan inlines a per-run literal
     var compileCounts = List.empty[(String, Double)]
+    // Filesystem read ops per query (Hadoop's FileSystem.Statistics), so
+    // plan-time directory listing shows per query next to its jobs
+    var fsOps = List.empty[(String, Double)]
     // Reps: the first execution of a query pays whole-stage-codegen
     // compilation + HotSpot C2 warm-up (measured: q47 12 s cold vs 0.9 s
     // steady at sf0.1) — cost a 1000-executor production job pays once
@@ -244,12 +255,14 @@ object Bench {
       kernSamples ::= Bench.kernelPassSec() // machine probe, ~30 ms
       val fn = SparkEntry.queries(name)
       var repSecs = List.empty[Double]
-      var last = (0.0, 0, 0L) // the steady-state (last) rep's task CPU, jobs, compiles
+      // the steady-state (last) rep's task CPU, jobs, compiles, fs read ops
+      var last = (0.0, 0, 0L, 0L)
       var ok = true
       // takeWhile(_ => ok): once a rep fails, re-running the known-broken
       // query only multiplies the failure's wall-clock by reps
       (1 to reps).iterator.takeWhile(_ => ok).foreach { rep =>
         val c0 = Bench.compiled()
+        val o0 = Bench.fsReadOps()
         val m = JobMeter.measure(spark) {
           val t0 = System.nanoTime()
           val err = try { fn(spark, sfDir).count(); None }
@@ -265,7 +278,7 @@ object Bench {
           if (ok) errors ::= (name -> msg.take(200).replaceAll("[\"\\\\\\p{Cntrl}]", " "))
           ok = false
         }
-        last = (m.cpuSec, m.count, Bench.compiled() - c0)
+        last = (m.cpuSec, m.count, Bench.compiled() - c0, Bench.fsReadOps() - o0)
         if (rep == 1) coldSecs ::= (name -> sec)
         repSecs ::= sec
         // Each rep is timed standalone; drop cached blocks so a rep isn't
@@ -277,6 +290,7 @@ object Bench {
       taskSecs ::= (name -> last._1)
       jobCounts ::= (name -> last._2.toDouble)
       compileCounts ::= (name -> last._3.toDouble)
+      fsOps ::= (name -> last._4.toDouble)
       val sorted = repSecs.sorted
       if (sorted.nonEmpty) medSecs ::= (name -> sorted(sorted.size / 2))
       val minSec = if (sorted.nonEmpty) sorted.head else Double.MaxValue
@@ -378,6 +392,7 @@ object Bench {
     val taskJson = jmap(taskSecs.reverse)
     val jobsJson = jmap(jobCounts.reverse, v => v.toLong.toString)
     val compilesJson = jmap(compileCounts.reverse, v => v.toLong.toString)
+    val fsOpsJson = jmap(fsOps.reverse, v => v.toLong.toString)
     val coldJson = jmap(coldSecs.reverse)
     val medJson = jmap(medSecs.reverse)
     // closing canary pass (stderr diag); drift = median/min of the
@@ -410,7 +425,7 @@ object Bench {
         "__kern_med" -> kernSorted(kernSorted.size / 2),
         "__kern_max" -> kernSorted.last)))
     System.err.println(
-      s"""[bench-diag] {"task_sec":$taskJson,"jobs":$jobsJson,"compiles":$compilesJson,"cold_sec":$coldJson,"med_sec":$medJson,"rerun_sec":$rerunFullJson,"slow_rerun_sec":$slowJson,"canary_sec":$canaryJson,"errors":$errFullJson,"reps":$reps}""")
+      s"""[bench-diag] {"task_sec":$taskJson,"jobs":$jobsJson,"compiles":$compilesJson,"fs_ops":$fsOpsJson,"cold_sec":$coldJson,"med_sec":$medJson,"rerun_sec":$rerunFullJson,"slow_rerun_sec":$slowJson,"canary_sec":$canaryJson,"errors":$errFullJson,"reps":$reps}""")
     // sf is the directory BASENAME (e.g. "sf0.1") — the full path spends
     // ~20 chars of the tail budget on redundancy
     val sfName = new java.io.File(sfDir).getName

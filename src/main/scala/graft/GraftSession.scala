@@ -104,7 +104,10 @@ object GraftSession {
   * (measured on a 4-core machine: ~100 forks per CDC batch, 2–5 ms
   * each). This one sets the same umask-applied bits through `java.nio`;
   * a mode NIO cannot express (the sticky bit) or a filesystem without
-  * POSIX attributes falls back to Hadoop's own call. */
+  * POSIX attributes falls back to Hadoop's own call. A directory
+  * listing counts as one read op in the filesystem's statistics, as it
+  * does on HDFS, so plan-time listing shows in `FileSystem.Statistics`
+  * (Bench's `fs_ops`) on a local table too. */
 class GraftLocalFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
   new GraftLocalFileSystem.Raw)
 
@@ -120,6 +123,12 @@ object GraftLocalFileSystem {
               permission.getOtherAction.SYMBOL))
         catch { case _: UnsupportedOperationException =>
           super.setPermission(p, permission) }
+    }
+
+    override def listStatus(f: org.apache.hadoop.fs.Path)
+        : Array[org.apache.hadoop.fs.FileStatus] = {
+      if (statistics != null) statistics.incrementReadOps(1)
+      super.listStatus(f)
     }
   }
 }

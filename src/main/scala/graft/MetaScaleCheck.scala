@@ -224,6 +224,11 @@ object MetaScaleCheck {
             Some((nDirs / 2 * 100L + 50).toString))))
           assert(kept < total && df.count() > 0)
         }
+        // a full read through the clone probes every external dir it
+        // reads (the clone-retention check) before planning
+        all("clone_full_plan") = time(s"$tag clone full-read plan ($nDirs dirs)") {
+          ManifestCommit.read(spark, dst2).queryExecution.executedPlan
+        }
       }
       locally { // hive convert: an nDirs-leaf `part=` layout onto the
         // manifest — O(leaves) renames (distributed past the small
@@ -360,11 +365,41 @@ object MetaScaleCheck {
       })
     }
 
+    // full-read plan: the manifest names every file, so planning a scan
+    // of all nDirs dirs runs no listing job and no Spark job at all; its
+    // cost is the manifest walk plus building one file status per file.
+    // Also prints the table's checkpoint bytes per dir with the file
+    // lists and with them stripped (the format before lists).
+    def fullReadPlan(tag: String, nDirs: Int): Map[String, Double] = {
+      val root = buildRanged(spark, s"meta_fullplan_${tag}_", nDirs, 100)
+      val name = s"metafull_$tag"
+      graft.sql.GraftSql.register(name, root)
+      val g = ManifestCommit.readManifest(spark, root).get.gen
+      val ckpt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$root/_manifest.g$g")), "UTF-8")
+      val stripped = ckpt.split("\n").filterNot(_.startsWith("#vermin")).map(_.split('\t')
+        .filterNot(_.startsWith("f:")).mkString("\t")).mkString("\n")
+      println(f"[metascale] $tag checkpoint bytes per dir ($nDirs dirs): " +
+        f"${ckpt.length.toDouble / nDirs}%.1f with file lists, " +
+        f"${stripped.length.toDouble / nDirs}%.1f without")
+      var jobs = -1
+      val plan = time(s"$tag SQL plan, full read ($nDirs dirs)") {
+        jobs = JobMeter.measure(spark)(spark.sql(s"SELECT sum(v) FROM graft.$name")
+          .queryExecution.executedPlan).count
+      }
+      assert(jobs == 0, s"full-read plan ran $jobs jobs")
+      val manifest = time(s"$tag readManifest COLD of the same table") {
+        ManifestCommit.clearResolveCache()
+        assert(ManifestCommit.readManifest(spark, root).get.dirs.size == nDirs)
+      }
+      Map("full_read_plan" -> plan, "full_read_manifest" -> manifest)
+    }
+
     println(s"[metascale] --- 1x ($n dirs) ---")
-    val one = kernels("1x", n)
+    val one = kernels("1x", n) ++ fullReadPlan("1x", n)
     val dv1 = dvRead("1x", 12)
     println(s"[metascale] --- 8x (${n * 8} dirs) ---")
-    val big = kernels("8x", n * 8)
+    val big = kernels("8x", n * 8) ++ fullReadPlan("8x", n * 8)
     val dv8 = dvRead("8x", 96)
     println(s"[metascale] ratios at 8x dirs (full-walk target <= ~8; O(touched) target ~1):")
     one.keys.toSeq.sorted.foreach { k =>

@@ -157,22 +157,31 @@ object Ingest {
       }
     }
 
+    // A full-refresh load replaces every dir with one it wrote: in the
+    // flat layout the written frame's schema is exactly what a reader
+    // infers from that dir's footers, so the commit records it and no
+    // read pays the inference job. A `__yyyymm=` dir also carries the
+    // partition column discovery adds, and keeps the inferring read.
+    def replaceWith(df: DataFrame): Unit = {
+      val dataDir = ManifestCommit.newDataDir(finalPath)
+      write(df, dataDir)
+      ManifestCommit.commitReplace(spark, finalPath, Seq(dataDir),
+        schema = if (monthPartitionCol.isDefined) None
+          else Some(org.apache.spark.sql.types.StructType(
+            df.schema.fields.map(_.copy(nullable = true)))))
+    }
     val written = mode match {
       case DedupMode.NoDedup =>
         // full-refresh load, committed through the manifest: the data
         // lands in an invisible uniquely-named dir; one atomic manifest
         // replace makes it the live generation (object-store-safe — the
         // rename-based swap is not, Maintenance.stagingSwap scaladoc)
-        val dataDir = ManifestCommit.newDataDir(finalPath)
-        write(cleaned, dataDir)
-        ManifestCommit.commitReplace(spark, finalPath, Seq(dataDir))
+        replaceWith(cleaned)
         cleaned
       case DedupMode.Staging =>
         require(keys.nonEmpty, s"staging dedup needs a PK for ${meta.table}")
         val deduped = dedupLatest(cleaned, keys, version)
-        val dataDir = ManifestCommit.newDataDir(finalPath)
-        write(deduped, dataDir)
-        ManifestCommit.commitReplace(spark, finalPath, Seq(dataDir))
+        replaceWith(deduped)
         deduped
       case DedupMode.Replacing =>
         require(keys.nonEmpty, s"replacing dedup needs a PK for ${meta.table}")

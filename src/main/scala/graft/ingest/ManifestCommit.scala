@@ -118,7 +118,12 @@ object ManifestCommit {
     * not an expression. `deadCols` tombstones the PHYSICAL names of
     * DROPPED columns: data files still carry their bytes, so re-adding
     * (or renaming onto) such a name would silently resurrect stale
-    * values — refused until the data is rewritten into a new table. */
+    * values — refused until the data is rewritten into a new table.
+    *
+    * `files` names each data dir's data files, the way Spark's listing
+    * would find them (see [[DataFile]]). [[commit]] fills it for every
+    * dir a generation adds; a dir without an entry (an old manifest, a
+    * hive-nested converted dir) is listed by the reader as before. */
   final case class Manifest(gen: Long, dirs: Seq[String],
       stats: Map[String, Seq[ColStats]] = Map.empty,
       tableSchema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -128,7 +133,8 @@ object ManifestCommit {
       slice: Option[String] = None,
       checks: Map[String, String] = Map.empty,
       colmap: Map[String, String] = Map.empty,
-      deadCols: Seq[String] = Nil) {
+      deadCols: Seq[String] = Nil,
+      files: Map[String, Seq[DataFile]] = Map.empty) {
     /** Physical (on-disk) name of a logical column. */
     def physNameOf(logical: String): String = colmap.getOrElse(logical, logical)
     /** The recorded table schema under PHYSICAL (on-disk) names — what a
@@ -143,24 +149,35 @@ object ManifestCommit {
           s.fields.map(f => f.copy(name = physNameOf(f.name)))))
   }
 
+  /** One data file of a dir: its name inside the dir, byte length and
+    * modification time — everything a Spark `FileStatus` needs to plan
+    * a scan of an immutable file, so a read of a dir whose files the
+    * manifest names lists nothing ([[readDirsOf]]). */
+  final case class DataFile(name: String, bytes: Long, mtime: Long)
+
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8")
   private def dec(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
 
-  /** One dir per line: `<name>`, `<name>\t<col:kind:min:max,...>`, or
-    * `<name>\t<stats-or-empty>\tdv:<file>` with percent-encoded fields —
-    * old manifests (fewer fields) parse with empty stats/dv, so the
-    * format is back-compatible. */
+  /** One dir per line, tab-separated, percent-encoded fields:
+    * `<name>[\t<col:kind:min:max,...>[\t<dv:file>[\t<f:files>]]]`,
+    * trailing empty fields dropped. The fourth field lists the dir's
+    * data files as `f:<name>:<bytes>:<mtime>,...` (`f:` alone is a dir
+    * with no files). Back-compat rule: a line with fewer fields parses
+    * with no stats, no DV and NO file list — old manifests keep reading,
+    * and a dir without a list is listed at read time as before. A reader
+    * that predates the field cannot parse such a line, so a manifest
+    * carrying any list is stamped `#vermin 3` ([[SupportedReaderVersion]])
+    * and such a reader refuses it with an upgrade error. */
   private def renderDirLine(m: Manifest)(d: String): String = {
     val stats = m.stats.get(d).filter(_.nonEmpty).map(_.map(c =>
       Seq(c.col, c.kind, c.min, c.max).map(enc).mkString(":")).mkString(","))
     val dv = m.dvs.get(d).map(f => "dv:" + enc(f))
-    (stats, dv) match {
-      case (None, None) => d
-      case (s, None) => d + "\t" + s.getOrElse("")
-      case (s, Some(v)) => d + "\t" + s.getOrElse("") + "\t" + v
-    }
+    val files = m.files.get(d).map(fs => "f:" +
+      fs.map(f => s"${enc(f.name)}:${f.bytes}:${f.mtime}").mkString(","))
+    Seq(Some(d), stats, dv, files).map(_.getOrElse(""))
+      .reverse.dropWhile(_.isEmpty).reverse.mkString("\t")
   }
 
   private def parseStats(cs: String): Seq[ColStats] =
@@ -170,13 +187,21 @@ object ManifestCommit {
       ColStats(dec(c), dec(k), dec(mn), dec(mx))
     }
 
-  private def parseDirLine(line: String): (String, Seq[ColStats], Option[String]) =
-    line.split('\t') match {
-      case Array(d) => (d, Nil, None)
-      case Array(d, cs) => (d, parseStats(cs), None)
-      case Array(d, cs, dv) =>
-        (d, parseStats(cs), Some(dec(dv.stripPrefix("dv:"))))
+  private def parseFiles(fs: String): Seq[DataFile] =
+    fs.stripPrefix("f:").split(',').toSeq.filter(_.nonEmpty).map { f =>
+      val Array(n, b, t) = f.split(':')
+      DataFile(dec(n), b.toLong, t.toLong)
     }
+
+  private final case class DirLine(name: String, stats: Seq[ColStats],
+      dv: Option[String], files: Option[Seq[DataFile]])
+
+  private def parseDirLine(line: String): DirLine = {
+    val f = line.split('\t')
+    DirLine(f(0), f.lift(1).map(parseStats).getOrElse(Nil),
+      f.lift(2).filter(_.nonEmpty).map(v => dec(v.stripPrefix("dv:"))),
+      f.lift(3).map(parseFiles))
+  }
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -241,19 +266,26 @@ object ManifestCommit {
     * minReaderVersion idea): any commit carrying a mapping emits
     * `#vermin 2`, and a build whose supported version is lower refuses
     * the manifest with an upgrade remedy rather than serving wrong
-    * data. Unknown plain meta lines stay ignorable — only #vermin is a
+    * data. Version 3 = file lists (the dir line's fourth `f:` field,
+    * see [[renderDirLine]]): a version-2 reader knows only three dir-line
+    * fields, so any manifest whose dirs carry a list emits `#vermin 3`.
+    * Unknown plain meta lines stay ignorable — only #vermin is a
     * hard gate, which is exactly what lets FUTURE format features make
     * themselves unreadable to THIS build. */
-  private[ingest] val SupportedReaderVersion = 2L
+  private[ingest] val SupportedReaderVersion = 3L
+
+  /** Refuse a manifest stamped `#vermin v` when this reader supports only
+    * up to `supported`, with the upgrade remedy. */
+  private[ingest] def requireReaderVersion(v: Long,
+      supported: Long = SupportedReaderVersion): Unit =
+    if (v > supported)
+      throw new IllegalStateException(
+        s"manifest requires reader version $v but this build supports " +
+          s"up to $supported — the table uses a newer " +
+          "format feature; upgrade the graft library before reading it")
 
   private def interpretMeta(raw: RawManifest): MetaFields = {
-    raw.metaVal("#vermin").map(_.toLong)
-      .filter(_ > SupportedReaderVersion).foreach { v =>
-        throw new IllegalStateException(
-          s"manifest requires reader version $v but this build supports " +
-            s"up to $SupportedReaderVersion — the table uses a newer " +
-            "format feature; upgrade the graft library before reading it")
-      }
+    raw.metaVal("#vermin").map(_.toLong).foreach(requireReaderVersion(_))
     val schema = raw.metaVal("#schema").map { s =>
       org.apache.spark.sql.types.DataType.fromJson(dec(s))
         .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -286,11 +318,12 @@ object ManifestCommit {
   private def interpretFull(raw: RawManifest): Manifest = {
     val mf = interpretMeta(raw)
     val parsed = raw.dirLines.map(parseDirLine)
-    Manifest(raw.gen, parsed.map(_._1),
-      parsed.collect { case (d, cs, _) if cs.nonEmpty => d -> cs }.toMap,
+    Manifest(raw.gen, parsed.map(_.name),
+      parsed.collect { case l if l.stats.nonEmpty => l.name -> l.stats }.toMap,
       mf.schema, mf.op,
-      parsed.collect { case (d, _, Some(dv)) => d -> dv }.toMap,
-      mf.txns, mf.slice, mf.checks, mf.colmap, mf.deadCols)
+      parsed.flatMap(l => l.dv.map(l.name -> _)).toMap,
+      mf.txns, mf.slice, mf.checks, mf.colmap, mf.deadCols,
+      parsed.flatMap(l => l.files.map(l.name -> _)).toMap)
   }
 
   /** Apply one delta record to its resolved base: `-name` removes a dir,
@@ -305,15 +338,17 @@ object ManifestCommit {
       .map(l => parseDirLine(l.substring(1)))
     val added = raw.dirLines.filter(_.startsWith("+"))
       .map(l => parseDirLine(l.substring(1)))
-    val touched = (updated ++ added).map(_._1).toSet
+    val lines = updated ++ added
+    val touched = lines.map(_.name).toSet
     Manifest(raw.gen,
-      base.dirs.filterNot(removed) ++ added.map(_._1),
+      base.dirs.filterNot(removed) ++ added.map(_.name),
       (base.stats -- removed -- touched) ++
-        (updated ++ added).collect { case (d, cs, _) if cs.nonEmpty => d -> cs },
+        lines.collect { case l if l.stats.nonEmpty => l.name -> l.stats },
       mf.schema, mf.op,
-      (base.dvs -- removed -- touched) ++
-        (updated ++ added).collect { case (d, _, Some(v)) => d -> v },
-      mf.txns, mf.slice, mf.checks, mf.colmap, mf.deadCols)
+      (base.dvs -- removed -- touched) ++ lines.flatMap(l => l.dv.map(l.name -> _)),
+      mf.txns, mf.slice, mf.checks, mf.colmap, mf.deadCols,
+      (base.files -- removed -- touched) ++
+        lines.flatMap(l => l.files.map(l.name -> _)))
   }
 
   /** Resolved-manifest memo for the per-generation files: a COMMITTED
@@ -979,6 +1014,8 @@ object ManifestCommit {
         dvs = m.dirs.zip(extDirs)
           .flatMap { case (d, e) => m.dvs.get(d).map(f => e -> dirAbs(src, f)) }
           .toMap,
+        files = m.dirs.zip(extDirs)
+          .flatMap { case (d, e) => m.files.get(d).map(e -> _) }.toMap,
         txns = Map.empty))
   }
 
@@ -1674,9 +1711,32 @@ object ManifestCommit {
       else df.select((schema.get.fields.toIndexedSeq.map(f =>
         col(eff.getOrElse(f.name, f.name)).as(f.name)) ++
         extra.map(col)): _*)
-    def readPaths(paths: Seq[String]): DataFrame = physSchema match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    // dirs whose files the manifest names scan through the
+    // manifest-backed index ([[scanListed]]); any other group lists its
+    // dirs through Spark's own parquet read
+    lazy val qRoot = qualify(spark, root)
+    def readPaths(g: Seq[String]): DataFrame = {
+      val listed =
+        if (!g.forall(m.files.contains)) None
+        else {
+          // a reclaimed external (clone) dir would otherwise surface as
+          // a FileNotFoundException at execution; one existence probe
+          // per external dir read, on concurrent threads (a sequential
+          // loop is an O(dirs) driver-latency wall), none for the rest
+          // of the table
+          val ext = g.filter(isExternal(root, _))
+          if (concurrently(ext, 32)(d => fs(spark, d).exists(new Path(d))).contains(false))
+            cloneRetentionError(spark, root, m).foreach(e => throw e)
+          scanListed(spark, g.map(d => (if (isQualified(d)) qualify(spark, d)
+            else new Path(qRoot, d)) -> m.files(d)), physSchema)
+        }
+      listed.getOrElse {
+        val paths = g.map(dirAbs(root, _))
+        physSchema match {
+          case Some(s) => spark.read.schema(s).parquet(paths: _*)
+          case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+        }
+      }
     }
     val (dvd, plain) = dirs.partition(m.dvs.contains)
     // HIVE-NESTED dirs (converted leaf partitions, [[PartStat]]) scan in
@@ -1703,8 +1763,7 @@ object ManifestCommit {
         })))
       partColsOf(g.head) match {
         case None =>
-          val df0 = undeleted(readPaths(g.map(dirAbs(root, _))),
-            col("_metadata.file_path"))
+          val df0 = undeleted(readPaths(g), col("_metadata.file_path"))
           val df1 = if (withId) df0.withColumn("__dir", dirIdCol) else df0
           // positions from the scan's own metadata struct — never null,
           // stable for immutable files (the position-DV identity)
@@ -1835,11 +1894,13 @@ object ManifestCommit {
   }
 
   private def metaLines(m: Manifest): Seq[String] =
+    // file lists in play -> readers without the `f:` field must refuse;
     // column mapping in play -> older readers must refuse, not null-fill
     // (see [[SupportedReaderVersion]]); every record (full or delta)
     // carries the gate because deltas re-state meta absolutely
-    (if (m.colmap.isEmpty && m.deadCols.isEmpty) Nil
-     else Seq("#vermin\t2")) ++
+    (if (m.files.nonEmpty) Seq("#vermin\t3")
+     else if (m.colmap.nonEmpty || m.deadCols.nonEmpty) Seq("#vermin\t2")
+     else Nil) ++
     m.tableSchema.map(s => "#schema\t" + enc(s.json)).toSeq ++
       m.op.map(o => "#op\t" + enc(o)).toSeq ++
       m.slice.map(s => "#slice\t" + enc(s)).toSeq ++
@@ -1871,6 +1932,8 @@ object ManifestCommit {
     val added = m.dirs.filterNot(prevSet)
     if (m.dirs != prev.dirs.filter(mSet) ++ added) return None
     val removed = prev.dirs.filterNot(mSet)
+    // a surviving dir's file list never changes (dirs are immutable and
+    // [[withFileLists]] lists only added dirs), so only stats/DVs restate
     val restated = prev.dirs.filter(d => mSet(d) &&
       (prev.stats.get(d) != m.stats.get(d) || prev.dvs.get(d) != m.dvs.get(d)))
     // a delta touching as many lines as a full render saves nothing —
@@ -2030,9 +2093,11 @@ object ManifestCommit {
       expectedChecks)
     checkCas(root, prev, expectedGen)
     val drafted = next(prev)
-    val m = drafted.copy(gen = prev.map(_.gen + 1).getOrElse(1L),
-      op = Some(op), txns = drafted.txns ++ txn)
-    guardPhysicalNames(spark, root, m, prev.map(_.dirs.toSet).getOrElse(Set.empty))
+    val prevDirs = prev.map(_.dirs.toSet).getOrElse(Set.empty[String])
+    val m = withFileLists(spark, root, drafted.copy(
+      gen = prev.map(_.gen + 1).getOrElse(1L),
+      op = Some(op), txns = drafted.txns ++ txn), prevDirs)
+    guardPhysicalNames(spark, root, m, prevDirs)
     writeManifest(spark, root, m, prev.filterNot(_ => pruneDisplaced))
     if (pruneDisplaced) prev.foreach { p =>
       val f = fs(spark, root)
@@ -2050,6 +2115,24 @@ object ManifestCommit {
       }
     }
     m
+  }
+
+  /** `m` with the file list of every dir it adds over `prevDirs`: the
+    * list the writer already put in `m` (a clone carries its source's),
+    * else one driver-side listStatus per dir ([[dataFilesOf]]) on
+    * concurrent threads. A dir that holds a subdirectory or does not
+    * exist gets no list; lists of dirs that left the live set go. */
+  private def withFileLists(spark: SparkSession, root: String, m: Manifest,
+      prevDirs: Set[String]): Manifest = {
+    val added = m.dirs.filterNot(prevDirs)
+    // an append keeps every previous dir: its lists need no pruning pass
+    val kept =
+      if (m.dirs.size - added.size == prevDirs.size) m.files
+      else { val live = m.dirs.toSet; m.files.filter(e => live(e._1)) }
+    val listed = concurrently(added.filterNot(m.files.contains), 16) { d =>
+      d -> dataFilesOf(spark, dirAbs(root, d))
+    }
+    m.copy(files = kept ++ listed.collect { case (d, Some(l)) => d -> l })
   }
 
   /** Staging-swap analogue: install `dirs` (relative names under `root`)
@@ -2640,10 +2723,17 @@ object ManifestCommit {
     if (real.isEmpty && !cols.contains(RowCountStat))
       return dirs.map(d => d -> renderStats(cols, Nil, _ => null,
         dirBytesStat(spark, d))).toMap
-    val df0 = schema match {
+    // driver-side listings of the just-written dirs feed the
+    // manifest-backed scan: no listing job
+    val lists = concurrently(dirs, 16)(d => dataFilesOf(spark, d))
+    val listed =
+      if (lists.exists(_.isEmpty)) None
+      else scanListed(spark, dirs.map(qualify(spark, _)).zip(lists.flatten),
+        schema, mergeSchema = false)
+    val df0 = listed.getOrElse(schema match {
       case Some(s) => spark.read.schema(s).parquet(dirs: _*)
       case None => spark.read.parquet(dirs: _*)
-    }
+    })
     val df = colmap.foldLeft(df0) { case (d, (log, phys)) =>
       if (log != phys) d.withColumnRenamed(phys, log) else d
     }
@@ -2974,13 +3064,62 @@ object ManifestCommit {
     * estimate / the FS probe. Never inherited as a data stat column. */
   val BytesStat = "__bytes"
 
-  /** One [[BytesStat]] entry for a freshly written dir (driver-side
-    * content summary — no Spark job, no data read). */
+  /** One [[BytesStat]] entry for a freshly written dir: the sum of the
+    * file sizes its listing ([[dataFilesOf]]) names — the list its
+    * commit records — or, for a hive-nested dir, its content summary.
+    * Driver-side, no Spark job, no data read. */
   def dirBytesStat(spark: SparkSession, dir: String): ColStats = {
-    val p = new Path(dir)
-    val len = fs(spark, dir).getContentSummary(p).getLength
+    val len = dataFilesOf(spark, dir).map(_.map(_.bytes).sum).getOrElse(
+      fs(spark, dir).getContentSummary(new Path(dir)).getLength)
     ColStats(BytesStat, "num", len.toString, len.toString)
   }
+
+  /** `p` qualified the way Spark qualifies a read path (scheme and
+    * working dir), so a recorded file's `_metadata.file_path` is the
+    * string a listing of the same dir would give. */
+  private def qualify(spark: SparkSession, p: String): Path = {
+    val path = new Path(p)
+    val f = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    path.makeQualified(f.getUri, f.getWorkingDirectory)
+  }
+
+  /** Spark's hidden-path rule (`HadoopFSUtils.shouldFilterOutPathName`):
+    * names a parquet read never scans — `_SUCCESS`, checksums, bloom
+    * side files, in-flight copies. */
+  private def hiddenName(n: String): Boolean =
+    n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
+
+  /** The data files of `absDir` as Spark's listing would find them:
+    * ONE driver-side listStatus, hidden names skipped, sorted by name.
+    * None when the dir does not exist or holds a subdirectory (a
+    * hive-nested layout keeps Spark's own listing). */
+  private[ingest] def dataFilesOf(spark: SparkSession,
+      absDir: String): Option[Seq[DataFile]] =
+    try {
+      val sts = fs(spark, absDir).listStatus(qualify(spark, absDir)).toSeq
+        .filterNot(st => hiddenName(st.getPath.getName))
+      if (sts.exists(_.isDirectory)) None
+      else Some(sts.map(st => DataFile(st.getPath.getName, st.getLen,
+        st.getModificationTime)).sortBy(_.name))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** A parquet scan of flat dirs whose files are known (`dirs`: each
+    * qualified dir path with its files), through the manifest-backed
+    * file index: no listing, no data-source lookup. `schema` None infers
+    * one from the files' footers (`mergeSchema` as the listing read
+    * would); None when there is nothing to infer from. */
+  private def scanListed(spark: SparkSession, dirs: Seq[(Path, Seq[DataFile])],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      mergeSchema: Boolean = true): Option[DataFrame] =
+    org.apache.spark.sql.graftbridge.ManifestScan.parquet(spark, dirs.map(_._1),
+      dirs.flatMap { case (dir, fs) =>
+        fs.map(f => new org.apache.hadoop.fs.FileStatus(f.bytes, false, 1,
+          ScanBlockSize, f.mtime, new Path(dir, f.name)))
+      }, schema, mergeSchema)
+
+  /** Block size a recorded file reports (Hadoop's local default); Spark's
+    * parquet planning splits by `maxPartitionBytes`, not by it. */
+  private val ScanBlockSize = 32L << 20
 
   /** Exact live-table byte total: Some(sum) when EVERY live dir carries
     * a [[BytesStat]] — else None (old manifests, partial coverage) and

@@ -204,6 +204,11 @@ object MergeInto {
     attempt
   }
 
+  /** One merge attempt. The source is evaluated twice — by the key
+    * aggregate and by the write pass — so a source that is not a local
+    * relation (a change feed's diff is a join over changed dirs) is
+    * persisted for the attempt and computed once; a source the caller
+    * already cached is left alone. */
   private def mergeOnce(
       spark: SparkSession,
       root: String,
@@ -212,7 +217,25 @@ object MergeInto {
       deleteWhen: Option[Column],
       insertUnmatched: Boolean,
       evolveSchema: Boolean,
-      unmatchedDeleteInserts: Boolean = false): MergeResult = {
+      unmatchedDeleteInserts: Boolean): MergeResult = {
+    val hold = source.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
+      !source.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    if (hold) source.persist()
+    try mergeAttempt(spark, root, source, keys, deleteWhen, insertUnmatched,
+      evolveSchema, unmatchedDeleteInserts)
+    finally if (hold) source.unpersist()
+  }
+
+  private def mergeAttempt(
+      spark: SparkSession,
+      root: String,
+      source: DataFrame,
+      keys: Seq[String],
+      deleteWhen: Option[Column],
+      insertUnmatched: Boolean,
+      evolveSchema: Boolean,
+      unmatchedDeleteInserts: Boolean): MergeResult = {
     require(keys.nonEmpty, "merge requires at least one key column")
     val m = ManifestCommit.requireManifest(spark, root)
 

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.SparkSpec
+import graft.{JobMeter, SparkSpec}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -146,6 +146,49 @@ class ChangeFeedSpec extends SparkSpec {
     // replayed deletes are now UNMATCHED and must not insert phantoms
     ChangeFeed.applyTo(spark, rep, c2.changes, Seq("id"))
     assert(stateOf(rep) === stateOf(src), "replayed apply moved the replica")
+  }
+
+  test("applyTo evaluates the CDF diff once: the merge's write pass runs " +
+      "the jobs of the same write over a local source") {
+    def replicaOf(src: String, cursor: String): String = {
+      val rep = Files.createTempDirectory("graft_cfspec_").toString + "/rep"
+      val c1 = ChangeFeed.consume(spark, src, cursor, Seq("id")).get
+      val d0 = ManifestCommit.newDataDir(rep)
+      c1.changes.drop(ChangeFeed.ChangeType).write.parquet(d0)
+      ManifestCommit.commitReplace(spark, rep, Seq(d0), pruneDisplaced = false,
+        schema = Some(org.apache.spark.sql.types.StructType(
+          c1.changes.drop(ChangeFeed.ChangeType).schema.fields
+            .map(_.copy(nullable = true)))))
+      ChangeFeed.advanceCursor(spark, cursor, c1.toGen)
+      rep
+    }
+    val src = mkTable()
+    val cursor = src + "_cursor"
+    val (rep1, rep2) = (replicaOf(src, cursor), replicaOf(src, src + "_cursor2"))
+    MergeInto.merge(spark, src,
+      spark.range(10, 20).toDF("id").withColumn("v", col("id") * 2 + 1), Seq("id"))
+    val changes = ChangeFeed.consume(spark, src, cursor, Seq("id")).get.changes
+    val rows = changes.collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      changes.schema)
+    val overLocal = JobMeter.measure(spark)(
+      ChangeFeed.applyTo(spark, rep2, local, Seq("id")))
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val overDiff = JobMeter.measure(spark)(
+      ChangeFeed.applyTo(spark, rep1, changes, Seq("id")))
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted,
+      "the merge left its source cached")
+    assert(overDiff.value.updated === 10L && overLocal.value.updated === 10L)
+    // the write pass reads the held diff: it runs the jobs of the write
+    // over a local source, none of the diff's join stages again
+    def writes(m: JobMeter.Metered[_]) =
+      m.jobs.count(_.desc.contains("parquet at ManifestCommit"))
+    assert(writes(overDiff) === writes(overLocal), overDiff.jobs.map(_.desc))
+    // 9 jobs: 10 when the aggregate and the write each evaluate the diff
+    assert(overDiff.count === 9, overDiff.jobs.map(_.desc))
+    def stateOf(root: String) = ManifestCommit.read(spark, root)
+      .orderBy("id").collect().toSeq
+    assert(stateOf(rep1) === stateOf(src) && stateOf(rep2) === stateOf(src))
   }
 
   test("a consume across a merge and an OPTIMIZE on a month-sliced table " +

@@ -42,6 +42,29 @@ class IngestSpec extends SparkSpec {
       "staging mode must commit through the manifest")
   }
 
+  test("a full-refresh load records the schema a footer read infers, so a " +
+      "SQL query over it runs no schema-inference job") {
+    val out = Files.createTempDirectory("ingest_spec_").toString
+    Ingest.ingestTable(spark, dirtyDf, meta, out, DedupMode.NoDedup)
+    val root = s"$out/t"
+    val m = ManifestCommit.readManifest(spark, root).get
+    val inferred = spark.read.parquet(ManifestCommit.dirAbs(root, m.dirs.head)).schema
+    assert(m.tableSchema === Some(inferred))
+    graft.sql.GraftSql.register("ingest_schema_t", root)
+    val q = "SELECT v, count(*) FROM graft.ingest_schema_t GROUP BY v"
+    spark.sql(q).collect() // warm
+    val recorded = jobsOf(spark.sql(q).collect())
+    // the same table without a recorded schema: one more job per query
+    ManifestCommit.commitReplace(spark, root, m.dirs)
+    val inferring = jobsOf(spark.sql(q).collect())
+    assert(inferring === recorded + 1, s"recorded $recorded, inferring $inferring")
+    // a month-partitioned load keeps the inferring read (its dirs carry
+    // the partition column discovery adds)
+    Ingest.ingestTable(spark, dirtyDf, meta, out, DedupMode.Staging,
+      monthPartitionCol = Some("factualizacion"))
+    assert(ManifestCommit.readManifest(spark, root).get.tableSchema.isEmpty)
+  }
+
   test("replacing mode merges with existing target (latest version wins across loads)") {
     val out = Files.createTempDirectory("ingest_spec_").toString
     Ingest.ingestTable(spark, dirtyDf, meta, out, DedupMode.Replacing)

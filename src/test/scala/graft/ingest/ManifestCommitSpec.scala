@@ -1752,9 +1752,19 @@ class ManifestCommitSpec extends SparkSpec {
     write(Row(1L, "a"))(d)
     ManifestCommit.commitReplace(spark, root, Seq(d), pruneDisplaced = false,
       schema = Some(StructType(st.fields.map(_.copy(nullable = true)))))
-    // pre-mapping commits carry NO gate (old readers keep reading)
     def genText(g: Long): String = new String(Files.readAllBytes(
       java.nio.file.Paths.get(s"$root/_manifest.g$g")), "UTF-8")
+    // the commit records file lists (reader version 3); rewritten into
+    // the format before lists, a pre-mapping commit carries NO gate
+    // (old readers keep reading)
+    assert(genText(1L).contains("#vermin\t3"), genText(1L))
+    val noLists = genText(1L).split("\n").filterNot(_.startsWith("#vermin"))
+      .map(_.split('\t').filterNot(_.startsWith("f:")).mkString("\t"))
+      .mkString("\n")
+    Files.write(java.nio.file.Paths.get(s"$root/_manifest.g1"),
+      noLists.getBytes("UTF-8"))
+    ManifestCommit.clearResolveCache()
+    assert(ManifestCommit.readManifest(spark, root).get.files.isEmpty)
     assert(!genText(1L).contains("#vermin"))
     ManifestCommit.renameColumn(spark, root, "v", "w")
     // the rename generation (and every later one, full or delta) is
@@ -1764,8 +1774,9 @@ class ManifestCommitSpec extends SparkSpec {
     val d2 = ManifestCommit.newDataDir(root)
     write(Row(2L, "b"))(d2)
     ManifestCommit.commitAppend(spark, root, d2)
-    assert(genText(3L).contains("#vermin\t2"), genText(3L))
-    // this build supports version 2: reads stay green
+    // the appended dir's file list raises the gate to version 3
+    assert(genText(3L).contains("#vermin\t3"), genText(3L))
+    // this build supports version 3: reads stay green
     assert(ManifestCommit.read(spark, root).count() === 2L)
     // a FUTURE format feature stamps a higher version -> this build
     // must refuse the manifest, not misread it
